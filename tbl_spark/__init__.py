@@ -24,3 +24,7 @@ Spark-first:
 """
 
 __version__ = "0.1.0"
+
+from . import pyworker  # noqa: E402
+
+pyworker.install()

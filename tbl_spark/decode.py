@@ -111,19 +111,21 @@ def decode_chunks_colocated(chunk_df: DataFrame, output_ddl: str,
 
     `target_partitions` coalesces first (no shuffle; concatenation keeps
     every part contiguous, since a part never spans two input
-    partitions). Many tiny chunk partitions each pay a python-worker
-    round trip — coalescing to ~cores cut a 128-partition decode from
-    1.96 s to 0.47 s. Only set it when the upstream is a cheap scan or
-    cache: coalesce also narrows the parallelism of whatever computes
-    the chunks (e.g. an in-flight encode stage)."""
+    partitions). Many tiny chunk partitions each pay a Python task's
+    fixed cost — on 4 cores, coalescing a 128-part store (2k docs) to 4
+    partitions cut a full decode from 3.5 s to 1.2 s wall and from 13.5
+    to 3.6 JVM + Python-worker CPU-s. Only set it when the upstream is a
+    cheap scan or cache: coalesce also narrows the parallelism of
+    whatever computes the chunks (e.g. an in-flight encode stage)."""
     from pyspark.sql.types import StructType
     tables = _resolve_shared_tables(chunk_df, shared_tables)
     if target_partitions is None and chunk_df.is_cached:
         # r8 auto-coalesce: a CACHED chunk frame often carries the
         # encode's full shuffle-partition count (hundreds of partitions
         # holding a handful of chunk rows each), and every mapInArrow
-        # partition pays a python-worker round trip — 160 partitions of
-        # a 513-row chunk table decoded in 5 task waves of overhead.
+        # partition is one Python task with its fixed cost — a 513-row
+        # chunk table cached in 160 partitions ran 160 tasks for work
+        # that fits in one task per core.
         # The upstream is already materialized, so coalescing cannot
         # narrow any producer's parallelism (the docstring's caveat
         # below applies only to in-flight producers, which are never

@@ -178,19 +178,23 @@ class ChunkStore:
         same store could each read the old sidecar and the LAST rename
         would drop the other run's tables — leaving that run's
         persisted chunks undecodable. Each writer re-reads under the
-        lock, so every merge lands. On a filesystem without flock
-        support the lock degrades to best-effort (the rename stays
-        atomic either way)."""
+        lock, so every merge lands. When the lock file cannot be opened
+        (read-only directory, permissions) or the filesystem has no
+        flock support, the lock degrades to best-effort: the merge runs
+        unlocked, and the rename stays atomic either way. The ``.lock``
+        file is left in place on purpose: deleting it would let a new
+        writer lock a fresh inode while another still holds the old."""
         import base64
 
         from .codecs.core import shared_table_fp
-        lock = open(self.shared_tables_path + ".lock", "w")
+        lock = None
         try:
             try:
                 import fcntl
+                lock = open(self.shared_tables_path + ".lock", "w")
                 fcntl.flock(lock, fcntl.LOCK_EX)
             except (ImportError, OSError):
-                pass  # non-POSIX FS: keep the pre-lock best-effort merge
+                pass  # no lock: keep the pre-lock best-effort merge
             cur = self._read_shared_tables_raw()
             for b in blobs:
                 b = bytes(b)
@@ -203,7 +207,8 @@ class ChunkStore:
                 json.dump(cur, f)
             os.replace(tmp, self.shared_tables_path)
         finally:
-            lock.close()  # releases the flock
+            if lock is not None:
+                lock.close()  # releases the flock
 
     def _read_shared_tables_raw(self) -> dict:
         if not os.path.exists(self.shared_tables_path):
@@ -1402,9 +1407,9 @@ def decode_from_store(store: ChunkStore, spark: SparkSession,
             f"{f.name} {f.dataType.simpleString()}" for f in full.fields
             if f.name in columns)
     # upstream is a pure file scan, so coalescing tiny per-chunk scan
-    # partitions down to the session's parallelism is free (see
-    # decode_chunks_colocated) — one python-worker round trip per core
-    # instead of one per chunk file
+    # partitions down to the session's parallelism narrows no producer —
+    # one Python task's fixed cost per core instead of one per chunk
+    # file (measured in decode_chunks_colocated's docstring)
     cores = spark.sparkContext.defaultParallelism
     n_parts = chunks.rdd.getNumPartitions()
     target = cores if n_parts > 2 * cores else None

@@ -14,12 +14,15 @@
    evicted slot table must rebuild transparently on the next decode.
 3. Sidecar merge lock (ADVICE r7): concurrent `write_shared_tables`
    calls were a lost-update race (read-modify-rename); under the lock
-   every writer's tables must land in the final sidecar.
+   every writer's tables must land in the final sidecar. A lock file
+   that cannot be opened degrades to the unlocked merge instead of
+   failing it.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 
 def _drain_ring():
@@ -61,9 +64,23 @@ def test_ring_repersist_same_plan_keeps_one_live_handle(spark):
         _drain_ring()
 
 
-def test_shared_slot_registry_lru_capped_and_rebuilds():
+@pytest.fixture
+def shared_registry():
+    """The worker-local shared-table registries, restored after the test
+    so the tables it registers do not leak into later tests."""
     from tbl_spark.codecs import core
+    tables, slots = dict(core._shared_tables), dict(core._shared_slots)
+    try:
+        yield core
+    finally:
+        core._shared_tables.clear()
+        core._shared_tables.update(tables)
+        core._shared_slots.clear()
+        core._shared_slots.update(slots)
 
+
+def test_shared_slot_registry_lru_capped_and_rebuilds(shared_registry):
+    core = shared_registry
     rng = np.random.default_rng(8)
     n_tables = core._SHARED_SLOTS_MAX + 4
     blobs = []
@@ -135,6 +152,25 @@ def test_shared_tables_sidecar_concurrent_merge(tmp_path):
         f"lost-update race dropped {len(expected) - len(merged)} tables")
     for b in blobs:
         assert merged[core.shared_table_fp(b)] == b
+
+
+def test_shared_tables_merge_lands_without_lock_file(tmp_path):
+    # the lock file cannot be opened (here: a directory sits at its
+    # path); the merge must fall back to the unlocked atomic rename
+    import os
+
+    from tbl_spark.codecs import core
+    from tbl_spark.store import ChunkStore
+
+    store = ChunkStore(str(tmp_path / "store"))
+    store.init_dirs()
+    os.mkdir(store.shared_tables_path + ".lock")
+    vals = np.random.default_rng(9).integers(
+        0, 100, size=core._SHARED_MIN_N).astype(np.int64)
+    blob = core.build_shared_table(vals)
+    assert blob is not None
+    store.write_shared_tables([blob])
+    assert store.read_shared_tables() == {core.shared_table_fp(blob): blob}
 
 
 def test_ring_distinct_plans_still_evict(spark):
