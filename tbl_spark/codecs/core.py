@@ -1,7 +1,8 @@
 """Codec dispatch + sampling-based codec auto-selection.
 
 Public API:
-    encode_array(values, valid=None, codec=None, try_zstd=True) -> bytes
+    encode_array(values, valid=None, codec=None, try_zstd=True,
+                 cache_key=None, plan=None) -> bytes
     decode_array(blob) -> (values, valid_mask | None)
 
 `values` may be a numpy array (ints / floats / bool), a pyarrow
@@ -16,7 +17,9 @@ analytic size estimates from one-pass full-array stats (min/max, delta
 range, run count) plus a sampled uniqueness probe decide the codec; the
 final blob is guarded against RAW(+zstd), so the result is never larger
 than a plain zstd-compressed copy (the reference's parquet-zstd sink is the
-baseline to beat — crates/tbl-cli/src/output.rs:157-173).
+baseline to beat — crates/tbl-cli/src/output.rs:157-173). A run can
+instead carry an explicit encode `Plan` auditioned once on the driver;
+no codec choice is remembered between calls.
 """
 
 from __future__ import annotations
@@ -101,14 +104,14 @@ def _encode_int_payload(v: np.ndarray, codec: Codec,
 
 _WINDOW_N = 1 << 18  # contiguous stats window for sampled estimates
 
-# worker-local codec-choice cache: column key -> (winning codec, uses).
-# Column value distributions are stable across a run's chunks, so the
-# window audition only needs to run on the first chunk a worker sees (and
-# every _REAUDIT_EVERY-th after, to track drift). Correctness never
-# depends on the choice — a stale winner just compresses slightly worse,
-# and the raw(+zstd) guard still bounds the worst case.
-_choice_cache: dict[str, list] = {}
-_REAUDIT_EVERY = 16
+# An encode plan: column key ("doc_id", "tokens.values", ...) -> the codec
+# the driver audition (encode.audition_codec_hints) chose on a sample of
+# the run's input. An entry is a Codec enum value, a shared rANS table
+# blob (bytes, see build_shared_table) or an FSST merge table (a tuple of
+# (code, left, right) triples). The plan is a plain value of one run:
+# encode_array reads it and never writes it, so a chunk's blob is a
+# function of (chunk values, plan entry) only.
+Plan = dict[str, int | bytes | tuple]
 
 
 def _rans_payload(v: np.ndarray, _table_depth: int = 0) -> bytes | None:
@@ -548,8 +551,6 @@ def _string_parts(arr: pa.Array) -> tuple[np.ndarray, bytes, np.ndarray | None]:
     return offsets, corpus, valid
 
 
-_str_cache: dict[str, dict] = {}
-
 # '<prefix><digit-run>' id shapes ("web-000000000042", "row_00173", URL
 # counters): the trailing run parses into an int64 (≤18 digits so it
 # always fits) and the prefixes dict-encode. RE2 syntax (pyarrow).
@@ -572,32 +573,21 @@ def _template_parts(arr: pa.Array):
         return None  # e.g. forced onto a binary array
 
 
-def _template_probe_fp(arr: pa.Array) -> frozenset | None:
+def _template_probe_ok(arr: pa.Array) -> bool:
     """Cheap template candidacy check: length gate first (so document-
     length text columns never pay a 64-document RE2 scan), then a
-    64-value probe that must match wall-to-wall. Returns None on a
-    decline, else a FINGERPRINT of the probe (the distinct prefixes) —
-    chunks of the same dataset share it, a different dataset under the
-    same column name almost never does, which is what lets a cached
-    "template lost here" verdict stay scoped to the data that produced
-    it. Microseconds on a decline."""
+    64-value probe that must match wall-to-wall. Microseconds on a
+    decline."""
     probe = arr.slice(0, min(64, len(arr)))
     if len(probe) == 0:
-        return None
+        return False
     try:
         avg_len = pc.sum(pc.utf8_length(probe)).as_py() / len(probe)
     except pa.ArrowNotImplementedError:
-        return None            # binary array — not a template candidate
+        return False           # binary array — not a template candidate
     if avg_len is None or avg_len > 256:
-        return None
-    parts = _template_parts(probe)
-    if parts is None:
-        return None
-    return frozenset(parts[0].to_pylist())
-
-
-def _template_probe_ok(arr: pa.Array) -> bool:
-    return _template_probe_fp(arr) is not None
+        return False
+    return _template_parts(probe) is not None
 
 
 def _template_build(arr: pa.Array, dtype_code: DType, n: int,
@@ -655,7 +645,13 @@ def _template_decode(payload: bytes, n: int) -> pa.Array:
 
 
 def _encode_string(arr: pa.Array, dtype_code: DType, codec: Codec | None,
-                   try_zstd: bool, cache_key: str | None = None) -> bytes:
+                   try_zstd: bool, planned: int | tuple | None = None
+                   ) -> bytes:
+    """`codec` forces a string codec; `planned` is the column's plan
+    entry (STR_RAW / STR_DICT / STR_TEMPLATE, or an FSST merge table).
+    A planned template or merge table that declines on this chunk, and
+    a planned dict (whose test is the audition's first step), fall
+    through to the chunk's own audition."""
     valid = None
     if arr.null_count:
         valid = np.asarray(arr.is_valid())
@@ -670,16 +666,7 @@ def _encode_string(arr: pa.Array, dtype_code: DType, codec: Codec | None,
         return assemble(c, dtype_code, n, frame(lengths_blob, corpus_payload),
                         valid=valid, try_zstd=try_zstd)
 
-    if codec == Codec.STR_RAW:
-        return build(Codec.STR_RAW, corpus)
-    if codec == Codec.FSST:
-        payload = strings.fsst_encode(corpus)
-        if payload is None:
-            return build(Codec.STR_RAW, corpus)
-        return build(Codec.FSST, payload)
-    def build_dict() -> bytes:
-        denc = arr.dictionary_encode() if not isinstance(
-            arr, pa.DictionaryArray) else arr
+    def build_dict(denc: pa.DictionaryArray) -> bytes:
         dict_blob = _encode_string(denc.dictionary, dtype_code, None,
                                    try_zstd=False)
         codes = np.asarray(denc.indices.cast(pa.int64()))
@@ -688,105 +675,51 @@ def _encode_string(arr: pa.Array, dtype_code: DType, codec: Codec | None,
                         frame(dict_blob, codes_blob),
                         valid=valid, try_zstd=try_zstd)
 
+    def dict_encode() -> pa.DictionaryArray:
+        return arr if isinstance(arr, pa.DictionaryArray) \
+            else arr.dictionary_encode()
+
+    if codec == Codec.STR_RAW or (codec is None
+                                  and planned == Codec.STR_RAW):
+        return build(Codec.STR_RAW, corpus)
+    if codec == Codec.FSST:
+        payload = strings.fsst_encode(corpus)
+        if payload is None:
+            return build(Codec.STR_RAW, corpus)
+        return build(Codec.FSST, payload)
     if codec == Codec.STR_DICT:
-        return build_dict()
+        return build_dict(dict_encode())
     if codec == Codec.STR_TEMPLATE:
         t = _template_build(arr, dtype_code, n, valid, try_zstd)
         return t if t is not None else build(Codec.STR_RAW, corpus)
-    if codec is None:
-        # cached choice (worker-local): skip the dict probe / FSST build
-        entry = _str_cache.get(cache_key) if cache_key else None
-        # stale-dataset escape hatches (r6): a choice cached while
-        # encoding a previously-seen same-named column must not suppress
-        # the right codec for THIS one. Both probes are microseconds.
-        if entry is not None and dtype_code == DType.STR:
-            # fsst/raw must yield to the template codec on id-shaped
-            # data (template beats fsst 3-5x there); no_template_fp
-            # records the probe fingerprint of data where template was
-            # already built and LOST on size — only that same data
-            # shape keeps the cached choice without a re-audition
-            if entry["choice"] in ("fsst", "raw"):
-                fp = _template_probe_fp(arr)
-                if fp is not None and fp != entry.get("no_template_fp"):
-                    del _str_cache[cache_key]
-                    entry = None
-            # a cached 'dict' premised on repeats is pathological on an
-            # all-distinct column (the dictionary becomes a full copy);
-            # re-audition when a probe shows no repeats at all
-            elif entry["choice"] == "dict" and len(arr) >= 16:
-                dprobe = arr.slice(0, min(64, len(arr)))
-                if len(dprobe.dictionary_encode().dictionary) \
-                        == len(dprobe):
-                    del _str_cache[cache_key]
-                    entry = None
-        if entry is not None and entry["uses"] < _REAUDIT_EVERY:
-            entry["uses"] += 1
-            if entry["choice"] == "dict":
-                return build_dict()
-            if entry["choice"] == "template":
-                t = _template_build(arr, dtype_code, n, valid, try_zstd)
-                if t is not None:
-                    return t
-                # this chunk broke the template shape — drop the stale
-                # choice and FALL THROUGH to the audition below. (Not a
-                # recursive _encode_string call: arr is already
-                # null-FILLED here, so recursing would recompute
-                # valid=None and silently encode nulls as '' — the
-                # captured `valid` closure the audition's build paths
-                # use is the only copy of the null mask.)
-                del _str_cache[cache_key]
-            elif entry["choice"] == "fsst":
-                payload, merges = strings.fsst_encode_full(
-                    corpus, entry["merges"])
-                entry["merges"] = merges
-                if payload is not None:
-                    return build(Codec.FSST, payload)
-                return build(Codec.STR_RAW, corpus)
-            else:
-                return build(Codec.STR_RAW, corpus)
-        # audition
-        choice, merges = "raw", []
-        if n >= 16:
-            denc_probe = arr.dictionary_encode() if not isinstance(
-                arr, pa.DictionaryArray) else arr
-            if len(denc_probe.dictionary) < n // 2:
-                if cache_key:
-                    _str_cache[cache_key] = {"choice": "dict",
-                                             "merges": [], "uses": 0}
-                return build_dict()
-        cands = [("raw", build(Codec.STR_RAW, corpus))]
-        tmpl_fp, tmpl_built = None, False
-        if dtype_code == DType.STR:
-            tmpl_fp = _template_probe_fp(arr)
-            if tmpl_fp is not None:
-                t = _template_build(arr, dtype_code, n, valid, try_zstd)
-                if t is not None:
-                    tmpl_built = True
-                    cands.append(("template", t))
-        fsst_payload, merges = strings.fsst_encode_full(corpus)
-        if fsst_payload is not None:
-            cands.append(("fsst", build(Codec.FSST, fsst_payload)))
-        choice, best = min(cands, key=lambda t: len(t[1]))
-        if cache_key:
-            # no_template_fp marks "a template candidate was BUILT for
-            # data with this probe fingerprint and lost on size" — it
-            # stops the stale-dataset escape hatch above from
-            # re-auditioning every chunk of THAT column, while a
-            # different dataset (different fingerprint) under the same
-            # name still re-audits immediately. When the probe passed
-            # but the full-array build DECLINED (one non-matching tail
-            # value), record None instead (ADVICE r6): later chunks of
-            # the same column that ARE fully template-shaped must
-            # re-audition, not inherit a fsst/raw verdict the template
-            # never actually lost
-            _str_cache[cache_key] = {"choice": choice, "merges": merges,
-                                     "uses": 0,
-                                     "no_template_fp":
-                                     tmpl_fp if tmpl_built
-                                     and choice != "template"
-                                     else None}
-        return best
-    raise ValueError(f"not a string codec: {codec}")
+    if codec is not None:
+        raise ValueError(f"not a string codec: {codec}")
+    # `arr` is null-FILLED from here on: a planned codec that declines
+    # must fall through to the audition below, never recurse (the
+    # captured `valid` is the only copy of the null mask)
+    if planned == Codec.STR_TEMPLATE:
+        t = _template_build(arr, dtype_code, n, valid, try_zstd)
+        if t is not None:
+            return t
+    elif isinstance(planned, tuple):
+        payload = strings.fsst_encode(corpus, planned)
+        if payload is not None:
+            return build(Codec.FSST, payload)
+    # audition: dict when it halves the values, else the smallest of
+    # raw / template / FSST with a merge table built on this chunk
+    if n >= 16:
+        denc = dict_encode()
+        if len(denc.dictionary) < n // 2:
+            return build_dict(denc)
+    cands = [build(Codec.STR_RAW, corpus)]
+    if dtype_code == DType.STR:
+        t = _template_build(arr, dtype_code, n, valid, try_zstd)
+        if t is not None:
+            cands.append(t)
+    fsst_payload = strings.fsst_encode(corpus)
+    if fsst_payload is not None:
+        cands.append(build(Codec.FSST, fsst_payload))
+    return min(cands, key=len)
 
 
 def _decode_string(blob: bytes) -> tuple[pa.Array, np.ndarray | None]:
@@ -816,8 +749,7 @@ def _decode_string(blob: bytes) -> tuple[pa.Array, np.ndarray | None]:
 # lists (tokens: array<int32>, embeddings: array<float>)
 # --------------------------------------------------------------------------
 
-def _encode_decimal128(arr: pa.Array, try_zstd: bool,
-                       cache_key: str | None = None) -> bytes:
+def _encode_decimal128(arr: pa.Array, try_zstd: bool) -> bytes:
     """decimal128(p, s) — e.g. the u64-widening target decimal(20,0) —
     stored as two independently auto-encoded uint64 word planes of the
     little-endian two's-complement 128-bit values (bit-exact for the
@@ -833,10 +765,8 @@ def _encode_decimal128(arr: pa.Array, try_zstd: bool,
     raw = np.frombuffer(buf, dtype=np.uint64,
                         offset=arr.offset * 16, count=2 * len(arr))
     lo, hi = raw[0::2].copy(), raw[1::2].copy()
-    lo_blob = encode_array(lo, try_zstd=try_zstd,
-                           cache_key=f"{cache_key}.lo" if cache_key else None)
-    hi_blob = encode_array(hi, try_zstd=try_zstd,
-                           cache_key=f"{cache_key}.hi" if cache_key else None)
+    lo_blob = encode_array(lo, try_zstd=try_zstd)
+    hi_blob = encode_array(hi, try_zstd=try_zstd)
     payload = struct.pack("<Bb", t.precision, t.scale) \
         + frame(lo_blob, hi_blob)  # scale is SIGNED in arrow
     return assemble(Codec.DEC128, DType.DEC128, len(arr), payload,
@@ -878,7 +808,7 @@ def _primitive_np(values: pa.Array) -> np.ndarray:
 
 
 def _encode_list(arr: pa.Array, codec: Codec | None, try_zstd: bool,
-                 cache_key: str | None = None) -> bytes:
+                 cache_key: str | None, plan: Plan | None) -> bytes:
     valid = None
     if arr.null_count:
         valid = np.asarray(arr.is_valid())
@@ -893,10 +823,10 @@ def _encode_list(arr: pa.Array, codec: Codec | None, try_zstd: bool,
     # entropy but a 13-bit packed width — the large-array audition lets
     # rANS/byte-planes compete for it (r6)
     lengths_blob = encode_array(
-        lengths, try_zstd=True,
+        lengths, try_zstd=True, plan=plan,
         cache_key=f"{cache_key}.lengths" if cache_key else None)
     values_blob = encode_array(
-        values_np, codec=codec, try_zstd=try_zstd,
+        values_np, codec=codec, try_zstd=try_zstd, plan=plan,
         cache_key=f"{cache_key}.values" if cache_key else None)
     return assemble(Codec.LIST, DType.LIST, len(arr),
                     frame(lengths_blob, values_blob), valid=valid,
@@ -921,13 +851,18 @@ def _decode_list(blob: bytes) -> tuple[pa.Array, np.ndarray | None]:
 
 def encode_array(values, valid: np.ndarray | None = None,
                  codec: Codec | None = None, try_zstd: bool = True,
-                 cache_key: str | None = None) -> bytes:
+                 cache_key: str | None = None,
+                 plan: Plan | None = None) -> bytes:
     """Encode one column chunk into a self-describing blob.
 
-    cache_key enables the worker-local codec-choice cache (see above) for
-    repeated encodes of the same logical column."""
+    `codec` forces a codec. Otherwise the codec is `plan[cache_key]`
+    (this column's entry in the run's encode plan, see `Plan`) when the
+    chunk accepts it, else the chunk's own audition. The result depends
+    only on the values and that entry — no state carries over from
+    earlier calls."""
     if isinstance(values, pa.ChunkedArray):
         values = values.combine_chunks()
+    entry = plan.get(cache_key) if plan and cache_key else None
     if isinstance(values, pa.Array):
         t = values.type
         if not (pa.types.is_string(t) or pa.types.is_large_string(t)
@@ -941,15 +876,14 @@ def encode_array(values, valid: np.ndarray | None = None,
             # recursion. Fail like arrow_type_of_ddl does on decode.
             raise ValueError(f"unsupported type for codec pipeline: {t}")
         if pa.types.is_string(t) or pa.types.is_large_string(t):
-            return _encode_string(values, DType.STR, codec, try_zstd,
-                                  cache_key=cache_key)
+            return _encode_string(values, DType.STR, codec, try_zstd, entry)
         if pa.types.is_binary(t) or pa.types.is_large_binary(t):
             return _encode_string(values, DType.BINARY, codec, try_zstd,
-                                  cache_key=cache_key)
+                                  entry)
         if pa.types.is_list(t) or pa.types.is_large_list(t):
-            return _encode_list(values, codec, try_zstd, cache_key=cache_key)
+            return _encode_list(values, codec, try_zstd, cache_key, plan)
         if pa.types.is_decimal(t):
-            return _encode_decimal128(values, try_zstd, cache_key=cache_key)
+            return _encode_decimal128(values, try_zstd)
         if values.null_count:
             valid = np.asarray(values.is_valid()) if valid is None else valid
             values = pc.fill_null(values, values.drop_null()[0]
@@ -958,7 +892,8 @@ def encode_array(values, valid: np.ndarray | None = None,
     values = np.asarray(values)
     if values.dtype == np.dtype(object):
         return encode_array(pa.array(values), valid=valid, codec=codec,
-                            try_zstd=try_zstd)
+                            try_zstd=try_zstd, cache_key=cache_key,
+                            plan=plan)
     logical = values.dtype
     work_dtype = _WORK_VIEW.get(logical)
     work = values.view(work_dtype) if work_dtype is not None else values
@@ -976,83 +911,42 @@ def encode_array(values, valid: np.ndarray | None = None,
         blob = assemble(codec, dtype_code, len(work), payload, valid=valid,
                         try_zstd=try_zstd)
         return blob
-    # auto. Small chunks: analytic pick + RAW(+zstd) guard. Large chunks:
-    # audition EVERY candidate (analytic top-2 + byte-planes + rANS) on a
-    # contiguous window, then run the full data through the winner only —
-    # one full-size encode pass instead of one per challenger. Threshold
-    # 2^12 (r6, was 2^16): per-row scalar columns of a 4M-token chunk
-    # hold ~10k values — below the old bar, so n_tok-style columns never
-    # met rANS (entropy 8.9 bits) and shipped bit-packed (13 bits); the
-    # audition cost is first-chunk-per-worker only (choice cache).
     n = len(work)
-    entry = _choice_cache.get(cache_key) \
-        if (try_zstd and cache_key) else None
-    # a seeded SHARED-table choice is honored at ANY size (r7): side
-    # streams — list lengths, n_tok — hold ~1k values per
-    # bench-geometry chunk, and their profitable choice is a
-    # driver-seeded shared table the analytic pick below can never
-    # discover. Other cached codecs keep the old size gate: a RANS
-    # pick auditioned on a big chunk must not be force-applied to a
-    # tiny tail chunk where its per-chunk table would dominate.
-    if try_zstd and (n >= (1 << 12)
-                     or (entry is not None
-                         and entry[0] == Codec.RANS_SHARED)):
-        picked = None
-        keep_shared = False
-        if entry is not None and entry[0] == Codec.RANS_SHARED:
-            # shared-table choice (seeded by hints, never auditioned
-            # in): sticky, but challenged by a full audition every
-            # _REAUDIT_EVERY-th chunk so a drifting distribution can
-            # win the column back. One declined chunk (range mismatch)
-            # keeps the entry — an outlier-heavy chunk must not evict
-            # the shared table for the whole column (the r6
-            # no_template_fp lesson) — but 3 consecutive declines mean
-            # a different dataset reuses this column name in a
-            # long-lived worker: drop the entry and let the audition
-            # below re-seed it.
-            payload = _rans_shared_payload(work, entry[2])
-            if payload is not None:
-                entry[3] = 0
-                picked = assemble(Codec.RANS_SHARED, dtype_code, n,
-                                  payload, valid=valid, try_zstd=False)
-                entry[1] += 1
-                if entry[1] >= _REAUDIT_EVERY:
-                    entry[1] = 0
-                    challenger = _encode_auto_large(work, dtype_code, valid)
-                    if len(challenger) < len(picked):
-                        from .format import unpack_header
-                        _choice_cache[cache_key] = [
-                            unpack_header(challenger)[0], 0]
-                        picked = challenger
-            else:
-                entry[3] += 1
-                if entry[3] >= 3:
-                    del _choice_cache[cache_key]
-                else:
-                    keep_shared = True
-        elif entry is not None and entry[1] < _REAUDIT_EVERY:
-            entry[1] += 1
-            payload = _encode_int_payload(work, entry[0])
-            if payload is not None:
-                self_comp = entry[0] in (Codec.BYTE_PLANES, Codec.RANS)
-                picked = assemble(entry[0], dtype_code, n, payload,
-                                  valid=valid, try_zstd=not self_comp)
-        if picked is None:
-            if n >= (1 << 12):
-                picked = _encode_auto_large(work, dtype_code, valid)
-                if cache_key is not None and not keep_shared:
-                    from .format import unpack_header
-                    _choice_cache[cache_key] = [
-                        unpack_header(picked)[0], 0]
-            else:
-                # small chunk with no usable cached choice: analytic
-                # pick, cache left alone (a 1k-value window is too
-                # noisy to overwrite a dataset-level seed)
-                inner = _encode_int_auto(work)
-                picked = _reheader(inner, dtype_code, valid, try_zstd)
-    else:
-        inner = _encode_int_auto(work)
-        picked = _reheader(inner, dtype_code, valid, try_zstd)
+    picked = None
+    if isinstance(entry, (bytes, bytearray)):
+        # a shared rANS table applies at ANY size: side streams (list
+        # lengths, n_tok) hold ~1k values per bench-geometry chunk, and
+        # their profitable codec is a table the per-chunk pick below can
+        # never discover. It declines on a chunk with too many values
+        # outside the table's range.
+        payload = _rans_shared_payload(work, register_shared_table(entry))
+        if payload is not None:
+            picked = assemble(Codec.RANS_SHARED, dtype_code, n, payload,
+                              valid=valid, try_zstd=False)
+    elif entry is not None and n >= (1 << 12):
+        # other planned codecs keep the audition's size gate: a RANS pick
+        # auditioned on a big sample must not be forced onto a tiny tail
+        # chunk where its per-chunk table would dominate
+        planned = Codec(entry)
+        payload = _encode_int_payload(work, planned)
+        if payload is not None:
+            self_comp = planned in (Codec.BYTE_PLANES, Codec.RANS)
+            picked = assemble(planned, dtype_code, n, payload,
+                              valid=valid, try_zstd=not self_comp)
+    if picked is None:
+        # the chunk's own audition. Small chunks: analytic pick. Large
+        # chunks: audition EVERY candidate (analytic top-2 + byte-planes +
+        # rANS) on a contiguous window, then run the full data through the
+        # winner only — one full-size encode pass instead of one per
+        # challenger. Threshold 2^12 (r6, was 2^16): per-row scalar
+        # columns of a 4M-token chunk hold ~10k values — below the old
+        # bar, so n_tok-style columns never met rANS (entropy 8.9 bits)
+        # and shipped bit-packed (13 bits).
+        if try_zstd and n >= (1 << 12):
+            picked = _encode_auto_large(work, dtype_code, valid)
+        else:
+            picked = _reheader(_encode_int_auto(work), dtype_code, valid,
+                               try_zstd)
     if len(picked) * 2 < work.nbytes:
         return picked
     raw_guard = assemble(Codec.RAW, dtype_code, len(work),
@@ -1110,12 +1004,11 @@ def _encode_auto_large(work: np.ndarray, dtype_code: DType,
 
 def pick_int_codec(values: np.ndarray) -> int | None:
     """Driver-side audition over a SAMPLE of a column's values: the
-    winning codec's enum value, or None when the sample is too small to
-    audition (the per-chunk analytic path handles those). Feed the
-    result to ``seed_choice_cache`` inside the encode UDF so a fleet of
-    fresh executors skips the expensive first-chunk audition — on a
-    1000-executor cluster the audition otherwise runs 1000×, once per
-    worker-local cache."""
+    winning codec's enum value (a plan entry), or None when the sample is
+    too small to audition (the per-chunk analytic path handles those).
+    Auditioning once on the driver spares every chunk the window
+    audition — on a 1000-executor cluster it would otherwise run once
+    per chunk."""
     values = np.asarray(values)
     if values.dtype == np.dtype(object) or len(values) < (1 << 16):
         return None
@@ -1125,48 +1018,23 @@ def pick_int_codec(values: np.ndarray) -> int | None:
     return int(order[0]) if order else None
 
 
-def seed_choice_cache(hints: dict[str, int | bytes]) -> None:
-    """Pre-populate the worker-local codec-choice cache from driver-side
-    audition hints ({cache_key: codec enum | shared-table blob}).
-
-    When a cached entry AGREES with the hint it is kept (its use count
-    keeps driving the normal _REAUDIT_EVERY drift cadence). When it
-    DISAGREES, the hint wins (r6): a long-lived worker that previously
-    encoded a different dataset whose columns share names would
-    otherwise reuse that dataset's choices for up to _REAUDIT_EVERY
-    chunks — the hint was auditioned on THIS dataset and is the fresher
-    signal. A wrong choice still only costs compression ratio, never
-    correctness (payload fallback + the RAW(+zstd) guard).
-
-    A bytes value is a shared rANS table blob (r7): it is registered in
-    the content-addressed worker registry and the column's choice
-    becomes RANS_SHARED against that specific fingerprint — a stale
-    same-named entry (even a RANS_SHARED one against an OLD table) is
-    overridden, because the blob names the table it was built from.
-
-    Call this at UDF start even with EMPTY hints: any cached
-    RANS_SHARED choice whose table this job does not ship is purged
-    (the table registry itself is kept — it is content-addressed and
-    harmless). Without the purge, a long-lived worker that encoded a
-    table-shipping dataset would keep encoding a SAME-NAMED column of
-    a hint-less later dataset against the old table, whose blob that
-    job's output never delivers — decodable only by accident."""
-    allowed: set[int] = set()
-    for key, val in hints.items():
-        if isinstance(val, (bytes, bytearray)):
-            fp = register_shared_table(bytes(val))
-            allowed.add(fp)
-            cur = _choice_cache.get(key)
-            if cur is None or cur[0] != Codec.RANS_SHARED or cur[2] != fp:
-                # [codec, uses, table fp, consecutive declines]
-                _choice_cache[key] = [Codec.RANS_SHARED, 0, fp, 0]
-            continue
-        cur = _choice_cache.get(key)
-        if cur is None or cur[0] != Codec(val):
-            _choice_cache[key] = [Codec(val), 0]
-    for key in [k for k, e in _choice_cache.items()
-                if e[0] == Codec.RANS_SHARED and e[2] not in allowed]:
-        del _choice_cache[key]
+def pick_string_codec(arr: pa.Array) -> int | tuple | None:
+    """Driver-side audition of a string/binary column SAMPLE: the plan
+    entry that makes chunks skip their own audition — the winning codec's
+    enum value, or for FSST the merge table built on the sample (chunks
+    then never retrain one). None for an empty sample."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    if len(arr) == 0:
+        return None
+    t = arr.type
+    dtype_code = DType.BINARY if pa.types.is_binary(t) \
+        or pa.types.is_large_binary(t) else DType.STR
+    codec, _dc, _n, _v, payload = disassemble(
+        _encode_string(arr, dtype_code, None, try_zstd=True))
+    if codec == Codec.FSST:
+        return strings.fsst_merges(unframe(payload, 2)[1])
+    return int(codec)
 
 
 def _reheader(blob: bytes, dtype_code: DType, valid: np.ndarray | None,

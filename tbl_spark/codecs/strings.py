@@ -24,6 +24,12 @@ _MIN_PAIR_COUNT = 8  # a merge must save at least this many bytes on the sample
 _SAMPLE_CAP = 1 << 20
 
 
+def _used_bytes(corpus: bytes) -> np.ndarray:
+    """Per-byte-value occurrence mask of `corpus` (bool[256])."""
+    return np.bincount(np.frombuffer(corpus, dtype=np.uint8),
+                       minlength=256) > 0
+
+
 def build_merges(corpus: bytes, max_merges: int = MAX_MERGES,
                  sample_cap: int = _SAMPLE_CAP) -> list[tuple[int, int, int]]:
     """Greedy pair-merge table: [(code, left, right), ...] applied in order.
@@ -33,8 +39,8 @@ def build_merges(corpus: bytes, max_merges: int = MAX_MERGES,
     """
     if len(corpus) < 64:
         return []
-    used = set(np.unique(np.frombuffer(corpus, dtype=np.uint8)).tolist())
-    free = [b for b in range(255, -1, -1) if b not in used]
+    used = _used_bytes(corpus)
+    free = [b for b in range(255, -1, -1) if not used[b]]
     buf = corpus[:sample_cap]
     merges: list[tuple[int, int, int]] = []
     # early stop: a merge must keep shrinking the sample by a meaningful
@@ -66,39 +72,35 @@ def invert_merges(corpus: bytes, merges: list[tuple[int, int, int]]) -> bytes:
     return corpus
 
 
-def merges_valid_for(corpus: bytes,
-                     merges: list[tuple[int, int, int]]) -> bool:
-    """A cached merge table is reusable iff none of its code bytes occur
-    in the new corpus (they must be free bytes there too)."""
-    if not merges:
-        return False
-    used = set(np.unique(np.frombuffer(corpus, dtype=np.uint8)).tolist())
-    return not any(code in used for code, _l, _r in merges)
+def fsst_encode(corpus: bytes,
+                merges: tuple | list | None = None) -> bytes | None:
+    """payload: u16 n_merges + 3*n_merges merge triples + encoded corpus,
+    or None when FSST does not shrink the corpus.
 
-
-def fsst_encode_full(corpus: bytes,
-                     merges: list[tuple[int, int, int]] | None = None
-                     ) -> tuple[bytes | None, list[tuple[int, int, int]]]:
-    """(payload | None, merges_used). Pass a cached merge table to skip the
-    build rounds; it is validated and rebuilt when not applicable."""
-    if merges is None or not merges_valid_for(corpus, merges):
+    `merges` is a table built on a sample of the same column (an encode
+    plan entry): it skips the build rounds, and the encode declines when
+    one of its code bytes occurs in `corpus` (replacing it would not be
+    reversible). Without it the table is built from `corpus` itself."""
+    if merges is None:
         merges = build_merges(corpus)
+    elif _used_bytes(corpus)[[code for code, _l, _r in merges]].any():
+        return None
     if not merges:
-        return None, merges
+        return None
     enc = apply_merges(corpus, merges)
     if len(enc) + 2 + 3 * len(merges) >= len(corpus):
-        return None, merges
+        return None
     table = b"".join(bytes(m) for m in merges)
-    return struct.pack("<H", len(merges)) + table + enc, merges
+    return struct.pack("<H", len(merges)) + table + enc
 
 
-def fsst_encode(corpus: bytes) -> bytes | None:
-    """payload: u16 n_merges + 3*n_merges merge triples + encoded corpus."""
-    payload, _ = fsst_encode_full(corpus)
-    return payload
+def fsst_merges(payload: bytes) -> tuple[tuple[int, int, int], ...]:
+    """The merge table an FSST payload was encoded with."""
+    (n_merges,) = struct.unpack_from("<H", payload, 0)
+    return tuple(tuple(payload[2 + 3 * i: 5 + 3 * i])
+                 for i in range(n_merges))
 
 
 def fsst_decode(payload: bytes) -> bytes:
-    (n_merges,) = struct.unpack_from("<H", payload, 0)
-    merges = [tuple(payload[2 + 3 * i: 5 + 3 * i]) for i in range(n_merges)]
-    return invert_merges(payload[2 + 3 * n_merges:], merges)
+    merges = fsst_merges(payload)
+    return invert_merges(payload[2 + 3 * len(merges):], merges)

@@ -15,6 +15,7 @@ pre-defused by the salted part_id (partitioning.py), with AQE as backup.
 
 from __future__ import annotations
 
+import logging
 import time
 
 import numpy as np
@@ -23,7 +24,10 @@ from pyspark.sql import DataFrame
 
 from .arrowtypes import to_codec_input
 from .codecs import blob_codec, encode_array
+from .codecs.core import Plan
 from .partitioning import PART_COL, resolve_salt_cols, with_part_id
+
+log = logging.getLogger("tbl_spark")
 
 # part_id is bigint: the shuffle path uses small pmod ids, but the
 # zero-shuffle colocated path derives ids by hashing (file, block, seq),
@@ -69,9 +73,10 @@ def _logical_bytes(arr: pa.Array) -> int:
         return 0
 
 
-def encode_table(part_id: int, tbl: pa.Table,
-                 spark_types: dict[str, str]) -> pa.Table:
-    """Encode every column of one chunk's Arrow table → chunk rows."""
+def encode_table(part_id: int, tbl: pa.Table, spark_types: dict[str, str],
+                 plan: Plan) -> pa.Table:
+    """Encode every column of one chunk's Arrow table → chunk rows, each
+    column under its entry in the run's encode `plan`."""
     rows = {k: [] for k in CHUNK_ARROW_SCHEMA.names}
     for name in tbl.column_names:
         if name == PART_COL:
@@ -79,7 +84,7 @@ def encode_table(part_id: int, tbl: pa.Table,
         arr = tbl.column(name).combine_chunks()
         t0 = time.perf_counter()
         codec_input = to_codec_input(arr)
-        blob = encode_array(codec_input, cache_key=name)
+        blob = encode_array(codec_input, cache_key=name, plan=plan)
         ms = (time.perf_counter() - t0) * 1000.0
         n_values = len(arr)
         if pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type):
@@ -132,7 +137,7 @@ def _local_parquet_sample(df: DataFrame, columns: list[str],
     JVM involvement. Any surprise — remote scheme, schema drift,
     reader error — returns None and the caller falls back to the
     Spark job; the sample feeds only codec CHOICE heuristics, never
-    correctness."""
+    correctness. A reader error is logged with its reason."""
     try:
         if df._jdf.queryExecution().logical().children().size() != 0:
             return None
@@ -158,59 +163,84 @@ def _local_parquet_sample(df: DataFrame, columns: list[str],
         if not batches:
             return None
         return pa.Table.from_batches(batches).slice(0, n_rows)
-    except Exception:  # noqa: BLE001 — best-effort fast path only
+    except Exception as e:  # noqa: BLE001 — best-effort fast path only
+        log.warning("local parquet sample failed (%s: %s); sampling with "
+                    "a Spark job instead", type(e).__name__, e)
         return None
 
 
-def audition_codec_hints(df: DataFrame,
-                         sample_rows: int = 1024) -> dict[str, int]:
+def audition_codec_hints(df: DataFrame, sample_rows: int = 1024) -> Plan:
     """ONE driver-side codec audition per column over a bounded sample,
-    returned as {choice-cache key: codec enum} for seed_choice_cache.
+    returned as the run's encode plan ({column key: entry}, see
+    codecs.core.Plan) for the encode entry points' `codec_hints`.
 
-    Why: the codec choice cache is worker-local, so on a fresh fleet
-    EVERY python worker pays the first-chunk window audition (a full
-    rANS + byte-planes encode of a 256k-value window, ~0.3 s for token
-    columns). With N executors that cost is paid N times per job; the
-    driver pays it once here and ships the winner. The hint is only a
-    starting choice — workers keep the payload fallback, the RAW(+zstd)
-    guard and the periodic re-audit, so a hint can never produce a
-    wrong or oversized-beyond-guard blob.
+    Why: without a plan EVERY chunk pays its own audition (for token
+    columns a full rANS + byte-planes encode of a 256k-value window,
+    ~0.3 s; for a free-text column an FSST merge-table build, ~3x the
+    cost of encoding with a given table). The driver pays it once here
+    and every chunk of the run encodes under the same entry, so chunk
+    bytes do not depend on which worker or in which order they are
+    encoded. A chunk the planned codec declines on gets its own
+    audition, and the RAW(+zstd) guard still bounds the worst case.
 
     Two-phase sampling: `sample_rows` rows cover list columns (each row
-    carries hundreds of values), then SCALAR numeric columns — which
-    need >= 2^16 values before the audition fires — get their own wider
-    sample of just those columns (a few MB, column-pruned scan).
+    carries hundreds of values) and string columns (the winning string
+    codec, and for FSST the merge table built on the sample), then
+    SCALAR numeric columns — which need >= 2^16 values before the
+    audition fires — get their own wider sample of just those columns
+    (a few MB, column-pruned scan).
 
     When rANS wins a column, the audition additionally builds a SHARED
     frequency table from a wider sample of that column (r7, the
     dictionary-page analog — see codecs/core.py build_shared_table) and
-    the hint value becomes the table BLOB instead of the codec enum:
-    seed_choice_cache registers it and chunks encode RANS_SHARED cores
-    against it, eliminating the per-chunk side-table cost (0.0535
-    B/token at bench-size 400k-token chunks). Table quality scales with
-    sample size (measured 1.1308 -> 1.1167 B/token going 250k -> 1.6M
-    sample values), so the table sample is wider than the choice
-    sample."""
+    the plan entry becomes the table BLOB instead of the codec enum:
+    chunks encode RANS_SHARED cores against it, eliminating the
+    per-chunk side-table cost (0.0535 B/token at bench-size 400k-token
+    chunks). Table quality scales with sample size (measured 1.1308 ->
+    1.1167 B/token going 250k -> 1.6M sample values), so the table
+    sample is wider than the choice sample."""
     from .codecs.core import (Codec, build_shared_table, pick_int_codec,
-                              shared_table_hint)
+                              pick_string_codec, shared_table_hint)
     # r8: column categories come from the SCHEMA, not a collected sample
     # — each toArrow here is a whole driver job whose single-task scan
     # decodes the input's full row group regardless of the limit, so on
     # an 11-column scalar table the old 1024-row type-probe job cost as
     # much as the real sample job. Lists still get a small probe (their
     # null check is data, not schema), scalar-only tables collect ONCE.
-    hints: dict[str, int | bytes] = {}
+    plan: Plan = {}
     scalar_num = [f.name for f in df.schema.fields
                   if f.name != PART_COL
                   and f.dataType.simpleString() in _NUMERIC_DDL]
     list_cols = [f.name for f in df.schema.fields
                  if f.name != PART_COL
                  and f.dataType.simpleString().startswith("array<")]
+    str_cols = [f.name for f in df.schema.fields
+                if f.name != PART_COL
+                and f.dataType.simpleString() in ("string", "binary")]
+    use_local = True
+
+    def local_sample(columns: list[str], n_rows: int) -> pa.Table | None:
+        # after one miss every later read of this frame would miss too:
+        # go straight to Spark (and log a reader error once, not per read)
+        nonlocal use_local
+        tbl = _local_parquet_sample(df, columns, n_rows) if use_local \
+            else None
+        use_local = tbl is not None
+        return tbl
+
+    def sample_of(columns: list[str], n_rows: int) -> pa.Table:
+        tbl = local_sample(columns, n_rows)
+        if tbl is None:
+            tbl = df.select(*columns).limit(n_rows).toArrow()
+        return tbl
+
     sample = None
-    if list_cols:
-        sample = _local_parquet_sample(df, list_cols, sample_rows)
-        if sample is None:
-            sample = df.select(*list_cols).limit(sample_rows).toArrow()
+    if list_cols or str_cols:
+        sample = sample_of(list_cols + str_cols, sample_rows)
+    for name in str_cols:
+        entry = pick_string_codec(sample.column(name))
+        if entry is not None:
+            plan[name] = entry
     for name in list_cols:
         arr = sample.column(name).combine_chunks()
         arr = to_codec_input(arr)
@@ -227,7 +257,7 @@ def audition_codec_hints(df: DataFrame,
             # the lengths' entropy, amortizing its table across every
             # chunk of the dataset)
             lw = None
-            ltbl = _local_parquet_sample(df, [name], _SCALAR_SAMPLE_ROWS)
+            ltbl = local_sample([name], _SCALAR_SAMPLE_ROWS)
             if ltbl is not None:
                 larr = ltbl.column(name).combine_chunks()
                 if larr.null_count == 0:
@@ -241,7 +271,7 @@ def audition_codec_hints(df: DataFrame,
                       .to_numpy())
             lblob = shared_table_hint(lw)
             if lblob is not None:
-                hints[f"{name}.lengths"] = lblob
+                plan[f"{name}.lengths"] = lblob
             key = f"{name}.values"
             values = to_codec_input(values)
             t = values.type
@@ -251,7 +281,7 @@ def audition_codec_hints(df: DataFrame,
             continue
         codec = pick_int_codec(values.to_numpy(zero_copy_only=False))
         if codec is not None:
-            hints[key] = codec
+            plan[key] = codec
             if codec == Codec.RANS:
                 # wider column-pruned sample just for the shared table.
                 # 16x the choice sample (~6.5M values at bench doc
@@ -262,23 +292,16 @@ def audition_codec_hints(df: DataFrame,
                 # while the driver-side cost stays a one-off sub-second
                 # column-pruned scan per dataset.
                 from .codecs.core import _primitive_np
-                wtbl = _local_parquet_sample(df, [name],
-                                             16 * sample_rows)
-                if wtbl is None:
-                    wtbl = (df.select(name).limit(16 * sample_rows)
-                            .toArrow())
-                wide = wtbl.column(name).combine_chunks()
+                wide = sample_of([name], 16 * sample_rows).column(name)
+                wide = wide.combine_chunks()
                 wv = to_codec_input(wide).flatten()
                 if not wv.null_count:
                     blob = build_shared_table(
                         _primitive_np(to_codec_input(wv)))
                     if blob is not None:
-                        hints[key] = blob
+                        plan[key] = blob
     if scalar_num:
-        wide = _local_parquet_sample(df, scalar_num, _SCALAR_SAMPLE_ROWS)
-        if wide is None:
-            wide = (df.select(*scalar_num)
-                    .limit(_SCALAR_SAMPLE_ROWS).toArrow())
+        wide = sample_of(scalar_num, _SCALAR_SAMPLE_ROWS)
 
         def _audit_scalar(name: str):
             """Trial-encode one column; returns its hint value or None.
@@ -315,8 +338,8 @@ def audition_codec_hints(df: DataFrame,
             for name, hint in zip(scalar_num,
                                   pool.map(_audit_scalar, scalar_num)):
                 if hint is not None:
-                    hints[name] = hint
-    return hints
+                    plan[name] = hint
+    return plan
 
 
 # sentinel chunk rows carrying shared rANS tables (r7): codec marks them,
@@ -329,13 +352,13 @@ RANS_TABLE_CODEC = "rans_table"
 
 
 def _attach_shared_tables(encoded: DataFrame, spark,
-                          hints: dict) -> DataFrame:
+                          plan: Plan) -> DataFrame:
     """Union one sentinel chunk row per shared table and attach the
     table dict to the returned DataFrame object (`tbl_shared_tables`)
     for the in-flight decode path (decode.py reads it back; chunk rows
     persisted to parquet keep the tables via the sentinel rows)."""
     from .codecs.core import shared_table_fp
-    blobs = {k: bytes(v) for k, v in hints.items()
+    blobs = {k: bytes(v) for k, v in plan.items()
              if isinstance(v, (bytes, bytearray))}
     tables = {shared_table_fp(b): b for b in blobs.values()}
     if blobs:
@@ -357,12 +380,11 @@ def encode_chunks_colocated(
         df: DataFrame,
         tokens_per_chunk: int | None = None,
         token_col: str = "tokens",
-        driver_audition: bool = True,
-        codec_hints: dict[str, int] | None = None) -> DataFrame:
+        codec_hints: Plan | None = None) -> DataFrame:
     """ZERO-shuffle encode: each scan task streams its Arrow batches and
     cuts a chunk whenever the token budget fills — the Spark analog of the
     reference's per-file streaming surgery (parquet_insert.rs bounded
-    batches), and the plan has NO Exchange at all.
+    batches), and the query plan has NO Exchange at all.
 
     When to use which encode:
     - `encode_chunks` (salted shuffle): rebalances skew and gives chunk
@@ -376,7 +398,9 @@ def encode_chunks_colocated(
     — deterministic for a fixed file set and split config (the store pins
     those), unique without any cross-task coordination. In-memory sources
     (no file name) fall back to the task partition id, which is stable
-    within a job but not across different split plans."""
+    within a job but not across different split plans.
+
+    `codec_hints` is the encode plan, as in `encode_chunks`."""
     import pyspark.sql.functions as F
 
     if tokens_per_chunk is None:
@@ -389,18 +413,16 @@ def encode_chunks_colocated(
                   for f in df.schema.fields)
     src = df.select("*", F.input_file_name().alias(FILE_HELPER),
                     F.input_file_block_start().alias(BLOCK_HELPER))
-    hints = codec_hints if codec_hints is not None \
-        else (audition_codec_hints(df) if driver_audition else {})
+    plan = audition_codec_hints(df) if codec_hints is None else codec_hints
 
     def run(batches):
-        from .codecs.core import seed_choice_cache
-        seed_choice_cache(hints)   # also purges foreign shared choices
         for pid, tbl in cut_colocated_chunks(batches, tokens_per_chunk,
                                              has_tok, token_col):
-            yield from encode_table(pid, tbl, spark_types).to_batches()
+            yield from encode_table(pid, tbl, spark_types,
+                                    plan).to_batches()
 
     return _attach_shared_tables(src.mapInArrow(run, CHUNK_SCHEMA_DDL),
-                                 df.sparkSession, hints)
+                                 df.sparkSession, plan)
 
 
 def cut_colocated_chunks(batches, tokens_per_chunk: int, has_tok: bool,
@@ -454,8 +476,7 @@ def cut_colocated_chunks(batches, tokens_per_chunk: int, has_tok: bool,
 def encode_chunks(df: DataFrame, num_parts: int,
                   columns: list[str] | None = None,
                   salt_cols: tuple[str, ...] | None = None,
-                  driver_audition: bool = True,
-                  codec_hints: dict[str, int] | None = None,
+                  codec_hints: Plan | None = None,
                   cluster: bool = True) -> DataFrame:
     """df (token table or any supported schema) → chunk DataFrame.
 
@@ -463,9 +484,11 @@ def encode_chunks(df: DataFrame, num_parts: int,
     (source, doc_id) when present, else the full row — partitioning.py).
     Every SOURCE column, including any user column named `part_id`, is
     encoded; the internal key uses the reserved `__ts_part__` name.
-    `codec_hints` (from `audition_codec_hints`) skips the per-call
-    driver audition — pass it when encoding the same dataset repeatedly
-    so the per-dataset audition cost is paid once.
+    `codec_hints` is the encode plan every chunk is encoded under; None
+    (the default) auditions one on `df`. Pass a plan from
+    `audition_codec_hints` when encoding the same dataset repeatedly so
+    the per-dataset audition cost is paid once, or `{}` to let every
+    chunk audition its own codecs.
 
     `cluster` (default on, r6) sorts each chunk's rows by the salt key
     BEFORE encoding. Row order inside a salted chunk is shuffle
@@ -477,8 +500,7 @@ def encode_chunks(df: DataFrame, num_parts: int,
     encode never sorts: there the input file order IS the clustering."""
     if columns is not None:
         df = df.select(*columns)
-    hints = codec_hints if codec_hints is not None \
-        else (audition_codec_hints(df) if driver_audition else {})
+    plan = audition_codec_hints(df) if codec_hints is None else codec_hints
     sort_keys = None
     if cluster:
         # only scalar key columns are arrow-sortable; the full-row-hash
@@ -494,11 +516,9 @@ def encode_chunks(df: DataFrame, num_parts: int,
                    for f in df.schema.fields if f.name != PART_COL}
 
     def encode_group(key: tuple, tbl: pa.Table) -> pa.Table:
-        from .codecs.core import seed_choice_cache
-        seed_choice_cache(hints)   # also purges foreign shared choices
         if sort_keys:
             tbl = tbl.sort_by(sort_keys)
-        return encode_table(key[0].as_py(), tbl, spark_types)
+        return encode_table(key[0].as_py(), tbl, spark_types, plan)
 
     out = df.groupBy(PART_COL).applyInArrow(encode_group, CHUNK_SCHEMA_DDL)
-    return _attach_shared_tables(out, df.sparkSession, hints)
+    return _attach_shared_tables(out, df.sparkSession, plan)

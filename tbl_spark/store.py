@@ -36,7 +36,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
-from .encode import CHUNK_SCHEMA_DDL, encode_table
+from .codecs.core import Plan
+from .encode import CHUNK_SCHEMA_DDL, audition_codec_hints, encode_table
 from .partitioning import PART_COL, with_part_id
 
 MANIFEST_SCHEMA_DDL = (
@@ -1050,8 +1051,7 @@ def _write_wave(store_root: str, seq: int, parts: list[int]) -> dict:
 def encode_to_store(df: DataFrame, store: ChunkStore, num_parts: int,
                     resume: bool = True,
                     salt_cols: tuple[str, ...] | None = None,
-                    driver_audition: bool = True,
-                    codec_hints: dict[str, int] | None = None,
+                    codec_hints: Plan | None = None,
                     cluster: bool = True) -> dict:
     """Run the resumable encode job; returns run summary.
 
@@ -1061,11 +1061,14 @@ def encode_to_store(df: DataFrame, store: ChunkStore, num_parts: int,
     later run fails fast on mismatch — resuming with different partitioning
     parameters would silently drop rows that hash into committed part ids.
 
-    `codec_hints` / `driver_audition` mirror encode_chunks (ADVICE r4):
-    pass precomputed hints (or driver_audition=False) to skip the two
+    `codec_hints` is the encode plan, as in encode_chunks: None
+    auditions one on `df`. Pass a precomputed plan to skip the
     driver-side audition sample jobs — essential for callers that encode
     many small batches, e.g. streaming.stream_encode's foreachBatch, which
-    auditions ONCE and reuses the hints every micro-batch.
+    auditions ONCE and reuses the plan every micro-batch. Committed chunk
+    bytes depend only on the input rows of each part and the plan, so a
+    resumed run under the same plan re-encodes a lost part to the same
+    bytes.
     """
     from .partitioning import resolve_salt_cols
     store.init_dirs()
@@ -1090,15 +1093,10 @@ def encode_to_store(df: DataFrame, store: ChunkStore, num_parts: int,
                    for f in df.schema.fields if f.name != PART_COL}
     store_root = store.root
 
-    if codec_hints is not None:
-        hints = codec_hints
-    elif driver_audition:
-        from .encode import audition_codec_hints
-        hints = audition_codec_hints(df.drop(PART_COL))
-    else:
-        hints = {}
-    tbl_blobs = [v for v in hints.values() if isinstance(v, (bytes,
-                                                             bytearray))]
+    plan = audition_codec_hints(df.drop(PART_COL)) if codec_hints is None \
+        else codec_hints
+    tbl_blobs = [v for v in plan.values() if isinstance(v, (bytes,
+                                                            bytearray))]
     if tbl_blobs:  # persist shared tables BEFORE any chunk references them
         store.write_shared_tables(tbl_blobs)
 
@@ -1117,13 +1115,11 @@ def encode_to_store(df: DataFrame, store: ChunkStore, num_parts: int,
                      if c in sortable] or None
 
     def encode_commit(key: tuple, tbl: pa.Table) -> pa.Table:
-        from .codecs.core import seed_choice_cache
-        seed_choice_cache(hints)   # also purges foreign shared choices
         part_id = key[0].as_py()
         t0 = time.perf_counter()
         if sort_keys:
             tbl = tbl.sort_by(sort_keys)
-        chunk_tbl = encode_table(part_id, tbl, spark_types)
+        chunk_tbl = encode_table(part_id, tbl, spark_types, plan)
         ms = (time.perf_counter() - t0) * 1000.0
         cols = {
             name: {"codec": codec, "raw_bytes": rb, "enc_bytes": eb,
@@ -1183,8 +1179,7 @@ def encode_to_store_colocated(df: DataFrame, store: ChunkStore,
                               tokens_per_chunk: int | None = None,
                               resume: bool = True,
                               token_col: str = "tokens",
-                              driver_audition: bool = True,
-                              codec_hints: dict[str, int] | None = None
+                              codec_hints: Plan | None = None
                               ) -> dict:
     """ZERO-shuffle resumable encode: chunks are cut inside each scan task
     (encode.cut_colocated_chunks — no Exchange), committed with the same
@@ -1238,23 +1233,15 @@ def encode_to_store_colocated(df: DataFrame, store: ChunkStore,
     # the committed set INCLUDES wave-compacted parts (whose loose
     # markers were deleted by compact()) — resume must not re-encode them
     committed = frozenset(store.committed_parts()) if resume else frozenset()
-    # same hint plumbing as encode_to_store (ADVICE r4): callers that
-    # encode many micro-batches audition once and pass the result in
-    if codec_hints is not None:
-        hints = codec_hints
-    elif driver_audition:
-        from .encode import audition_codec_hints
-        hints = audition_codec_hints(df)
-    else:
-        hints = {}
-    tbl_blobs = [v for v in hints.values() if isinstance(v, (bytes,
-                                                             bytearray))]
+    # same plan plumbing as encode_to_store (ADVICE r4): callers that
+    # encode many micro-batches audition once and pass the plan in
+    plan = audition_codec_hints(df) if codec_hints is None else codec_hints
+    tbl_blobs = [v for v in plan.values() if isinstance(v, (bytes,
+                                                            bytearray))]
     if tbl_blobs:  # persist shared tables BEFORE any chunk references them
         store.write_shared_tables(tbl_blobs)
 
     def run(batches):
-        from .codecs.core import seed_choice_cache
-        seed_choice_cache(hints)   # also purges foreign shared choices
         local_store = ChunkStore(store_root)
         local_store.init_dirs()
         for pid, tbl in cut_colocated_chunks(batches, tokens_per_chunk,
@@ -1266,7 +1253,7 @@ def encode_to_store_colocated(df: DataFrame, store: ChunkStore,
             if resume and (pid in committed or os.path.exists(marker)):
                 continue  # committed by a previous run — skip re-encode
             t0 = time.perf_counter()
-            chunk_tbl = encode_table(pid, tbl, spark_types)
+            chunk_tbl = encode_table(pid, tbl, spark_types, plan)
             ms = (time.perf_counter() - t0) * 1000.0
             cols = {
                 name: {"codec": codec, "raw_bytes": rb, "enc_bytes": eb,

@@ -41,24 +41,25 @@ def stream_encode(spark: SparkSession, input_dir: str, store_root: str,
               .option("maxFilesPerTrigger", "64")
               .parquet(input_dir))
 
-    # audition the codec hints on the FIRST non-empty micro-batch only,
-    # then reuse them for every later batch — without this each batch
-    # pays two driver-side sample jobs (ADVICE r4)
-    hint_cache: dict = {}
+    # audition the encode plan on the FIRST non-empty micro-batch only,
+    # then encode every later batch under it — without this each batch
+    # pays two driver-side sample jobs (ADVICE r4), and the same column
+    # could get different codecs in different batches of one stream
+    plan_of_stream: dict = {}
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         store = ChunkStore(os.path.join(store_root, f"batch={batch_id}"))
-        if "hints" not in hint_cache and not batch_df.isEmpty():
+        if "plan" not in plan_of_stream and not batch_df.isEmpty():
             from .encode import audition_codec_hints
-            hint_cache["hints"] = audition_codec_hints(batch_df)
-        hints = hint_cache.get("hints", {})
+            plan_of_stream["plan"] = audition_codec_hints(batch_df)
+        plan = plan_of_stream.get("plan", {})
         if colocated:
             from .store import encode_to_store_colocated
             encode_to_store_colocated(batch_df, store, resume=True,
-                                      codec_hints=hints)
+                                      codec_hints=plan)
         else:
             encode_to_store(batch_df, store, num_parts, resume=True,
-                            codec_hints=hints)
+                            codec_hints=plan)
 
     writer = (stream.writeStream.foreachBatch(process)
               .option("checkpointLocation", checkpoint_dir))

@@ -199,32 +199,91 @@ def test_rans_near_entropy_on_zipf():
     assert len(blob) < 1.35 * entropy_bytes  # tables+states overhead bound
 
 
+_WORDS = ("furiously carefully quickly slyly blithely final regular "
+          "express special pending bold even silent unusual ideas foxes "
+          "deposits requests").split()
+
+
+def _free_text(n: int, seed: int, type=pa.string()) -> pa.Array:
+    """Comment-like free text (lineitem's l_comment shape): FSST wins."""
+    rng = np.random.default_rng(seed)
+    return pa.array([" ".join(_WORDS[j] for j in
+                              rng.integers(0, len(_WORDS), 5))
+                     for _ in range(n)], type)
+
+
 def test_string_cache_reuse_and_invalidation():
-    """Cached FSST merge tables are validated per corpus: a corpus that
-    uses the cached code bytes forces a rebuild; roundtrips stay exact."""
-    from tbl_spark.codecs.core import _str_cache
-    _str_cache.clear()
-    ids_a = pa.array([f"cc-news-{i:09d}" for i in range(3000)])
-    ids_b = pa.array([f"web-crawl-{i:09d}" for i in range(3000)])
-    # adversarial: corpus containing ALL byte values (cached codes unusable)
-    all_bytes = "".join(chr(33 + (i % 90)) for i in range(200))
-    ids_c = pa.array([all_bytes + f"{i}" for i in range(500)])
-    for v in (ids_a, ids_b, ids_a, ids_c, ids_a):
-        blob = encode_array(v, cache_key="doc_id")
-        out, _ = decode_array(blob)
+    """A planned FSST merge table is checked per chunk: a chunk that uses
+    one of its code bytes declines it and auditions its own codec.
+    Round-trips stay exact and the plan is never changed."""
+    from tbl_spark.codecs.core import blob_codec, pick_string_codec
+    from tbl_spark.codecs.format import disassemble, unframe
+    from tbl_spark.codecs.strings import fsst_merges
+    merges = pick_string_codec(_free_text(1024, seed=1, type=pa.binary()))
+    assert isinstance(merges, tuple) and merges
+    plan = {"note": merges}
+    chunk = _free_text(3000, seed=2, type=pa.binary())
+    first = encode_array(chunk, cache_key="note", plan=plan)
+    assert blob_codec(first).startswith("fsst")
+    assert fsst_merges(unframe(disassemble(first)[4], 2)[1]) == merges
+    # adversarial: a corpus holding every byte value leaves no code free
+    all_bytes = pa.array([bytes(range(256)) + b"%d" % i
+                          for i in range(500)], pa.binary())
+    for v in (chunk, all_bytes):
+        out, _ = decode_array(encode_array(v, cache_key="note", plan=plan))
         assert out.to_pylist() == v.to_pylist()
-    assert _str_cache["doc_id"]["uses"] >= 1
+    assert encode_array(chunk, cache_key="note", plan=plan) == first
+    assert plan == {"note": merges}
 
 
 def test_numeric_cache_roundtrip_across_chunks():
-    from tbl_spark.codecs.core import _choice_cache
-    _choice_cache.clear()
+    """Chunks of one column encode under the planned codec and round-trip
+    exactly."""
+    from tbl_spark.codecs.core import pick_int_codec
+    from tbl_spark.codecs.format import unpack_header
     rng = np.random.default_rng(5)
+
+    def tokens(n):
+        return np.minimum(rng.zipf(1.2, n), 50_256).astype(np.int32)
+
+    codec = pick_int_codec(tokens(400_000))
+    plan = {"tok": codec}
     for i in range(4):
-        v = np.minimum(rng.zipf(1.2, 80_000), 50_256).astype(np.int32)
-        out, _ = decode_array(encode_array(v, cache_key="tok"))
+        v = tokens(80_000)
+        blob = encode_array(v, cache_key="tok", plan=plan)
+        assert unpack_header(blob)[0] == Codec(codec)
+        out, _ = decode_array(blob)
         np.testing.assert_array_equal(out, v)
-    assert "tok" in _choice_cache
+    assert plan == {"tok": codec}
+
+
+@pytest.mark.parametrize("planned", [False, True])
+def test_chunk_bytes_independent_of_earlier_encodes(planned):
+    """The same chunk encodes to the same bytes fresh, after a different
+    chunk of the column, and after a different dataset with the same
+    column name — with and without a plan. Before plans, a worker-global
+    cache reused the first chunk's FSST merge table for later chunks, so
+    a free-text chunk's bytes depended on what its Python worker had
+    encoded before."""
+    chunk, other = _free_text(3125, seed=11), _free_text(3125, seed=12)
+    ids = pa.array([f"o-{i:09d}" for i in range(3125)])
+    sample = _free_text(1024, seed=10)
+
+    def encode(arr, key, sample=sample):
+        kw = {}
+        if planned:
+            from tbl_spark.codecs.core import pick_string_codec
+            kw["plan"] = {key: pick_string_codec(sample)}
+        return encode_array(arr, cache_key=key, **kw)
+
+    fresh = encode(chunk, "l_comment.fresh")
+    encode(other, "l_comment.after_chunk")
+    assert encode(chunk, "l_comment.after_chunk") == fresh
+    # another dataset reusing the column name, under its own plan
+    encode(ids, "l_comment.after_dataset", sample=ids)
+    assert encode(chunk, "l_comment.after_dataset") == fresh
+    out, _ = decode_array(fresh)
+    assert out.to_pylist() == chunk.to_pylist()
 
 
 def test_delta_nested_sorted_with_outlier():

@@ -232,28 +232,32 @@ def test_template_grammar_auto_and_forced_roundtrip(vals, force):
                 min_size=2, max_size=4))
 @settings(max_examples=30, deadline=None)
 def test_template_cache_crossing_chunks_roundtrip(chunks):
-    """Chunks of DIFFERENT datasets arriving under one cache key (the
-    reused-worker scenario that produced r6's subtlest bug): every chunk
-    must round-trip exactly no matter what choice the previous chunk
-    cached, including probe-pass/build-decline chunks that must not
-    poison the fingerprint for later template-shaped chunks."""
+    """Chunks of DIFFERENT datasets arriving under one planned template
+    entry (the shape that produced r6's subtlest bug, when the choice
+    lived in a worker cache): every chunk must round-trip exactly,
+    including chunks the planned template declines on (a breaker value,
+    or a NULL past the 64-value probe, whose mask the fallback audition
+    must keep), and encode to the same bytes whatever came before."""
     import pyarrow as pa
     from tbl_spark.codecs import decode_array, encode_array
-    from tbl_spark.codecs.core import _str_cache
+    from tbl_spark.codecs.format import Codec
     key = "prop_cache_cross"
-    _str_cache.pop(key, None)
-    try:
-        for vals, add_nulls in chunks:
-            if add_nulls and len(vals) > 70:
-                vals = list(vals)
-                vals[70] = None   # null past the 64-value probe window
-            arr = pa.array(vals, type=pa.large_string())
-            out, valid = decode_array(encode_array(arr, cache_key=key))
-            got = out.cast(pa.large_string()).to_pylist()
-            for i, v in enumerate(vals):
-                if v is None:
-                    assert valid is not None and not valid[i]
-                else:
-                    assert got[i] == v, (i, v)
-    finally:
-        _str_cache.pop(key, None)
+    plan = {key: int(Codec.STR_TEMPLATE)}
+    arrs, blobs = [], []
+    for vals, add_nulls in chunks:
+        if add_nulls and len(vals) > 70:
+            vals = list(vals)
+            vals[70] = None   # null past the 64-value probe window
+        arr = pa.array(vals, type=pa.large_string())
+        blob = encode_array(arr, cache_key=key, plan=plan)
+        arrs.append(arr)
+        blobs.append(blob)
+        out, valid = decode_array(blob)
+        got = out.cast(pa.large_string()).to_pylist()
+        for i, v in enumerate(vals):
+            if v is None:
+                assert valid is not None and not valid[i]
+            else:
+                assert got[i] == v, (i, v)
+    for arr, blob in zip(arrs, blobs):
+        assert encode_array(arr, cache_key=key, plan=plan) == blob

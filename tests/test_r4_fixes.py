@@ -566,20 +566,11 @@ def test_pick_int_codec_and_seed_cache():
     # too-small arrays decline (the analytic per-chunk path covers them)
     assert core.pick_int_codec(v[:1000]) is None
 
-    core._choice_cache.pop("hinted_col", None)
-    core.seed_choice_cache({"hinted_col": codec})
-    assert core._choice_cache["hinted_col"][0] == Codec(codec)
-    # r6 semantics: a DISAGREEING cached choice (stale — e.g. from a
-    # previously-encoded dataset sharing the column name) is replaced
-    # by the hint, which was auditioned on the current dataset...
-    core._choice_cache["hinted_col"] = [Codec.RAW, 3]
-    core.seed_choice_cache({"hinted_col": codec})
-    assert core._choice_cache["hinted_col"] == [Codec(codec), 0]
-    # ...while an AGREEING one keeps its re-audit counter
-    core._choice_cache["hinted_col"] = [Codec(codec), 5]
-    core.seed_choice_cache({"hinted_col": codec})
-    assert core._choice_cache["hinted_col"] == [Codec(codec), 5]
-    core._choice_cache.pop("hinted_col", None)
+    # the pick is a plan entry: a chunk under it encodes with that codec
+    from tbl_spark.codecs.format import unpack_header
+    blob = core.encode_array(v[:100_000], cache_key="hinted_col",
+                             plan={"hinted_col": codec})
+    assert unpack_header(blob)[0] == Codec(codec)
 
 
 def test_audition_hints_end_to_end(spark):
@@ -591,7 +582,7 @@ def test_audition_hints_end_to_end(spark):
     df = generate_df(spark, 30_000, 4)
     hints = audition_codec_hints(df)
     assert "tokens.values" in hints        # the big int column is hinted
-    chunks = encode_chunks(df, 8, driver_audition=True)
+    chunks = encode_chunks(df, 8, codec_hints=hints)
     from tbl_spark.datagen import SPARK_SCHEMA_DDL
     back = decode_chunks_colocated(chunks, SPARK_SCHEMA_DDL)
     a = df.agg(F.sum(F.expr("aggregate(tokens, 0L, (a, x) -> a + x)")),

@@ -10,8 +10,8 @@
 5. hash128 gram mode (dual-lane digest) agrees with the exact string
    mode on the corpus.
 6. decontaminate broadcasts a small eval side deterministically.
-7. encode_to_store/encode_to_store_colocated accept codec_hints /
-   driver_audition=False (streaming reuse path).
+7. encode_to_store/encode_to_store_colocated accept a precomputed plan
+   as codec_hints, or {} for none (streaming reuse path).
 8. CLI: dedup / curate / pack / sample / decontaminate end-to-end.
 """
 
@@ -146,9 +146,9 @@ def test_encode_to_store_accepts_hints(spark, tmp_path):
     store = ChunkStore(str(tmp_path / "s_hint"))
     encode_to_store(df, store, 4, codec_hints=hints)
     assert decode_from_store(store, spark, SPARK_SCHEMA_DDL).count() == 800
-    # and the no-audition arm works too
+    # and the empty-plan arm (every chunk auditions itself) works too
     store2 = ChunkStore(str(tmp_path / "s_noaud"))
-    encode_to_store(df, store2, 4, driver_audition=False)
+    encode_to_store(df, store2, 4, codec_hints={})
     assert decode_from_store(store2, spark,
                              SPARK_SCHEMA_DDL).count() == 800
 

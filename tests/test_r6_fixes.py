@@ -512,26 +512,26 @@ def test_template_forced_on_binary_falls_back():
 # -- 9. review-pass closures ---------------------------------------------------
 
 def test_template_cached_choice_preserves_null_mask():
-    """A NULL past the 64-value probe breaks the cached template shape;
-    the fallback re-audition must keep the validity mask (the bug was a
+    """A NULL past the 64-value probe breaks the planned template shape;
+    the fallback audition must keep the validity mask (the bug was a
     recursion with the null-FILLED array -> NULLs decoded as '')."""
     import pyarrow as pa
     from tbl_spark.codecs import decode_array, encode_array
-    from tbl_spark.codecs.core import _str_cache
-    _str_cache.pop("idcol", None)
+    from tbl_spark.codecs.core import pick_string_codec
+    from tbl_spark.codecs.format import Codec
     clean = pa.array([f"w-{i:09d}" for i in range(200)],
                      type=pa.large_string())
-    b1 = encode_array(clean, cache_key="idcol")
-    assert _str_cache["idcol"]["choice"] == "template"
+    plan = {"idcol": pick_string_codec(clean)}
+    assert plan["idcol"] == Codec.STR_TEMPLATE
+    b1 = encode_array(clean, cache_key="idcol", plan=plan)
     vals = [f"w-{i:09d}" for i in range(200)]
     vals[150] = None  # past the probe window
     dirty = pa.array(vals, type=pa.large_string())
-    b2 = encode_array(dirty, cache_key="idcol")
+    b2 = encode_array(dirty, cache_key="idcol", plan=plan)
     out, valid = decode_array(b2)
     assert valid is not None and not valid[150]
     got = out.cast(pa.large_string()).to_pylist()
     assert got[:150] == vals[:150] and got[151:] == vals[151:]
-    _str_cache.pop("idcol", None)
     # round-trip b1 too
     o1, _ = decode_array(b1)
     assert o1.cast(pa.large_string()).to_pylist() == clean.to_pylist()
@@ -649,31 +649,33 @@ def test_cli_par_sep_non_ascii_and_scale_errors(spark, sf_dir, tmp_path,
 
 
 def test_stale_worker_caches_self_correct():
-    """A long-lived worker that encoded a DIFFERENT dataset with the
-    same column names must not impose its choices on this one: int
-    hints override mismatched cached entries, and a cached fsst choice
-    yields to the template probe (the design-size gate regressed in
-    full-suite runs through exactly this staleness)."""
+    """Encoding a DIFFERENT dataset with the same column names first must
+    not impose its choices on this one (the design-size gate regressed
+    in full-suite runs through exactly this staleness when choices lived
+    in a worker cache): the codec follows this call's values and plan."""
+    import numpy as np
     import pyarrow as pa
     from tbl_spark.codecs import decode_array, encode_array
-    from tbl_spark.codecs.core import (_choice_cache, _str_cache,
-                                       blob_codec, seed_choice_cache)
-    from tbl_spark.codecs.format import Codec
-    # string side: poison with a stale fsst choice
-    _str_cache["doc_id"] = {"choice": "fsst", "merges": [], "uses": 0}
+    from tbl_spark.codecs.core import blob_codec
+    from tbl_spark.codecs.format import Codec, unpack_header
     ids = pa.array([f"w-{i:09d}" for i in range(3000)],
                    type=pa.large_string())
-    blob = encode_array(ids, cache_key="doc_id")
-    assert blob_codec(blob).startswith("str_template")
-    out, _ = decode_array(blob)
+    fresh = encode_array(ids, cache_key="doc_id")
+    assert blob_codec(fresh).startswith("str_template")
+    # string side: a free-text dataset under the same name, FSST-planned
+    words = pa.array([f"lorem ipsum dolor sit amet {i} consectetur"
+                      for i in range(3000)], type=pa.large_string())
+    encode_array(words, cache_key="doc_id",
+                 plan={"doc_id": ((255, 32, 97),)})
+    assert encode_array(ids, cache_key="doc_id") == fresh
+    out, _ = decode_array(fresh)
     assert out.cast(pa.large_string()).to_pylist() == ids.to_pylist()
-    _str_cache.pop("doc_id", None)
-    # int side: a seeded hint replaces a DISAGREEING stale entry
-    _choice_cache["n_tok"] = [Codec.CONST, 3]
-    seed_choice_cache({"n_tok": int(Codec.RANS)})
-    assert _choice_cache["n_tok"][0] == Codec.RANS
-    # ...but an agreeing entry keeps its re-audit counter
-    _choice_cache["n_tok"] = [Codec.RANS, 7]
-    seed_choice_cache({"n_tok": int(Codec.RANS)})
-    assert _choice_cache["n_tok"][1] == 7
-    _choice_cache.pop("n_tok", None)
+    # int side: each call follows the plan it is given
+    n_tok = np.random.default_rng(3).integers(0, 5000, 50_000)
+    rans = encode_array(n_tok, cache_key="n_tok",
+                        plan={"n_tok": int(Codec.RANS)})
+    assert unpack_header(rans)[0] == Codec.RANS
+    encode_array(n_tok, cache_key="n_tok",
+                 plan={"n_tok": int(Codec.CONST)})
+    assert encode_array(n_tok, cache_key="n_tok",
+                        plan={"n_tok": int(Codec.RANS)}) == rans

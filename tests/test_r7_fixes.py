@@ -7,9 +7,9 @@
    documented corrupt-input ValueError, not a numpy IndexError.
 3. curate --gopher refuses inputs that already carry both a gate-signal
    column and its _orig_<name> stash slot (duplicate-column trap).
-4. no_template_fp is only recorded when a template candidate was BUILT
-   and lost on size — a probe-pass/build-decline chunk must leave the
-   escape hatch open so later fully-template chunks re-audition.
+4. a chunk the planned template codec declines on (probe passes, full
+   build fails) auditions itself; later fully-template chunks of the
+   same column still get the planned template.
 5. _template_decode raises a corrupt-blob ValueError on empty or
    length-mismatched part streams instead of IndexError / misrender.
 """
@@ -118,64 +118,31 @@ def test_cli_curate_gopher_stash_name_collision_rejected(spark, tmp_path,
     assert "_orig_n_words" in capsys.readouterr().err
 
 
-# -- 4. no_template_fp only after a real template loss -------------------------
+# -- 4. a declined planned template leaves the plan in force ---------------
 
 def test_probe_pass_build_decline_leaves_escape_hatch_open():
     from tbl_spark.codecs import decode_array, encode_array
-    from tbl_spark.codecs.core import _str_cache, blob_codec
+    from tbl_spark.codecs.core import blob_codec
+    from tbl_spark.codecs.format import Codec
     key = "r7_tmpl_col"
-    _str_cache.pop(key, None)
-    try:
-        # 64-value probe is all template-shaped; ONE tail value breaks
-        # the full build -> audition runs without a template candidate
-        vals = [f"seg-{i:010d}" for i in range(300)]
-        vals[250] = "seg-no-digits-tail"
-        b1 = encode_array(pa.array(vals, type=pa.large_string()),
-                          cache_key=key)
-        assert not blob_codec(b1).startswith("str_template")
-        assert _str_cache[key]["choice"] in ("fsst", "raw")
-        # build never lost a size comparison -> fingerprint must be None
-        assert _str_cache[key].get("no_template_fp") is None
-        o1, _ = decode_array(b1)
-        assert o1.cast(pa.large_string()).to_pylist() == vals
-        # a later, fully template-shaped chunk of the same column must
-        # re-audition and win with the template codec
-        clean = [f"seg-{i:010d}" for i in range(300, 600)]
-        b2 = encode_array(pa.array(clean, type=pa.large_string()),
-                          cache_key=key)
-        assert blob_codec(b2).startswith("str_template")
-        o2, _ = decode_array(b2)
-        assert o2.cast(pa.large_string()).to_pylist() == clean
-    finally:
-        _str_cache.pop(key, None)
-
-
-def test_template_true_loss_still_records_fingerprint():
-    """Control for the fix: when a template candidate IS built and loses
-    on size, the fingerprint is recorded so same-shaped chunks keep the
-    cached choice without re-auditioning every time."""
-    from tbl_spark.codecs import encode_array
-    from tbl_spark.codecs.core import _str_cache, blob_codec
-    key = "r7_tmpl_loss"
-    _str_cache.pop(key, None)
-    try:
-        # every value matches '<prefix><digits>' (probe+build succeed)
-        # but the prefixes are long, high-entropy and never repeat, so
-        # the dict-encoded prefix table costs more than fsst/raw
-        rng = np.random.default_rng(5)
-        letters = np.array(list("abcdefghijklmnopqrstuvwxyz"))
-        vals = ["".join(rng.choice(letters, 40)) + "7"
-                for _ in range(300)]
-        b = encode_array(pa.array(vals, type=pa.large_string()),
-                         cache_key=key)
-        entry = _str_cache[key]
-        if entry["choice"] in ("fsst", "raw"):
-            assert entry.get("no_template_fp") is not None
-        else:  # template won anyway: fingerprint must stay unset
-            assert blob_codec(b).startswith("str_template")
-            assert entry.get("no_template_fp") is None
-    finally:
-        _str_cache.pop(key, None)
+    plan = {key: int(Codec.STR_TEMPLATE)}
+    # 64-value probe is all template-shaped; ONE tail value breaks the
+    # full build -> the planned template declines, the chunk auditions
+    vals = [f"seg-{i:010d}" for i in range(300)]
+    vals[250] = "seg-no-digits-tail"
+    b1 = encode_array(pa.array(vals, type=pa.large_string()),
+                      cache_key=key, plan=plan)
+    assert not blob_codec(b1).startswith("str_template")
+    o1, _ = decode_array(b1)
+    assert o1.cast(pa.large_string()).to_pylist() == vals
+    # a later, fully template-shaped chunk of the same column still
+    # gets the planned template codec
+    clean = [f"seg-{i:010d}" for i in range(300, 600)]
+    b2 = encode_array(pa.array(clean, type=pa.large_string()),
+                      cache_key=key, plan=plan)
+    assert blob_codec(b2).startswith("str_template")
+    o2, _ = decode_array(b2)
+    assert o2.cast(pa.large_string()).to_pylist() == clean
 
 
 # -- 5. corrupt STR_TEMPLATE blob ----------------------------------------------

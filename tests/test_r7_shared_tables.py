@@ -9,9 +9,9 @@ pin the correctness surface:
 1. build eligibility gates (dtype / size / sparsity / outlier range);
 2. bit-exact codec roundtrip incl. out-of-range exception values;
 3. corrupt-blob and unregistered-fingerprint error contracts;
-4. worker cache self-correction when a DIFFERENT dataset reuses a
-   column name (the r6 staleness lesson), without one outlier-heavy
-   chunk evicting the shared choice (the no_template_fp lesson);
+4. planned-table declines: a chunk of a DIFFERENT dataset under the
+   column's name falls back to its own audition, and one outlier-heavy
+   chunk leaves the plan in force for the next chunk;
 5. Spark end-to-end: encode -> all three decode paths, sentinel-row
    accounting, parquet-reload fallback, store sidecar + fresh-process
    decode, and the compression win itself.
@@ -22,23 +22,18 @@ import pytest
 
 from tbl_spark.codecs import blob_codec, decode_array, encode_array
 from tbl_spark.codecs.core import (
-    _choice_cache,
     _rans_shared_payload,
     _shared_tables,
     build_shared_table,
     register_shared_table,
-    seed_choice_cache,
-    shared_table_fp,
 )
 from tbl_spark.codecs.format import Codec
 
 
 @pytest.fixture(autouse=True)
-def _clean_caches():
-    _choice_cache.clear()
+def _clean_registry():
     _shared_tables.clear()
     yield
-    _choice_cache.clear()
     _shared_tables.clear()
 
 
@@ -95,11 +90,10 @@ def test_build_keeps_dense_vocab_tail():
 
 def test_shared_roundtrip_exact_with_exceptions():
     sample = _zipf_tokens(200_000, seed=4)
-    blob = build_shared_table(sample)
-    seed_choice_cache({"tok": blob})
+    plan = {"tok": build_shared_table(sample)}
     chunk = _zipf_tokens(100_000, seed=5)
     chunk[::25_000] = 2**31 - 1          # 4 out-of-range exception values
-    enc = encode_array(chunk, cache_key="tok")
+    enc = encode_array(chunk, cache_key="tok", plan=plan)
     assert blob_codec(enc) == "rans_shared"
     dec, valid = decode_array(enc)
     assert valid is None
@@ -108,11 +102,10 @@ def test_shared_roundtrip_exact_with_exceptions():
 
 def test_shared_smaller_than_per_chunk_tables():
     sample = _zipf_tokens(1_000_000, seed=6)
-    blob = build_shared_table(sample)
-    seed_choice_cache({"tok": blob})
+    plan = {"tok": build_shared_table(sample)}
     chunk = _zipf_tokens(400_000, seed=7)
-    enc_shared = encode_array(chunk, cache_key="tok")
-    enc_solo = encode_array(chunk)        # no hint: per-chunk tables
+    enc_shared = encode_array(chunk, cache_key="tok", plan=plan)
+    enc_solo = encode_array(chunk)        # no plan: per-chunk tables
     assert blob_codec(enc_shared) == "rans_shared"
     # the win is the per-chunk table cost (~21 KB) minus state overhead
     assert len(enc_solo) - len(enc_shared) > 10_000
@@ -132,64 +125,42 @@ def test_corrupt_table_blob_raises():
 
 
 def test_unregistered_fingerprint_raises_helpfully():
-    blob = build_shared_table(_zipf_tokens(200_000, seed=9))
-    seed_choice_cache({"tok": blob})
-    enc = encode_array(_zipf_tokens(50_000, seed=10), cache_key="tok")
+    plan = {"tok": build_shared_table(_zipf_tokens(200_000, seed=9))}
+    enc = encode_array(_zipf_tokens(50_000, seed=10), cache_key="tok",
+                       plan=plan)
     assert blob_codec(enc) == "rans_shared"
     _shared_tables.clear()
     with pytest.raises(ValueError, match="not.*registered|registered"):
         decode_array(enc)
 
 
-# -- 4. worker-cache self-correction ------------------------------------------
+# -- 4. planned-table declines -----------------------------------------------
 
 def test_different_dataset_same_column_falls_back():
-    # the r6 staleness lesson: a long-lived worker whose cache says
-    # RANS_SHARED for this column must not mis-encode a NEW dataset
-    # whose values sit outside the table range
-    blob = build_shared_table(_zipf_tokens(200_000, seed=11))
-    seed_choice_cache({"tok": blob})
+    # the r6 staleness lesson: a column planned onto a shared table must
+    # not mis-encode a chunk whose values sit outside the table range
+    plan = {"tok": build_shared_table(_zipf_tokens(200_000, seed=11))}
     other = np.random.default_rng(12).integers(
         10_000_000, 20_000_000, 300_000)
-    enc = encode_array(other, cache_key="tok")
+    enc = encode_array(other, cache_key="tok", plan=plan)
     assert blob_codec(enc) != "rans_shared"
     dec, _ = decode_array(enc)
     np.testing.assert_array_equal(dec, other)
 
 
 def test_one_outlier_chunk_does_not_evict_shared_choice():
-    # the no_template_fp lesson (ADVICE r6 #4): ONE declined chunk must
-    # leave the shared choice in place for the next in-range chunk
-    blob = build_shared_table(_zipf_tokens(200_000, seed=13))
-    seed_choice_cache({"tok": blob})
-    bad = np.random.default_rng(14).integers(10**9, 2 * 10**9, 50_000)
-    enc_bad = encode_array(bad, cache_key="tok")
-    assert blob_codec(enc_bad) != "rans_shared"
+    # ONE declined chunk leaves the planned table in force for the next
+    # in-range chunk, which encodes exactly as it would have alone
+    plan = {"tok": build_shared_table(_zipf_tokens(200_000, seed=13))}
     good = _zipf_tokens(50_000, seed=15)
-    enc_good = encode_array(good, cache_key="tok")
-    assert blob_codec(enc_good) == "rans_shared"
+    alone = encode_array(good, cache_key="tok", plan=plan)
+    bad = np.random.default_rng(14).integers(10**9, 2 * 10**9, 50_000)
+    enc_bad = encode_array(bad, cache_key="tok", plan=plan)
+    assert blob_codec(enc_bad) != "rans_shared"
+    enc_good = encode_array(good, cache_key="tok", plan=plan)
+    assert blob_codec(enc_good) == "rans_shared" and enc_good == alone
     dec, _ = decode_array(enc_good)
     np.testing.assert_array_equal(dec, good)
-
-
-def test_three_declines_reseed_from_audition():
-    blob = build_shared_table(_zipf_tokens(200_000, seed=16))
-    seed_choice_cache({"tok": blob})
-    rng = np.random.default_rng(17)
-    for _ in range(3):
-        encode_array(rng.integers(10**9, 2 * 10**9, 50_000),
-                     cache_key="tok")
-    entry = _choice_cache.get("tok")
-    assert entry is not None and entry[0] != Codec.RANS_SHARED
-
-
-def test_new_table_overrides_old_same_column():
-    a = build_shared_table(_zipf_tokens(200_000, seed=18))
-    b = build_shared_table(_zipf_tokens(200_000, seed=19) + 7)
-    assert shared_table_fp(a) != shared_table_fp(b)
-    seed_choice_cache({"tok": a})
-    seed_choice_cache({"tok": b})
-    assert _choice_cache["tok"][2] == shared_table_fp(b)
 
 
 def test_declined_payload_none_outside_registry():

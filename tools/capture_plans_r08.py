@@ -61,13 +61,13 @@ def main() -> None:
         staged = spark.read.parquet(staged_dir)
         if not only or "encode_tokens" in only:
             emit("encode_tokens",
-                 encode_chunks(staged, 16, driver_audition=False))
+                 encode_chunks(staged, 16, codec_hints={}))
         if not only or "encode_colocated" in only:
             emit("encode_colocated",
                  encode_chunks_colocated(staged, tokens_per_chunk=400_000,
-                                         driver_audition=False))
+                                         codec_hints={}))
         if not only or "decode_tokens" in only:
-            chunks = encode_chunks(staged, 16, driver_audition=False)
+            chunks = encode_chunks(staged, 16, codec_hints={})
             emit("decode_tokens",
                  decode_chunks_colocated(chunks, SPARK_SCHEMA_DDL))
 

@@ -50,7 +50,7 @@ def main() -> None:
 
     df = generate_df(spark, 2000, 2)
     section(md, "Encode job (token table → chunk table)",
-            encode_chunks(df, 8, driver_audition=False),
+            encode_chunks(df, 8, codec_hints={}),
             "One hash Exchange on the salted part key — the job's only "
             "shuffle; everything else is map-side Arrow work.")
 
@@ -61,7 +61,7 @@ def main() -> None:
     section(md, "Colocated encode (zero-shuffle fast path — r2)",
             encode_chunks_colocated(spark.read.parquet(staged),
                                     tokens_per_chunk=100_000,
-                                    driver_audition=False),
+                                    codec_hints={}),
             "NO Exchange anywhere: when the input files' layout is already "
             "acceptable, each scan task streams batches and cuts chunks at "
             "the token budget (ids hashed from file/block/seq). At 10^12 "
@@ -80,7 +80,7 @@ def main() -> None:
                 "partition and mapInArrow streams them back.")
 
     from tbl_spark.decode import decode_chunks_colocated
-    rt = decode_chunks_colocated(encode_chunks(df, 8, driver_audition=False),
+    rt = decode_chunks_colocated(encode_chunks(df, 8, codec_hints={}),
                                  SPARK_SCHEMA_DDL)
     rt.count()
     section(md, "Encode→decode roundtrip (r2: ONE exchange total)",
