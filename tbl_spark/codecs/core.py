@@ -401,14 +401,18 @@ def _decode_rans_shared(payload: bytes, n: int,
     lo, _hi, freqs = entry
     exc_blob, core = unframe(payload[8:], 2)
     # pop+reinsert keeps the dict in LRU order (insertion-ordered dicts);
-    # worst case of a race in a threaded caller is a benign double build
+    # worst case of a race in a threaded caller is a benign double build.
+    # Eviction walks a snapshot of the keys and tolerates a key another
+    # thread already evicted (or a dict that changed size mid-walk).
     slot = _shared_slots.pop(fp, None)
     if slot is None:
         slot = np.repeat(np.arange(len(freqs), dtype=np.int32),
                          freqs.astype(np.int64))
     _shared_slots[fp] = slot
-    while len(_shared_slots) > _SHARED_SLOTS_MAX:
-        _shared_slots.pop(next(iter(_shared_slots)))
+    for k in list(_shared_slots):
+        if len(_shared_slots) <= _SHARED_SLOTS_MAX:
+            break
+        _shared_slots.pop(k, None)
     codes = rans.decode(core, n, freqs, slot=slot)
     out = codes + lo
     bpos, bval = unframe(exc_blob, 2)

@@ -45,8 +45,8 @@ MANIFEST_SCHEMA_DDL = (
     "enc_bytes bigint, encode_ms double, committed_at double, columns string")
 
 # Columnar zone/stats sidecar written per wave at compaction time
-# (VERDICT r3 #1): one row per (part_id, column), so pruning and stats
-# rollups run as Spark/Arrow scans over parquet instead of a driver-side
+# (VERDICT r3 #1): one row per (part_id, column), so pruning (a pyarrow
+# pass on the driver) and stats rollups scan parquet instead of a
 # json.load of every manifest — the metadata-plane analog of what wave
 # files did for the data plane. Numeric/ts bounds are SOUND-WIDENED
 # doubles (lo rounded down, hi rounded up when the exact value is not
@@ -92,11 +92,18 @@ def _manifest_stats_rows(manifest: dict) -> list[dict]:
         st = c.get("stats") or {}
         kind = st.get("kind")
         lo, hi = st.get("min"), st.get("max")
+        if kind is None and isinstance(lo, (int, float)) \
+                and not isinstance(lo, bool):
+            kind = "num"                 # legacy manifest without kinds
         lo_num = hi_num = lo_str = hi_str = None
         has_nan = st.get("nan")
         if kind in ("num", "ts") and lo is not None:
             if kind == "ts":
                 lo, hi = _ts_micros(lo), _ts_micros(hi)
+                if lo is None or hi is None:
+                    # unparseable legacy bounds: no zone (keep), not an
+                    # all-null chunk (prune)
+                    kind = None
             lo_num, hi_num = _widen_num(lo, up=False), _widen_num(hi, up=True)
             if has_nan is None and kind == "num" \
                     and isinstance(lo, int) and isinstance(hi, int):
@@ -485,6 +492,15 @@ class ChunkStore:
                         out.append(json.load(fh))
         return out
 
+    def _wave_manifest_paths(self) -> dict[int, str]:
+        """{wave_seq: manifest path} of committed waves, from file names
+        alone (no json.load)."""
+        if not os.path.isdir(self.manifest_dir):
+            return {}
+        return {int(name[5:-5]): os.path.join(self.manifest_dir, name)
+                for name in os.listdir(self.manifest_dir)
+                if name.startswith("wave-") and name.endswith(".json")}
+
     def stats_files(self) -> dict[int, str]:
         """{wave_seq: stats parquet path} for COMMITTED waves that have
         one. The stats sidecar is renamed into place before the wave
@@ -496,11 +512,7 @@ class ChunkStore:
         orphan invisible until the rebuilt wave commits over it."""
         if not os.path.isdir(self.stats_dir):
             return {}
-        committed = set()
-        if os.path.isdir(self.manifest_dir):
-            for name in os.listdir(self.manifest_dir):
-                if name.startswith("wave-") and name.endswith(".json"):
-                    committed.add(int(name[5:-5]))
+        committed = self._wave_manifest_paths()
         out = {}
         for name in sorted(os.listdir(self.stats_dir)):
             if name.startswith("wave-") and name.endswith(".parquet"):
@@ -509,31 +521,34 @@ class ChunkStore:
                     out[seq] = os.path.join(self.stats_dir, name)
         return out
 
+    def _json_stats_rows(self, have: dict[int, str]) -> list[dict]:
+        """STATS_SCHEMA rows of the parts no stats parquet in `have`
+        covers: legacy waves (committed wave manifests minus `have`, found
+        by name, so waves with a stats parquet are never opened) and
+        loose parts."""
+        rows: list[dict] = []
+        paths = self._wave_manifest_paths()
+        for seq in sorted(paths.keys() - have.keys()):
+            with open(paths[seq]) as f:
+                for m in json.load(f)["manifests"]:
+                    rows.extend(_manifest_stats_rows(m))
+        for m in self.loose_manifest_rows():
+            rows.extend(_manifest_stats_rows(m))
+        return rows
+
     def stats_table(self) -> pa.Table:
         """All STATS_SCHEMA rows — wave parquets scanned columnar, loose
         (+legacy-wave) manifests flattened from JSON. The driver-side cost
         is O(waves) file opens + O(loose) JSON parses, never O(parts)."""
         have = self.stats_files()
         tables = [pq.read_table(p) for p in have.values()]
-        rows: list[dict] = []
-        for w in self.waves():   # legacy waves without a stats parquet
-            if w["wave"] not in have:
-                for m in w["manifests"]:
-                    rows.extend(_manifest_stats_rows(m))
-        for m in self.loose_manifest_rows():
-            rows.extend(_manifest_stats_rows(m))
+        rows = self._json_stats_rows(have)
         if rows:
             cols = {f.name: [r[f.name] for r in rows] for f in STATS_SCHEMA}
             tables.append(pa.Table.from_pydict(cols, schema=STATS_SCHEMA))
         if not tables:
             return STATS_SCHEMA.empty_table()
         return pa.concat_tables(tables)
-
-    def read_stats_parquet(self, spark: SparkSession) -> DataFrame:
-        """The per-wave stats parquets as ONE distributed Spark scan
-        (waved parts only — loose/legacy parts are not in these files)."""
-        return spark.read.schema(STATS_DDL).parquet(
-            *self.stats_files().values())
 
     def read_stats(self, spark: SparkSession) -> DataFrame:
         """All STATS_SCHEMA rows as a Spark DataFrame: wave parquets read
@@ -542,14 +557,8 @@ class ChunkStore:
         have = self.stats_files()
         parts = []
         if have:
-            parts.append(self.read_stats_parquet(spark))
-        rows: list[dict] = []
-        for w in self.waves():
-            if w["wave"] not in have:
-                for m in w["manifests"]:
-                    rows.extend(_manifest_stats_rows(m))
-        for m in self.loose_manifest_rows():
-            rows.extend(_manifest_stats_rows(m))
+            parts.append(spark.read.schema(STATS_DDL).parquet(*have.values()))
+        rows = self._json_stats_rows(have)
         if rows or not parts:
             data = [tuple(r[f.name] for f in STATS_SCHEMA) for r in rows]
             parts.append(spark.createDataFrame(data, STATS_DDL))
@@ -686,149 +695,18 @@ def _ts_micros(value) -> int | None:
     return (d - epoch) // _dt.timedelta(microseconds=1)
 
 
-def _zone_may_match(stats: dict | None, op: str, raw: str) -> bool:
-    """Could ANY row in a chunk with these column stats satisfy the
-    predicate? Sound-by-construction: pruning fires only when the stat
-    kind and predicate value are UNAMBIGUOUSLY comparable — anything
-    else keeps the chunk and lets the exact post-decode filter decide
-    (missing stats, bool columns, unparseable values, mixed formats).
-    A false keep costs one decoded chunk; a false prune silently drops
-    rows, so every doubtful case keeps."""
-    if not stats:
-        return True
-    lo, hi = stats.get("min"), stats.get("max")
-    has_nan = stats.get("nan")
-    if lo is None or hi is None:
-        # no finite bounds: an all-null chunk matches nothing, but an
-        # all-NaN float chunk looks identical (pyarrow min_max skips
-        # NaN) and its rows DO satisfy >, >=, =, != in Spark (NaN sorts
-        # greatest, NaN = NaN is true). Keep for those ops unless the
-        # nan flag says False; < and <= can match neither null nor NaN
-        # rows, so pruning them is sound either way.
-        if op in (">", ">=", "=", "!="):
-            return has_nan is not False
-        return False
-    kind = stats.get("kind")
-    if kind is None:                     # legacy manifest without kinds
-        kind = "num" if isinstance(lo, (int, float)) \
-            and not isinstance(lo, bool) else None
-    v: object
-    if kind == "num":
-        try:
-            # int first: float(raw) rounds above 2^53 and can falsely
-            # prune an exact-match bigint chunk
-            v = int(raw)
-        except ValueError:
-            try:
-                v = float(raw)
-            except ValueError:
-                return True              # not numeric — keep, filter later
-        if has_nan and op in (">", ">=", "=", "!="):
-            return True                  # NaN rows satisfy these in Spark
-        if isinstance(v, float) and v != v:
-            # NaN literal: Spark orders NaN greatest, so <, <=, != match
-            # every finite row (bounds are finite here → such rows
-            # exist); =, >, >= match only NaN rows (legacy stats carry
-            # no 'nan' flag (None) — keep)
-            if op in ("<", "<=", "!="):
-                return True
-            return has_nan is not False
-    elif kind == "str":
-        v = raw
-        lo, hi = str(lo), str(hi)
-    elif kind == "ts":
-        v = _ts_micros(raw)
-        lo, hi = _ts_micros(lo), _ts_micros(hi)  # int (new) or str (legacy)
-        if v is None or lo is None or hi is None:
-            return True                  # unparseable / mixed — keep
-    elif kind == "date":
-        v = raw.strip()
-        if len(v) != 10:                 # only plain YYYY-MM-DD is safe
-            return True
-        lo, hi = str(lo), str(hi)
-    else:                                # bool / unknown: never prune
-        return True
-    return {">=": lambda: hi >= v, ">": lambda: hi > v,
-            "<=": lambda: lo <= v, "<": lambda: lo < v,
-            "=": lambda: lo <= v <= hi,
-            "!=": lambda: not (lo == hi == v)}[op]()
-
-
-def _zone_cannot_match_col(op: str, raw: str, utc_session: bool):
-    """Spark Column over STATS_SCHEMA rows that is true only when the
-    chunk PROVABLY cannot match — the vectorized twin of
-    ``not _zone_may_match`` (same keep-on-doubt contract: bounds are
-    sound-widened doubles, unknown NaN state keeps, non-UTC sessions
-    never prune on timestamps)."""
-    import pyspark.sql.functions as F
-    lo_n, hi_n = F.col("lo_num"), F.col("hi_num")
-    lo_s, hi_s = F.col("lo_str"), F.col("hi_str")
-    kind = F.col("kind")
-    nan_free = F.col("has_nan").eqNullSafe(F.lit(False))
-    # bounds-bearing kinds only: bool (and binary/list → kind null)
-    # never record bounds, so their null bounds must read as "no zone",
-    # not "all-null chunk" — without this a data-bearing bool column
-    # would be falsely pruned
-    known_kind = kind.isin("num", "ts", "str", "date")
-    no_bounds = lo_n.isNull() & lo_s.isNull() & known_kind
-    nan_ops = op in (">", ">=", "=", "!=")
-    # all-null chunk: nothing matches — unless NaN rows might exist
-    # (all-NaN float chunks are also boundless; NaN satisfies these ops)
-    cannot = no_bounds & (F.lit(not nan_ops) | nan_free)
-
-    def rng(lo_c, hi_c, v_lo, v_hi):
-        return {
-            ">": hi_c <= F.lit(v_lo), ">=": hi_c < F.lit(v_lo),
-            "<": lo_c >= F.lit(v_hi), "<=": lo_c > F.lit(v_hi),
-            "=": (hi_c < F.lit(v_lo)) | (lo_c > F.lit(v_hi)),
-            "!=": (lo_c == hi_c) & (lo_c == F.lit(v_lo))
-                  & F.lit(v_lo == v_hi),
-        }[op]
-
-    v_num: int | float | None
-    try:
-        v_num = int(raw)
-    except ValueError:
-        try:
-            v_num = float(raw)
-        except ValueError:
-            v_num = None
-    if v_num is not None:
-        if isinstance(v_num, float) and v_num != v_num:   # NaN literal
-            if op in ("=", ">", ">="):     # only NaN rows satisfy these
-                num_cannot = nan_free
-            else:                          # <, <=, != match finite rows
-                num_cannot = F.lit(False)
-        else:
-            num_cannot = rng(lo_n, hi_n, _widen_num(v_num, up=False),
-                             _widen_num(v_num, up=True))
-            if nan_ops:                    # NaN rows satisfy these ops
-                num_cannot = num_cannot & nan_free
-        cannot = cannot | ((kind == "num") & lo_n.isNotNull() & num_cannot)
-    v_ts = _ts_micros(raw)
-    if v_ts is not None and utc_session:
-        # _widen_num, not float(): epoch micros beyond 2^53 (~year 2255)
-        # round under plain float() and could falsely prune a chunk
-        # whose true min sits between the rounded and exact values
-        cannot = cannot | ((kind == "ts") & lo_n.isNotNull()
-                           & rng(lo_n, hi_n, _widen_num(v_ts, up=False),
-                                 _widen_num(v_ts, up=True)))
-    cannot = cannot | ((kind == "str") & lo_s.isNotNull()
-                       & rng(lo_s, hi_s, raw, raw))
-    d = raw.strip()
-    if len(d) == 10:
-        cannot = cannot | ((kind == "date") & lo_s.isNotNull()
-                           & rng(lo_s, hi_s, d, d))
-    return cannot
-
-
 def _zone_cannot_match_mask(t: pa.Table, op: str, raw: str,
                             utc_session: bool):
-    """pyarrow-compute twin of ``_zone_cannot_match_col``: a boolean
-    mask over STATS_SCHEMA rows, true only where the chunk PROVABLY
-    cannot match (same keep-on-doubt contract; nulls fold to keep).
-    Lets the no-session prune path run as a handful of vectorized
-    kernel calls instead of a per-row Python loop."""
+    """Boolean mask over STATS_SCHEMA rows, true only where the chunk
+    PROVABLY cannot match the predicate. Sound by construction: pruning
+    fires only when the stat kind and predicate value are unambiguously
+    comparable; anything else keeps the chunk and lets the exact
+    post-decode filter decide (nulls fold to keep, bool/binary/list
+    columns never prune, unknown NaN state keeps for the ops NaN rows
+    satisfy in Spark, bounds are sound-widened doubles, non-UTC sessions
+    never prune on timestamp bounds). A false keep costs one decoded
+    chunk; a false prune silently drops rows. A handful of vectorized
+    kernel calls, never a per-row Python loop."""
     import pyarrow.compute as pc
     lo_n, hi_n = t["lo_num"], t["hi_num"]
     lo_s, hi_s = t["lo_str"], t["hi_str"]
@@ -839,9 +717,16 @@ def _zone_cannot_match_mask(t: pa.Table, op: str, raw: str,
 
     false = pa.array([False] * len(t))
     nan_free = B(pc.equal(t["has_nan"], pa.scalar(False)))
+    # bounds-bearing kinds only: bool (and binary/list → kind null) never
+    # record bounds, so their null bounds read as "no zone", not as an
+    # all-null chunk — else a data-bearing bool column would be pruned
     known = B(pc.is_in(kind, value_set=pa.array(
         ["num", "ts", "str", "date"])))
     no_bounds = pc.and_(pc.and_(pc.is_null(lo_n), pc.is_null(lo_s)), known)
+    # an all-null chunk matches nothing, but an all-NaN float chunk is
+    # boundless too (pyarrow min_max skips NaN) and its rows satisfy >,
+    # >=, = and != in Spark (NaN sorts greatest, NaN = NaN is true): for
+    # those ops prune only when the nan flag says False
     nan_ops = op in (">", ">=", "=", "!=")
     cannot = pc.and_(no_bounds, nan_free) if nan_ops else no_bounds
 
@@ -862,6 +747,8 @@ def _zone_cannot_match_mask(t: pa.Table, op: str, raw: str,
 
     v_num: int | float | None
     try:
+        # int first: float(raw) rounds above 2^53 and could falsely
+        # prune an exact-match bigint chunk
         v_num = int(raw)
     except ValueError:
         try:
@@ -869,7 +756,9 @@ def _zone_cannot_match_mask(t: pa.Table, op: str, raw: str,
         except ValueError:
             v_num = None
     if v_num is not None:
-        if isinstance(v_num, float) and v_num != v_num:    # NaN literal
+        if isinstance(v_num, float) and v_num != v_num:
+            # NaN literal: =, >, >= match only NaN rows; <, <=, != match
+            # every finite row (NaN sorts greatest)
             num_cannot = nan_free if op in ("=", ">", ">=") else false
         else:
             num_cannot = rng(lo_n, hi_n, _widen_num(v_num, up=False),
@@ -880,6 +769,8 @@ def _zone_cannot_match_mask(t: pa.Table, op: str, raw: str,
                         pc.and_(B(pc.equal(kind, "num")), num_cannot))
     v_ts = _ts_micros(raw)
     if v_ts is not None and utc_session:
+        # _widen_num, not float(): epoch micros beyond 2^53 (~year 2255)
+        # round under float() and could falsely prune
         cannot = pc.or_(cannot, pc.and_(
             B(pc.equal(kind, "ts")),
             rng(lo_n, hi_n, _widen_num(v_ts, up=False),
@@ -893,93 +784,35 @@ def _zone_cannot_match_mask(t: pa.Table, op: str, raw: str,
     return cannot
 
 
-def _stats_row_to_zone(r: dict) -> dict | None:
-    """STATS_SCHEMA row → the stats dict _zone_may_match consumes.
-    Kinds that never record bounds (bool, binary/list → kind None) map
-    to None = "no zone": their all-null bounds would otherwise read as
-    an all-null chunk and false-prune a data-bearing column."""
-    if r["kind"] not in ("num", "ts", "str", "date"):
-        return None
-    if r["kind"] == "ts":
-        lo = None if r["lo_num"] is None else int(r["lo_num"])
-        hi = None if r["hi_num"] is None else int(r["hi_num"])
-    elif r["kind"] in ("str", "date"):
-        lo, hi = r["lo_str"], r["hi_str"]
-    else:
-        lo, hi = r["lo_num"], r["hi_num"]
-    st = {"kind": r["kind"], "min": lo, "max": hi, "nulls": r["nulls"]}
-    if r["has_nan"] is not None:
-        st["nan"] = r["has_nan"]
-    return st
-
-
 def zone_prune_parts(store: ChunkStore,
                      predicates: str | list[str],
                      spark: SparkSession | None = None,
                      utc_session: bool = True) -> set[int]:
     """Part ids whose zone maps might satisfy EVERY predicate (AND chain,
     mirroring the reference's conjunctive --filter, transform.rs:146-155)
-    — a metadata-only scan, the chunk-store analog of parquet row-group
-    pruning / Iceberg file skipping.
+    — a metadata-only pass on the driver, the chunk-store analog of
+    parquet row-group pruning / Iceberg file skipping.
 
-    Scale shape (VERDICT r3 #1): waved parts are pruned by a filter over
-    the per-wave columnar stats parquets — distributed via Spark when a
-    session is passed, columnar pyarrow on the driver otherwise — never a
-    per-manifest json.load. Only loose (un-compacted, bounded) parts and
-    pre-r4 legacy waves still parse JSON. `utc_session=False` disables
-    timestamp pruning: naive predicate values are interpreted as UTC, so
-    a non-UTC session's exact filter could disagree with the zone
-    decision."""
-    import json as _json
+    One vectorized pyarrow pass over `store.stats_table()`: the per-wave
+    stats parquets plus the flattened manifests of loose parts and of
+    legacy waves without a stats parquet. A part survives unless, for
+    some predicate, the mask proves its zone cannot match; parts with no
+    stats row for a predicate's column are kept. The stats table holds
+    one row per (part, column), so it fits the driver at 10^5 parts and
+    the pass starts no Spark job. `spark` is accepted for compatibility
+    and ignored. `utc_session=False` disables timestamp pruning: naive
+    predicate values are interpreted as UTC, so a non-UTC session's exact
+    filter could disagree with the zone decision."""
+    import pyarrow.compute as pc
     preds = [predicates] if isinstance(predicates, str) else list(predicates)
     parsed = [parse_zone_predicate(p) for p in preds]
-
-    def may_match_all(get_stats) -> bool:
-        for col, op, raw in parsed:
-            st = get_stats(col)
-            if st is not None and st.get("kind") == "ts" and not utc_session:
-                continue
-            if not _zone_may_match(st, op, raw):
-                return False
-        return True
-
-    have = store.stats_files()
-    keep: set[int] = set()
-    legacy = [m for w in store.waves() if w["wave"] not in have
-              for m in w["manifests"]]
-    for m in legacy + store.loose_manifest_rows():
-        cols = _json.loads(m["columns"]) if isinstance(m["columns"], str) \
-            else m["columns"]
-        if may_match_all(lambda c: (cols.get(c) or {}).get("stats")):
-            keep.add(m["part_id"])
-    if not have:
-        return keep
-    if spark is not None:
-        import pyspark.sql.functions as F
-        df = store.read_stats_parquet(spark)
-        drop = df.filter(F.lit(False)).select("part_id")
-        for col, op, raw in parsed:
-            d = (df.filter((F.col("column") == col)
-                           & _zone_cannot_match_col(op, raw, utc_session))
-                 .select("part_id"))
-            drop = drop.unionByName(d)
-        survivors = (df.select("part_id").distinct()
-                     .join(drop.distinct(), "part_id", "left_anti"))
-        keep.update(r[0] for r in survivors.collect())
-        return keep
-    # no session: vectorized pyarrow pass over the stats parquets — a
-    # handful of compute-kernel calls per predicate, never a per-row
-    # Python loop (the only per-part Python is the final id set)
-    import pyarrow.compute as pc
-    t = pa.concat_tables(pq.read_table(p) for p in have.values())
+    t = store.stats_table()
     dropped: set[int] = set()
     for col, op, raw in parsed:
         sub = t.filter(pc.equal(t["column"], col))
         mask = _zone_cannot_match_mask(sub, op, raw, utc_session)
-        dropped.update(
-            pc.unique(sub.filter(mask)["part_id"]).to_pylist())
-    keep.update(set(pc.unique(t["part_id"]).to_pylist()) - dropped)
-    return keep
+        dropped.update(pc.unique(sub.filter(mask)["part_id"]).to_pylist())
+    return set(pc.unique(t["part_id"]).to_pylist()) - dropped
 
 
 def _write_wave(store_root: str, seq: int, parts: list[int]) -> dict:
@@ -1338,10 +1171,11 @@ def decode_from_store(store: ChunkStore, spark: SparkSession,
     # never read or decoded (projection pushdown for the chunk store).
     # `predicate` — one or more 'col>=value' comparisons, AND'd like the
     # reference's chained --filter (transform.rs:146-155) — prunes whole
-    # CHUNKS via the zone-map stats before any file is opened (predicate
-    # pushdown to the store's metadata layer; effective when the data is
-    # value-clustered across chunks), then re-applies the exact filters
-    # after decode.
+    # CHUNKS via the zone-map stats on the driver, before any file is
+    # opened and without a Spark job (predicate pushdown to the store's
+    # metadata layer; effective when the data is value-clustered across
+    # chunks), then re-applies the exact filters after decode. Nothing
+    # here runs a Spark job: the first one is the caller's action.
     from .decode import decode_chunks_colocated
     predicates = [predicate] if isinstance(predicate, str) \
         else list(predicate or [])
@@ -1350,8 +1184,7 @@ def decode_from_store(store: ChunkStore, spark: SparkSession,
     if predicates:
         pred_cols = [parse_zone_predicate(p)[0] for p in predicates]
         utc = spark.conf.get("spark.sql.session.timeZone") in _UTC_NAMES
-        keep_parts = zone_prune_parts(store, predicates, spark=spark,
-                                      utc_session=utc)
+        keep_parts = zone_prune_parts(store, predicates, utc_session=utc)
     chunks = store.read_chunks(spark, keep_parts)
     if keep_parts is not None:
         # fine-grained half: skip surviving waves' OTHER parts. Contiguous
@@ -1396,12 +1229,13 @@ def decode_from_store(store: ChunkStore, spark: SparkSession,
     # upstream is a pure file scan, so coalescing tiny per-chunk scan
     # partitions down to the session's parallelism narrows no producer —
     # one Python task's fixed cost per core instead of one per chunk
-    # file (measured in decode_chunks_colocated's docstring)
-    cores = spark.sparkContext.defaultParallelism
-    n_parts = chunks.rdd.getNumPartitions()
-    target = cores if n_parts > 2 * cores else None
+    # file (measured in decode_chunks_colocated's docstring). Coalesce
+    # never adds partitions, so scans with <= cores partitions are left
+    # as they are; asking the scan for its partition count first would
+    # plan the query once more per call.
     decoded = decode_chunks_colocated(
-        chunks, output_ddl, target_partitions=target,
+        chunks, output_ddl,
+        target_partitions=spark.sparkContext.defaultParallelism,
         shared_tables=store.read_shared_tables())
     if predicates:
         # exact filters on the decoded rows: zone pruning only skipped

@@ -423,11 +423,11 @@ def test_kmeans_trainer_tightens_clusters_and_probes(spark, sf_dir):
 
 # -- zone-map soundness (code-review regressions) ---------------------------
 
-def test_zone_stats_and_match_are_type_sound():
+def test_zone_stats_and_match_are_type_sound(zone_keeps):
     import datetime
     import decimal
     import pyarrow as pa
-    from tbl_spark.store import _column_stats, _zone_may_match
+    from tbl_spark.store import _column_stats
 
     tbl = pa.table({
         "big": pa.array([9223372036854775807, 9223372036854775806]),
@@ -440,25 +440,25 @@ def test_zone_stats_and_match_are_type_sound():
     })
     st = _column_stats(tbl)
     # bigint above 2^53: exact-match predicate must NOT be pruned
-    assert _zone_may_match(st["big"], "=", "9223372036854775807")
+    assert zone_keeps(st["big"], "=", "9223372036854775807")
     # decimal stats are numeric, not strings: '30' >= '5' lexicographic
     # false-prune is gone
     assert isinstance(st["dec"]["min"], int)
-    assert _zone_may_match(st["dec"], ">=", "5")
-    assert not _zone_may_match(st["dec"], ">", "30")
+    assert zone_keeps(st["dec"], ">=", "5")
+    assert not zone_keeps(st["dec"], ">", "30")
     # bool columns never prune (predicate form is engine-ambiguous)
-    assert _zone_may_match(st["flag"], "=", "true")
-    assert _zone_may_match(st["flag"], "=", "false")
+    assert zone_keeps(st["flag"], "=", "true")
+    assert zone_keeps(st["flag"], "=", "false")
     # ISO 'T' timestamp form compares against str(datetime) stats
-    assert _zone_may_match(st["ts"], ">=", "2024-01-02T13:00:00")
-    assert not _zone_may_match(st["ts"], ">", "2024-01-03T00:00:00")
+    assert zone_keeps(st["ts"], ">=", "2024-01-02T13:00:00")
+    assert not zone_keeps(st["ts"], ">", "2024-01-03T00:00:00")
     # plain strings still prune
-    assert not _zone_may_match(st["s"], ">=", "c")
-    assert _zone_may_match(st["s"], ">=", "b")
+    assert not zone_keeps(st["s"], ">=", "c")
+    assert zone_keeps(st["s"], ">=", "b")
     # unparseable numeric predicate keeps the chunk
-    assert _zone_may_match(st["big"], ">=", "not-a-number")
+    assert zone_keeps(st["big"], ">=", "not-a-number")
     # legacy manifests without 'kind' stay prunable for plain numbers
-    assert not _zone_may_match({"min": 1, "max": 2}, ">", "5")
+    assert not zone_keeps({"min": 1, "max": 2}, ">", "5")
 
 
 def test_kmeans_small_corpus_does_not_crash(spark):

@@ -14,14 +14,13 @@ import pyspark.sql.functions as F
 import pytest
 
 from tbl_spark.store import (ChunkStore, _column_stats, _id_ranges,
-                             _zone_may_match, decode_from_store,
-                             encode_to_store, encode_to_store_colocated,
-                             zone_prune_parts)
+                             decode_from_store, encode_to_store,
+                             encode_to_store_colocated, zone_prune_parts)
 
 
 # -- zone-map soundness: tz-aware timestamps (ADVICE r3 high) ----------------
 
-def test_zone_ts_tzaware_stats_do_not_false_prune():
+def test_zone_ts_tzaware_stats_do_not_false_prune(zone_keeps):
     utc = datetime.timezone.utc
     tbl = pa.table({
         "ts": pa.array([datetime.datetime(2024, 1, 2, 12, 0, 0, tzinfo=utc),
@@ -34,17 +33,17 @@ def test_zone_ts_tzaware_stats_do_not_false_prune():
     # suffix that lexicographically false-pruned naive predicate values
     assert isinstance(st["min"], int) and isinstance(st["max"], int)
     # the exact ADVICE failure: '=' and '<=' at the chunk min must keep
-    assert _zone_may_match(st, "=", "2024-01-02 12:00:00")
-    assert _zone_may_match(st, "<=", "2024-01-02 12:00:00")
-    assert _zone_may_match(st, ">=", "2024-01-02T13:00:00")
+    assert zone_keeps(st, "=", "2024-01-02 12:00:00")
+    assert zone_keeps(st, "<=", "2024-01-02 12:00:00")
+    assert zone_keeps(st, ">=", "2024-01-02T13:00:00")
     # tz-suffixed predicate values compare as instants too
-    assert _zone_may_match(st, "=", "2024-01-02 12:00:00+00:00")
-    assert _zone_may_match(st, "=", "2024-01-02 13:00:00+01:00")
+    assert zone_keeps(st, "=", "2024-01-02 12:00:00+00:00")
+    assert zone_keeps(st, "=", "2024-01-02 13:00:00+01:00")
     # genuinely out-of-range still prunes
-    assert not _zone_may_match(st, ">", "2024-01-03 00:00:00")
-    assert not _zone_may_match(st, "<", "2024-01-02 12:00:00")
+    assert not zone_keeps(st, ">", "2024-01-03 00:00:00")
+    assert not zone_keeps(st, "<", "2024-01-02 12:00:00")
     # unparseable keeps
-    assert _zone_may_match(st, "=", "not a time")
+    assert zone_keeps(st, "=", "not a time")
 
 
 def test_zone_ts_ns_unit_floors_soundly():
@@ -60,7 +59,7 @@ def test_zone_ts_ns_unit_floors_soundly():
 
 # -- zone-map soundness: NaN (ADVICE r3 medium) ------------------------------
 
-def test_zone_nan_keeps_chunks():
+def test_zone_nan_keeps_chunks(zone_keeps):
     nan = float("nan")
     tbl = pa.table({
         "x": pa.array([1.0, nan, 5.0], pa.float64()),
@@ -72,21 +71,21 @@ def test_zone_nan_keeps_chunks():
     assert sx["nan"] is True and sz["nan"] is False
     # Spark orders NaN above every value: >, >=, =, != must keep a
     # NaN-carrying chunk regardless of its finite hi
-    assert _zone_may_match(sx, ">", "1e300")
-    assert _zone_may_match(sx, ">=", "1e300")
-    assert _zone_may_match(sx, "=", "1e300")
-    assert not _zone_may_match(sz, ">", "1e300")     # NaN-free still prunes
+    assert zone_keeps(sx, ">", "1e300")
+    assert zone_keeps(sx, ">=", "1e300")
+    assert zone_keeps(sx, "=", "1e300")
+    assert not zone_keeps(sz, ">", "1e300")     # NaN-free still prunes
     # all-NaN chunk: min_max found no finite bounds, but rows exist
     assert sy["min"] is None and sy["nan"] is True
-    assert _zone_may_match(sy, ">", "0")
-    assert _zone_may_match(sy, "=", "0")
-    assert not _zone_may_match(sy, "<", "0")         # NaN < v is never true
+    assert zone_keeps(sy, ">", "0")
+    assert zone_keeps(sy, "=", "0")
+    assert not zone_keeps(sy, "<", "0")         # NaN < v is never true
     # NaN literal predicates: = / >= match only NaN rows; <, <=, != match
     # every finite row (NaN is greatest)
-    assert _zone_may_match(sx, "=", "NaN")
-    assert not _zone_may_match(sz, "=", "NaN")
-    assert _zone_may_match(sz, "<=", "NaN")
-    assert _zone_may_match(sz, "!=", "NaN")
+    assert zone_keeps(sx, "=", "NaN")
+    assert not zone_keeps(sz, "=", "NaN")
+    assert zone_keeps(sz, "<=", "NaN")
+    assert zone_keeps(sz, "!=", "NaN")
     # stats stay strict-JSON serializable (no NaN tokens)
     for s in (sx, sy, sz):
         parsed = json.loads(json.dumps(s, allow_nan=False))
@@ -219,22 +218,19 @@ def test_prune_path_reads_no_per_manifest_json(spark, tmp_path, monkeypatch):
     pred = "val>=5000"
     counter = _CountingJson(json)
     monkeypatch.setattr(store_mod, "json", counter)
-    kept_spark = zone_prune_parts(store, pred, spark=spark)
-    spark_loads = counter.loads_seen
     kept_arrow = zone_prune_parts(store, pred)
-    # the prune path opens wave manifests (one per WAVE) but never
-    # json.loads a per-part manifest
-    assert spark_loads <= n_waves
-    assert counter.loads_seen <= 2 * n_waves
+    # every wave has a stats parquet: the prune path json.loads no
+    # manifest at all, per-part or per-wave
+    assert counter.loads_seen == 0
     monkeypatch.undo()
-    # parity: Spark filter path == pyarrow path == legacy JSON walk
+    # parity: stats-parquet pass == legacy JSON walk
     stats_bak = str(tmp_path / "stats_bak")
     import os
     os.rename(store.stats_dir, stats_bak)
     kept_json = zone_prune_parts(store, pred)
     os.rename(stats_bak, store.stats_dir)
-    assert kept_spark == kept_arrow == kept_json
-    assert 0 < len(kept_spark) < n_parts
+    assert kept_arrow == kept_json
+    assert 0 < len(kept_arrow) < n_parts
 
 
 def test_store_stats_and_manifest_parity_after_compaction(spark, tmp_path):
@@ -419,15 +415,13 @@ def test_cli_styling_tty_only(monkeypatch):
 
 # -- review fixes: bool/binary zone soundness, orphan stats, ts widening ----
 
-def _zone_paths_agree_keep(spark, chunk_tbl, col, op, raw,
-                           expect_any_match):
-    """Run all three prune paths over ONE chunk's stats and assert the
+def _zone_mask_keep(chunk_tbl, col, op, raw, expect_any_match):
+    """Run the prune mask over ONE chunk's flattened stats and assert the
     soundness contract: a chunk with >=1 matching row is NEVER pruned."""
     import pyarrow as pa
     from tbl_spark.store import (STATS_SCHEMA, _column_stats,
-                                 _manifest_stats_rows, _stats_row_to_zone,
-                                 _zone_cannot_match_col,
-                                 _zone_cannot_match_mask, _zone_may_match)
+                                 _manifest_stats_rows,
+                                 _zone_cannot_match_mask)
     stats = _column_stats(chunk_tbl)
     manifest = {"part_id": 7, "n_rows": len(chunk_tbl), "encode_ms": 0.0,
                 "committed_at": 0.0,
@@ -435,32 +429,18 @@ def _zone_paths_agree_keep(spark, chunk_tbl, col, op, raw,
                                 "raw_bytes": 1, "enc_bytes": 1,
                                 "stats": stats.get(n)}
                             for n in chunk_tbl.column_names}}
-    # path 1: JSON manifest
-    keep_json = _zone_may_match(stats.get(col), op, raw)
-    # stats rows feed paths 2 and 3
     rows = [r for r in _manifest_stats_rows(manifest) if r["column"] == col]
     t = pa.Table.from_pydict(
         {f.name: [r[f.name] for r in rows] for f in STATS_SCHEMA},
         schema=STATS_SCHEMA)
-    # path 2: pyarrow mask
     mask = _zone_cannot_match_mask(t, op, raw, utc_session=True)
-    keep_arrow = not mask.to_pylist()[0]
-    # path 3: Spark column
-    from tbl_spark.store import STATS_DDL
-    sdf = spark.createDataFrame(
-        [tuple(r[f.name] for f in STATS_SCHEMA) for r in rows], STATS_DDL)
-    n_cannot = sdf.filter(
-        _zone_cannot_match_col(op, raw, utc_session=True)).count()
-    keep_spark = n_cannot == 0
-    # zone dict round trip used by may_match_all over stats rows
-    keep_roundtrip = _zone_may_match(_stats_row_to_zone(rows[0]), op, raw)
-    if expect_any_match:   # matching rows exist -> nobody may prune
-        assert keep_json and keep_arrow and keep_spark and keep_roundtrip, \
-            (col, op, raw, keep_json, keep_arrow, keep_spark, keep_roundtrip)
-    return keep_json, keep_arrow, keep_spark, keep_roundtrip
+    keep = not mask.to_pylist()[0]
+    if expect_any_match:   # matching rows exist -> the mask may not prune
+        assert keep, (col, op, raw)
+    return keep
 
 
-def test_zone_bool_and_binary_columns_never_false_prune(spark):
+def test_zone_bool_and_binary_columns_never_false_prune():
     import pyarrow as pa
     tbl = pa.table({
         "flag": pa.array([True, False, True]),
@@ -468,43 +448,38 @@ def test_zone_bool_and_binary_columns_never_false_prune(spark):
     })
     for op in ("=", "!=", "<", "<=", ">", ">="):
         # bool column with data: rows matching flag=true exist etc.
-        _zone_paths_agree_keep(spark, tbl, "flag", op, "true",
-                               expect_any_match=op not in ())
+        _zone_mask_keep(tbl, "flag", op, "true",
+                        expect_any_match=op not in ())
         # binary column: zone layer must keep (exact filter decides)
-        _zone_paths_agree_keep(spark, tbl, "blob", op, "0x61",
-                               expect_any_match=True)
+        _zone_mask_keep(tbl, "blob", op, "0x61", expect_any_match=True)
 
 
-def test_zone_all_null_and_all_nan_chunks(spark):
+def test_zone_all_null_and_all_nan_chunks():
     import numpy as np
     import pyarrow as pa
     all_null_int = pa.table({"x": pa.array([None, None], type=pa.int64())})
     all_nan = pa.table({"x": pa.array([float("nan"), float("nan")])})
     for op, raw in (("=", "5"), (">", "1"), ("<", "9"), ("!=", "3")):
         # all-null: no rows match anything -> pruning allowed everywhere,
-        # but never REQUIRED; just assert no path crashes and paths that
-        # prune are sound (no matching rows exist)
-        _zone_paths_agree_keep(spark, all_null_int, "x", op, raw,
-                               expect_any_match=False)
+        # but never REQUIRED; just assert the mask does not crash and
+        # prunes soundly (no matching rows exist)
+        _zone_mask_keep(all_null_int, "x", op, raw, expect_any_match=False)
         # all-NaN: rows DO match >, >=, =NaN-ish ops?  In Spark NaN > 1
         # is true and NaN != 3 is true -> those must keep
-        keep = _zone_paths_agree_keep(
-            spark, all_nan, "x", op, raw,
-            expect_any_match=op in (">", "!="))
+        _zone_mask_keep(all_nan, "x", op, raw,
+                        expect_any_match=op in (">", "!="))
 
 
-def test_zone_ts_beyond_2p53_micros_not_false_pruned(spark):
+def test_zone_ts_beyond_2p53_micros_not_false_pruned():
     import datetime
     import pyarrow as pa
     # epoch micros ~ year 2400 >> 2^53; float() rounding must not prune
     t = datetime.datetime(2400, 1, 1, 0, 0, 0, 1)
     tbl = pa.table({"ts": pa.array([t], type=pa.timestamp("us"))})
-    _zone_paths_agree_keep(spark, tbl, "ts", "=",
-                           "2400-01-01 00:00:00.000001",
-                           expect_any_match=True)
-    _zone_paths_agree_keep(spark, tbl, "ts", "<=",
-                           "2400-01-01 00:00:00.000001",
-                           expect_any_match=True)
+    _zone_mask_keep(tbl, "ts", "=", "2400-01-01 00:00:00.000001",
+                    expect_any_match=True)
+    _zone_mask_keep(tbl, "ts", "<=", "2400-01-01 00:00:00.000001",
+                    expect_any_match=True)
 
 
 def test_orphan_stats_parquet_invisible_until_wave_commits(tmp_path):

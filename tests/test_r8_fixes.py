@@ -120,6 +120,77 @@ def test_shared_slot_registry_lru_capped_and_rebuilds(shared_registry):
     assert len(core._shared_slots) <= core._SHARED_SLOTS_MAX
 
 
+def test_shared_slot_eviction_tolerates_concurrent_evictor(
+        shared_registry, monkeypatch):
+    core = shared_registry
+
+    class RacyDict(dict):
+        """Another decode thread evicts the LRU head between this
+        thread's iter() over the registry and its pop()."""
+
+        def __iter__(self):
+            keys = list(dict.__iter__(self))
+            if len(self) > core._SHARED_SLOTS_MAX:
+                dict.pop(self, keys[0])
+            return iter(keys)
+
+    slots = RacyDict((-(i + 1), np.zeros(1, np.int32))
+                     for i in range(core._SHARED_SLOTS_MAX))
+    monkeypatch.setattr(core, "_shared_slots", slots)
+    rng = np.random.default_rng(9)
+    blob = core.build_shared_table(
+        rng.integers(0, 200, size=core._SHARED_MIN_N).astype(np.int64))
+    fp = core.register_shared_table(blob)
+    work = rng.integers(0, 200, size=4096).astype(np.int64)
+    payload = core._rans_shared_payload(work, fp)
+    out = core._decode_rans_shared(payload, len(work), np.dtype(np.int64))
+    np.testing.assert_array_equal(out, work)
+    assert fp in slots and len(slots) == core._SHARED_SLOTS_MAX
+
+
+def test_shared_slot_lru_threaded_decodes_stay_exact(shared_registry):
+    import sys
+    import threading
+    core = shared_registry
+    rng = np.random.default_rng(10)
+    cases = []
+    for i in range(core._SHARED_SLOTS_MAX + 4):
+        blob = core.build_shared_table(rng.integers(
+            i * 1000, i * 1000 + 200,
+            size=core._SHARED_MIN_N).astype(np.int64))
+        fp = core.register_shared_table(blob)
+        work = rng.integers(i * 1000, i * 1000 + 200,
+                            size=512).astype(np.int64)
+        cases.append((core._rans_shared_payload(work, fp), work))
+    errors = []
+
+    def decode_all(offset):
+        try:
+            for j in range(2 * len(cases)):
+                payload, work = cases[(offset + j) % len(cases)]
+                out = core._decode_rans_shared(payload, len(work),
+                                               np.dtype(np.int64))
+                if not np.array_equal(out, work):
+                    errors.append(f"mismatch at case {offset + j}")
+        except Exception as e:  # noqa: BLE001 — reported below
+            errors.append(repr(e))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=decode_all, args=(3 * k,))
+                   for k in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(core._shared_slots) <= core._SHARED_SLOTS_MAX
+
+
 def test_shared_tables_sidecar_concurrent_merge(tmp_path):
     import threading
 

@@ -4,15 +4,17 @@
 
 Builds a small seeded token store (the perfbench ``tokens_scan`` shape: 8
 salted parts, compacted in waves of 2, from ``DOCS`` documents of seed
-``SEED``), then runs a full decode, a projected decode (``n_tok, source``)
-and a salted encode ``REPS`` times each. For every call it prints wall seconds and the CPU seconds (user +
-system, from ``/proc``) of three process classes: the driver (this
-process), the JVM, and the Python workers (every descendant of the JVM,
-plus what the JVM reaped). perfbench's ``cycle_cpu_s`` sums all three; this
-splits out the Python-worker share. The worker PIDs that used CPU in a call
-are listed, so worker reuse shows as the same PIDs from one rep to the
-next. The first rep includes each worker's first task; the summary line is
-the median of the later reps.
+``SEED``), then runs a full decode, a projected decode (``n_tok, source``),
+a selective decode (perfbench's predicate shape: ``n_tok>=`` the
+``SELECTIVE_Q`` quantile, inside perfbench's 0.990-0.998 draw) and a
+salted encode ``REPS`` times each. For every call it prints wall seconds
+and the CPU seconds (user + system, from ``/proc``) of three process
+classes: the driver (this process), the JVM, and the Python workers
+(every descendant of the JVM, plus what the JVM reaped). perfbench's
+``cycle_cpu_s`` sums all three; this splits out the Python-worker share.
+The worker PIDs that used CPU in a call are listed, so worker reuse shows
+as the same PIDs from one rep to the next. The first rep includes each
+worker's first task; the summary line is the median of the later reps.
 
 Workers import ``tbl_spark`` from this checkout, so running the script from
 two checkouts compares their worker cost.
@@ -38,6 +40,7 @@ PARTS = 8       # salted parts, as in perfbench's token stores
 DOCS = 2000     # perfbench's token input size
 SEED = 1
 REPS = 4
+SELECTIVE_Q = 0.994
 
 
 def _comm(pid: int) -> str:
@@ -94,6 +97,8 @@ def main() -> int:
     os.environ["PYTHONPATH"] = os.pathsep.join(
         [REPO, os.environ.get("PYTHONPATH", "")])
 
+    import numpy as np
+    import pyarrow.parquet as pq
     import pyspark.sql.functions as F
 
     from tbl_spark.datagen import write_token_table
@@ -114,6 +119,8 @@ def main() -> int:
         store = ChunkStore(os.path.join(work, "store"))
         encode_to_store(df, store, PARTS, codec_hints=hints)
         store.compact(2, spark=spark)
+        n_tok = np.asarray(pq.read_table(src, columns=["n_tok"])["n_tok"])
+        predicate = f"n_tok>={int(np.quantile(n_tok, SELECTIVE_Q))}"
 
         def checksum(cols, **kw):
             out = decode_from_store(store, spark, **kw)
@@ -133,6 +140,8 @@ def main() -> int:
                 ["doc_id", "tokens", "n_tok", "source"]),
             "projected_decode": lambda: checksum(
                 ["n_tok", "source"], columns=["n_tok", "source"]),
+            "selective_decode": lambda: checksum(
+                ["doc_id", "tokens", "n_tok", "source"], predicate=predicate),
             "salted_encode": encode,
         }
         print(f"{'call':<18}{'rep':>4}{'wall_s':>8}{'driver':>8}"
@@ -148,6 +157,7 @@ def main() -> int:
             summary[name] = {k: round(statistics.median(r[k] for r in warm), 3)
                              for k in ("wall_s", "driver", "jvm", "python")}
         print(json.dumps({"seed": SEED, "docs": DOCS,
+                          "selective_predicate": predicate,
                           "cores": cores, "python": sys.version.split()[0],
                           "median_warm_cpu_s": summary}))
     finally:
