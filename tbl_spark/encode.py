@@ -365,7 +365,10 @@ def _attach_shared_tables(encoded: DataFrame, spark,
         rows = [(-1, key.split(".")[0], RANS_TABLE_CODEC, b,
                  0, 0, 0, len(b), "", 0.0, 0)
                 for key, b in sorted(blobs.items())]
-        sdf = spark.createDataFrame(rows, CHUNK_SCHEMA_DDL)
+        # from Arrow, so Spark reads the rows in the JVM (no Python task)
+        sdf = spark.createDataFrame(pa.Table.from_pylist(
+            [dict(zip(CHUNK_ARROW_SCHEMA.names, r)) for r in rows],
+            schema=CHUNK_ARROW_SCHEMA), CHUNK_SCHEMA_DDL)
         encoded = encoded.unionAll(sdf)
     encoded.tbl_shared_tables = tables
     return encoded

@@ -15,6 +15,16 @@ when its ``(st_ino, st_size, st_mtime_ns)`` differs from the stat taken
 just before its last read, and every importer of an unchanged archive
 shares that read. A changed or replaced archive is re-read exactly as
 before. Non-zip finders are untouched, and on 3.13+ it is a no-op.
+
+``session.get_spark`` runs the Python workers' daemon from
+``tbl_spark._daemon``, which calls ``install()`` before Spark forks any
+worker, so every worker starts with the wrapper: PythonRDD tasks, UDFs
+that never import ``tbl_spark``, and each fresh worker's first task. A
+``tbl_spark`` loaded from a zip (``--py-files``) keeps Spark's default
+daemon, because the daemon starts before ``--py-files`` reach a worker's
+``sys.path``; ``get_spark`` logs a WARNING saying so. Importing
+``tbl_spark`` also calls ``install()``, which covers such workers from
+their next task on.
 """
 
 from __future__ import annotations

@@ -3,12 +3,15 @@
 Every PySpark task calls ``importlib.invalidate_caches()``; on CPython
 < 3.13 each ``zipimporter`` then re-parses its archive's whole central
 directory. Importing ``tbl_spark`` installs a wrapper that re-reads an
-archive only when its stat key changed since the last read.
+archive only when its stat key changed since the last read, and
+``get_spark``'s worker daemon (``tbl_spark._daemon``) installs it before
+any worker is forked.
 """
 
 from __future__ import annotations
 
 import importlib
+import json
 import sys
 import zipfile
 import zipimport
@@ -125,3 +128,141 @@ def test_spark_worker_runs_wrapped_invalidate(spark):
     assert len(rows) == 4
     assert all(r.installed for r in rows), rows
     assert all(r.rereads == 0 for r in rows), rows
+
+
+@pytest.fixture
+def fresh_workers(spark):
+    """Workers forked by a new daemon: Spark keys its Python worker
+    daemons by environment, so a unique variable gives this test workers
+    that no earlier task (and no earlier ``import tbl_spark``) touched."""
+    import uuid
+    env = spark.sparkContext.environment
+    env["TBL_SPARK_PROBE"] = uuid.uuid4().hex
+    try:
+        yield spark
+    finally:
+        del env["TBL_SPARK_PROBE"]
+
+
+def _worker_state_probe():
+    """A probe that never imports ``tbl_spark``: (pid, wrapper installed,
+    directory reads of two invalidations after the task's own). Nested,
+    so cloudpickle ships it by value and no test module is imported in
+    the worker."""
+    def state():
+        import importlib
+        import os
+        import zipimport
+
+        reads = []
+        original = zipimport._read_directory
+
+        def counting(path):
+            reads.append(path)
+            return original(path)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = original
+        installed = hasattr(zipimport.zipimporter.invalidate_caches,
+                            "__wrapped__")
+        return os.getpid(), installed, len(reads)
+    return state
+
+
+def _assert_every_worker_fast(rows):
+    assert rows and all(installed for _, installed, _ in rows), rows
+    assert all(reads == 0 for _, _, reads in rows), rows
+
+
+@needs_eager_reread
+def test_python_rdd_workers_fork_with_wrapper(fresh_workers):
+    state = _worker_state_probe()
+    sc = fresh_workers.sparkContext
+    rows = []
+    for _ in range(2):
+        rows += sc.parallelize(range(4), 4).mapPartitions(
+            lambda it: [state()]).collect()
+    assert len(rows) == 8
+    _assert_every_worker_fast(rows)
+
+
+@needs_eager_reread
+def test_udf_without_tbl_spark_import_forks_with_wrapper(fresh_workers):
+    state = _worker_state_probe()
+
+    def probe(batches):
+        import pyarrow as pa
+        for _ in batches:
+            pass
+        pid, installed, reads = state()
+        yield pa.RecordBatch.from_pydict(
+            {"pid": [pid], "installed": [installed], "reads": [reads]})
+
+    rows = []
+    for _ in range(2):
+        df = fresh_workers.range(0, 4, numPartitions=4).mapInArrow(
+            probe, "pid long, installed boolean, reads long")
+        rows += [tuple(r) for r in df.collect()]
+    assert len(rows) == 8
+    _assert_every_worker_fast(rows)
+
+
+def test_directory_install_sets_daemon_module(spark, caplog):
+    from tbl_spark.session import DAEMON_MODULE, daemon_module
+    with caplog.at_level("WARNING", logger="tbl_spark"):
+        assert daemon_module() == DAEMON_MODULE
+    assert not caplog.records
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.python.daemon.module") == DAEMON_MODULE
+
+
+def test_zip_install_keeps_default_daemon(tmp_path):
+    """A ``tbl_spark`` shipped as a ``--py-files`` zip keeps Spark's
+    default daemon, logs why once, and its Python tasks still run."""
+    import os
+    import shutil
+    import subprocess
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    archive = tmp_path / "tbl_spark.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        for root, _dirs, files in os.walk(os.path.join(repo, "tbl_spark")):
+            for f in files:
+                if f.endswith(".py"):
+                    full = os.path.join(root, f)
+                    z.write(full, os.path.relpath(full, repo))
+    job = tmp_path / "job.py"
+    job.write_text(
+        "import json\n"
+        "from tbl_spark.session import get_spark\n"
+        "spark = get_spark(cores=1, shuffle_partitions=1)\n"
+        "def where(_):\n"
+        "    import tbl_spark\n"
+        "    yield tbl_spark.__file__\n"
+        "files = spark.sparkContext.parallelize([0], 1)"
+        ".mapPartitions(where).collect()\n"
+        "daemon = spark.sparkContext.getConf()"
+        ".get('spark.python.daemon.module', None)\n"
+        "print(json.dumps({'daemon': daemon, 'files': files}))\n"
+        "spark.stop()\n")
+    spark_submit = shutil.which("spark-submit") or os.path.join(
+        os.path.dirname(sys.executable), "spark-submit")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [spark_submit, "--master", "local[1]", "--py-files", str(archive),
+         "--conf", "spark.ui.showConsoleProgress=false", str(job)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    # spark-submit merges the Python driver's stderr into its stdout
+    lines = proc.stdout.splitlines()
+    out = json.loads([line for line in lines if line.startswith("{")][-1])
+    assert out["daemon"] is None
+    assert len(out["files"]) == 1 and ".zip" in out["files"][0]
+    warnings = [line for line in lines
+                if "keep Spark's default daemon" in line]
+    assert len(warnings) == 1, proc.stdout[-4000:]

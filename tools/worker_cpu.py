@@ -6,15 +6,19 @@ Builds a small seeded token store (the perfbench ``tokens_scan`` shape: 8
 salted parts, compacted in waves of 2, from ``DOCS`` documents of seed
 ``SEED``), then runs a full decode, a projected decode (``n_tok, source``),
 a selective decode (perfbench's predicate shape: ``n_tok>=`` the
-``SELECTIVE_Q`` quantile, inside perfbench's 0.990-0.998 draw) and a
-salted encode ``REPS`` times each. For every call it prints wall seconds
+``SELECTIVE_Q`` quantile, inside perfbench's 0.990-0.998 draw), a salted
+encode, a compaction of a fresh copy of the uncompacted store, and a
+resume of a copy that lost half its parts (perfbench's ``resume`` op)
+``REPS`` times each. For every call it prints wall seconds
 and the CPU seconds (user + system, from ``/proc``) of three process
 classes: the driver (this process), the JVM, and the Python workers
 (every descendant of the JVM, plus what the JVM reaped). perfbench's
 ``cycle_cpu_s`` sums all three; this splits out the Python-worker share.
-The worker PIDs that used CPU in a call are listed, so worker reuse shows
-as the same PIDs from one rep to the next. The first rep includes each
-worker's first task; the summary line is the median of the later reps.
+The JVM runs with perfbench's ``JVM_OPTS``, so its column matches the
+JVM share of ``cycle_cpu_s``. The worker PIDs that used CPU in a call are
+listed, so worker reuse shows as the same PIDs from one rep to the next.
+The first rep includes each worker's first task; the summary line is the
+median of the later reps.
 
 Workers import ``tbl_spark`` from this checkout, so running the script from
 two checkouts compares their worker cost.
@@ -33,7 +37,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from perfbench.run import cpu_s, descendants  # noqa: E402
+from perfbench.run import JVM_OPTS, cpu_s, descendants  # noqa: E402
 
 CLK = os.sysconf("SC_CLK_TCK")
 PARTS = 8       # salted parts, as in perfbench's token stores
@@ -74,10 +78,12 @@ def snapshot(jvm: int) -> dict:
             "pids": workers}
 
 
-def measure(jvm: int, fn) -> dict:
+def measure(jvm: int, fn, prepare=None) -> dict:
+    """Run ``fn(prepare())``, or ``fn()``, and measure only ``fn``."""
+    args = () if prepare is None else (prepare(),)
     before = snapshot(jvm)
     t0 = time.perf_counter()
-    fn()
+    fn(*args)
     wall = time.perf_counter() - t0
     after = snapshot(jvm)
     busy = sorted(p for p, s in after["pids"].items()
@@ -93,6 +99,7 @@ def main() -> int:
     os.environ.setdefault("SPARK_LOCAL_DIRS", os.path.join(work, "local"))
     os.environ.setdefault(
         "PYSPARK_SUBMIT_ARGS",
+        f'--driver-java-options "{JVM_OPTS}" '
         "--conf spark.ui.showConsoleProgress=false pyspark-shell")
     os.environ["PYTHONPATH"] = os.pathsep.join(
         [REPO, os.environ.get("PYTHONPATH", "")])
@@ -116,9 +123,23 @@ def main() -> int:
         write_token_table(src, DOCS, n_parts=8, seed=SEED)
         df = spark.read.parquet(src)
         hints = audition_codec_hints(df)
+        loose = ChunkStore(os.path.join(work, "loose"))
+        encode_to_store(df, loose, PARTS, codec_hints=hints)
         store = ChunkStore(os.path.join(work, "store"))
-        encode_to_store(df, store, PARTS, codec_hints=hints)
+        shutil.copytree(loose.root, store.root)
         store.compact(2, spark=spark)
+        n_copies = 0
+
+        def loose_copy(drop=()):
+            nonlocal n_copies
+            n_copies += 1
+            copy = ChunkStore(os.path.join(work, f"copy-{n_copies}"))
+            shutil.copytree(loose.root, copy.root)
+            for p in drop:
+                name = f"part-{p:05d}"
+                os.remove(os.path.join(copy.chunks_dir, name + ".parquet"))
+                os.remove(os.path.join(copy.manifest_dir, name + ".json"))
+            return copy
         n_tok = np.asarray(pq.read_table(src, columns=["n_tok"])["n_tok"])
         predicate = f"n_tok>={int(np.quantile(n_tok, SELECTIVE_Q))}"
 
@@ -143,12 +164,17 @@ def main() -> int:
             "selective_decode": lambda: checksum(
                 ["doc_id", "tokens", "n_tok", "source"], predicate=predicate),
             "salted_encode": encode,
+            "compact": (loose_copy, lambda s: s.compact(2, spark=spark)),
+            # perfbench's resume op: half the parts lost, no plan passed
+            "resume": (lambda: loose_copy(range(0, PARTS, 2)),
+                       lambda s: encode_to_store(df, s, PARTS, resume=True)),
         }
         print(f"{'call':<18}{'rep':>4}{'wall_s':>8}{'driver':>8}"
               f"{'jvm':>8}{'python':>8}  worker pids")
         summary = {}
-        for name, fn in calls.items():
-            reps = [measure(jvm, fn) for _ in range(REPS)]
+        for name, call in calls.items():
+            prepare, fn = call if isinstance(call, tuple) else (None, call)
+            reps = [measure(jvm, fn, prepare) for _ in range(REPS)]
             for i, r in enumerate(reps):
                 print(f"{name:<18}{i:>4}{r['wall_s']:>8.2f}"
                       f"{r['driver']:>8.2f}{r['jvm']:>8.2f}"
