@@ -114,6 +114,56 @@ _WINDOW_N = 1 << 18  # contiguous stats window for sampled estimates
 Plan = dict[str, int | bytes | tuple]
 
 
+def plan_to_json(plan: Plan) -> dict:
+    """JSON record of a plan, as a store pins it in store.json: a codec
+    becomes its int, an FSST merge table ``{"fsst": [[code, left,
+    right], ...]}`` and a shared table ``{"table": "<fingerprint hex>"}``.
+    Table blobs are never copied in; the store keeps them once in its
+    shared-tables sidecar, keyed by the same fingerprint."""
+    out: dict = {}
+    for key, entry in sorted(plan.items()):
+        if isinstance(entry, (bytes, bytearray)):
+            out[key] = {"table": f"{shared_table_fp(bytes(entry)):016x}"}
+        elif isinstance(entry, tuple):
+            out[key] = {"fsst": [list(m) for m in entry]}
+        else:
+            out[key] = int(entry)
+    return out
+
+
+def plan_from_json(record: dict, tables: dict[int, bytes]) -> Plan:
+    """Inverse of plan_to_json; `tables` maps fingerprints to the shared
+    table blobs (ChunkStore.read_shared_tables)."""
+    plan: Plan = {}
+    for key, entry in record.items():
+        if isinstance(entry, int):
+            plan[key] = entry
+        elif "fsst" in entry:
+            plan[key] = tuple(tuple(m) for m in entry["fsst"])
+        else:
+            fp = int(entry["table"], 16)
+            if fp not in tables:
+                raise ValueError(
+                    f"plan entry {key!r} names shared table "
+                    f"{entry['table']}, which the store does not hold")
+            plan[key] = tables[fp]
+    return plan
+
+
+def describe_plan(record: dict) -> dict[str, str]:
+    """One line per column key of a plan_to_json record: the codec name,
+    ``shared table <fp>`` or ``fsst <n> merges``."""
+    out = {}
+    for key, entry in record.items():
+        if isinstance(entry, int):
+            out[key] = Codec(entry).name.lower()
+        elif "fsst" in entry:
+            out[key] = f"fsst {len(entry['fsst'])} merges"
+        else:
+            out[key] = f"shared table {entry['table']}"
+    return out
+
+
 def _rans_payload(v: np.ndarray, _table_depth: int = 0) -> bytes | None:
     """Dict-remap to a dense alphabet, then lane-parallel rANS. payload =
     frame(freqs_blob, uniques_blob, rans_core).

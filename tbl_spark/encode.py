@@ -137,12 +137,15 @@ def _local_parquet_sample(df: DataFrame, columns: list[str],
     JVM involvement. Any surprise — remote scheme, schema drift,
     reader error — returns None and the caller falls back to the
     Spark job; the sample feeds only codec CHOICE heuristics, never
-    correctness. A reader error is logged with its reason."""
+    correctness. A frame that is not a bare local parquet relation is
+    logged at INFO, a reader error at WARNING with its reason."""
     try:
-        if df._jdf.queryExecution().logical().children().size() != 0:
-            return None
-        files = df.inputFiles()
+        files = df.inputFiles() \
+            if df._jdf.queryExecution().logical().children().size() == 0 \
+            else []
         if not files or not all(f.startswith("file:") for f in files):
+            log.info("audition sample: the frame is not a bare local "
+                     "parquet relation; sampling with a Spark job")
             return None
         from urllib.parse import unquote, urlparse
         import pyarrow.parquet as pq

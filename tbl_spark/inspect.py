@@ -16,6 +16,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow.parquet as pq
 
+from .codecs.core import describe_plan
 from .store import ChunkStore
 
 # Footer reads are tiny IO-bound metadata fetches; the reference reads
@@ -135,7 +136,9 @@ def store_stats(store: ChunkStore) -> dict:
     Scale shape (VERDICT r3 #1): the rollup is a columnar aggregation
     over the store's per-wave stats parquets (pyarrow group_by — no
     json.load per manifest); only loose / pre-r4 parts flow in via JSON
-    (bounded once compaction runs)."""
+    (bounded once compaction runs). `plan` lists the encode plan pinned
+    in store.json per column key — codec name, ``shared table <fp>`` or
+    ``fsst <n> merges`` — i.e. the codecs new chunks will use."""
     t = store.stats_table()
     per_col: dict[str, dict] = {}
     for r in (t.group_by("column")
@@ -174,4 +177,5 @@ def store_stats(store: ChunkStore) -> dict:
         "encode_cpu_sec": total_ms / 1000.0,
         "tokens_per_cpu_sec": total_values / max(1e-9, total_ms / 1000.0),
         "columns": columns,
+        "plan": describe_plan((store.read_meta() or {}).get("plan", {})),
     }

@@ -28,18 +28,22 @@ SURVEY.md §7.3 calls for.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 import uuid
+from typing import Callable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
-from .codecs.core import Plan
+from .codecs.core import Plan, plan_from_json, plan_to_json
 from .encode import (CHUNK_ARROW_SCHEMA, CHUNK_SCHEMA_DDL,
                      audition_codec_hints, encode_table)
 from .partitioning import PART_COL, with_part_id
+
+log = logging.getLogger("tbl_spark")
 
 _SPARK_TYPE = {"int64": "bigint", "string": "string", "double": "double",
                "bool": "boolean"}
@@ -177,11 +181,12 @@ class ChunkStore:
         os.replace(tmp, self.meta_path)
 
     # -- shared rANS tables sidecar (r7) ------------------------------------
-    # Kept OUT of store.json: that file is the pinned chunk-assignment
-    # contract compared key-by-key on resume, while tables ACCUMULATE —
-    # a resumed run's fresh audition sample may build a slightly
-    # different table, and chunks from both runs coexist, each blob
-    # naming its table by content fingerprint.
+    # Kept OUT of store.json: the pinned plan there names each table by
+    # content fingerprint, and the blobs live here once. A store's runs
+    # share its pinned plan, so tables accumulate only in stores written
+    # before plans were pinned: a run on such a store auditioned afresh,
+    # could build a slightly different table, and chunks from both runs
+    # coexist, each blob naming its own table.
 
     @property
     def shared_tables_path(self) -> str:
@@ -238,11 +243,21 @@ class ChunkStore:
         return {int(fp, 16): base64.b64decode(b64)
                 for fp, b64 in self._read_shared_tables_raw().items()}
 
-    def check_or_init_meta(self, meta: dict) -> None:
-        """Pin the store's chunk-assignment contract on first encode;
-        fail fast if ANY pinned key differs on a later run (each key is
-        something that changes chunk membership — resuming with it
-        altered would silently drop or duplicate rows)."""
+    def check_or_init_meta(self, meta: dict, codec_hints: Plan | None,
+                           audition: Callable[[], Plan]) -> Plan:
+        """Pin the store's chunk-assignment contract and encode plan on
+        first encode; fail fast if ANY pinned key differs on a later run
+        (each key is something that changes chunk membership — resuming
+        with it altered would silently drop or duplicate rows). Returns
+        the run's plan.
+
+        The plan is pinned as store.json's ``plan`` key, like a table's
+        write properties in its metadata, so a chunk's bytes depend on
+        (input, pinned plan) across runs. `codec_hints` None loads the
+        pinned plan; on a new store, or a store pinned before plans were,
+        `audition()` runs once and its result is pinned. An explicit plan
+        must equal the pin. Shared tables are written to their sidecar
+        before the pin that names them."""
         existing = self.read_meta()
         if existing is None:
             if self.committed_parts():
@@ -256,24 +271,49 @@ class ChunkStore:
                     f"store.json — cannot verify this run uses the same "
                     f"partitioning parameters. Recreate the store or "
                     f"restore its store.json before resuming.")
-            self.write_meta(meta)
-            return
-        if "mode" not in existing:  # pre-r2 store.json → salted encode
-            existing = {"mode": "salted", **existing}
-        if existing.get("mode") != meta.get("mode"):
-            raise ValueError(
-                f"store {self.root} was created by a "
-                f"{existing.get('mode')!r}-mode encode; this run uses "
-                f"{meta.get('mode')!r} — the two assign chunks "
-                f"differently. Use a new store.")
-        for key in sorted(set(meta) | set(existing)):
-            if existing.get(key) != meta.get(key):
+        else:
+            if "mode" not in existing:  # pre-r2 store.json → salted encode
+                existing = {"mode": "salted", **existing}
+            if existing.get("mode") != meta.get("mode"):
                 raise ValueError(
-                    f"store {self.root} was created with "
-                    f"{key}={existing.get(key)!r}; this run would use "
-                    f"{meta.get(key)!r} — resuming would silently "
-                    f"misassign rows. Use a new store or rerun with the "
-                    f"original parameters/configuration.")
+                    f"store {self.root} was created by a "
+                    f"{existing.get('mode')!r}-mode encode; this run uses "
+                    f"{meta.get('mode')!r} — the two assign chunks "
+                    f"differently. Use a new store.")
+            for key in sorted((set(meta) | set(existing)) - {"plan"}):
+                if existing.get(key) != meta.get(key):
+                    raise ValueError(
+                        f"store {self.root} was created with "
+                        f"{key}={existing.get(key)!r}; this run would use "
+                        f"{meta.get(key)!r} — resuming would silently "
+                        f"misassign rows. Use a new store or rerun with "
+                        f"the original parameters/configuration.")
+            pinned = existing.get("plan")
+            if pinned is not None:
+                if codec_hints is None:
+                    return plan_from_json(pinned, self.read_shared_tables())
+                wanted = plan_to_json(codec_hints)
+                differ = sorted(k for k in set(pinned) | set(wanted)
+                                if pinned.get(k) != wanted.get(k))
+                if differ:
+                    raise ValueError(
+                        f"store {self.root} pins an encode plan that "
+                        f"differs from this run's in {differ} — resumed "
+                        f"parts would not match the committed ones. Pass "
+                        f"codec_hints=None to reuse the pinned plan, or "
+                        f"use a new store.")
+                return codec_hints
+        if codec_hints is None:
+            if existing is not None:
+                log.info("store %s has no pinned encode plan; auditioning "
+                         "one and pinning it", self.root)
+            codec_hints = audition()
+        blobs = [v for v in codec_hints.values()
+                 if isinstance(v, (bytes, bytearray))]
+        if blobs:  # persist shared tables BEFORE anything references them
+            self.write_shared_tables(blobs)
+        self.write_meta({**meta, "plan": plan_to_json(codec_hints)})
+        return codec_hints
 
     # -- snapshot log (run-level lineage, Iceberg-snapshot analog) ----------
 
@@ -901,27 +941,30 @@ def encode_to_store(df: DataFrame, store: ChunkStore, num_parts: int,
 
     The encode UDF writes + commits each chunk on the executor, then emits
     one manifest row; the driver only collects the (tiny) manifest rows.
-    The store pins (num_parts, salt_cols, schema) on first encode and every
-    later run fails fast on mismatch — resuming with different partitioning
-    parameters would silently drop rows that hash into committed part ids.
+    The store pins (num_parts, salt_cols, schema) and the encode plan on
+    first encode, and every later run fails fast on mismatch — resuming
+    with different partitioning parameters would silently drop rows that
+    hash into committed part ids.
 
-    `codec_hints` is the encode plan, as in encode_chunks: None
-    auditions one on `df`. Pass a precomputed plan to skip the
-    driver-side audition sample jobs — essential for callers that encode
-    many small batches, e.g. streaming.stream_encode's foreachBatch, which
-    auditions ONCE and reuses the plan every micro-batch. Committed chunk
+    `codec_hints` is the encode plan. None reuses the plan pinned in the
+    store's store.json; a new store (or one pinned before plans were)
+    auditions one on `df` and pins it. An explicit plan is pinned on
+    first encode and must equal the pin on later runs. Committed chunk
     bytes depend only on the input rows of each part and the plan, so a
-    resumed run under the same plan re-encodes a lost part to the same
-    bytes.
+    resume re-encodes a lost part to the same bytes, and no resume pays
+    the audition.
     """
     from .partitioning import resolve_salt_cols
     store.init_dirs()
     salt_cols = resolve_salt_cols(df, salt_cols)
     schema_ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                            for f in df.schema.fields)
-    store.check_or_init_meta({"mode": "salted", "num_parts": num_parts,
-                              "salt_cols": list(salt_cols),
-                              "schema_ddl": schema_ddl})
+    # audition the caller's frame: a bare parquet relation takes the
+    # local pyarrow sample, which the part-id projection would refuse
+    plan = store.check_or_init_meta(
+        {"mode": "salted", "num_parts": num_parts,
+         "salt_cols": list(salt_cols), "schema_ddl": schema_ddl},
+        codec_hints, lambda: audition_codec_hints(df))
     df = with_part_id(df, num_parts, salt_cols)
     committed = store.committed_parts() if resume else set()
     pending_df = df
@@ -937,13 +980,6 @@ def encode_to_store(df: DataFrame, store: ChunkStore, num_parts: int,
     spark_types = {f.name: f.dataType.simpleString()
                    for f in df.schema.fields if f.name != PART_COL}
     store_root = store.root
-
-    plan = audition_codec_hints(df.drop(PART_COL)) if codec_hints is None \
-        else codec_hints
-    tbl_blobs = [v for v in plan.values() if isinstance(v, (bytes,
-                                                            bytearray))]
-    if tbl_blobs:  # persist shared tables BEFORE any chunk references them
-        store.write_shared_tables(tbl_blobs)
 
     # clustered encode (r6, mirrors encode_chunks' cluster=True): chunk-
     # internal row order is shuffle residue, so sorting by the salt key
@@ -1031,7 +1067,11 @@ def encode_to_store_colocated(df: DataFrame, store: ChunkStore,
     resume fails fast instead of silently dropping/duplicating the rows
     whose chunk boundaries moved. (In-memory sources have no file list;
     their pinning is correspondingly weaker and resume relies on the
-    stable task partition ids within one configuration.)"""
+    stable task partition ids within one configuration.)
+
+    `codec_hints` is the encode plan, pinned like encode_to_store's: None
+    reuses the store's pinned plan, or auditions one on `df` and pins it
+    on a new store; an explicit plan must equal the pin."""
     import hashlib
 
     import pyspark.sql.functions as F
@@ -1048,7 +1088,7 @@ def encode_to_store_colocated(df: DataFrame, store: ChunkStore,
     files_digest = hashlib.blake2b(
         "\n".join(sorted(df.inputFiles())).encode(),
         digest_size=8).hexdigest()
-    store.check_or_init_meta({
+    plan = store.check_or_init_meta({
         "mode": "colocated",
         "tokens_per_chunk": tokens_per_chunk,
         "schema_ddl": schema_ddl,
@@ -1060,7 +1100,7 @@ def encode_to_store_colocated(df: DataFrame, store: ChunkStore,
         "arrow_batch_rows":
             spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"),
         "default_parallelism": spark.sparkContext.defaultParallelism,
-    })
+    }, codec_hints, lambda: audition_codec_hints(df))
     spark_types = {f.name: f.dataType.simpleString()
                    for f in df.schema.fields}
     has_tok = any(f.name == token_col and
@@ -1072,13 +1112,6 @@ def encode_to_store_colocated(df: DataFrame, store: ChunkStore,
     # the committed set INCLUDES wave-compacted parts (whose loose
     # markers were deleted by compact()) — resume must not re-encode them
     committed = frozenset(store.committed_parts()) if resume else frozenset()
-    # same plan plumbing as encode_to_store (ADVICE r4): callers that
-    # encode many micro-batches audition once and pass the plan in
-    plan = audition_codec_hints(df) if codec_hints is None else codec_hints
-    tbl_blobs = [v for v in plan.values() if isinstance(v, (bytes,
-                                                            bytearray))]
-    if tbl_blobs:  # persist shared tables BEFORE any chunk references them
-        store.write_shared_tables(tbl_blobs)
 
     def run(batches):
         local_store = ChunkStore(store_root)

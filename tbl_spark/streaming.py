@@ -21,6 +21,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .codecs.core import plan_from_json
 from .store import ChunkStore, encode_to_store
 
 
@@ -44,8 +45,17 @@ def stream_encode(spark: SparkSession, input_dir: str, store_root: str,
     # audition the encode plan on the FIRST non-empty micro-batch only,
     # then encode every later batch under it — without this each batch
     # pays two driver-side sample jobs (ADVICE r4), and the same column
-    # could get different codecs in different batches of one stream
+    # could get different codecs in different batches of one stream. A
+    # restarted stream takes the plan its newest batch store pinned, so
+    # it keeps the first run's plan (and a replayed batch matches its pin)
     plan_of_stream: dict = {}
+    for store in sorted(batch_stores(store_root), key=_batch_id,
+                        reverse=True):
+        meta = store.read_meta()
+        if meta is not None and "plan" in meta:
+            plan_of_stream["plan"] = plan_from_json(
+                meta["plan"], store.read_shared_tables())
+            break
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         store = ChunkStore(os.path.join(store_root, f"batch={batch_id}"))

@@ -7,19 +7,33 @@
 2. Resume: parts removed from a store re-encode to the same bytes.
 3. A failed local parquet sample is logged and falls back to a Spark
    sample job that yields the same plan.
+4. A store pins its plan in store.json: a run without a plan reuses the
+   pin (no audition), a different explicit plan raises, a store pinned
+   before plans were auditions once and adds the pin, and a restarted
+   stream keeps its first run's plan.
+5. A crash at any driver-side rename of the write protocol leaves a store
+   that a rerun completes to the same bytes under the same pinned plan.
 """
 
+import contextlib
+import json
 import logging
 import os
+import uuid
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 
-from tbl_spark.datagen import generate_df
+import tbl_spark.encode as encode_mod
+import tbl_spark.store as store_mod
+from tbl_spark.datagen import SPARK_SCHEMA_DDL, generate_df, write_token_table
 from tbl_spark.encode import audition_codec_hints
-from tbl_spark.store import ChunkStore, encode_to_store
+from tbl_spark.inspect import store_stats
+from tbl_spark.store import (ChunkStore, decode_from_store, encode_to_store,
+                             encode_to_store_colocated)
 
 PARTS = 8
 
@@ -116,3 +130,258 @@ def test_local_sample_failure_is_logged(spark, tmp_path, monkeypatch,
     assert len(records) == 1
     assert "simulated reader failure" in records[0].getMessage()
     assert got == want
+
+
+# -- the plan pinned in store.json ----------------------------------------
+
+COLS = ["doc_id", "tokens", "n_tok", "source"]
+
+
+@pytest.fixture(scope="module")
+def parquet_src(tmp_path_factory):
+    src = str(tmp_path_factory.mktemp("plan-src") / "in")
+    write_token_table(src, 1200, n_parts=2)
+    return src
+
+
+def _forbid_audition(monkeypatch):
+    def audition(*args, **kwargs):
+        raise AssertionError("audition_codec_hints was called")
+    monkeypatch.setattr(store_mod, "audition_codec_hints", audition)
+    monkeypatch.setattr(encode_mod, "audition_codec_hints", audition)
+
+
+def _drop_parts(store: ChunkStore, parts) -> None:
+    for p in parts:
+        os.remove(os.path.join(store.chunks_dir, f"part-{p:05d}.parquet"))
+        os.remove(os.path.join(store.manifest_dir, f"part-{p:05d}.json"))
+
+
+def _checksum(df) -> tuple:
+    row = df.agg(F.count(F.lit(1)),
+                 F.sum(F.xxhash64(*COLS).cast("decimal(38,0)"))).first()
+    return tuple(row)
+
+
+def test_plan_json_round_trip():
+    from tbl_spark.codecs.core import (build_shared_table, describe_plan,
+                                       plan_from_json, plan_to_json,
+                                       shared_table_fp)
+    from tbl_spark.codecs.format import Codec
+    rng = np.random.default_rng(3)
+    blob = build_shared_table(rng.zipf(1.3, 1 << 17).clip(0, 4000))
+    assert blob is not None
+    plan = {"doc_id": Codec.STR_TEMPLATE, "n_tok": int(Codec.FOR_BITPACK),
+            "tokens.values": blob,
+            "text": ((200, 101, 32), (201, 116, 104), (202, 200, 201))}
+    record = json.loads(json.dumps(plan_to_json(plan)))
+    assert record["tokens.values"] == {
+        "table": f"{shared_table_fp(blob):016x}"}
+    assert record["text"] == {"fsst": [[200, 101, 32], [201, 116, 104],
+                                       [202, 200, 201]]}
+    assert len(json.dumps(record)) < 200      # the blob is not copied in
+    assert plan_from_json(record, {shared_table_fp(blob): blob}) == plan
+    assert describe_plan(record) == {
+        "doc_id": "str_template", "n_tok": "for_bitpack",
+        "tokens.values": f"shared table {shared_table_fp(blob):016x}",
+        "text": "fsst 3 merges"}
+    with pytest.raises(ValueError, match="tokens.values"):
+        plan_from_json(record, {})
+
+
+def test_resume_without_plan_reuses_pin(spark, parquet_src, tmp_path,
+                                        monkeypatch):
+    df = spark.read.parquet(parquet_src)
+    store = ChunkStore(str(tmp_path / "store"))
+    encode_to_store(df, store, PARTS)
+    assert "plan" in store.read_meta()
+    want = _blobs(store)
+    assert len(want) == 4 * PARTS
+    lost = sorted(store.committed_parts())[::2]
+    _drop_parts(store, lost)
+    _forbid_audition(monkeypatch)
+    summary = encode_to_store(df, store, PARTS)
+    assert summary["encoded_parts"] == len(lost)
+    assert _blobs(store) == want
+    shown = store_stats(store)["plan"]
+    assert shown["doc_id"] == "str_template"
+    assert shown["tokens.values"].startswith("shared table ")
+
+
+def test_explicit_plan_must_match_pin(token_df, plan, tmp_path):
+    from tbl_spark.codecs.format import Codec
+    store = ChunkStore(str(tmp_path / "store"))
+    encode_to_store(token_df, store, PARTS, codec_hints=plan)
+    other = {**plan, "n_tok": int(Codec.RAW)}
+    with pytest.raises(ValueError, match=r"\['n_tok'\]"):
+        encode_to_store(token_df, store, PARTS, codec_hints=other)
+    with pytest.raises(ValueError, match="differs") as err:
+        encode_to_store(token_df, store, PARTS, codec_hints={})
+    assert all(repr(k) in str(err.value) for k in plan)
+    summary = encode_to_store(token_df, store, PARTS, codec_hints=plan)
+    assert summary["encoded_parts"] == 0
+
+
+def test_store_without_pin_auditions_once(spark, parquet_src, tmp_path,
+                                          monkeypatch, caplog):
+    df = spark.read.parquet(parquet_src)
+    store = ChunkStore(str(tmp_path / "store"))
+    encode_to_store(df, store, PARTS)
+    meta = store.read_meta()
+    pinned = meta.pop("plan")
+    store.write_meta(meta)                  # as written before plans were
+    _drop_parts(store, [0])
+    calls = []
+
+    def audition(frame, *args, **kwargs):
+        calls.append(frame)
+        return audition_codec_hints(frame, *args, **kwargs)
+
+    monkeypatch.setattr(store_mod, "audition_codec_hints", audition)
+    with caplog.at_level(logging.INFO, logger="tbl_spark"):
+        assert encode_to_store(df, store, PARTS)["encoded_parts"] == 1
+    assert len(calls) == 1
+    assert any("no pinned encode plan" in r.getMessage()
+               for r in caplog.records)
+    assert store.read_meta() == {**meta, "plan": pinned}
+    _drop_parts(store, [1])
+    assert encode_to_store(df, store, PARTS)["encoded_parts"] == 1
+    assert len(calls) == 1
+
+
+def test_colocated_rerun_loads_pin(spark, parquet_src, tmp_path,
+                                   monkeypatch):
+    from tbl_spark.codecs.core import plan_to_json
+    df = spark.read.parquet(parquet_src)
+    store = ChunkStore(str(tmp_path / "store"))
+    first = encode_to_store_colocated(df, store, 60_000)
+    assert first["encoded_parts"] >= 2
+    plan = audition_codec_hints(df)
+    assert store.read_meta()["plan"] == plan_to_json(plan)
+    _forbid_audition(monkeypatch)
+    assert encode_to_store_colocated(df, store, 60_000)["encoded_parts"] \
+        == 0
+    with pytest.raises(ValueError, match="differs"):
+        encode_to_store_colocated(df, store, 60_000, codec_hints={})
+
+
+@contextlib.contextmanager
+def _job_group(sc):
+    group = f"g-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "tracked")
+    try:
+        yield group
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+
+def test_bare_parquet_first_encode_auditions_without_spark_jobs(
+        spark, parquet_src, tmp_path, monkeypatch):
+    sc = spark.sparkContext
+    groups = []
+
+    def audition(frame, *args, **kwargs):
+        with _job_group(sc) as group:
+            groups.append(group)
+            return audition_codec_hints(frame, *args, **kwargs)
+
+    monkeypatch.setattr(store_mod, "audition_codec_hints", audition)
+    store = ChunkStore(str(tmp_path / "store"))
+    encode_to_store(spark.read.parquet(parquet_src), store, PARTS)
+    assert len(groups) == 1
+    assert sc.statusTracker().getJobIdsForGroup(groups[0]) == []
+    assert len(store.committed_parts()) == PARTS
+
+
+def test_projected_frame_logs_leaving_local_sample(spark, parquet_src,
+                                                   caplog):
+    df = spark.read.parquet(parquet_src).select("doc_id", "n_tok")
+    with caplog.at_level(logging.INFO, logger="tbl_spark"):
+        audition_codec_hints(df)
+    declined = [r for r in caplog.records
+                if "not a bare local parquet relation" in r.getMessage()]
+    assert len(declined) == 1
+    assert declined[0].levelno == logging.INFO
+
+
+def test_restarted_stream_keeps_first_plan(spark, tmp_path, monkeypatch):
+    from tbl_spark.datagen import generate_part
+    from tbl_spark.streaming import batch_stores, stream_encode
+    inbox = str(tmp_path / "inbox")
+    root = str(tmp_path / "stream")
+    write_token_table(inbox, 800, n_parts=2)
+    stream_encode(spark, inbox, root, num_parts=4,
+                  schema_ddl=SPARK_SCHEMA_DDL)
+    (first,) = batch_stores(root)
+    pinned = first.read_meta()["plan"]
+    assert pinned
+    for part in (2, 3):
+        pq.write_table(generate_part(part, 400, rows_per_part=400),
+                       os.path.join(inbox, f"late-{part}.parquet"))
+    _forbid_audition(monkeypatch)
+    stream_encode(spark, inbox, root, num_parts=4,
+                  schema_ddl=SPARK_SCHEMA_DDL)
+    stores = batch_stores(root)
+    assert len(stores) == 2
+    assert all(s.read_meta()["plan"] == pinned for s in stores)
+    assert stores[1].committed_parts()
+
+
+# -- crash points ----------------------------------------------------------
+
+class _Crash(Exception):
+    pass
+
+
+def test_crash_at_each_driver_side_rename_recovers(spark, parquet_src,
+                                                   tmp_path, monkeypatch):
+    """Fail each os.replace the driver (or in-process compaction) makes
+    in turn: shared tables, store.json with the plan, the snapshot, and
+    each wave's parquet, stats and manifest. Rerunning the encode and the
+    compaction must leave a store with the clean run's pinned plan and
+    blobs, decoding to the source."""
+    df = spark.read.parquet(parquet_src)
+    want_sum = _checksum(df)
+
+    def run(store):
+        encode_to_store(df, store, 4)
+        store.compact(2)
+
+    clean = ChunkStore(str(tmp_path / "clean"))
+    run(clean)
+    want_plan, want_blobs = clean.read_meta()["plan"], _blobs(clean)
+    real = os.replace
+    crashed_at = []
+    for k in range(1, 20):
+        store = ChunkStore(str(tmp_path / f"crash-{k}"))
+        seen = []
+
+        def replace(src, dst, *args, **kwargs):
+            if str(dst).startswith(store.root):
+                seen.append(dst)
+                if len(seen) == k:
+                    raise _Crash(dst)
+            return real(src, dst, *args, **kwargs)
+
+        monkeypatch.setattr(store_mod.os, "replace", replace)
+        try:
+            run(store)
+        except _Crash as e:
+            crashed_at.append(os.path.relpath(str(e), store.root))
+        else:
+            break
+        finally:
+            monkeypatch.setattr(store_mod.os, "replace", real)
+        run(store)
+        assert store.read_meta()["plan"] == want_plan, crashed_at[-1]
+        assert _blobs(store) == want_blobs, crashed_at[-1]
+        assert _checksum(decode_from_store(store, spark)) == want_sum
+    else:
+        pytest.fail("every run crashed")
+    names = {os.path.basename(p) for p in crashed_at}
+    assert {"shared_tables.json", "store.json", "snap-000000.json",
+            "wave-000000.parquet", "wave-000000.json",
+            "wave-000001.json"} <= names
+    assert os.path.join("stats", "wave-000000.parquet") in crashed_at

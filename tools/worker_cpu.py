@@ -7,9 +7,11 @@ salted parts, compacted in waves of 2, from ``DOCS`` documents of seed
 ``SEED``), then runs a full decode, a projected decode (``n_tok, source``),
 a selective decode (perfbench's predicate shape: ``n_tok>=`` the
 ``SELECTIVE_Q`` quantile, inside perfbench's 0.990-0.998 draw), a salted
-encode, a compaction of a fresh copy of the uncompacted store, and a
-resume of a copy that lost half its parts (perfbench's ``resume`` op)
-``REPS`` times each. For every call it prints wall seconds
+encode, the driver-side audition of the encode plan, a compaction of a
+fresh copy of the uncompacted store, and a resume of a copy that lost
+half its parts (perfbench's ``resume`` op, which passes no plan and so
+reuses the plan pinned in the store's ``store.json``) ``REPS`` times
+each. For every call it prints wall seconds
 and the CPU seconds (user + system, from ``/proc``) of three process
 classes: the driver (this process), the JVM, and the Python workers
 (every descendant of the JVM, plus what the JVM reaped). perfbench's
@@ -164,8 +166,12 @@ def main() -> int:
             "selective_decode": lambda: checksum(
                 ["doc_id", "tokens", "n_tok", "source"], predicate=predicate),
             "salted_encode": encode,
+            # what a first encode without a plan adds: on this bare
+            # parquet frame the sample is read locally, no Spark job
+            "audition": lambda: audition_codec_hints(df),
             "compact": (loose_copy, lambda s: s.compact(2, spark=spark)),
-            # perfbench's resume op: half the parts lost, no plan passed
+            # perfbench's resume op: half the parts lost, no plan
+            # passed, so it loads the plan the store pinned
             "resume": (lambda: loose_copy(range(0, PARTS, 2)),
                        lambda s: encode_to_store(df, s, PARTS, resume=True)),
         }
