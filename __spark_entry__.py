@@ -683,10 +683,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # -- multimodal plumbing -------------------------------------------------
 
     def media_features(spark, sf):
-        # digest features: same mapInArrow batch plumbing as the (stubbed)
-        # pixel decode path, but every output element is re-derivable in
-        # DuckDB from sha256 hex — a full value-level oracle for the
-        # multimodal executor pipeline. Scalars only (canonicalizer-safe).
+        # digest features: mapInArrow batch plumbing over binary payloads
+        # where every output element is re-derivable in DuckDB from
+        # sha256 hex — a full value-level oracle for the media executor
+        # path. Scalars only (canonicalizer-safe).
         docs = _read(spark, sf, "documents").orderBy("doc_id").limit(100)
         media = multimodal.attach_media(docs)
         feats = multimodal.payload_digest_features(media, dim=16)
@@ -698,8 +698,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # video frame-sampling plan (pure JVM sequence+explode, no
         # decode) over the synthesized media table — the sampled
         # (media_id, frame_idx) set is fully SQL-derivable, giving the
-        # video tier's planning half a value-level driver signal (the
-        # decode half is pixel-exact pytested in test_video.py).
+        # frame-sampling plan a value-level driver signal.
         docs = _read(spark, sf, "documents").orderBy("doc_id").limit(200)
         media = multimodal.attach_media(docs)
         return (multimodal.frame_sample(media, every_n=4)

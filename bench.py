@@ -7,8 +7,7 @@ operator queries on the $SPARK_GRAFT_SF_DIR tables.
 
 Scaling evidence (north rule: ≥0.8 efficiency from N to 4N executors,
 sandboxed as local[N] vs local[4N]): set SPARK_GRAFT_SCALING=1 to run the
-same encode at both parallelism levels and report throughput + efficiency
-(tools/scaling_bench.py writes the BENCH/BASELINE.md section from this).
+same encode at both parallelism levels and report throughput + efficiency.
 """
 
 from __future__ import annotations

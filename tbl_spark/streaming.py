@@ -47,12 +47,13 @@ def stream_encode(spark: SparkSession, input_dir: str, store_root: str,
     # pays two driver-side sample jobs (ADVICE r4), and the same column
     # could get different codecs in different batches of one stream. A
     # restarted stream takes the plan its newest batch store pinned, so
-    # it keeps the first run's plan (and a replayed batch matches its pin)
+    # it keeps the first run's plan (and a replayed batch matches its pin);
+    # an empty micro-batch written before any audition pins {}, so skip it
     plan_of_stream: dict = {}
     for store in sorted(batch_stores(store_root), key=_batch_id,
                         reverse=True):
         meta = store.read_meta()
-        if meta is not None and "plan" in meta:
+        if meta is not None and meta.get("plan"):
             plan_of_stream["plan"] = plan_from_json(
                 meta["plan"], store.read_shared_tables())
             break

@@ -1,5 +1,5 @@
 """Training-data pipeline tests: dedup (planted dups), similarity (recall
-vs brute force), text stats determinism, multimodal plumbing."""
+vs brute force), text stats determinism, media column plumbing."""
 
 import numpy as np
 import pyspark.sql.functions as F
@@ -116,24 +116,32 @@ def test_fingerprint_stable_under_extra_whitespace(spark, docs):
 
 
 def test_multimodal_plumbing(spark, docs):
+    """payload_digest_features by value: feature[j] is byte j of the
+    sha256 hex payload / 255, and a NULL payload gives a zero vector."""
+    import hashlib
     media = multimodal.attach_media(docs.limit(60))
     assert dict(media.dtypes)["payload"] == "binary"
-    feats = multimodal.extract_features(media, dim=16, fake_decode=True)
+    media = media.withColumn(
+        "payload", F.when(F.col("media_id") % 7 == 0,
+                          F.lit(None).cast("binary"))
+        .otherwise(F.col("payload")))
+    dim = 16
+    feats = multimodal.payload_digest_features(media, dim=dim)
+    assert feats.dtypes == [("media_id", "bigint"), ("kind", "string"),
+                            ("feature", "array<double>")]
     rows = feats.collect()
     assert len(rows) == 60
-    assert all(len(r.feature) == 16 for r in rows)
-    # deterministic: same payload -> same features
-    again = {r.media_id: r.feature for r in
-             multimodal.extract_features(media, dim=16,
-                                         fake_decode=True).collect()}
-    assert all(again[r.media_id] == r.feature for r in rows)
-
-
-def test_multimodal_real_decode_is_stubbed():
-    if multimodal.HAVE_PIL:
-        pytest.skip("PIL present")
-    with pytest.raises(NotImplementedError, match="PIL"):
-        multimodal.decode_image(b"x", 4, 4, fake_decode=False)
+    n_null = 0
+    for r in rows:
+        assert r.kind == ("image", "audio", "video")[r.media_id % 3]
+        assert len(r.feature) == dim
+        if r.media_id % 7 == 0:
+            n_null += 1
+            assert r.feature == [0.0] * dim
+            continue
+        digest = hashlib.sha256(str(r.media_id).encode()).hexdigest()
+        assert r.feature == [digest.encode()[j] / 255 for j in range(dim)]
+    assert 0 < n_null < len(rows)
 
 
 def test_frame_sample(spark, docs):

@@ -239,3 +239,26 @@ def test_stream_dedup_timeout_expires_and_readmits(spark, tmp_path):
                         if r["text"] == "alpha"]) == 2
     finally:
         q.stop()
+
+
+def test_restart_skips_empty_pinned_plan(spark, tmp_path):
+    """A batch store written for an empty micro-batch pins `{}`; a
+    restarted stream must look past it for a real pin (or audition)
+    instead of encoding every later batch with no plan."""
+    import os
+    from tbl_spark.codecs.core import plan_to_json
+    from tbl_spark.encode import audition_codec_hints
+    from tbl_spark.store import ChunkStore, encode_to_store
+    inbox = str(tmp_path / "inbox")
+    root = str(tmp_path / "stream")
+    write_token_table(inbox, 800, n_parts=2)
+    empty = ChunkStore(os.path.join(root, "batch=5"))
+    encode_to_store(spark.createDataFrame([], SPARK_SCHEMA_DDL), empty, 4,
+                    codec_hints={})
+    assert empty.read_meta()["plan"] == {}
+    stream_encode(spark, inbox, root, num_parts=4,
+                  schema_ddl=SPARK_SCHEMA_DDL)
+    pinned = ChunkStore(os.path.join(root, "batch=0")).read_meta()["plan"]
+    assert pinned
+    assert pinned == plan_to_json(
+        audition_codec_hints(spark.read.parquet(inbox)))
