@@ -698,7 +698,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # video frame-sampling plan (pure JVM sequence+explode, no
         # decode) over the synthesized media table — the sampled
         # (media_id, frame_idx) set is fully SQL-derivable, giving the
-        # frame-sampling plan a value-level driver signal.
+        # video tier's planning half a value-level driver signal (the
+        # decode half is pixel-exact pytested in test_video.py).
         docs = _read(spark, sf, "documents").orderBy("doc_id").limit(200)
         media = multimodal.attach_media(docs)
         return (multimodal.frame_sample(media, every_n=4)

@@ -316,6 +316,32 @@ def build_parser() -> argparse.ArgumentParser:
     cs.add_argument("--strata-col", default="source")
     _add_pipe_output(cs)
 
+    md = sub.add_parser("media", help="multimodal pipeline: feature "
+                                      "extraction / video frame "
+                                      "sampling over a media table")
+    md.add_argument("paths", nargs="*")
+    md.add_argument("--store", default=None,
+                    help="read the media table from an encoded chunk "
+                         "store (zero-shuffle decode) instead of "
+                         "parquet paths")
+    md.add_argument("--op", default="features",
+                    choices=["features", "digest-features",
+                             "frame-sample"],
+                    help="features: per-item pooled pixel/waveform "
+                         "vectors; digest-features: the SQL-derivable "
+                         "byte-digest variant; frame-sample: decode "
+                         "every Nth video frame to a feature row")
+    md.add_argument("--dim", type=int, default=16,
+                    help="feature vector width")
+    md.add_argument("--every-n", type=int, default=5,
+                    help="frame-sample: keep every Nth frame")
+    md.add_argument("--real-decode", action="store_true",
+                    help="decode payloads for real (PPM/PNG/JPEG/GIF/"
+                         "BMP images, WAV/AIFF/AU audio, "
+                         "MJPEG-in-AVI/MP4/MKV, y4m and GIF video) "
+                         "instead of the deterministic fake decoders")
+    _add_pipe_output(md)
+
     dc = sub.add_parser("decontaminate",
                         help="drop training docs sharing any k-token "
                              "window with an eval set")
@@ -454,7 +480,7 @@ def _print_stdout(out, args) -> None:
 _SUBCOMMANDS = {"data", "merge", "python", "ls", "schema", "schemas",
                 "encode", "decode", "stats", "compact", "verify",
                 "dedup", "curate", "pack", "sample", "decontaminate",
-                "corpus-stats"}
+                "corpus-stats", "media"}
 
 
 def _emit_result(out, args, files: list[str]) -> int:
@@ -846,6 +872,21 @@ def main(argv: list[str] | None = None) -> int:
         out = stratified_sample(df, args.strata_col, rates,
                                 key_col=args.key_col,
                                 default_rate=args.default_rate)
+        return _emit_result(out, args, files)
+
+    if args.cmd == "media":
+        from .pipelines import multimodal as mm
+        df, files = _pipe_source(spark, args)
+        if df is None:
+            return 1
+        fake = not args.real_decode
+        if args.op == "features":
+            out = mm.extract_features(df, dim=args.dim, fake_decode=fake)
+        elif args.op == "digest-features":
+            out = mm.payload_digest_features(df, dim=args.dim)
+        else:
+            out = mm.frame_sample_decoded(df, every_n=args.every_n,
+                                          dim=args.dim, fake_decode=fake)
         return _emit_result(out, args, files)
 
     if args.cmd == "corpus-stats":

@@ -1,3 +1,3 @@
 """Training-data pipeline operators over the documents/embeddings tables:
 deduplication, similarity search, text analysis, packing, sampling, and
-media columns carried as opaque payloads (no decoding)."""
+multimodal plumbing (media payloads, pure-numpy image/audio/video decode)."""

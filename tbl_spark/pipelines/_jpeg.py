@@ -239,7 +239,8 @@ def _std_huff(tc: int, th: int) -> _Huff:
 
 _SOF_UNSUPPORTED = {
     0xC5: "differential sequential", 0xC6: "differential progressive",
-    0xC7: "differential lossless", 0xCB: "arithmetic lossless",
+    0xC7: "differential lossless", 0xC9: "arithmetic sequential",
+    0xCA: "arithmetic progressive", 0xCB: "arithmetic lossless",
     0xCD: "differential arithmetic sequential",
     0xCE: "differential arithmetic progressive",
     0xCF: "differential arithmetic lossless",
@@ -569,10 +570,8 @@ def decode_jpeg(payload: bytes,
     tables for any table slot 0/1 no DHT defined — the MJPEG-in-AVI
     convention (_video.py). 12-bit frames scale to 8-bit output;
     4-component frames follow the Adobe APP14 CMYK/YCCK convention.
-    Arithmetic entropy coding (SOF9/SOF10, T.81 Annex D/F/G with DAC
-    conditioning) decodes via _jpeg_arith.py; only the hierarchical
-    and arithmetic-lossless modes stay behind the explicit
-    NotImplementedError gate."""
+    Arithmetic entropy coding and the hierarchical modes stay behind
+    the explicit NotImplementedError gate."""
     if len(payload) < 4 or payload[:2] != b"\xff\xd8":
         return None
     qtables: dict[int, np.ndarray] = {}
@@ -585,9 +584,6 @@ def decode_jpeg(payload: bytes,
     n_scans = 0
     prec_bits = 8
     adobe_transform = None  # APP14 "Adobe" color-transform flag
-    arith = False           # SOF9/SOF10 arithmetic entropy coding
-    dac_dc: dict[int, tuple] = {}   # DAC conditioning: id -> (L, U)
-    dac_ac: dict[int, int] = {}     # DAC conditioning: id -> Kx
     pos = 2
     while True:
         if pos + 2 > len(payload):
@@ -629,13 +625,11 @@ def decode_jpeg(payload: bytes,
                     raise ValueError("corrupt JPEG: truncated DHT")
                 (huff_ac if tc else huff_dc)[th] = _Huff(counts, symbols)
                 off += 17 + nsym
-        elif marker in (0xC0, 0xC1, 0xC2, 0xC3,
-                        0xC9, 0xCA):  # seq / prog / lossless / arith
+        elif marker in (0xC0, 0xC1, 0xC2, 0xC3):  # seq/prog/lossless
             if frame is not None:
                 raise ValueError("corrupt JPEG: second SOF")
             prec, hh, ww, nc = struct.unpack(">BHHB", body[:6])
             lossless = marker == 0xC3
-            arith = marker in (0xC9, 0xCA)
             if lossless:
                 if not (2 <= prec <= 16):
                     raise ValueError(
@@ -700,7 +694,7 @@ def decode_jpeg(payload: bytes,
                              "mcu_idx": mcu_idx, "blk_idx": blk_idx})
                 coefs.append(np.zeros((bw_pad * bh_pad, 64),
                                       dtype=np.int32))
-            frame = (hh, ww, comps, marker in (0xC2, 0xCA),
+            frame = (hh, ww, comps, marker == 0xC2,
                      hmax, vmax, mcus_x, mcus_y)
             prec_bits = prec
         elif marker in _SOF_UNSUPPORTED:
@@ -709,23 +703,6 @@ def decode_jpeg(payload: bytes,
                 "not supported by the pure-numpy decoder; install PIL")
         elif marker == 0xDD:            # DRI
             (restart_interval,) = struct.unpack(">H", body[:2])
-        elif marker == 0xCC:            # DAC: arithmetic conditioning
-            off = 0
-            while off + 2 <= len(body):
-                tc, tb = body[off] >> 4, body[off] & 0x0F
-                cs = body[off + 1]
-                if tc == 0:
-                    low, up = cs & 0x0F, cs >> 4
-                    if up < low:
-                        raise ValueError(
-                            "corrupt JPEG: DAC conditioning U < L")
-                    dac_dc[tb] = (low, up)
-                else:
-                    if not (1 <= cs <= 63):
-                        raise ValueError(
-                            "corrupt JPEG: DAC Kx out of range")
-                    dac_ac[tb] = cs
-                off += 2
         elif marker == 0xEE and body[:5] == b"Adobe" and len(body) >= 12:
             adobe_transform = body[11]  # 0=CMYK/RGB, 1=YCbCr, 2=YCCK
         elif marker == 0xDA:            # SOS: decode this scan
@@ -798,48 +775,29 @@ def decode_jpeg(payload: bytes,
             need_ac = mode in ("seq", "ac_first", "ac_refine")
             scan_comps = []
             for ci, (td, ta) in zip(scan_cis, scan_tabs):
-                if not arith:
-                    if default_huffman:
-                        if need_dc and td not in huff_dc \
-                                and td in (0, 1):
-                            huff_dc[td] = _std_huff(0, td)
-                        if need_ac and ta not in huff_ac \
-                                and ta in (0, 1):
-                            huff_ac[ta] = _std_huff(1, ta)
-                    if (need_dc and td not in huff_dc) \
-                            or (need_ac and ta not in huff_ac):
-                        raise ValueError("corrupt JPEG: missing "
-                                         "Huffman table")
+                if default_huffman:
+                    if need_dc and td not in huff_dc and td in (0, 1):
+                        huff_dc[td] = _std_huff(0, td)
+                    if need_ac and ta not in huff_ac and ta in (0, 1):
+                        huff_ac[ta] = _std_huff(1, ta)
+                if (need_dc and td not in huff_dc) \
+                        or (need_ac and ta not in huff_ac):
+                    raise ValueError("corrupt JPEG: missing "
+                                     "Huffman table")
                 g = geom[ci]
                 didx = g["mcu_idx"] if ns > 1 else g["blk_idx"]
-                if arith:
-                    scan_comps.append((coefs[ci], didx, td, ta))
-                else:
-                    scan_comps.append((coefs[ci], didx,
-                                       huff_dc.get(td),
-                                       huff_ac.get(ta)))
+                scan_comps.append((coefs[ci], didx,
+                                   huff_dc.get(td), huff_ac.get(ta)))
             if ns > 1:
                 n_units = mcus_x * mcus_y
             else:
                 g = geom[scan_cis[0]]
                 n_units = g["bw_t"] * g["bh_t"]
             segs, end = _split_scan(payload, pos + 2 + seglen)
-            if arith:
-                from ._jpeg_arith import decode_scan_arith
-                # T.81 F.1.4.4.1.4 / F.1.4.4.2 conditioning defaults
-                dc_cond = {td: dac_dc.get(td, (0, 1))
-                           for _, _, td, _ in scan_comps}
-                ac_cond = {ta: dac_ac.get(ta, 5)
-                           for _, _, _, ta in scan_comps}
-                decode_scan_arith(segs, scan_comps, n_units,
-                                  restart_interval or n_units,
-                                  Ss, Se, Ah, Al, mode,
-                                  dc_cond, ac_cond)
-            else:
-                _decode_scan(segs, scan_comps, n_units,
-                             restart_interval or n_units,
-                             Ss, Se, Ah, Al, mode,
-                             dc_max=11 if prec_bits == 8 else 15)
+            _decode_scan(segs, scan_comps, n_units,
+                         restart_interval or n_units,
+                         Ss, Se, Ah, Al, mode,
+                         dc_max=11 if prec_bits == 8 else 15)
             n_scans += 1
             pos = end
             continue

@@ -144,6 +144,13 @@ def test_multimodal_plumbing(spark, docs):
     assert 0 < n_null < len(rows)
 
 
+def test_multimodal_real_decode_is_stubbed():
+    if multimodal.HAVE_PIL:
+        pytest.skip("PIL present")
+    with pytest.raises(NotImplementedError, match="PIL"):
+        multimodal.decode_image(b"x", 4, 4, fake_decode=False)
+
+
 def test_frame_sample(spark, docs):
     media = multimodal.attach_media(docs.limit(90))
     frames = multimodal.frame_sample(media, every_n=5)

@@ -286,6 +286,59 @@ def test_fine_prune_contiguous_ids_use_between(spark, tmp_path):
     assert got.count() == df.filter(F.col("n_tok") >= 1).count()
 
 
+# -- real (non-fake) image decode via pure-numpy PPM (VERDICT r3 #7) ---------
+
+def _make_ppm(w: int, h: int, seed: int) -> bytes:
+    import numpy as np
+    rng = np.random.default_rng(seed)
+    px = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
+    header = f"P6\n# synthetic\n{w} {h}\n255\n".encode()
+    return header + px.tobytes(), px
+
+
+def test_decode_ppm_pure_numpy():
+    import numpy as np
+    from tbl_spark.pipelines.multimodal import decode_image
+    payload, px = _make_ppm(20, 12, seed=7)
+    got = decode_image(payload, 20, 12, fake_decode=False)
+    assert (got == px).all()
+    # metadata dims differ → nearest-neighbor resize, still pure numpy
+    small = decode_image(payload, 10, 6, fake_decode=False)
+    assert small.shape == (6, 10, 3)
+    assert (small == px[::2, ::2]).all()
+    # non-PPM payload without PIL → explicit stub error (gate unchanged)
+    from tbl_spark.pipelines import multimodal
+    if not multimodal.HAVE_PIL:
+        with pytest.raises(NotImplementedError):
+            decode_image(b"\x89PNG...", 4, 4, fake_decode=False)
+
+
+def test_extract_features_real_path_end_to_end(spark):
+    import numpy as np
+    from tbl_spark.pipelines.multimodal import extract_features
+    rows, ref = [], {}
+    for i in range(40):
+        w, h = 8 + i % 5, 6 + i % 4
+        payload, px = _make_ppm(w, h, seed=100 + i)
+        rows.append((i, "image", w, h, 1, bytearray(payload)))
+        ref[i] = px
+    df = spark.createDataFrame(
+        rows, "media_id bigint, kind string, width int, height int, "
+              "n_frames int, payload binary")
+    feats = {r["media_id"]: np.asarray(r["feature"], dtype=np.float32)
+             for r in extract_features(df, dim=16,
+                                       fake_decode=False).collect()}
+    assert len(feats) == 40
+    for i, px in ref.items():
+        pooled = px.reshape(-1, 3).mean(axis=0)
+        mixed = np.concatenate([
+            pooled, px.std(axis=(0, 1)),
+            px.reshape(-1)[:10].astype(np.float32) / 255.0])[:16]
+        expected = np.pad(mixed, (0, max(0, 16 - len(mixed)))
+                          ).astype(np.float32)
+        assert np.allclose(feats[i], expected, atol=1e-5), i
+
+
 # -- with_columns @IDX on an existing column raises (ADVICE r3 low) ----------
 
 def test_with_columns_at_idx_existing_raises(spark):
@@ -464,6 +517,13 @@ def test_tail_cap_is_schema_aware(spark):
     assert "LocalTableScan" not in out._jdf.queryExecution().executedPlan() \
         .toString()
     assert out.count() == 10
+
+
+def test_decode_ppm_returns_writable_array():
+    from tbl_spark.pipelines.multimodal import decode_image
+    payload, _px = _make_ppm(6, 4, seed=1)
+    got = decode_image(payload, 6, 4, fake_decode=False)
+    got[0, 0, 0] = 99   # must not raise read-only
 
 
 # -- driver-side codec audition hints (fleet-wide audition once) -------------

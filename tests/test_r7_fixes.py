@@ -3,6 +3,8 @@
 1. _session_dead only classifies the expected stopped-session signals as
    dead; a transient error keeps the frame in the ring (so the eviction
    path can still unpersist it) while py4j / shut-down errors still drop.
+2. PNG palette index past the end of a truncated PLTE raises the
+   documented corrupt-input ValueError, not a numpy IndexError.
 3. curate --gopher refuses inputs that already carry both a gate-signal
    column and its _orig_<name> stash slot (duplicate-column trap).
 4. a chunk the planned template codec declines on (probe passes, full
@@ -12,9 +14,14 @@
    length-mismatched part streams instead of IndexError / misrender.
 """
 
+import struct
+import zlib
+
 import numpy as np
 import pyarrow as pa
 import pytest
+
+from test_r6_fixes import _chunk, _encode_png
 
 
 # -- 1. _session_dead classification ------------------------------------------
@@ -76,6 +83,22 @@ def test_session_dead_expected_signals_still_drop():
     assert _session_dead(_NoJsc()) is True
     assert _session_dead(_Stopped()) is True
     assert _session_dead(_ShutDownErr()) is True
+
+
+# -- 2. PNG palette bounds -----------------------------------------------------
+
+def test_png_truncated_palette_raises_valueerror():
+    from tbl_spark.pipelines.multimodal import _decode_png
+    rng = np.random.default_rng(21)
+    idx = rng.integers(200, 256, (5, 7), dtype=np.uint8)  # high indices
+    pal4 = rng.integers(0, 256, (4, 3), dtype=np.uint8)   # 4-entry PLTE
+    bad = _encode_png(idx, [0, 2], ctype=3, palette=pal4)
+    with pytest.raises(ValueError, match="palette index out of range"):
+        _decode_png(bad)
+    # in-range indices against the same small palette still decode
+    ok_idx = rng.integers(0, 4, (5, 7), dtype=np.uint8)
+    good = _decode_png(_encode_png(ok_idx, [0, 1], ctype=3, palette=pal4))
+    assert np.array_equal(good, pal4[ok_idx])
 
 
 # -- 3. curate --gopher stash-name collision -----------------------------------
@@ -149,6 +172,284 @@ def test_template_decode_corrupt_blob_valueerror():
         core._encode_int_auto(np.array([], dtype=np.int64)))
     with pytest.raises(ValueError, match="corrupt STR_TEMPLATE"):
         core._template_decode(empty, 0)
+
+
+# -- 6. wavefront PNG unfilter (VERDICT r6 #2) ---------------------------------
+
+def _unfilter_per_byte(filters, data, h, stride, bpp):
+    """The r6 per-byte Average/Paeth loop, kept here as the timing and
+    pixel-exactness reference for the wavefront that replaced it."""
+    out = np.empty((h, stride), dtype=np.uint8)
+    zeros = np.zeros(stride, dtype=np.uint16)
+    for y in range(h):
+        f = int(filters[y])
+        line = data[y].astype(np.uint16)
+        prev = out[y - 1].astype(np.uint16) if y else zeros
+        if f == 0:
+            out[y] = line
+        elif f == 1:
+            out[y] = np.cumsum(line.reshape(-1, bpp), axis=0,
+                               dtype=np.uint64).astype(np.uint8).reshape(-1)
+        elif f == 2:
+            out[y] = (line + prev).astype(np.uint8)
+        elif f == 3:
+            cur = np.zeros(stride, dtype=np.uint16)
+            for i in range(stride):
+                a = cur[i - bpp] if i >= bpp else 0
+                cur[i] = (line[i] + ((a + prev[i]) >> 1)) & 0xFF
+            out[y] = cur.astype(np.uint8)
+        else:
+            cur = np.zeros(stride, dtype=np.int32)
+            pl = prev.astype(np.int32)
+            for i in range(stride):
+                a = int(cur[i - bpp]) if i >= bpp else 0
+                b = int(pl[i])
+                c = int(pl[i - bpp]) if i >= bpp else 0
+                p = a + b - c
+                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+                pred = a if pa <= pb and pa <= pc else (b if pb <= pc
+                                                       else c)
+                cur[i] = (int(line[i]) + pred) & 0xFF
+            out[y] = cur.astype(np.uint8)
+    return out
+
+
+def test_png_wavefront_pixel_exact_all_filter_mixes():
+    from tbl_spark.pipelines.multimodal import _png_unfilter
+    rng = np.random.default_rng(17)
+    for (h, w, ch) in ((13, 9, 3), (64, 48, 1), (37, 101, 4),
+                       (5, 1, 2), (1, 7, 3)):
+        stride, bpp = w * ch, ch
+        data = rng.integers(0, 256, (h, stride), dtype=np.uint8)
+        mixes = [rng.integers(0, 5, h).astype(np.uint8) for _ in range(4)]
+        mixes += [np.full(h, fv, np.uint8) for fv in range(5)]
+        for filters in mixes:
+            raw = b"".join(bytes([filters[y]]) + data[y].tobytes()
+                           for y in range(h))
+            want = _unfilter_per_byte(filters, data, h, stride, bpp)
+            got = _png_unfilter(raw, h, stride, bpp)
+            assert np.array_equal(got, want), (h, w, ch, filters[:8])
+
+
+def test_png_wavefront_paeth_heavy_10x_faster():
+    """VERDICT r6 #2 bar: a Paeth-heavy 1024x1024 decode >=10x faster
+    than the per-byte loop it replaced, still pixel-exact."""
+    import time
+    from tbl_spark.pipelines.multimodal import _png_unfilter
+    rng = np.random.default_rng(23)
+    h = w = 1024
+    ch = 3
+    stride, bpp = w * ch, ch
+    data = rng.integers(0, 256, (h, stride), dtype=np.uint8)
+    filters = np.full(h, 4, dtype=np.uint8)
+    raw = b"".join(bytes([4]) + data[y].tobytes() for y in range(h))
+    t0 = time.perf_counter()
+    want = _unfilter_per_byte(filters, data, h, stride, bpp)
+    t_loop = time.perf_counter() - t0
+    t_wave = min(_timed(lambda: _png_unfilter(raw, h, stride, bpp))
+                 for _ in range(3))
+    got = _png_unfilter(raw, h, stride, bpp)
+    assert np.array_equal(got, want)
+    assert t_loop / t_wave >= 10.0, \
+        f"wavefront only {t_loop / t_wave:.1f}x faster " \
+        f"({t_loop:.2f}s vs {t_wave:.3f}s)"
+
+
+def _timed(fn):
+    import time
+    t0 = time.perf_counter()
+    fn()
+    return time.perf_counter() - t0
+
+
+def test_png_bad_filter_type_still_names_line():
+    from tbl_spark.pipelines.multimodal import _png_unfilter
+    data = np.zeros((3, 6), dtype=np.uint8)
+    raw = b"".join(bytes([f]) + data[y].tobytes()
+                   for y, f in enumerate((0, 7, 0)))
+    with pytest.raises(ValueError, match="filter type 7 on line 1"):
+        _png_unfilter(raw, 3, 6, 3)
+
+
+# -- 7. RIFF/PCM WAV decode (VERDICT r6 #3) ------------------------------------
+
+def _make_wav(samples, rate, bits, audio_fmt=1, extensible=False):
+    """Minimal test-only WAV writer: RIFF/WAVE with fmt + data chunks
+    (and a junk LIST chunk to exercise the chunk walk)."""
+    samples = np.asarray(samples)
+    n_ch = samples.shape[1]
+    if audio_fmt == 1 and bits == 24:
+        x = samples.astype(np.int32).reshape(-1)
+        raw = np.empty((len(x), 3), dtype=np.uint8)
+        raw[:, 0] = x & 0xFF
+        raw[:, 1] = (x >> 8) & 0xFF
+        raw[:, 2] = (x >> 16) & 0xFF
+        data = raw.tobytes()
+        block = 3 * n_ch
+    else:
+        data = samples.tobytes()
+        block = samples.dtype.itemsize * n_ch
+    if extensible:
+        fmt = struct.pack("<HHIIHHHHI", 0xFFFE, n_ch, rate, rate * block,
+                          block, bits, 22, bits, 0)
+        fmt += struct.pack("<H", audio_fmt) + b"\x00" * 14
+    else:
+        fmt = struct.pack("<HHIIHH", audio_fmt, n_ch, rate, rate * block,
+                          block, bits)
+    chunks = (b"fmt " + struct.pack("<I", len(fmt)) + fmt
+              + b"LIST" + struct.pack("<I", 5) + b"INFOx" + b"\x00"
+              + b"data" + struct.pack("<I", len(data)) + data)
+    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+
+
+def test_wav_decode_sample_exact_all_widths():
+    from tbl_spark.pipelines.multimodal import _decode_wav
+    rng = np.random.default_rng(31)
+    cases = [
+        (rng.integers(0, 256, (300, 1)).astype(np.uint8), 8000, 8, 1),
+        (rng.integers(-2**15, 2**15, (257, 2)).astype("<i2"), 44100, 16, 1),
+        (rng.integers(-2**23, 2**23, (64, 2)).astype(np.int32), 48000, 24, 1),
+        (rng.integers(-2**31, 2**31, (100, 1)).astype("<i4"), 96000, 32, 1),
+        (rng.standard_normal((128, 2)).astype("<f4"), 22050, 32, 3),
+        (rng.standard_normal((50, 1)).astype("<f8"), 16000, 64, 3),
+    ]
+    for want, rate, bits, afmt in cases:
+        got, got_rate = _decode_wav(_make_wav(want, rate, bits, afmt))
+        assert got_rate == rate
+        assert got.shape == want.shape, (bits, afmt)
+        assert np.array_equal(got, want), (bits, afmt)
+    # WAVE_FORMAT_EXTENSIBLE wrapping PCM-16
+    want = cases[1][0]
+    got, _ = _decode_wav(_make_wav(want, 44100, 16, 1, extensible=True))
+    assert np.array_equal(got, want)
+
+
+def test_wav_decode_error_contract():
+    from tbl_spark.pipelines.multimodal import _decode_wav, decode_audio
+    # not RIFF at all -> None (falls through to other decoders)
+    assert _decode_wav(b"OggS\x00\x00junk") is None
+    assert _decode_wav(b"") is None
+    # truncated data chunk -> ValueError
+    good = _make_wav(np.zeros((10, 1), dtype="<i2"), 8000, 16)
+    with pytest.raises(ValueError, match="truncated"):
+        _decode_wav(good[:-5])
+    # missing data chunk
+    with pytest.raises(ValueError, match="missing fmt or data"):
+        _decode_wav(b"RIFF" + struct.pack("<I", 4) + b"WAVE")
+    # compressed codec tag -> explicit stub
+    with pytest.raises(NotImplementedError, match="codec tag"):
+        _decode_wav(_make_wav(np.zeros((4, 1), dtype="<i2"), 8000, 16,
+                              audio_fmt=85))   # MP3 in WAV
+    # non-WAV audio without fake -> explicit stub naming the gate
+    with pytest.raises(NotImplementedError, match="audio library"):
+        decode_audio(b"\xff\xfbmp3-frame-sync")
+    # fake path stays deterministic
+    a, ra = decode_audio(b"xyz", fake_decode=True)
+    b, rb = decode_audio(b"xyz", fake_decode=True)
+    assert np.array_equal(a, b) and ra == rb
+
+
+def test_wav_real_path_in_map_in_arrow(spark):
+    """Real WAV payloads decode end-to-end inside the executor batch
+    path (fake_decode=False), mixed with real PNG image rows."""
+    from tbl_spark.pipelines.multimodal import (
+        _audio_feature,
+        extract_features,
+    )
+    rng = np.random.default_rng(41)
+    rows, ref = [], {}
+    for mid in range(6):
+        wave = rng.integers(-2**15, 2**15,
+                            (200 + mid, 1 + mid % 2)).astype("<i2")
+        rows.append((mid, "audio", 0, 0, 1,
+                     bytearray(_make_wav(wave, 16000, 16))))
+        ref[mid] = _audio_feature(wave, 16000, 16)
+    px = rng.integers(0, 256, (9, 7, 3), dtype=np.uint8)
+    rows.append((99, "image", 7, 9, 1, bytearray(_encode_png(px, [4]))))
+    df = spark.createDataFrame(
+        rows, "media_id bigint, kind string, width int, height int, "
+              "n_frames int, payload binary")
+    feats = {r["media_id"]: np.asarray(r["feature"], dtype=np.float32)
+             for r in extract_features(df, dim=16,
+                                       fake_decode=False).collect()}
+    assert len(feats) == 7
+    for mid, want in ref.items():
+        np.testing.assert_allclose(feats[mid], want, rtol=1e-6)
+    np.testing.assert_allclose(
+        feats[99][:3], px.reshape(-1, 3).mean(axis=0), rtol=1e-5)
+
+
+# -- 8. batched post-decode feature math (VERDICT r6 #5) -----------------------
+
+def test_batched_image_features_values_unchanged(spark):
+    """The stacked same-shape group math must reproduce the r6 per-image
+    reference exactly (same accumulation dtype and op order)."""
+    from tbl_spark.pipelines.multimodal import extract_features
+    rng = np.random.default_rng(43)
+    rows, ref = [], {}
+    dim = 16
+    for mid in range(24):
+        h, w = 6 + mid % 3, 5 + mid % 2   # several same-shape groups
+        px = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
+        rows.append((mid, "image", w, h, 1,
+                     bytearray(_encode_png(px, [mid % 5]))))
+        pooled = px.reshape(-1, 3).mean(axis=0)
+        mixed = np.concatenate([
+            pooled, px.std(axis=(0, 1)),
+            px.reshape(-1)[:dim - 6].astype(np.float32) / 255.0])[:dim]
+        ref[mid] = np.pad(mixed, (0, max(0, dim - len(mixed)))
+                          ).astype(np.float32)
+    df = spark.createDataFrame(
+        rows, "media_id bigint, kind string, width int, height int, "
+              "n_frames int, payload binary")
+    feats = {r["media_id"]: np.asarray(r["feature"], dtype=np.float32)
+             for r in extract_features(df, dim=dim,
+                                       fake_decode=False).collect()}
+    for mid, want in ref.items():
+        assert np.array_equal(feats[mid], want), mid
+
+
+# -- media subcommand (r7) ----------------------------------------------------
+
+def test_cli_media_features_fake(spark, sf_dir, tmp_path, capsys):
+    from tbl_spark.cli import main
+    from tbl_spark.pipelines.multimodal import attach_media
+    src = str(tmp_path / "media_src")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(30)
+    attach_media(docs).write.parquet(src)
+    rc = main(["media", src, "--dim", "4", "--csv", "-n", "5"])
+    assert rc == 0
+    lines = capsys.readouterr().out.strip().splitlines()
+    assert lines[0].split(",")[:2] == ["media_id", "kind"]
+    assert len(lines) == 6
+    out = str(tmp_path / "media_out")
+    rc = main(["media", src, "--op", "digest-features", "--dim", "4",
+               "--output", out, "--yes"])
+    assert rc == 0
+    res = spark.read.parquet(out)
+    assert res.count() == 30 and "feature" in res.columns
+
+
+def test_cli_media_frame_sample_real(spark, tmp_path, capsys):
+    import sys as _sys, os as _os
+    _sys.path.insert(0, _os.path.dirname(__file__))
+    from test_video import mux_avi, _gray_jpeg_frames
+    import numpy as np
+    from tbl_spark.cli import main
+    rng = np.random.default_rng(13)
+    frames, _refs = _gray_jpeg_frames(rng, 8, 8, 6)
+    avi = mux_avi(frames, 8, 8)
+    src = str(tmp_path / "vid_src")
+    spark.createDataFrame(
+        [(1, "video", 8, 8, 6, bytearray(avi))],
+        "media_id long, kind string, width int, height int, "
+        "n_frames int, payload binary").write.parquet(src)
+    rc = main(["media", src, "--op", "frame-sample", "--every-n", "2",
+               "--real-decode", "--dim", "4", "--csv", "-n", "all"])
+    assert rc == 0
+    lines = capsys.readouterr().out.strip().splitlines()
+    assert lines[0].split(",")[:2] == ["media_id", "frame_idx"]
+    assert len(lines) == 4          # frames 0, 2, 4
 
 
 # --------------------------------------------------------------------------
