@@ -416,20 +416,11 @@ def _rans_shared_payload(work: np.ndarray, fp: int) -> bytes | None:
         exc_blob = frame(_encode_int_auto(exc_pos), _encode_int_auto(exc_val))
     else:
         exc_blob = frame(b"", b"")
-    # fewer lanes than the per-chunk path: with no per-chunk table the
-    # 8 B/lane state block is the dominant fixed cost (8 KB = 0.02 B/token
-    # at 400k values). The r7 gather-hoisted encode loop halved the
-    # per-step cost, which moved the size/speed knee one stop down:
-    # 128 lanes at a 400k-value chunk now encodes in 48 ms (vs 57 ms the
-    # old loop needed at 256) and saves another 1 KB/chunk of states
-    # (measured sweep: L=64 1.11143 B/tok @72 ms, L=128 1.11230 @48 ms,
-    # L=256 1.11427 @26 ms). The lane count scales so states stay ~0.25%
-    # of the values; big chunks keep 1024 — the state block is already
-    # ~0.002 B/token there and the loop time dominates.
-    cap = 1024 if n >= (1 << 21) else 128
-    # floor 8 (r7, matching rans.encode): small shared-table side
-    # streams keep states at ~1% instead of eating a 512 B block
-    n_lanes = min(cap, 1 << max(3, (n // 1568).bit_length() - 1))
+    # 256 lanes (1024 from 2M values): past ~256 lanes a decode step's
+    # per-lane work outweighs its ~20 µs fixed interpreter cost, and each
+    # lane's final state costs ~5 B. rans.encode's one-lane-per-384-values
+    # floor sizes small side streams.
+    n_lanes = 1024 if n >= (1 << 21) else 256
     res = rans.encode(codes, len(freqs), n_lanes=n_lanes, freqs=freqs)
     if res is None:
         return None

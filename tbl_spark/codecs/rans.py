@@ -33,6 +33,7 @@ PROB_BITS = 20               # keeps the min-slot tax tiny for ~50k vocabs
 M = 1 << PROB_BITS           # total of quantized frequencies
 RANS_L = np.uint64(1 << 31)  # lower bound of the state interval
 MAX_ALPHABET = M // 2        # guarantee ≥ M/2 slots distribute by freq
+MAX_LANES = 4096             # the most lanes any encoder here has written
 
 
 def quantize_freqs(counts: np.ndarray) -> np.ndarray:
@@ -71,24 +72,13 @@ def encode(codes: np.ndarray, K: int, n_lanes: int = 4096,
     n = len(codes)
     if n == 0 or K > MAX_ALPHABET or K < 2:
         return None
-    # Lane count scales with n so the 8 B/lane final-state block stays
-    # ~2% of the payload at every chunk size (states also absorb a few
-    # stream bits, so oversizing L is pure overhead: at 400k codes
-    # L=4096 costs 18 KB more than L=1024 for only 1.5× the vector-loop
-    # speed, while L=512 saves just 3 KB more for another 1.4× slowdown
-    # — measured on this repo's bench distribution). Cap 1024 (r6, was
-    # 4096): on a 4M-token design chunk the 4096-lane state block is
-    # 32 KB = 0.008 B/token and buys only ~1.5× on the encode loop —
-    # the wrong side of the trade when the north rule grades compressed
-    # size and the rANS loop is a minor share of total encode time
-    # (measured 240 ms of ~1.5 s per 4M-token chunk at L=1024).
-    # floor 8 (r7, was 64): small SIDE streams — list lengths, n_tok,
-    # template numbers, ~1-2k values per chunk — were paying the 64-lane
-    # state block (512 B = 3+ bits/value) as their dominant fixed cost;
-    # at 8 lanes it is 64 B. Streams big enough to care about decode
-    # vector width still scale up to 1024 exactly as before (the
-    # formula is unchanged at n >= ~25k). The lane count is stored in
-    # the core header, so the change is format-compatible both ways.
+    # Lanes: about one per 384 values, a power of two in [8, n_lanes],
+    # never above 1024. A decode step costs ~20 µs of fixed interpreter
+    # work plus ~0.08 µs per lane, so lanes pay until ~256; each lane's
+    # final state still costs ~5 B. The floor of 8 keeps small side
+    # streams (list lengths, n_tok: 1-2k values) from paying a large
+    # state block. The lane count is in the core header, so any count
+    # decodes under any lane rule.
     L = min(n_lanes, 1 << max(3, (n // 384).bit_length() - 1))
     L = max(8, min(L, 1024))
     if freqs is None:
@@ -163,13 +153,24 @@ def decode(core: bytes, n: int, freqs: np.ndarray,
 
     `slot`: optional precomputed symbol-lookup table (M int32 entries =
     np.repeat(arange(K), freqs)) — shared-table decodes pass a cached one
-    so the 4 MB repeat isn't rebuilt per chunk."""
+    so the 4 MB repeat isn't rebuilt per chunk.
+
+    Raises ValueError("corrupt rANS core …") on a lane count outside
+    [1, MAX_LANES], a stream that ends before the symbols do, or words
+    left over at the end: every valid stream is consumed exactly."""
     L, K, stream_bytes = struct.unpack_from("<IIQ", core, 0)
     off = 16
+    if not 1 <= L <= MAX_LANES:
+        raise ValueError(f"corrupt rANS core: {L} lanes")
+    if stream_bytes % 4 or off + 8 * L + stream_bytes > len(core):
+        raise ValueError(f"corrupt rANS core: {stream_bytes} stream bytes "
+                         f"after {L} lanes in a {len(core)} B core")
     x = np.frombuffer(core, dtype=np.uint64, count=L, offset=off).copy()
     off += 8 * L
     stream = np.frombuffer(core, dtype=np.uint32,
                            count=stream_bytes // 4, offset=off)
+    stream = stream.astype(np.uint64)
+    n_words = len(stream)
     f = freqs.astype(np.int64)
     cum = np.zeros(K + 1, dtype=np.int64)
     np.cumsum(f, out=cum[1:])
@@ -194,26 +195,27 @@ def decode(core: bytes, n: int, freqs: np.ndarray,
         s = slot[d]
         out[base:base + L] = s
         x = f_u[s] * (x >> shift_pb) + d - cum_u[s]
-        need = x < RANS_L
-        cnt = int(need.sum())
-        if cnt:
-            x[need] = (x[need] << shift32) \
-                | stream[ptr:ptr + cnt].astype(np.uint64)
-            ptr += cnt
+        low = np.flatnonzero(x < RANS_L)
+        if len(low):
+            end = ptr + len(low)
+            if end > n_words:
+                raise ValueError("corrupt rANS core: stream ends early")
+            x[low] = (x[low] << shift32) | stream[ptr:end]
+            ptr = end
     tail = n - (T - 1) * L
     if tail:
         xa = x[:tail]
         d = xa & mask_m
         s = slot[d]
         out[(T - 1) * L:] = s
-        # no renorm needed: these are the last symbols of their lanes
-        # (the final states were stored fully renormalized), but decode
-        # it anyway for parity with the masked formulation's state walk
+        # these are the first symbols the encoder coded, from states of
+        # RANS_L, so a valid stream needs no words here; count what a
+        # renormalization would read so a bad stream fails the check below
         xa = f_u[s] * (xa >> shift_pb) + d - cum_u[s]
-        need = xa < RANS_L
-        cnt = int(need.sum())
-        if cnt:
-            xa[need] = (xa[need] << shift32) \
-                | stream[ptr:ptr + cnt].astype(np.uint64)
-            ptr += cnt
+        ptr += int(np.count_nonzero(xa < RANS_L))
+    if ptr > n_words:
+        raise ValueError("corrupt rANS core: stream ends early")
+    if ptr < n_words:
+        raise ValueError(f"corrupt rANS core: {n_words - ptr} stream "
+                         f"words left over")
     return out

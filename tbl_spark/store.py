@@ -27,6 +27,7 @@ SURVEY.md §7.3 calls for.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import logging
 import os
@@ -51,6 +52,27 @@ _SPARK_TYPE = {"int64": "bigint", "string": "string", "double": "double",
 
 def _ddl(schema: pa.Schema) -> str:
     return ", ".join(f"{f.name} {_SPARK_TYPE[str(f.type)]}" for f in schema)
+
+
+@contextlib.contextmanager
+def _exclusive(lock_path: str):
+    """Hold an exclusive flock on `lock_path` for the block. When the
+    lock file cannot be opened (read-only directory, permissions) or the
+    filesystem has no flock support, the block runs unlocked. The lock
+    file is left in place on purpose: deleting it would let a new writer
+    lock a fresh inode while another still holds the old."""
+    lock = None
+    try:
+        try:
+            import fcntl
+            lock = open(lock_path, "w")
+            fcntl.flock(lock, fcntl.LOCK_EX)
+        except (ImportError, OSError):
+            pass  # best-effort: run unlocked
+        yield
+    finally:
+        if lock is not None:
+            lock.close()  # releases the flock
 
 
 MANIFEST_SCHEMA = pa.schema([
@@ -80,6 +102,15 @@ STATS_SCHEMA = pa.schema([
 ])
 
 STATS_DDL = _ddl(STATS_SCHEMA)
+
+# Parquet writer settings. Decode pushes down only part_id (one part is one
+# row group of a wave file), so that is the only column with statistics;
+# unique blobs gain nothing from dictionary pages; every reader passes its
+# own schema, so no Arrow schema goes in the footer.
+CHUNK_PARQUET = {"compression": "none", "write_statistics": ["part_id"],
+                 "use_dictionary": False, "store_schema": False}
+STATS_PARQUET = {"compression": "zstd", "write_statistics": False,
+                 "use_dictionary": False, "store_schema": False}
 
 
 def _widen_num(v, up: bool) -> float | None:
@@ -195,28 +226,17 @@ class ChunkStore:
     def write_shared_tables(self, blobs) -> None:
         """Merge table blobs into the sidecar (atomic tmp+rename).
 
-        The read-merge-rename is serialized by an exclusive lock file
-        (ADVICE r7): without it, two concurrent encode runs against the
-        same store could each read the old sidecar and the LAST rename
-        would drop the other run's tables — leaving that run's
-        persisted chunks undecodable. Each writer re-reads under the
-        lock, so every merge lands. When the lock file cannot be opened
-        (read-only directory, permissions) or the filesystem has no
-        flock support, the lock degrades to best-effort: the merge runs
-        unlocked, and the rename stays atomic either way. The ``.lock``
-        file is left in place on purpose: deleting it would let a new
-        writer lock a fresh inode while another still holds the old."""
+        The read-merge-rename runs under an exclusive lock on
+        ``shared_tables.json.lock`` (ADVICE r7): without it, two
+        concurrent encode runs against the same store could each read
+        the old sidecar and the LAST rename would drop the other run's
+        tables — leaving that run's persisted chunks undecodable. Each
+        writer re-reads under the lock, so every merge lands; without
+        flock the merge is best-effort and the rename stays atomic."""
         import base64
 
         from .codecs.core import shared_table_fp
-        lock = None
-        try:
-            try:
-                import fcntl
-                lock = open(self.shared_tables_path + ".lock", "w")
-                fcntl.flock(lock, fcntl.LOCK_EX)
-            except (ImportError, OSError):
-                pass  # no lock: keep the pre-lock best-effort merge
+        with _exclusive(self.shared_tables_path + ".lock"):
             cur = self._read_shared_tables_raw()
             for b in blobs:
                 b = bytes(b)
@@ -228,9 +248,6 @@ class ChunkStore:
             with open(tmp, "w") as f:
                 json.dump(cur, f)
             os.replace(tmp, self.shared_tables_path)
-        finally:
-            if lock is not None:
-                lock.close()  # releases the flock
 
     def _read_shared_tables_raw(self) -> dict:
         if not os.path.exists(self.shared_tables_path):
@@ -257,63 +274,70 @@ class ChunkStore:
         pinned plan; on a new store, or a store pinned before plans were,
         `audition()` runs once and its result is pinned. An explicit plan
         must equal the pin. Shared tables are written to their sidecar
-        before the pin that names them."""
-        existing = self.read_meta()
-        if existing is None:
-            if self.committed_parts():
-                # a store with committed chunks but no store.json (legacy
-                # or torn) must NOT silently adopt this run's parameters —
-                # that is exactly the row-misassignment the pin prevents
-                # (ADVICE r2). Write store.json by hand after verifying
-                # the original parameters to migrate.
-                raise ValueError(
-                    f"store {self.root} has committed chunks but no "
-                    f"store.json — cannot verify this run uses the same "
-                    f"partitioning parameters. Recreate the store or "
-                    f"restore its store.json before resuming.")
-        else:
-            if "mode" not in existing:  # pre-r2 store.json → salted encode
-                existing = {"mode": "salted", **existing}
-            if existing.get("mode") != meta.get("mode"):
-                raise ValueError(
-                    f"store {self.root} was created by a "
-                    f"{existing.get('mode')!r}-mode encode; this run uses "
-                    f"{meta.get('mode')!r} — the two assign chunks "
-                    f"differently. Use a new store.")
-            for key in sorted((set(meta) | set(existing)) - {"plan"}):
-                if existing.get(key) != meta.get(key):
+        before the pin that names them.
+
+        The whole read-audition-pin runs under an exclusive lock on
+        ``store.json.lock``, so of two first encodes racing on one new
+        store, the second waits and then loads the first one's pin."""
+        with _exclusive(self.meta_path + ".lock"):
+            existing = self.read_meta()
+            if existing is None:
+                if self.committed_parts():
+                    # a store with committed chunks but no store.json
+                    # (legacy or torn) must NOT silently adopt this run's
+                    # parameters — that is exactly the row-misassignment
+                    # the pin prevents (ADVICE r2). Write store.json by
+                    # hand after verifying the original parameters to
+                    # migrate.
                     raise ValueError(
-                        f"store {self.root} was created with "
-                        f"{key}={existing.get(key)!r}; this run would use "
-                        f"{meta.get(key)!r} — resuming would silently "
-                        f"misassign rows. Use a new store or rerun with "
-                        f"the original parameters/configuration.")
-            pinned = existing.get("plan")
-            if pinned is not None:
-                if codec_hints is None:
-                    return plan_from_json(pinned, self.read_shared_tables())
-                wanted = plan_to_json(codec_hints)
-                differ = sorted(k for k in set(pinned) | set(wanted)
-                                if pinned.get(k) != wanted.get(k))
-                if differ:
+                        f"store {self.root} has committed chunks but no "
+                        f"store.json — cannot verify this run uses the same "
+                        f"partitioning parameters. Recreate the store or "
+                        f"restore its store.json before resuming.")
+            else:
+                if "mode" not in existing:  # pre-r2 store.json: salted
+                    existing = {"mode": "salted", **existing}
+                if existing.get("mode") != meta.get("mode"):
                     raise ValueError(
-                        f"store {self.root} pins an encode plan that "
-                        f"differs from this run's in {differ} — resumed "
-                        f"parts would not match the committed ones. Pass "
-                        f"codec_hints=None to reuse the pinned plan, or "
-                        f"use a new store.")
-                return codec_hints
-        if codec_hints is None:
-            if existing is not None:
-                log.info("store %s has no pinned encode plan; auditioning "
-                         "one and pinning it", self.root)
-            codec_hints = audition()
-        blobs = [v for v in codec_hints.values()
-                 if isinstance(v, (bytes, bytearray))]
-        if blobs:  # persist shared tables BEFORE anything references them
-            self.write_shared_tables(blobs)
-        self.write_meta({**meta, "plan": plan_to_json(codec_hints)})
-        return codec_hints
+                        f"store {self.root} was created by a "
+                        f"{existing.get('mode')!r}-mode encode; this run uses "
+                        f"{meta.get('mode')!r} — the two assign chunks "
+                        f"differently. Use a new store.")
+                for key in sorted((set(meta) | set(existing)) - {"plan"}):
+                    if existing.get(key) != meta.get(key):
+                        raise ValueError(
+                            f"store {self.root} was created with "
+                            f"{key}={existing.get(key)!r}; this run would use "
+                            f"{meta.get(key)!r} — resuming would silently "
+                            f"misassign rows. Use a new store or rerun with "
+                            f"the original parameters/configuration.")
+                pinned = existing.get("plan")
+                if pinned is not None:
+                    if codec_hints is None:
+                        return plan_from_json(pinned,
+                                              self.read_shared_tables())
+                    wanted = plan_to_json(codec_hints)
+                    differ = sorted(k for k in set(pinned) | set(wanted)
+                                    if pinned.get(k) != wanted.get(k))
+                    if differ:
+                        raise ValueError(
+                            f"store {self.root} pins an encode plan that "
+                            f"differs from this run's in {differ} — resumed "
+                            f"parts would not match the committed ones. Pass "
+                            f"codec_hints=None to reuse the pinned plan, or "
+                            f"use a new store.")
+                    return codec_hints
+            if codec_hints is None:
+                if existing is not None:
+                    log.info("store %s has no pinned encode plan; auditioning "
+                             "one and pinning it", self.root)
+                codec_hints = audition()
+            blobs = [v for v in codec_hints.values()
+                     if isinstance(v, (bytes, bytearray))]
+            if blobs:  # persist shared tables BEFORE anything references them
+                self.write_shared_tables(blobs)
+            self.write_meta({**meta, "plan": plan_to_json(codec_hints)})
+            return codec_hints
 
     # -- snapshot log (run-level lineage, Iceberg-snapshot analog) ----------
 
@@ -353,7 +377,7 @@ class ChunkStore:
         token = uuid.uuid4().hex[:8]
         name = f"part-{part_id:05d}"
         tmp_parquet = os.path.join(self.staging_dir, f"{name}.{token}.parquet")
-        pq.write_table(chunk_tbl, tmp_parquet, compression="none")
+        pq.write_table(chunk_tbl, tmp_parquet, **CHUNK_PARQUET)
         os.replace(tmp_parquet, os.path.join(self.chunks_dir, f"{name}.parquet"))
         tmp_json = os.path.join(self.staging_dir, f"{name}.{token}.json")
         with open(tmp_json, "w") as f:
@@ -890,7 +914,7 @@ def _write_wave(store_root: str, seq: int, parts: list[int]) -> dict:
                     store.chunks_dir, f"part-{p:05d}.parquet"))
                 if writer is None:
                     writer = pq.ParquetWriter(tmp, tbl.schema,
-                                              compression="none")
+                                              **CHUNK_PARQUET)
                 writer.write_table(tbl)  # one row group per part
                 with open(os.path.join(store.manifest_dir,
                                        f"part-{p:05d}.json")) as f:
@@ -910,7 +934,7 @@ def _write_wave(store_root: str, seq: int, parts: list[int]) -> dict:
             schema=STATS_SCHEMA)
         tmp_stats = os.path.join(store.staging_dir,
                                  f"wave-{seq:06d}.{token}.stats.parquet")
-        pq.write_table(stats_tbl, tmp_stats, compression="zstd")
+        pq.write_table(stats_tbl, tmp_stats, **STATS_PARQUET)
         os.replace(tmp_stats, os.path.join(store.stats_dir,
                                            f"wave-{seq:06d}.parquet"))
         # store only the basename: a store moved/renamed (or opened from

@@ -306,3 +306,33 @@ def test_delta_nested_sorted_with_outlier():
     v = np.array([-5, -5, 0, 3, 3, 2**40, 2**40 + 1], np.int64)
     out2, _ = decode_array(encode_array(v))
     assert (np.asarray(out2) == v).all()
+
+
+def test_rans_decode_rejects_corrupt_core():
+    """A damaged rANS core raises ValueError("corrupt rANS core …"):
+    a lane count of 0 (once a ZeroDivisionError) or above the maximum, a
+    stream that ends before the symbols do, and words left over."""
+    import struct
+
+    from tbl_spark.codecs import rans
+
+    rng = np.random.default_rng(3)
+    codes = rng.integers(0, 300, 20_000).astype(np.int64)
+    core, freqs = rans.encode(codes, 300, n_lanes=256)
+    L, K, stream_bytes = struct.unpack_from("<IIQ", core, 0)
+    assert L == 32 and stream_bytes > 8
+    np.testing.assert_array_equal(rans.decode(core, len(codes), freqs),
+                                  codes)
+    body = core[16:]
+    bad = {
+        "zero lanes": struct.pack("<IIQ", 0, K, stream_bytes) + body,
+        "too many lanes": struct.pack("<IIQ", rans.MAX_LANES + 1, K,
+                                      stream_bytes) + body,
+        "stream ends early": struct.pack("<IIQ", L, K, stream_bytes - 8)
+        + body,
+        "words left over": struct.pack("<IIQ", L, K, stream_bytes + 4)
+        + body + b"\0\0\0\0",
+    }
+    for name, blob in bad.items():
+        with pytest.raises(ValueError, match="corrupt rANS core"):
+            rans.decode(blob, len(codes), freqs)

@@ -222,6 +222,64 @@ def test_explicit_plan_must_match_pin(token_df, plan, tmp_path):
     assert summary["encoded_parts"] == 0
 
 
+def test_racing_first_encodes_share_one_pin(tmp_path):
+    """Two first encodes of one new store: the second starts while the
+    first is still auditioning, with a different audition of its own.
+    The read-audition-pin runs under a lock, so the second waits and
+    loads the first one's pin, and both encode under the pinned plan."""
+    import threading
+    import time
+
+    from tbl_spark.codecs.core import plan_from_json
+    from tbl_spark.codecs.format import Codec
+    store = ChunkStore(str(tmp_path / "store"))
+    store.init_dirs()
+    meta = {"mode": "salted", "num_parts": PARTS}
+    auditioning = threading.Event()
+    plans = {}
+
+    def slow_audition():
+        auditioning.set()
+        time.sleep(0.5)
+        return {"n_tok": int(Codec.RAW)}
+
+    def encode(name, audition):
+        plans[name] = store.check_or_init_meta(meta, None, audition)
+
+    first = threading.Thread(target=encode, args=("first", slow_audition))
+    first.start()
+    assert auditioning.wait(10)
+    encode("second", lambda: {"n_tok": int(Codec.FOR_BITPACK)})
+    first.join(10)
+    assert not first.is_alive()
+    pinned = plan_from_json(store.read_meta()["plan"], {})
+    assert plans == {"first": pinned, "second": pinned}
+    assert pinned == {"n_tok": int(Codec.RAW)}
+
+    # 16 racers, each with its own audition: one pin, and every racer
+    # returns it
+    store = ChunkStore(str(tmp_path / "crowded"))
+    store.init_dirs()
+    plans.clear()
+    codecs = [int(c) for c in Codec]
+
+    def audition_of(codec):
+        def audition():
+            time.sleep(0.01)
+            return {"n_tok": codec}
+        return audition
+
+    racers = [threading.Thread(target=encode, args=(i, audition_of(c)))
+              for i, c in enumerate(codecs)]
+    for t in racers:
+        t.start()
+    for t in racers:
+        t.join(30)
+    assert not any(t.is_alive() for t in racers)
+    pinned = plan_from_json(store.read_meta()["plan"], {})
+    assert plans == {i: pinned for i in range(len(codecs))}
+
+
 def test_store_without_pin_auditions_once(spark, parquet_src, tmp_path,
                                           monkeypatch, caplog):
     df = spark.read.parquet(parquet_src)

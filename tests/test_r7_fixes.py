@@ -457,11 +457,10 @@ def test_cli_media_frame_sample_real(spark, tmp_path, capsys):
 # --------------------------------------------------------------------------
 
 def test_rans_fast_loop_roundtrip_and_lane_policy():
-    """The r7 gather-hoisted encode loop moved the shared-path
-    size/speed knee to 128 lanes at bench-size chunks: assert the state
-    block actually shrank (the blob layout leads with u32 n_lanes) and
-    the payload still roundtrips exactly, including the partial-step
-    tail and the lane floor at tiny n."""
+    """The shared-table path gives a stream 256 lanes, fewer where
+    rans.encode's one-lane-per-384-values floor says so (the blob layout
+    leads with u32 n_lanes), and the payload still roundtrips exactly,
+    including the partial-step tail and the lane floor at tiny n."""
     import struct as _struct
 
     import numpy as np
@@ -478,14 +477,14 @@ def test_rans_fast_loop_roundtrip_and_lane_policy():
     sample = ((rng.zipf(1.2, 1 << 17) - 1) % 5000).astype(np.int64)
     fp = register_shared_table(build_shared_table(sample))
     _shared_slots.pop(fp, None)
-    for n in (400_000, 65_537, 127, 1):
+    for n, want_lanes in ((400_000, 256), (65_537, 128), (127, 8), (1, 8)):
         v = ((rng.zipf(1.2, n) - 1) % 5000).astype(np.int64)
         payload = _rans_shared_payload(v, fp)
         assert payload is not None
         from tbl_spark.codecs.format import unframe
         _exc, core = unframe(payload[8:], 2)   # u64 fp | frame(exc, core)
         (n_lanes,) = _struct.unpack_from("<I", core, 0)
-        assert n_lanes <= 128, (n, n_lanes)
+        assert n_lanes == want_lanes, (n, n_lanes)
         back = _decode_rans_shared(payload, n, v.dtype)
         assert np.array_equal(back, v)
     # decode populated the per-fingerprint slot cache exactly once

@@ -152,3 +152,36 @@ def test_compaction_wave_files(spark, tmp_path):
 
     # compacting again is a no-op (only 2 loose parts < wave_size)
     assert store.compact(wave_size=4) == 0
+
+
+def test_wave_row_groups_carry_only_part_id_stats(spark, tmp_path):
+    """Decode pushes down only part_id, so wave files keep row-group
+    min/max for part_id and write none for the other columns, no
+    dictionary pages and no Arrow schema; stats sidecars keep no
+    statistics. Zone pruning and decode still work from these files."""
+    import pyarrow.parquet as pq
+
+    store = ChunkStore(str(tmp_path / "store"))
+    df = generate_df(spark, 600, 2)
+    encode_to_store(df, store, 4)
+    assert store.compact(wave_size=2) == 2
+    for w in store.waves():
+        md = pq.read_metadata(os.path.join(store.root, "waves", w["file"]))
+        assert b"ARROW:schema" not in (md.metadata or {})
+        assert md.num_row_groups == 2
+        for rg, part in zip(range(md.num_row_groups), w["parts"]):
+            cols = {md.row_group(rg).column(i).path_in_schema:
+                    md.row_group(rg).column(i)
+                    for i in range(md.row_group(rg).num_columns)}
+            st = cols["part_id"].statistics
+            assert st is not None and st.has_min_max
+            assert st.min == st.max == part
+            assert cols["blob"].statistics is None
+            assert not any(c.has_dictionary_page for c in cols.values())
+    for path in store.stats_files().values():
+        md = pq.read_metadata(path)
+        rg = md.row_group(0)
+        assert all(rg.column(i).statistics is None
+                   for i in range(rg.num_columns))
+    decoded = decode_from_store(store, spark, SPARK_SCHEMA_DDL)
+    assert decoded.count() == 600

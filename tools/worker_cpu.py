@@ -7,12 +7,14 @@ salted parts, compacted in waves of 2, from ``DOCS`` documents of seed
 ``SEED``), then runs a full decode, a projected decode (``n_tok, source``),
 a selective decode (perfbench's predicate shape: ``n_tok>=`` the
 ``SELECTIVE_Q`` quantile, inside perfbench's 0.990-0.998 draw), a salted
-encode, the driver-side audition of the encode plan, a compaction of a
-fresh copy of the uncompacted store, and a resume of a copy that lost
-half its parts (perfbench's ``resume`` op, which passes no plan and so
-reuses the plan pinned in the store's ``store.json``) ``REPS`` times
-each. For every call it prints wall seconds
-and the CPU seconds (user + system, from ``/proc``) of three process
+encode, a colocated encode (perfbench's ``ingest_colocated`` op: chunks of
+``TOKENS_PER_CHUNK`` tokens, no plan passed, so each fresh store
+auditions its own), the driver-side audition of the encode plan, a
+compaction of a fresh copy of the uncompacted store, and a resume of a
+copy that lost half its parts (perfbench's ``resume`` op, which passes no
+plan and so reuses the plan pinned in the store's ``store.json``)
+``REPS`` times each. For every call it prints wall seconds and the CPU
+seconds (user + system, from ``/proc``) of three process
 classes: the driver (this process), the JVM, and the Python workers
 (every descendant of the JVM, plus what the JVM reaped). perfbench's
 ``cycle_cpu_s`` sums all three; this splits out the Python-worker share.
@@ -47,6 +49,7 @@ DOCS = 2000     # perfbench's token input size
 SEED = 1
 REPS = 4
 SELECTIVE_Q = 0.994
+TOKENS_PER_CHUNK = 200_000  # perfbench's colocated chunk size
 
 
 def _comm(pid: int) -> str:
@@ -113,7 +116,8 @@ def main() -> int:
     from tbl_spark.datagen import write_token_table
     from tbl_spark.encode import audition_codec_hints
     from tbl_spark.session import get_spark
-    from tbl_spark.store import ChunkStore, decode_from_store, encode_to_store
+    from tbl_spark.store import (ChunkStore, decode_from_store,
+                                 encode_to_store, encode_to_store_colocated)
 
     cores = len(os.sched_getaffinity(0))
     spark = get_spark(cores=cores, shuffle_partitions=4 * cores)
@@ -152,11 +156,10 @@ def main() -> int:
 
         n_enc = 0
 
-        def encode():
+        def fresh_store():
             nonlocal n_enc
             n_enc += 1
-            fresh = ChunkStore(os.path.join(work, f"enc-{n_enc}"))
-            encode_to_store(df, fresh, PARTS, codec_hints=hints)
+            return ChunkStore(os.path.join(work, f"enc-{n_enc}"))
 
         calls = {
             "full_decode": lambda: checksum(
@@ -165,7 +168,12 @@ def main() -> int:
                 ["n_tok", "source"], columns=["n_tok", "source"]),
             "selective_decode": lambda: checksum(
                 ["doc_id", "tokens", "n_tok", "source"], predicate=predicate),
-            "salted_encode": encode,
+            "salted_encode": (
+                fresh_store,
+                lambda s: encode_to_store(df, s, PARTS, codec_hints=hints)),
+            "colocated_encode": (
+                fresh_store,
+                lambda s: encode_to_store_colocated(df, s, TOKENS_PER_CHUNK)),
             # what a first encode without a plan adds: on this bare
             # parquet frame the sample is read locally, no Spark job
             "audition": lambda: audition_codec_hints(df),
