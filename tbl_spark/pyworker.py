@@ -25,6 +25,12 @@ daemon, because the daemon starts before ``--py-files`` reach a worker's
 ``sys.path``; ``get_spark`` logs a WARNING saying so. Importing
 ``tbl_spark`` also calls ``install()``, which covers such workers from
 their next task on.
+
+The same daemon also cuts the other fixed per-task cost, the full
+``gc.collect()`` a reused worker runs after every task: it freezes each
+worker's import-time heap after the task that imported it (see
+``tbl_spark._daemon``). Workers of Spark's default daemon keep that
+cost.
 """
 
 from __future__ import annotations

@@ -445,13 +445,14 @@ class ChunkStore:
         # parts are bigint: colocated stores hash 63-bit chunk ids. Every
         # driver-built frame here comes from an Arrow table, which Spark
         # reads in the JVM (LocalTableScan); a Python list would cost a
-        # PythonRDD stage whose tasks only unpickle its rows.
+        # PythonRDD stage whose tasks only unpickle its rows. The scan
+        # already slices its rows into min(waves, defaultParallelism)
+        # partitions, so the waves spread over tasks without a shuffle.
         plan_df = spark.createDataFrame(pa.table({
             "seq": pa.array([seq for seq, _ in plans], pa.int32()),
             "parts": pa.array([[int(p) for p in parts] for _, parts in plans],
                               pa.list_(pa.int64()))}),
             "seq int, parts array<bigint>")
-        plan_df = plan_df.repartition(len(plans), "seq")
 
         def run(batches):
             for batch in batches:

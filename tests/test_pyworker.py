@@ -266,3 +266,136 @@ def test_zip_install_keeps_default_daemon(tmp_path):
     warnings = [line for line in lines
                 if "keep Spark's default daemon" in line]
     assert len(warnings) == 1, proc.stdout[-4000:]
+
+
+def test_reused_workers_freeze_their_import_heap(fresh_workers):
+    """A fresh worker's first task imports pyarrow and pyspark's worker
+    stack; the daemon's wrapper then freezes what survived, so a reused
+    worker's per-task collection no longer scans that heap."""
+    def probe(batches):
+        import gc
+        import os
+
+        import pyarrow as pa
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict(
+            {"pid": [os.getpid()], "frozen": [gc.get_freeze_count()]})
+
+    runs = []
+    for _ in range(2):
+        df = fresh_workers.range(0, 4, numPartitions=4).mapInArrow(
+            probe, "pid long, frozen long")
+        runs.append([tuple(r) for r in df.collect()])
+    assert len(runs[1]) == 4
+    assert all(frozen > 0 for _, frozen in runs[1]), runs
+
+
+_FREEZE_PROBE = """
+import gc, io, json, sys, weakref
+sys.path[:0] = [{repo!r}, {mods!r}]
+from tbl_spark._daemon import _freeze_after_imports
+
+gc.disable()          # only explicit collections run from here on
+gc.collect()
+events = []
+gc.callbacks.append(
+    lambda phase, info: phase == "start" and events.append("gc"))
+out = {{}}
+
+class Sink(io.RawIOBase):
+    def writable(self):
+        return True
+
+    def write(self, b):
+        events.append("write")
+        return len(b)
+
+def importing(infile, outfile):
+    import fresh_a  # noqa: F401
+    outfile.write(b"task output")
+
+class Node:
+    pass
+
+fired = []
+
+def cyclic(infile, outfile):
+    node = Node()
+    node.self = node
+    weakref.finalize(node, fired.append, True)
+
+reused = _freeze_after_imports(importing, True)
+reused(io.BytesIO(), io.BufferedWriter(Sink()))
+out["frozen_after_import"] = gc.get_freeze_count()
+out["events_after_import"] = events[:]
+
+_freeze_after_imports(cyclic, True)(io.BytesIO(), io.BytesIO())
+out["frozen_after_plain"] = gc.get_freeze_count()
+out["fired_before_collect"] = bool(fired)
+gc.collect()
+out["fired_after_collect"] = bool(fired)
+
+gc.unfreeze()
+del events[:]
+def importing_b(infile, outfile):
+    import fresh_b  # noqa: F401
+
+_freeze_after_imports(importing_b, False)(io.BytesIO(), io.BytesIO())
+out["fresh_b_imported"] = "fresh_b" in sys.modules
+out["frozen_not_reused"] = gc.get_freeze_count()
+out["events_not_reused"] = len(events)
+print(json.dumps(out))
+"""
+
+
+def test_freeze_after_imports_wrapper(tmp_path):
+    """Run in a subprocess, so this test process's heap is never frozen."""
+    import os
+    import subprocess
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    mods = tmp_path / "mods"
+    mods.mkdir()
+    (mods / "fresh_a.py").write_text("TABLE = [{'k': i} for i in range(9)]\n")
+    (mods / "fresh_b.py").write_text("VALUE = 2\n")
+    proc = subprocess.run(
+        [sys.executable, "-c",
+         _FREEZE_PROBE.format(repo=repo, mods=str(mods))],
+        capture_output=True, text=True, timeout=120)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    out = json.loads(proc.stdout.splitlines()[-1])
+    # a task that imported a module: its output is flushed, then one
+    # collection runs, then the freeze
+    assert out["frozen_after_import"] > 0
+    assert out["events_after_import"] == ["write", "gc"]
+    # a task that imported nothing: no new freeze, and the cycle it left
+    # is still garbage that the next collection frees
+    assert out["frozen_after_plain"] == out["frozen_after_import"]
+    assert not out["fired_before_collect"]
+    assert out["fired_after_collect"]
+    # a worker that is not reused: nothing collected or frozen
+    assert out["fresh_b_imported"]
+    assert out["frozen_not_reused"] == 0
+    assert out["events_not_reused"] == 0
+
+
+def test_daemon_wraps_worker_main_or_warns(monkeypatch, caplog):
+    from pyspark import daemon
+
+    from tbl_spark import _daemon
+
+    original = daemon.worker_main
+    # recorded first, so the undo puts the unwrapped function back last
+    monkeypatch.setattr(daemon, "worker_main", original)
+    monkeypatch.setattr(daemon, "manager", lambda: None)
+    monkeypatch.setenv("SPARK_REUSE_WORKER", "1")
+    with caplog.at_level("WARNING", logger="tbl_spark"):
+        _daemon.main()
+        assert daemon.worker_main is not original
+        assert not caplog.records
+        monkeypatch.delattr(daemon, "worker_main")
+        _daemon.main()
+    assert not hasattr(daemon, "worker_main")
+    assert [r.levelname for r in caplog.records] == ["WARNING"]
+    assert "worker_main" in caplog.records[0].getMessage()

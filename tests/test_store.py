@@ -185,3 +185,43 @@ def test_wave_row_groups_carry_only_part_id_stats(spark, tmp_path):
                    for i in range(rg.num_columns))
     decoded = decode_from_store(store, spark, SPARK_SCHEMA_DDL)
     assert decoded.count() == 600
+
+
+def test_distributed_compaction_runs_one_stage_of_one_wave_per_task(
+        spark, tmp_path):
+    """The plan frame is a LocalTableScan that Spark already slices into
+    one wave per task, so a distributed compaction runs one job of one
+    stage with no shuffle, and every wave gets its own task."""
+    import uuid
+
+    store = ChunkStore(str(tmp_path / "store"))
+    df = generate_df(spark, 2000, 4)
+    encode_to_store(df, store, 8)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"compact-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "distributed compaction")
+    try:
+        assert store.compact(2, spark=spark) == 4
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) == 1, jobs
+    stages = tracker.getJobInfo(jobs[0]).stageIds
+    assert len(stages) == 1, stages
+    assert tracker.getStageInfo(stages[0]).numTasks == 4
+
+    waves = store.waves()
+    assert sorted(len(w["parts"]) for w in waves) == [2, 2, 2, 2]
+    assert sorted(p for w in waves for p in w["parts"]) == \
+        sorted(store.committed_parts())
+    assert len(store.data_files()) == 4
+    decoded = decode_from_store(store, spark, SPARK_SCHEMA_DDL)
+    assert decoded.count() == 2000
+    n = decoded.alias("b").join(df.alias("a"), "doc_id").filter(
+        (F.col("a.tokens") == F.col("b.tokens"))
+        & (F.col("a.n_tok") == F.col("b.n_tok"))
+        & (F.col("a.source") == F.col("b.source"))).count()
+    assert n == 2000

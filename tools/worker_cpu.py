@@ -4,10 +4,11 @@
 
 Builds a small seeded token store (the perfbench ``tokens_scan`` shape: 8
 salted parts, compacted in waves of 2, from ``DOCS`` documents of seed
-``SEED``), then runs a full decode, a projected decode (``n_tok, source``),
-a selective decode (perfbench's predicate shape: ``n_tok>=`` the
-``SELECTIVE_Q`` quantile, inside perfbench's 0.990-0.998 draw), a salted
-encode, a colocated encode (perfbench's ``ingest_colocated`` op: chunks of
+``SEED``), then runs a ``mapInArrow`` that yields nothing over the
+store's chunk rows (the per-task Spark and Python-worker floor), a full
+decode, a projected decode (``n_tok, source``), a selective decode
+(perfbench's predicate shape: ``n_tok>=`` the ``SELECTIVE_Q`` quantile,
+inside perfbench's 0.990-0.998 draw), a salted encode, a colocated encode (perfbench's ``ingest_colocated`` op: chunks of
 ``TOKENS_PER_CHUNK`` tokens, no plan passed, so each fresh store
 auditions its own), the driver-side audition of the encode plan, a
 compaction of a fresh copy of the uncompacted store, and a resume of a
@@ -161,7 +162,16 @@ def main() -> int:
             n_enc += 1
             return ChunkStore(os.path.join(work, f"enc-{n_enc}"))
 
+        def noop(batches):
+            for _ in batches:
+                pass
+            yield from ()
+
         calls = {
+            # the per-task Spark + Python floor: read every chunk row,
+            # hand it to a Python worker, return nothing
+            "noop_map": lambda: store.read_chunks(spark).mapInArrow(
+                noop, "part_id int").collect(),
             "full_decode": lambda: checksum(
                 ["doc_id", "tokens", "n_tok", "source"]),
             "projected_decode": lambda: checksum(
