@@ -1,23 +1,27 @@
-"""Distributed decode job: chunk DataFrame → original table.
+"""Distributed decode jobs: chunk rows → original table.
 
-Inverse of encode.py; grouped Arrow UDF per part_id. Row order within a
-chunk is preserved column-to-column (all columns of a chunk were encoded
-from one aligned Arrow table), so positional zip reconstructs rows exactly
-— the per-row token-array equality invariant is checked by tests joining
-on doc_id."""
+Inverse of encode.py. `decode_table` turns all chunk rows of one part into
+its Arrow table; two zero-shuffle mapInArrow decodes feed it.
+`decode_row_groups` is the store read: each task opens the (file, row
+group) units the driver planned (store.decode_from_store), one part per
+row group. `decode_chunks_colocated` decodes an in-flight or cached chunk
+DataFrame whose parts are contiguous.
+Row order within a chunk is preserved column-to-column (all columns of a
+chunk were encoded from one aligned Arrow table), so positional zip
+reconstructs rows exactly — the per-row token-array equality invariant is
+checked by tests joining on doc_id."""
 
 from __future__ import annotations
 
+import itertools
+
 import numpy as np
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 
 from .arrowtypes import arrow_type_of_ddl, from_codec_output
 from .codecs import decode_array
-
-# chunk DataFrames carry their part id in the CHUNK_SCHEMA_DDL column
-# `part_id` (encode.py) — distinct from the reserved input-side key column.
-CHUNK_PART_COL = "part_id"
 
 
 def _resolve_shared_tables(chunk_df: DataFrame,
@@ -99,42 +103,78 @@ def decode_table(chunk_tbl: pa.Table,
     return pa.Table.from_arrays(cols, names=column_order)
 
 
+def arrow_schema_of(schema) -> pa.Schema:
+    """The Arrow schema decode_table produces for a Spark StructType."""
+    return pa.schema([(f.name, arrow_type_of_ddl(f.dataType.simpleString()))
+                      for f in schema.fields])
+
+
+# chunk columns a decode reads; the size and timing columns are not needed
+_READ_COLUMNS = ["part_id", "column", "codec", "blob", "spark_type"]
+
+
+def decode_row_groups(unit_df: DataFrame, schema,
+                      shared_tables: dict[int, bytes]) -> DataFrame:
+    """Decode the (file, row group, part id) units of `unit_df`
+    (store.unit_frame) with one mapInArrow and no shuffle. Each task opens
+    each of its files once and reads its row groups, each holding one
+    part's chunk rows. Only the chunk rows of `schema`'s columns are
+    decoded. A row group that holds rows of another part than the one
+    planned raises: the wave manifest and its file disagree."""
+    import pyarrow.compute as pc
+    column_order = [f.name for f in schema.fields]
+    wanted = pa.array(column_order, pa.string())
+
+    def run(batches):
+        _register_tables(shared_tables)
+        units = [u for b in batches for u in b.to_pylist()]
+        for path, file_units in itertools.groupby(units,
+                                                  key=lambda u: u["file"]):
+            with pq.ParquetFile(path) as f:
+                for u in file_units:
+                    tbl = _drop_sentinel_rows(f.read_row_group(
+                        u["row_group"], columns=_READ_COLUMNS))
+                    pids = tbl.column("part_id").to_numpy()
+                    if (pids != u["part_id"]).any():
+                        raise ValueError(
+                            f"{path} row group {u['row_group']} holds parts "
+                            f"{sorted(set(pids.tolist()))}, planned part "
+                            f"{u['part_id']}")
+                    tbl = tbl.filter(pc.is_in(tbl.column("column"),
+                                              value_set=wanted))
+                    if tbl.num_rows:
+                        yield from decode_table(
+                            tbl, column_order).to_batches()
+
+    return unit_df.mapInArrow(run, schema)
+
+
 def decode_chunks_colocated(chunk_df: DataFrame, output_ddl: str,
-                            target_partitions: int | None = None,
                             shared_tables: dict[int, bytes] | None = None
                             ) -> DataFrame:
-    """Zero-shuffle decode for chunk stores: when every input file holds
-    exactly one part's rows (ChunkStore's layout), rows of a part are
-    contiguous within each scan partition, so the decode streams with
-    mapInArrow — no Exchange in the plan. Falls back to nothing: callers
-    with arbitrarily-ordered chunk rows must use decode_chunks().
+    """Zero-shuffle decode of a chunk DataFrame whose parts are each
+    contiguous within one partition: an in-flight `encode_chunks` frame
+    (applyInArrow emits a part's chunk rows together), a filter of one,
+    or a cache of one. mapInArrow streams the decode, stitching a part
+    whose rows cross an Arrow batch boundary, so the plan has no
+    Exchange.
 
-    `target_partitions` coalesces first (no shuffle; concatenation keeps
-    every part contiguous, since a part never spans two input
-    partitions). Many tiny chunk partitions each pay a Python task's
-    fixed cost — on 4 cores, coalescing a 128-part store (2k docs) to 4
-    partitions cut a full decode from 3.5 s to 1.2 s wall and from 13.5
-    to 3.6 JVM + Python-worker CPU-s. Only set it when the upstream is a
-    cheap scan or cache: coalesce also narrows the parallelism of
-    whatever computes the chunks (e.g. an in-flight encode stage)."""
+    A cached frame with more partitions than the session's parallelism
+    is coalesced first: every mapInArrow partition is one Python task
+    with its fixed cost, and concatenating partitions keeps every part
+    contiguous. An in-flight frame is left as it is, since coalescing it
+    would also narrow the encode stage that computes it."""
     from pyspark.sql.types import StructType
     tables = _resolve_shared_tables(chunk_df, shared_tables)
-    if target_partitions is None and chunk_df.is_cached:
+    if chunk_df.is_cached:
         # r8 auto-coalesce: a CACHED chunk frame often carries the
         # encode's full shuffle-partition count (hundreds of partitions
-        # holding a handful of chunk rows each), and every mapInArrow
-        # partition is one Python task with its fixed cost — a 513-row
-        # chunk table cached in 160 partitions ran 160 tasks for work
-        # that fits in one task per core.
-        # The upstream is already materialized, so coalescing cannot
-        # narrow any producer's parallelism (the docstring's caveat
-        # below applies only to in-flight producers, which are never
-        # `is_cached`); concatenation keeps every part contiguous.
+        # holding a handful of chunk rows each) — a 513-row chunk table
+        # cached in 160 partitions ran 160 tasks for work that fits in
+        # one task per core.
         sc = chunk_df.sparkSession.sparkContext
         if chunk_df.rdd.getNumPartitions() > sc.defaultParallelism:
-            target_partitions = sc.defaultParallelism
-    if target_partitions is not None:
-        chunk_df = chunk_df.coalesce(target_partitions)
+            chunk_df = chunk_df.coalesce(sc.defaultParallelism)
     schema = StructType.fromDDL(output_ddl) if isinstance(output_ddl, str) \
         else output_ddl
     column_order = [f.name for f in schema.fields]
@@ -162,28 +202,3 @@ def decode_chunks_colocated(chunk_df: DataFrame, output_ddl: str,
             yield from decode_table(pending, column_order).to_batches()
 
     return chunk_df.mapInArrow(run, schema)
-
-
-def decode_chunks(chunk_df: DataFrame, output_ddl: str,
-                  shared_tables: dict[int, bytes] | None = None
-                  ) -> DataFrame:
-    """chunk DataFrame → reconstructed DataFrame with schema output_ddl."""
-    from pyspark.sql.types import StructType
-    spark = chunk_df.sparkSession
-    tables = _resolve_shared_tables(chunk_df, shared_tables)
-    schema = StructType.fromDDL(output_ddl) if isinstance(output_ddl, str) \
-        else output_ddl
-    column_order = [f.name for f in schema.fields]
-    empty = pa.schema([
-        (f.name, arrow_type_of_ddl(f.dataType.simpleString()))
-        for f in schema.fields]).empty_table()
-
-    def decode_group(key: tuple, tbl: pa.Table) -> pa.Table:
-        _register_tables(tables)
-        tbl = _drop_sentinel_rows(tbl)
-        if tbl.num_rows == 0:  # a group of only sentinel rows (part -1)
-            return empty
-        return decode_table(tbl, column_order)
-
-    _ = spark
-    return chunk_df.groupBy(CHUNK_PART_COL).applyInArrow(decode_group, schema)

@@ -17,10 +17,10 @@ import pyspark.sql.functions as F
 import pytest
 
 from tbl_spark.datagen import generate_part
-from tbl_spark.encode import CHUNK_SCHEMA_DDL
 from tbl_spark.partitioning import PART_COL
-from tbl_spark.store import (STATS_DDL, ChunkStore, decode_from_store,
-                             encode_to_store, encode_to_store_colocated)
+from tbl_spark.store import (STATS_SCHEMA, UNIT_DDL, ChunkStore,
+                             decode_from_store, encode_to_store,
+                             encode_to_store_colocated, zone_prune_parts)
 
 COLS = ["doc_id", "tokens", "n_tok", "source", "ts"]
 
@@ -90,18 +90,19 @@ def test_colocated_compaction_and_stats_frames_are_arrow(
     _assert_local(plan_df)
     assert sorted((r.seq, r.parts) for r in plan_df.collect()) == plans[:2]
 
-    # legacy wave (no stats parquet) + loose parts: every read_stats row
-    # comes from the driver
+    # legacy wave (no stats parquet) + loose parts: stats_table() flattens
+    # their JSON manifests on the driver into the rows the parquet held
+    def rows(t):
+        return sorted(t.to_pylist(), key=lambda r: (r["part_id"], r["column"]))
+    with_parquet = rows(store.stats_table())
     os.remove(store.stats_files()[plans[0][0]])
     assert plans[0][0] not in store.stats_files()
     built_frames.clear()
-    stats = store.read_stats(spark)
-    assert stats.schema.simpleString() == f"struct<{_ddl(STATS_DDL)}>"
-    _assert_local(stats)
     want = store.stats_table()
-    got = sorted((tuple(r) for r in stats.collect()), key=repr)
-    assert got == sorted((tuple(r.values()) for r in want.to_pylist()),
-                         key=repr)
+    assert built_frames == []
+    assert want.schema == STATS_SCHEMA
+    assert rows(want) == with_parquet
+    assert {r["part_id"] for r in with_parquet} == store.committed_parts()
     ts = [r for r in want.to_pylist() if r["column"] == "ts"]
     assert ts and all(r["kind"] == "ts" and r["nulls"] > 0
                       and r["lo_num"] is not None for r in ts)
@@ -109,16 +110,65 @@ def test_colocated_compaction_and_stats_frames_are_arrow(
     assert _checksum(decode_from_store(store, spark)) == _checksum(df)
 
 
-def test_empty_read_chunks_frame_is_arrow(spark, tmp_path, token_input):
+def test_empty_read_chunks_frame_is_arrow(spark, tmp_path, token_input,
+                                         built_frames):
+    """A predicate that prunes every part decodes to an empty frame of
+    the store's schema, built from Arrow: planning and collecting it
+    start no job."""
+    import uuid
     df = spark.read.parquet(token_input)
     store = ChunkStore(str(tmp_path / "store"))
     encode_to_store(df, store, 4)
-    empty = store.read_chunks(spark, parts=set())
+    sc = spark.sparkContext
+    group = f"pruned-{uuid.uuid4().hex[:8]}"
+    built_frames.clear()
+    sc.setJobGroup(group, "fully pruned decode")
+    try:
+        none_kept = decode_from_store(store, spark, predicate="n_tok>100000")
+        assert none_kept.collect() == []
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    [empty] = built_frames
     _assert_local(empty)
-    assert empty.schema.simpleString() == f"struct<{_ddl(CHUNK_SCHEMA_DDL)}>"
-    assert empty.count() == 0
-    none_kept = decode_from_store(store, spark, predicate="n_tok>100000")
+    ddl = _ddl(store.read_meta()["schema_ddl"])
+    assert empty.schema.simpleString() == f"struct<{ddl}>"
+    assert none_kept.schema.simpleString() == f"struct<{ddl}>"
     assert none_kept.count() == 0
+
+
+def test_selective_decode_plans_only_surviving_row_groups(
+        spark, tmp_path, token_input, built_frames):
+    """The driver plans a selective decode of a compacted store as the
+    surviving parts' (file, row group) units, in one Arrow-built frame,
+    and the decode returns exactly the source rows the predicate keeps."""
+    df = spark.read.parquet(token_input)
+    store = ChunkStore(str(tmp_path / "store"))
+    encode_to_store(df, store, 8)
+    assert store.compact(2, spark=spark) == 4
+    stats = store.stats_table().to_pylist()
+    highs = sorted(r["hi_num"] for r in stats if r["column"] == "n_tok")
+    threshold = int(highs[2]) + 1      # at least three parts cannot match
+    pred = f"n_tok>={threshold}"
+    kept = zone_prune_parts(store, pred)
+    assert 0 < len(kept) <= 5
+
+    built_frames.clear()
+    got = decode_from_store(store, spark, predicate=pred)
+    [units] = _frames_of(built_frames, _ddl(UNIT_DDL))
+    _assert_local(units)
+    root = os.path.abspath(store.root)
+    want = sorted((os.path.join(root, "waves", w["file"]), rg, p)
+                  for w in store.waves()
+                  for rg, p in enumerate(w["parts"]) if p in kept)
+    assert len(want) == len(kept)
+    assert sorted(tuple(r) for r in units.collect()) == want
+    for path, rg, p in want:
+        ids = pq.ParquetFile(path).read_row_group(rg, columns=["part_id"])
+        assert set(ids["part_id"].to_pylist()) == {p}
+    assert _checksum(got) == _checksum(df.filter(F.col("n_tok") >= threshold))
 
 
 def test_resume_after_compaction_builds_arrow_done_frame(

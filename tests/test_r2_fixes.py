@@ -31,13 +31,13 @@ def test_reserved_part_col_rejected(spark):
 def test_user_part_id_column_roundtrips(spark):
     """A source table that legitimately contains a part_id column must be
     encoded and decoded like any other column (r1 silently dropped it)."""
-    from tbl_spark.decode import decode_chunks
+    from tbl_spark.decode import decode_chunks_colocated
     from tbl_spark.encode import encode_chunks
     df = generate_df(spark, 200, 2).withColumn(
         "part_id", F.pmod(F.xxhash64("doc_id"), F.lit(7)).cast("int"))
     ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                     for f in df.schema.fields)
-    decoded = decode_chunks(encode_chunks(df, 4), ddl)
+    decoded = decode_chunks_colocated(encode_chunks(df, 4), ddl)
     assert "part_id" in decoded.columns
     n = (decoded.alias("b").join(df.alias("a"), "doc_id")
          .filter((F.col("a.part_id") == F.col("b.part_id"))
@@ -522,14 +522,14 @@ def test_decimal128_codec_roundtrip():
 def test_u64_cast_column_roundtrips_through_store(spark, tmp_path):
     """cast COL=u64 widens to decimal(20,0) (transforms.py) — that column
     must now survive encode->decode bit-exactly instead of erroring."""
-    from tbl_spark.decode import decode_chunks
+    from tbl_spark.decode import decode_chunks_colocated
     from tbl_spark.encode import encode_chunks
     from tbl_spark.transforms import TransformSpec, apply_transforms
     df = generate_df(spark, 300, 2)
     wide = apply_transforms(df, TransformSpec(cast=["n_tok=u64"]))
     ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                     for f in wide.schema.fields)
-    decoded = decode_chunks(encode_chunks(wide, 4), ddl)
+    decoded = decode_chunks_colocated(encode_chunks(wide, 4), ddl)
     n = (decoded.alias("b").join(wide.alias("a"), "doc_id")
          .filter(F.col("a.n_tok") == F.col("b.n_tok")).count())
     assert n == 300

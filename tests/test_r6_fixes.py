@@ -612,8 +612,7 @@ def test_store_encode_clusters_and_picks_template(spark, tmp_path):
     store = ChunkStore(str(tmp_path / "cl_store"))
     encode_to_store(df, store, 2)
     codecs = {r["column"]: r["codec"] for r in
-              store.read_chunks(spark).select("column", "codec")
-              .distinct().collect()}
+              store.stats_table().select(["column", "codec"]).to_pylist()}
     assert codecs["doc_id"].startswith("str_template")
     dec = decode_from_store(store, spark, SPARK_SCHEMA_DDL)
     a = dec.select("doc_id", F.hash("tokens").alias("h"))

@@ -194,7 +194,7 @@ def test_spark_roundtrips_and_sentinel_accounting(spark, token_df):
     import pyspark.sql.functions as F
 
     from tbl_spark.datagen import SPARK_SCHEMA_DDL
-    from tbl_spark.decode import decode_chunks, decode_chunks_colocated
+    from tbl_spark.decode import decode_chunks_colocated
     from tbl_spark.encode import audition_codec_hints, encode_chunks
     hints = audition_codec_hints(token_df)
     chunks = encode_chunks(token_df, 8, codec_hints=hints)
@@ -212,7 +212,12 @@ def test_spark_roundtrips_and_sentinel_accounting(spark, token_df):
     want = _row_hash(token_df)
     assert _row_hash(decode_chunks_colocated(chunks,
                                              SPARK_SCHEMA_DDL)) == want
-    assert _row_hash(decode_chunks(chunks, SPARK_SCHEMA_DDL)) == want
+    # a cached copy takes the coalescing path; its sentinel rows come
+    # along and are dropped there too
+    cached = chunks.cache()
+    assert _row_hash(decode_chunks_colocated(cached,
+                                             SPARK_SCHEMA_DDL)) == want
+    cached.unpersist()
 
 
 def test_parquet_reload_decodes_via_sentinel_rows(spark, token_df,
@@ -312,7 +317,7 @@ def test_side_stream_shared_tables_roundtrip_at_scale(spark):
     import pyspark.sql.functions as F
 
     from tbl_spark.datagen import SPARK_SCHEMA_DDL, generate_df
-    from tbl_spark.decode import decode_chunks
+    from tbl_spark.decode import decode_chunks_colocated
     from tbl_spark.encode import audition_codec_hints, encode_chunks
 
     df = generate_df(spark, 36_000, 32).cache()
@@ -331,7 +336,7 @@ def test_side_stream_shared_tables_roundtrip_at_scale(spark):
                    enc.where("part_id >= 0 AND column = 'n_tok'")
                    .select("codec").distinct().collect()}
     assert ntok_codecs == {"rans_shared"}, ntok_codecs
-    back = decode_chunks(enc, SPARK_SCHEMA_DDL)
+    back = decode_chunks_colocated(enc, SPARK_SCHEMA_DDL)
     mism = (df.alias("x").join(back.alias("y"), "doc_id")
             .where("x.n_tok != y.n_tok OR x.tokens != y.tokens "
                    "OR x.source != y.source").count())

@@ -7,7 +7,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from tbl_spark.datagen import SPARK_SCHEMA_DDL, generate_df, write_token_table
-from tbl_spark.decode import decode_chunks
+from tbl_spark.decode import decode_chunks_colocated
 from tbl_spark.encode import encode_chunks
 from tbl_spark.partitioning import probe_skew, with_part_id
 
@@ -30,7 +30,7 @@ def chunks(spark, token_df):
 
 
 def test_roundtrip_bit_identical(spark, token_df, chunks):
-    decoded = decode_chunks(chunks, SPARK_SCHEMA_DDL)
+    decoded = decode_chunks_colocated(chunks, SPARK_SCHEMA_DDL)
     src = token_df
     j = src.alias("a").join(decoded.alias("b"), "doc_id", "full_outer")
     n_total = j.count()
@@ -80,7 +80,7 @@ def test_decode_column_pruning(spark, chunks):
     """Decoding a projection must not decode unrelated columns: filter the
     chunk table down to the needed columns first (scan-level pruning)."""
     two = chunks.filter(F.col("column").isin("doc_id", "n_tok"))
-    decoded = decode_chunks(two, "doc_id string, n_tok int")
+    decoded = decode_chunks_colocated(two, "doc_id string, n_tok int")
     row = decoded.agg(F.sum("n_tok").alias("s"),
                       F.count("*").alias("n")).collect()[0]
     assert row["n"] == N_DOCS and row["s"] > 0

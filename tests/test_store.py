@@ -2,9 +2,11 @@
 after k partitions (simulated by a partial manifest), re-run, assert
 committed partitions are not recomputed and the final decode is identical."""
 
+import json
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from tbl_spark.datagen import SPARK_SCHEMA_DDL, generate_df
 from tbl_spark.store import ChunkStore, decode_from_store, encode_to_store
@@ -73,6 +75,24 @@ def test_crash_between_chunk_and_manifest_is_safe(spark, tmp_path):
     assert decoded.count() == N_DOCS
 
 
+def test_orphan_chunk_file_is_not_decoded(spark, tmp_path):
+    """A chunk file whose manifest marker never landed is not committed:
+    decode and the stats leave it out alike, until a resume commits it."""
+    from tbl_spark.inspect import store_stats
+    store = ChunkStore(str(tmp_path / "store"))
+    df = generate_df(spark, 1000, 2)
+    encode_to_store(df, store, 4)
+    victim = sorted(store.committed_parts())[0]
+    os.remove(os.path.join(store.manifest_dir, f"part-{victim:05d}.json"))
+    rows = store_stats(store)["rows"]
+    assert 0 < rows < 1000
+    assert decode_from_store(store, spark).count() == rows
+    assert victim not in {p for units in store.data_files().values()
+                          for _, p in units}
+    encode_to_store(df, store, 4)
+    assert decode_from_store(store, spark).count() == 1000
+
+
 def test_manifest_lineage_content(spark, tmp_path):
     store = ChunkStore(str(tmp_path / "store"))
     encode_to_store(generate_df(spark, 1000, 2), store, 4)
@@ -104,10 +124,17 @@ def test_metrics_df_and_column_pruned_decode(spark, tmp_path):
     store = ChunkStore(str(tmp_path / "store"))
     df = generate_df(spark, 1500, 2)
     encode_to_store(df, store, 4)
-    m = store.metrics_df(spark).collect()
-    assert len(m) == 4
-    assert all(r.ratio > 1.0 and r.tokens_per_sec > 0
-               and 0 < r.bytes_per_token < 4 for r in m)
+    # per-part ratio and bytes/token, rolled up from the stats rows
+    parts: dict[int, dict] = {}
+    for r in store.stats_table().to_pylist():
+        p = parts.setdefault(r["part_id"],
+                             {"raw": 0, "enc": 0, "n_values": 0})
+        p["raw"] += r["raw_bytes"]
+        p["enc"] += r["enc_bytes"]
+        p["n_values"] = max(p["n_values"], r["n_values"])
+    assert len(parts) == 4
+    assert all(p["raw"] / p["enc"] > 1.0
+               and 0 < p["enc"] / p["n_values"] < 4 for p in parts.values())
     pruned = decode_from_store(store, spark, SPARK_SCHEMA_DDL,
                                columns=["doc_id", "n_tok"])
     assert pruned.columns == ["doc_id", "n_tok"]
@@ -155,8 +182,8 @@ def test_compaction_wave_files(spark, tmp_path):
 
 
 def test_wave_row_groups_carry_only_part_id_stats(spark, tmp_path):
-    """Decode pushes down only part_id, so wave files keep row-group
-    min/max for part_id and write none for the other columns, no
+    """Wave files keep row-group min/max for part_id (the part a row
+    group holds) and write none for the other columns, no
     dictionary pages and no Arrow schema; stats sidecars keep no
     statistics. Zone pruning and decode still work from these files."""
     import pyarrow.parquet as pq
@@ -225,3 +252,54 @@ def test_distributed_compaction_runs_one_stage_of_one_wave_per_task(
         & (F.col("a.n_tok") == F.col("b.n_tok"))
         & (F.col("a.source") == F.col("b.source"))).count()
     assert n == 2000
+
+
+def _checksum(df, cols=("doc_id", "tokens", "n_tok", "source")):
+    return df.agg(F.count(F.lit(1)),
+                  F.sum(F.xxhash64(*cols).cast("decimal(38,0)"))).first()
+
+
+def test_mixed_waves_and_loose_parts_decode_bit_exactly(spark, tmp_path):
+    """A store of waves (one with a pre-r2 absolute `file` path) and loose
+    part files decodes to the source, in full, projected and selective."""
+    store = ChunkStore(str(tmp_path / "store"))
+    df = generate_df(spark, 2000, 4)
+    encode_to_store(df, store, 10)
+    assert store.compact(wave_size=3) == 3     # 3 waves + 1 loose part
+    path = os.path.join(store.manifest_dir, "wave-000001.json")
+    with open(path) as f:
+        wave = json.load(f)
+    wave["file"] = os.path.join(os.path.abspath(store.root), "waves",
+                                wave["file"])
+    with open(path, "w") as f:
+        json.dump(wave, f)
+    files = store.data_files()
+    assert sum("chunks" in f for f in files) == 1
+    assert sorted(p for units in files.values() for _, p in units) == \
+        list(range(10))
+    assert _checksum(decode_from_store(store, spark)) == _checksum(df)
+    assert _checksum(decode_from_store(store, spark,
+                                       columns=["n_tok", "source"]),
+                     ["n_tok", "source"]) == \
+        _checksum(df, ["n_tok", "source"])
+    got = decode_from_store(store, spark, predicate=["n_tok>=300",
+                                                     "n_tok<700"])
+    assert _checksum(got) == _checksum(
+        df.filter((F.col("n_tok") >= 300) & (F.col("n_tok") < 700)))
+
+
+def test_row_group_of_another_part_raises(spark, tmp_path):
+    """A wave manifest whose part order disagrees with its file's row
+    groups fails the decode instead of returning rows under the wrong
+    part."""
+    store = ChunkStore(str(tmp_path / "store"))
+    encode_to_store(generate_df(spark, 400, 2), store, 2)
+    assert store.compact(wave_size=2) == 1
+    path = os.path.join(store.manifest_dir, "wave-000000.json")
+    with open(path) as f:
+        wave = json.load(f)
+    wave["parts"] = wave["parts"][::-1]
+    with open(path, "w") as f:
+        json.dump(wave, f)
+    with pytest.raises(Exception, match="planned part"):
+        decode_from_store(store, spark).count()

@@ -75,9 +75,9 @@ def main() -> None:
         decoded.count()  # materialize an executed plan with AQE resolved
         section(md, "Decode from chunk store",
                 decoded,
-                "ZERO Exchanges: each committed chunk file holds one "
-                "part, so rows per part are contiguous within a scan "
-                "partition and mapInArrow streams them back.")
+                "ZERO Exchanges and no file scan: the driver lists each "
+                "part's (file, row group) in a LocalTableScan, and one "
+                "mapInArrow opens its row groups and decodes them.")
 
     from tbl_spark.decode import decode_chunks_colocated
     rt = decode_chunks_colocated(encode_chunks(df, 8, codec_hints={}),
@@ -150,8 +150,8 @@ def main() -> None:
 
     # zone-pruned store decode: build a small value-clustered store and
     # decode with a predicate — pruning happens DRIVER-side (manifest
-    # scan) before the plan exists, so the evidence is the file count
-    # the scan receives, not a plan node.
+    # scan) before the plan exists, so the evidence is the units the
+    # plan's LocalTableScan holds, not a plan node.
     from tbl_spark.datagen import SPARK_SCHEMA_DDL, write_token_table
     from tbl_spark.store import (ChunkStore, decode_from_store,
                                  encode_to_store_colocated,
@@ -185,8 +185,8 @@ def main() -> None:
                               predicate=pred),
             f"Manifest zone maps kept {len(kept)} of {total} chunks for "
             f"`{pred}` BEFORE any file was opened (driver-side metadata "
-            "scan); the plan below reads only surviving files, filters "
-            "part_id via parquet row-group stats inside waves, and "
+            "scan); the plan below lists only the surviving parts' "
+            "(file, row group) units in its LocalTableScan, and "
             "re-applies the exact predicate after the zero-shuffle "
             "decode.")
 

@@ -5,7 +5,8 @@
 Builds a small seeded token store (the perfbench ``tokens_scan`` shape: 8
 salted parts, compacted in waves of 2, from ``DOCS`` documents of seed
 ``SEED``), then runs a ``mapInArrow`` that yields nothing over the
-store's chunk rows (the per-task Spark and Python-worker floor), a full
+store's decode-unit frame (the per-task Spark and Python-worker floor
+that a store decode pays before it opens a file), a full
 decode, a projected decode (``n_tok, source``), a selective decode
 (perfbench's predicate shape: ``n_tok>=`` the ``SELECTIVE_Q`` quantile,
 inside perfbench's 0.990-0.998 draw), a salted encode, a colocated encode (perfbench's ``ingest_colocated`` op: chunks of
@@ -118,7 +119,8 @@ def main() -> int:
     from tbl_spark.encode import audition_codec_hints
     from tbl_spark.session import get_spark
     from tbl_spark.store import (ChunkStore, decode_from_store,
-                                 encode_to_store, encode_to_store_colocated)
+                                 encode_to_store, encode_to_store_colocated,
+                                 unit_frame)
 
     cores = len(os.sched_getaffinity(0))
     spark = get_spark(cores=cores, shuffle_partitions=4 * cores)
@@ -168,10 +170,12 @@ def main() -> int:
             yield from ()
 
         calls = {
-            # the per-task Spark + Python floor: read every chunk row,
-            # hand it to a Python worker, return nothing
-            "noop_map": lambda: store.read_chunks(spark).mapInArrow(
-                noop, "part_id int").collect(),
+            # the per-task Spark + Python floor of a store decode: hand
+            # every (file, row group) unit to a Python worker, read
+            # nothing, return nothing
+            "noop_map": lambda: unit_frame(
+                spark, store.data_files()).mapInArrow(
+                    noop, "part_id int").collect(),
             "full_decode": lambda: checksum(
                 ["doc_id", "tokens", "n_tok", "source"]),
             "projected_decode": lambda: checksum(
