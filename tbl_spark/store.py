@@ -30,6 +30,7 @@ from __future__ import annotations
 import contextlib
 import json
 import logging
+import math
 import os
 import time
 import uuid
@@ -41,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .codecs.core import Plan, plan_from_json, plan_to_json
 from .encode import audition_codec_hints, encode_table
-from .partitioning import PART_COL, with_part_id
+from .partitioning import PART_COL, parse_size, with_part_id
 
 log = logging.getLogger("tbl_spark")
 
@@ -123,13 +124,16 @@ def _widen_num(v, up: bool) -> float | None:
         if (d < v) == up else d
 
 
+def _manifest_columns(manifest: dict) -> dict[str, dict]:
+    """A part manifest's per-column entries (held as a JSON string)."""
+    cols = manifest["columns"]
+    return json.loads(cols) if isinstance(cols, str) else cols
+
+
 def _manifest_stats_rows(manifest: dict) -> list[dict]:
     """Flatten one part manifest into STATS_SCHEMA rows."""
-    cols = manifest["columns"]
-    if isinstance(cols, str):
-        cols = json.loads(cols)
     rows = []
-    for name, c in cols.items():
+    for name, c in _manifest_columns(manifest).items():
         st = c.get("stats") or {}
         kind = st.get("kind")
         lo, hi = st.get("min"), st.get("max")
@@ -484,20 +488,44 @@ class ChunkStore:
         part), so the units come from metadata alone. With `parts` (zone
         pruning) only the listed parts' units are kept, and a file none of
         whose parts survive is left out."""
+        return self.decode_units(parts)[0]
+
+    def decode_units(self, parts: set[int] | None = None,
+                     columns: list[str] | tuple[str, ...] = ()
+                     ) -> tuple[dict[str, list[tuple[int, int]]], int]:
+        """`data_files(parts)`, and the `enc_bytes` of `columns` summed over
+        the listed parts: the blob bytes a decode of those columns
+        decodes. Wave manifests embed their parts' manifests, so waves
+        cost no extra read; loose part manifests are read only when
+        `columns` is given."""
+        wanted = set(columns)
+
+        def nbytes(manifest: dict) -> int:
+            return sum(c.get("enc_bytes") or 0 for name, c in
+                       _manifest_columns(manifest).items() if name in wanted)
         waves = self.waves()
         covered = {p for w in waves for p in w["parts"]}
         files: dict[str, list[tuple[int, int]]] = {}
+        total = 0
         for w in waves:
             units = [(rg, p) for rg, p in enumerate(w["parts"])
                      if parts is None or p in parts]
             if units:  # pre-r2 manifests hold an absolute path
                 files[w["file"] if os.path.isabs(w["file"])
                       else os.path.join(self.root, "waves", w["file"])] = units
+                if wanted:
+                    total += sum(nbytes(m) for m in w["manifests"]
+                                 if parts is None or m["part_id"] in parts)
         for pid in sorted(self._loose_parts() - covered):
             if parts is None or pid in parts:
-                files[os.path.join(self.chunks_dir,
-                                   f"part-{pid:05d}.parquet")] = [(0, pid)]
-        return files
+                name = f"part-{pid:05d}"
+                files[os.path.join(self.chunks_dir, f"{name}.parquet")] = \
+                    [(0, pid)]
+                if wanted:
+                    with open(os.path.join(self.manifest_dir,
+                                           f"{name}.json")) as f:
+                        total += nbytes(json.load(f))
+        return files, total
 
     def manifest_rows(self) -> list[dict]:
         """Per-part manifests — loose part files plus wave-embedded ones."""
@@ -1137,12 +1165,17 @@ def decode_from_store(store: ChunkStore, spark: SparkSession,
     comparisons, AND'd like the reference's chained --filter
     (transform.rs:146-155) — prunes whole parts via the zone-map stats
     (predicate pushdown to the store's metadata layer; effective when the
-    data is value-clustered across parts), and `ChunkStore.data_files`
-    lists the surviving parts' (file, row group) units. One mapInArrow over
-    the unit frame then decodes them (`decode.decode_row_groups`):
-    `columns` keeps only the requested columns' chunk rows, so the other
-    blobs are never decoded. The exact filters run on the decoded rows.
-    Nothing here runs a Spark job: the first one is the caller's action.
+    data is value-clustered across parts), and `ChunkStore.decode_units`
+    lists the surviving parts' (file, row group) units with the blob
+    bytes they hold for the decoded columns. Those bytes size the decode
+    like a Spark file scan (`decode_tasks`), so a small store decodes in
+    one task and an aggregate over it needs no shuffle. One mapInArrow
+    over the unit frame then decodes the units
+    (`decode.decode_row_groups`): `columns` keeps only the requested
+    columns' chunk rows, so the other blobs are never decoded. The exact
+    filters run on the decoded rows. An unknown column in `columns` or
+    in a predicate, or an empty `columns`, raises ValueError. Nothing
+    here runs a Spark job: the first one is the caller's action.
     Executors must see the store's filesystem, as the write protocol
     already assumes."""
     from pyspark.sql.types import StructType
@@ -1158,22 +1191,30 @@ def decode_from_store(store: ChunkStore, spark: SparkSession,
         else output_ddl
     predicates = [predicate] if isinstance(predicate, str) \
         else list(predicate or [])
+    filter_cols = [parse_zone_predicate(p)[0] for p in predicates]
+    names = [f.name for f in schema.fields]
+    if columns is not None:
+        columns = list(columns)
+    unknown = [c for c in [*(columns or []), *filter_cols] if c not in names]
+    if unknown or columns == []:
+        what = f"unknown column(s) {list(dict.fromkeys(unknown))}" \
+            if unknown else "columns=[] selects no column"
+        raise ValueError(f"{what}; store {store.root} has columns {names}")
     keep_parts = None
     drop_after = []
     if predicates:
         utc = spark.conf.get("spark.sql.session.timeZone") in _UTC_NAMES
         keep_parts = zone_prune_parts(store, predicates, utc_session=utc)
     if columns is not None:
-        columns = list(columns)
-        for p in predicates:
-            name = parse_zone_predicate(p)[0]
+        for name in filter_cols:
             if name not in columns:
                 columns.append(name)  # needed for the exact filter
                 drop_after.append(name)
         schema = StructType([f for f in schema.fields if f.name in columns])
-    files = store.data_files(keep_parts)
+    files, nbytes = store.decode_units(keep_parts,
+                                       [f.name for f in schema.fields])
     if files:
-        decoded = decode_row_groups(unit_frame(spark, files), schema,
+        decoded = decode_row_groups(unit_frame(spark, files, nbytes), schema,
                                     store.read_shared_tables())
     elif keep_parts is not None:
         # a predicate can legitimately prune everything: an empty frame of
@@ -1194,20 +1235,45 @@ def decode_from_store(store: ChunkStore, spark: SparkSession,
     return decoded
 
 
+def decode_tasks(nbytes: int, units: int, parallelism: int,
+                 max_partition_bytes: int, open_cost: int) -> int:
+    """Tasks for a decode of `nbytes` blob bytes in `units` row groups.
+
+    The split size is a Spark file scan's: min(maxPartitionBytes,
+    max(openCostInBytes, nbytes / parallelism)). No open cost is added
+    per file: a task opens each of its files once, and what fewer tasks
+    save is Spark's fixed cost per task, not file opens. The count is
+    capped at one task per unit and per core, and is at least one."""
+    split = max(1, min(max_partition_bytes,
+                       max(open_cost, nbytes / parallelism)))
+    return max(1, min(parallelism, units, math.ceil(nbytes / split)))
+
+
 UNIT_DDL = "file string, row_group int, part_id bigint"
 
 
 def unit_frame(spark: SparkSession,
-               files: dict[str, list[tuple[int, int]]]) -> DataFrame:
+               files: dict[str, list[tuple[int, int]]],
+               nbytes: int) -> DataFrame:
     """One row per (file, row group, part id) decode unit of `files`
-    (`ChunkStore.data_files`), in file order. Built from an Arrow table,
-    so Spark reads it in the JVM (LocalTableScan) and slices its rows
-    into min(units, defaultParallelism) tasks, as compaction's plan frame
-    is. Paths are made absolute so that a relative store root means the
-    same file in every Python worker."""
+    (`ChunkStore.decode_units`), in file order, in `decode_tasks`
+    partitions for the `nbytes` blob bytes the units decode, sized from
+    the session's `spark.sql.files.maxPartitionBytes` and
+    `openCostInBytes`. Built from an Arrow table, so Spark reads it in
+    the JVM (LocalTableScan, sliced into min(units, defaultParallelism)
+    partitions) and coalesces it without a shuffle. A coalesce to one
+    partition is planned as a single partition, so a global aggregate
+    over the decoded rows runs in the decode's own stage. Paths are made
+    absolute so that a relative store root means the same file in every
+    Python worker."""
     units = [(os.path.abspath(f), rg, p)
              for f, file_units in files.items() for rg, p in file_units]
+    tasks = decode_tasks(
+        nbytes, len(units), spark.sparkContext.defaultParallelism,
+        parse_size(spark.conf.get("spark.sql.files.maxPartitionBytes")),
+        parse_size(spark.conf.get("spark.sql.files.openCostInBytes")))
     return spark.createDataFrame(pa.table({
         "file": pa.array([u[0] for u in units], pa.string()),
         "row_group": pa.array([u[1] for u in units], pa.int32()),
-        "part_id": pa.array([u[2] for u in units], pa.int64())}), UNIT_DDL)
+        "part_id": pa.array([u[2] for u in units], pa.int64())}),
+        UNIT_DDL).coalesce(tasks)

@@ -214,31 +214,36 @@ def test_wave_row_groups_carry_only_part_id_stats(spark, tmp_path):
     assert decoded.count() == 600
 
 
-def test_distributed_compaction_runs_one_stage_of_one_wave_per_task(
-        spark, tmp_path):
-    """The plan frame is a LocalTableScan that Spark already slices into
-    one wave per task, so a distributed compaction runs one job of one
-    stage with no shuffle, and every wave gets its own task."""
+def _job_counts(spark, action):
+    """(result, jobs, stages, tasks) of `action()` run under its own job
+    group, read from the status tracker."""
     import uuid
-
-    store = ChunkStore(str(tmp_path / "store"))
-    df = generate_df(spark, 2000, 4)
-    encode_to_store(df, store, 8)
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    group = f"compact-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, "distributed compaction")
+    group = f"job-counts-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
     try:
-        assert store.compact(2, spark=spark) == 4
+        out = action()
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description",
                     "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
     jobs = tracker.getJobIdsForGroup(group)
-    assert len(jobs) == 1, jobs
-    stages = tracker.getJobInfo(jobs[0]).stageIds
-    assert len(stages) == 1, stages
-    assert tracker.getStageInfo(stages[0]).numTasks == 4
+    stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
+    return (out, len(jobs), len(stages),
+            sum(tracker.getStageInfo(s).numTasks for s in stages))
+
+
+def test_distributed_compaction_runs_one_stage_of_one_wave_per_task(
+        spark, tmp_path):
+    """The plan frame is a LocalTableScan that Spark already slices into
+    one wave per task, so a distributed compaction runs one job of one
+    stage with no shuffle, and every wave gets its own task."""
+    store = ChunkStore(str(tmp_path / "store"))
+    df = generate_df(spark, 2000, 4)
+    encode_to_store(df, store, 8)
+    assert _job_counts(spark, lambda: store.compact(2, spark=spark)) == \
+        (4, 1, 1, 4)
 
     waves = store.waves()
     assert sorted(len(w["parts"]) for w in waves) == [2, 2, 2, 2]
@@ -303,3 +308,101 @@ def test_row_group_of_another_part_raises(spark, tmp_path):
         json.dump(wave, f)
     with pytest.raises(Exception, match="planned part"):
         decode_from_store(store, spark).count()
+
+
+def test_small_store_decodes_in_one_task_with_no_shuffle(spark, tmp_path):
+    """A perfbench-shaped store (8 parts in 4 waves, well under one split)
+    decodes in one task, and the checksum aggregate over it runs in that
+    task's stage: full, projected and selective decodes are each one job
+    of one stage of one task, and their checksums equal the source's."""
+    store = ChunkStore(str(tmp_path / "store"))
+    df = generate_df(spark, 2000, 4)
+    encode_to_store(df, store, 8)
+    assert store.compact(2, spark=spark) == 4
+    full = ["doc_id", "tokens", "n_tok", "source"]
+    cond = F.col("n_tok") >= 500
+    for kw, cols, src in (({}, full, df),
+                          ({"columns": ["n_tok", "source"]},
+                           ["n_tok", "source"], df),
+                          ({"predicate": "n_tok>=500"}, full,
+                           df.filter(cond))):
+        decoded = decode_from_store(store, spark, **kw)
+        got, jobs, stages, tasks = _job_counts(
+            spark, lambda: _checksum(decoded, cols))
+        assert (jobs, stages, tasks) == (1, 1, 1), kw
+        assert got == _checksum(src, cols), kw
+        plan = decoded.agg(F.count(F.lit(1)))._jdf.queryExecution() \
+            .executedPlan().toString()
+        assert "Exchange" not in plan and "Coalesce 1" in plan, kw
+
+
+def test_decode_tasks_follow_bytes_under_a_small_split(spark, tmp_path):
+    """With maxPartitionBytes below the store's blob bytes, a store of
+    waves plus loose parts decodes in min(defaultParallelism,
+    ceil(bytes / split)) tasks, counted from the decoded columns' enc_bytes
+    in the manifests, and still matches the source."""
+    import math
+    store = ChunkStore(str(tmp_path / "store"))
+    df = generate_df(spark, 2000, 4)
+    encode_to_store(df, store, 10)
+    assert store.compact(wave_size=3) == 3     # 3 waves + 1 loose part
+    full = ["doc_id", "tokens", "n_tok", "source"]
+    files, nbytes = store.decode_units(None, full)
+    assert files == store.data_files()
+    stats = store.stats_table().to_pylist()
+    assert nbytes == sum(r["enc_bytes"] for r in stats)
+    _, n_tok_bytes = store.decode_units({0, 9}, ["n_tok"])  # wave + loose
+    assert n_tok_bytes == sum(r["enc_bytes"] for r in stats
+                              if r["part_id"] in (0, 9)
+                              and r["column"] == "n_tok")
+    split = nbytes // 3 + 1
+    want = min(spark.sparkContext.defaultParallelism,
+               math.ceil(nbytes / split))
+    assert want == 3
+    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
+    try:
+        decoded = decode_from_store(store, spark)
+        assert decoded.rdd.getNumPartitions() == want
+        assert decoded.select(F.spark_partition_id()).distinct() \
+            .count() == want
+        assert _checksum(decoded) == _checksum(df)
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+
+
+@pytest.mark.parametrize("nbytes,units,parallelism,max_split,open_cost,want", [
+    (0, 8, 4, 2 << 20, 4 << 20, 1),              # empty parts
+    (0, 8, 4, 2 << 20, 0, 1),                    # no open cost either
+    (1 << 20, 8, 4, 2 << 20, 4 << 20, 1),        # perfbench's store
+    (10 << 30, 500, 1, 128 << 20, 4 << 20, 1),   # defaultParallelism=1
+    (10 << 20, 8, 4, 128 << 20, 4 << 20, 3),     # split = openCostInBytes
+    (40 << 20, 8, 4, 128 << 20, 4 << 20, 4),     # split = bytes / cores
+    (80 << 20, 64, 4, 2 << 20, 4 << 20, 4),      # > cores × split: capped
+    (80 << 20, 2, 4, 2 << 20, 4 << 20, 2),       # one task per unit at most
+])
+def test_decode_tasks_sizing(nbytes, units, parallelism, max_split,
+                             open_cost, want):
+    from tbl_spark.store import decode_tasks
+    assert decode_tasks(nbytes, units, parallelism, max_split,
+                        open_cost) == want
+
+
+@pytest.mark.parametrize("kw", [
+    {"columns": ["nope"]},
+    {"columns": ["n_tok", "nope"]},
+    {"columns": []},
+    {"predicate": "nope>=3"},
+    {"columns": ["n_tok"], "predicate": ["n_tok>=1", "nope<3"]},
+])
+def test_unknown_or_no_columns_raise(spark, tmp_path, kw):
+    """A projection or predicate naming a column the store lacks, or an
+    empty projection, raises ValueError naming the unknown column and the
+    store's columns instead of returning an empty or narrowed frame."""
+    store = ChunkStore(str(tmp_path / "store"))
+    encode_to_store(generate_df(spark, 200, 2), store, 2)
+    with pytest.raises(ValueError) as err:
+        decode_from_store(store, spark, **kw).count()
+    msg = str(err.value)
+    assert ("'nope'" in msg) == (kw.get("columns") != [])
+    assert "['doc_id', 'tokens', 'n_tok', 'source']" in msg

@@ -2,7 +2,8 @@
 as evidence of the scale properties claimed in README/COVERAGE:
 
 - encode: exactly ONE Exchange (the salted part_id shuffle)
-- decode from store: NO Exchange (zero-shuffle streaming decode)
+- decode from store: NO Exchange (zero-shuffle streaming decode), and
+  none under a checksum aggregate of a one-task decode
 - transform queries: filter/projection pushed into the parquet scan
 - dedup minhash: partial aggregation before the exchange
 """
@@ -71,13 +72,20 @@ def main() -> None:
     with tempfile.TemporaryDirectory() as tmp:
         store = ChunkStore(tmp)
         encode_to_store(df, store, 8)
+        import pyspark.sql.functions as F
         decoded = decode_from_store(store, spark, SPARK_SCHEMA_DDL)
-        decoded.count()  # materialize an executed plan with AQE resolved
-        section(md, "Decode from chunk store",
-                decoded,
+        checked = decoded.agg(F.count(F.lit(1)), F.sum(
+            F.xxhash64(*decoded.columns).cast("decimal(38,0)")))
+        checked.collect()  # materialize an executed plan with AQE resolved
+        section(md, "Decode from chunk store (checksum aggregate)",
+                checked,
                 "ZERO Exchanges and no file scan: the driver lists each "
-                "part's (file, row group) in a LocalTableScan, and one "
-                "mapInArrow opens its row groups and decodes them.")
+                "part's (file, row group) in a LocalTableScan, coalesced "
+                "to as many tasks as the decoded blob bytes need at the "
+                "session's file-scan split size (one for this store), and "
+                "one mapInArrow opens its row groups and decodes them. A "
+                "coalesce to one partition is a single partition, so the "
+                "global aggregate above the decode needs no Exchange.")
 
     from tbl_spark.decode import decode_chunks_colocated
     rt = decode_chunks_colocated(encode_chunks(df, 8, codec_hints={}),

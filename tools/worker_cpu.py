@@ -4,9 +4,10 @@
 
 Builds a small seeded token store (the perfbench ``tokens_scan`` shape: 8
 salted parts, compacted in waves of 2, from ``DOCS`` documents of seed
-``SEED``), then runs a ``mapInArrow`` that yields nothing over the
-store's decode-unit frame (the per-task Spark and Python-worker floor
-that a store decode pays before it opens a file), a full
+``SEED``), then runs a ``mapInArrow`` that yields nothing over a full
+decode's unit frame, coalesced to the tasks that decode plans (the
+per-task Spark and Python-worker floor that a store decode pays before
+it opens a file), a full
 decode, a projected decode (``n_tok, source``), a selective decode
 (perfbench's predicate shape: ``n_tok>=`` the ``SELECTIVE_Q`` quantile,
 inside perfbench's 0.990-0.998 draw), a salted encode, a colocated encode (perfbench's ``ingest_colocated`` op: chunks of
@@ -15,7 +16,9 @@ auditions its own), the driver-side audition of the encode plan, a
 compaction of a fresh copy of the uncompacted store, and a resume of a
 copy that lost half its parts (perfbench's ``resume`` op, which passes no
 plan and so reuses the plan pinned in the store's ``store.json``)
-``REPS`` times each. For every call it prints wall seconds and the CPU
+``REPS`` times each. For every call it prints the Spark jobs, stages
+and tasks it ran (from the status tracker, under a job group per call,
+as perfbench's ``spark_counts`` counts them), wall seconds and the CPU
 seconds (user + system, from ``/proc``) of three process
 classes: the driver (this process), the JVM, and the Python workers
 (every descendant of the JVM, plus what the JVM reaped). perfbench's
@@ -43,7 +46,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from perfbench.run import JVM_OPTS, cpu_s, descendants  # noqa: E402
+from perfbench.run import (JVM_OPTS, cpu_s, descendants,  # noqa: E402
+                           spark_counts)
 
 CLK = os.sysconf("SC_CLK_TCK")
 PARTS = 8       # salted parts, as in perfbench's token stores
@@ -52,6 +56,7 @@ SEED = 1
 REPS = 4
 SELECTIVE_Q = 0.994
 TOKENS_PER_CHUNK = 200_000  # perfbench's colocated chunk size
+COLUMNS = ["doc_id", "tokens", "n_tok", "source"]
 
 
 def _comm(pid: int) -> str:
@@ -85,17 +90,26 @@ def snapshot(jvm: int) -> dict:
             "pids": workers}
 
 
-def measure(jvm: int, fn, prepare=None) -> dict:
-    """Run ``fn(prepare())``, or ``fn()``, and measure only ``fn``."""
+def measure(spark, jvm: int, group: str, fn, prepare=None) -> dict:
+    """Run ``fn(prepare())``, or ``fn()``, under job group ``group``, and
+    measure only ``fn``."""
     args = () if prepare is None else (prepare(),)
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
     before = snapshot(jvm)
     t0 = time.perf_counter()
-    fn(*args)
-    wall = time.perf_counter() - t0
-    after = snapshot(jvm)
+    try:
+        fn(*args)
+    finally:
+        wall = time.perf_counter() - t0
+        after = snapshot(jvm)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
     busy = sorted(p for p, s in after["pids"].items()
                   if s - before["pids"].get(p, 0.0) > 0)
-    return {"wall_s": wall,
+    stages, tasks, _ = spark_counts(spark, [group])
+    return {"jobs": len(sc.statusTracker().getJobIdsForGroup(group)),
+            "stages": stages, "tasks": tasks, "wall_s": wall,
             **{k: after[k] - before[k] for k in ("driver", "jvm", "python")},
             "worker_pids": busy}
 
@@ -171,17 +185,16 @@ def main() -> int:
 
         calls = {
             # the per-task Spark + Python floor of a store decode: hand
-            # every (file, row group) unit to a Python worker, read
-            # nothing, return nothing
+            # every (file, row group) unit to a Python worker in the tasks
+            # a full decode plans, read nothing, return nothing
             "noop_map": lambda: unit_frame(
-                spark, store.data_files()).mapInArrow(
+                spark, *store.decode_units(None, COLUMNS)).mapInArrow(
                     noop, "part_id int").collect(),
-            "full_decode": lambda: checksum(
-                ["doc_id", "tokens", "n_tok", "source"]),
+            "full_decode": lambda: checksum(COLUMNS),
             "projected_decode": lambda: checksum(
                 ["n_tok", "source"], columns=["n_tok", "source"]),
-            "selective_decode": lambda: checksum(
-                ["doc_id", "tokens", "n_tok", "source"], predicate=predicate),
+            "selective_decode": lambda: checksum(COLUMNS,
+                                                 predicate=predicate),
             "salted_encode": (
                 fresh_store,
                 lambda s: encode_to_store(df, s, PARTS, codec_hints=hints)),
@@ -197,23 +210,27 @@ def main() -> int:
             "resume": (lambda: loose_copy(range(0, PARTS, 2)),
                        lambda s: encode_to_store(df, s, PARTS, resume=True)),
         }
-        print(f"{'call':<18}{'rep':>4}{'wall_s':>8}{'driver':>8}"
-              f"{'jvm':>8}{'python':>8}  worker pids")
+        print(f"{'call':<18}{'rep':>4}{'jobs':>5}{'stages':>7}{'tasks':>6}"
+              f"{'wall_s':>8}{'driver':>8}{'jvm':>8}{'python':>8}"
+              "  worker pids")
         summary = {}
         for name, call in calls.items():
             prepare, fn = call if isinstance(call, tuple) else (None, call)
-            reps = [measure(jvm, fn, prepare) for _ in range(REPS)]
+            reps = [measure(spark, jvm, f"{name}-{i}", fn, prepare)
+                    for i in range(REPS)]
             for i, r in enumerate(reps):
-                print(f"{name:<18}{i:>4}{r['wall_s']:>8.2f}"
+                print(f"{name:<18}{i:>4}{r['jobs']:>5}{r['stages']:>7}"
+                      f"{r['tasks']:>6}{r['wall_s']:>8.2f}"
                       f"{r['driver']:>8.2f}{r['jvm']:>8.2f}"
                       f"{r['python']:>8.2f}  {r['worker_pids']}")
             warm = reps[1:] or reps
             summary[name] = {k: round(statistics.median(r[k] for r in warm), 3)
-                             for k in ("wall_s", "driver", "jvm", "python")}
+                             for k in ("jobs", "stages", "tasks", "wall_s",
+                                       "driver", "jvm", "python")}
         print(json.dumps({"seed": SEED, "docs": DOCS,
                           "selective_predicate": predicate,
                           "cores": cores, "python": sys.version.split()[0],
-                          "median_warm_cpu_s": summary}))
+                          "median_warm": summary}))
     finally:
         spark.stop()
         shutil.rmtree(work, ignore_errors=True)
