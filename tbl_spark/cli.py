@@ -502,7 +502,9 @@ def _pipe_source(spark, args):
     """Pipeline-subcommand input: parquet paths, or an encoded chunk
     store decoded through the zero-shuffle path (--store) — the
     curation ops run directly on the compressed corpus, no manual
-    decode step. Returns (df, files) or (None, None) after printing an
+    decode step. The decode keeps its task per row group, up to one per
+    core, even for a small store: the ops' joins and windows would
+    otherwise run in its one task. Returns (df, files) or (None, None) after printing an
     error."""
     if getattr(args, "store", None):
         if args.paths:
@@ -510,8 +512,8 @@ def _pipe_source(spark, args):
                   file=sys.stderr)
             return None, None
         from .store import ChunkStore, decode_from_store
-        return (decode_from_store(ChunkStore(args.store), spark),
-                [args.store])
+        return (decode_from_store(ChunkStore(args.store), spark,
+                                  coalesce_small=False), [args.store])
     if not args.paths:
         print("need parquet paths or --store", file=sys.stderr)
         return None, None
@@ -607,7 +609,7 @@ def main(argv: list[str] | None = None) -> int:
             spark = get_spark()
         waves = store.compact(args.wave_size, spark=spark, plans=plans)
         print(json.dumps({"waves_written": waves,
-                          "data_files": len(store.data_files())}))
+                          "data_files": len(store.decode_units()[0])}))
         return 0
 
     if args.cmd == "stats":
@@ -948,7 +950,8 @@ def main(argv: list[str] | None = None) -> int:
         src = spark.read.parquet(*discover(args.paths, args.tree))
         ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                         for f in src.schema.fields)
-        dec = decode_from_store(ChunkStore(args.store), spark, ddl)
+        dec = decode_from_store(ChunkStore(args.store), spark, ddl,
+                                coalesce_small=False)
         eq = functools.reduce(
             lambda a, b: a & b,
             [(F.col(f"a.{c}") == F.col(f"b.{c}"))
@@ -1029,9 +1032,11 @@ def main(argv: list[str] | None = None) -> int:
                   file=sys.stderr)
             return 1
         else:
+            # --output writes a file per task: keep a task per row
+            # group, up to one per core
             out = decode_from_store(
                 ChunkStore(args.store), spark, args.schema,
-                columns=cols, predicate=args.where)
+                columns=cols, predicate=args.where, coalesce_small=False)
         if args.output:
             out.write.mode("overwrite").parquet(args.output)
         else:

@@ -3,8 +3,8 @@
 Inverse of encode.py. `decode_table` turns all chunk rows of one part into
 its Arrow table; two zero-shuffle mapInArrow decodes feed it.
 `decode_row_groups` is the store read: each task opens the (file, row
-group) units the driver planned and sized by their bytes
-(store.decode_from_store), one part per row group. `decode_chunks_colocated` decodes an in-flight or cached chunk
+group) units the driver planned (store.decode_from_store), one part per
+row group. `decode_chunks_colocated` decodes an in-flight or cached chunk
 DataFrame whose parts are contiguous.
 Row order within a chunk is preserved column-to-column (all columns of a
 chunk were encoded from one aligned Arrow table), so positional zip
@@ -116,11 +116,12 @@ _READ_COLUMNS = ["part_id", "column", "codec", "blob", "spark_type"]
 def decode_row_groups(unit_df: DataFrame, schema,
                       shared_tables: dict[int, bytes]) -> DataFrame:
     """Decode the (file, row group, part id) units of `unit_df`
-    (store.unit_frame, already in the tasks its blob bytes need) with one
+    (store.unit_frame, in one task when its blob bytes are few) with one
     mapInArrow and no shuffle. Each task opens each of its files once and
-    reads its row groups, each holding one part's chunk rows. Only the chunk rows of `schema`'s columns are
-    decoded. A row group that holds rows of another part than the one
-    planned raises: the wave manifest and its file disagree."""
+    reads its row groups, each holding one part's chunk rows. Only the
+    chunk rows of `schema`'s columns are decoded. A row group that holds
+    rows of another part than the one planned raises: the wave manifest
+    and its file disagree."""
     import pyarrow.compute as pc
     column_order = [f.name for f in schema.fields]
     wanted = pa.array(column_order, pa.string())

@@ -30,7 +30,6 @@ from __future__ import annotations
 import contextlib
 import json
 import logging
-import math
 import os
 import time
 import uuid
@@ -42,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .codecs.core import Plan, plan_from_json, plan_to_json
 from .encode import audition_codec_hints, encode_table
-from .partitioning import PART_COL, parse_size, with_part_id
+from .partitioning import PART_COL, with_part_id
 
 log = logging.getLogger("tbl_spark")
 
@@ -392,7 +391,7 @@ class ChunkStore:
     # coalesces committed chunk files into WAVE files — one parquet row
     # group per part, written in the order the wave manifest lists its
     # parts, because a (file, row group) is the unit a decode task reads
-    # (data_files plans them from the manifest alone). Commit protocol
+    # (decode_units plans them from the manifest alone). Commit protocol
     # mirrors Iceberg compaction: the wave manifest rename is the commit
     # point; covered per-part files are deleted only after it, and readers
     # always exclude covered part files, so a crash at any step leaves a
@@ -475,29 +474,23 @@ class ChunkStore:
 
     # -- readers ------------------------------------------------------------
 
-    def data_files(self, parts: set[int] | None = None
-                   ) -> dict[str, list[tuple[int, int]]]:
-        """Committed data files, each with its (row group, part id) decode
-        units: wave files plus the part files of loose commit markers not
-        covered by a wave. A part file without its marker (a crash between
-        the two renames) is not committed and is not listed; covered part
-        files may transiently exist mid-cleanup and are not listed either.
-
-        A wave manifest lists its parts in row-group order and a loose part
-        file is one row group (pyarrow writes a row group even for an empty
-        part), so the units come from metadata alone. With `parts` (zone
-        pruning) only the listed parts' units are kept, and a file none of
-        whose parts survive is left out."""
-        return self.decode_units(parts)[0]
-
     def decode_units(self, parts: set[int] | None = None,
                      columns: list[str] | tuple[str, ...] = ()
                      ) -> tuple[dict[str, list[tuple[int, int]]], int]:
-        """`data_files(parts)`, and the `enc_bytes` of `columns` summed over
-        the listed parts: the blob bytes a decode of those columns
-        decodes. Wave manifests embed their parts' manifests, so waves
-        cost no extra read; loose part manifests are read only when
-        `columns` is given."""
+        """Committed data files, each with its (row group, part id) decode
+        units, and the `enc_bytes` of `columns` summed over those units:
+        the blob bytes a decode of those columns decodes. The files are
+        wave files plus the part files of loose commit markers not covered
+        by a wave. A part file without its marker (a crash between the two
+        renames) is not committed and is not listed; covered part files
+        may transiently exist mid-cleanup and are not listed either.
+
+        A wave manifest lists its parts in row-group order and embeds
+        their manifests, and a loose part file is one row group (pyarrow
+        writes a row group even for an empty part), so the units come from
+        metadata alone; loose part manifests are read only when `columns`
+        is given. With `parts` (zone pruning) only the listed parts' units
+        are kept, and a file none of whose parts survive is left out."""
         wanted = set(columns)
 
         def nbytes(manifest: dict) -> int:
@@ -905,7 +898,7 @@ def _write_wave(store_root: str, seq: int, parts: list[int]) -> dict:
                                            f"wave-{seq:06d}.parquet"))
         # store only the basename: a store moved/renamed (or opened from
         # a different cwd with a relative root) must still resolve its
-        # wave files — data_files() re-joins with self.root (ADVICE r1).
+        # wave files — decode_units() re-joins with self.root (ADVICE r1).
         wave_manifest = {"wave": seq, "parts": list(parts),
                          "file": wave_name, "manifests": manifests}
         tmp_json = os.path.join(store.staging_dir,
@@ -1158,7 +1151,8 @@ _UTC_NAMES = frozenset(["UTC", "Etc/UTC", "GMT", "Z", "+00:00", "UTC+00:00"])
 def decode_from_store(store: ChunkStore, spark: SparkSession,
                       output_ddl: str | None = None,
                       columns: list[str] | None = None,
-                      predicate: str | list[str] | None = None) -> DataFrame:
+                      predicate: str | list[str] | None = None, *,
+                      coalesce_small: bool = True) -> DataFrame:
     """The store's table, decoded by tasks that read their own row groups.
 
     The driver plans the read. `predicate` — one or more 'col>=value'
@@ -1167,10 +1161,14 @@ def decode_from_store(store: ChunkStore, spark: SparkSession,
     (predicate pushdown to the store's metadata layer; effective when the
     data is value-clustered across parts), and `ChunkStore.decode_units`
     lists the surviving parts' (file, row group) units with the blob
-    bytes they hold for the decoded columns. Those bytes size the decode
-    like a Spark file scan (`decode_tasks`), so a small store decodes in
-    one task and an aggregate over it needs no shuffle. One mapInArrow
-    over the unit frame then decodes the units
+    bytes they hold for the decoded columns. Units of at most
+    ONE_TASK_BYTES decode in one task, so an aggregate over them needs no
+    shuffle; larger decodes run in min(units, defaultParallelism) tasks
+    (`unit_frame`). Spark plans what the caller adds after a one-task
+    decode in that task too, joins and windows included, so a caller
+    whose own work outweighs the decode passes `coalesce_small=False` to
+    keep the decode's min(units, defaultParallelism) tasks. One
+    mapInArrow over the unit frame then decodes the units
     (`decode.decode_row_groups`): `columns` keeps only the requested
     columns' chunk rows, so the other blobs are never decoded. The exact
     filters run on the decoded rows. An unknown column in `columns` or
@@ -1199,7 +1197,8 @@ def decode_from_store(store: ChunkStore, spark: SparkSession,
     if unknown or columns == []:
         what = f"unknown column(s) {list(dict.fromkeys(unknown))}" \
             if unknown else "columns=[] selects no column"
-        raise ValueError(f"{what}; store {store.root} has columns {names}")
+        raise ValueError(f"{what}; the output schema of store {store.root} "
+                         f"has columns {names}")
     keep_parts = None
     drop_after = []
     if predicates:
@@ -1214,8 +1213,9 @@ def decode_from_store(store: ChunkStore, spark: SparkSession,
     files, nbytes = store.decode_units(keep_parts,
                                        [f.name for f in schema.fields])
     if files:
-        decoded = decode_row_groups(unit_frame(spark, files, nbytes), schema,
-                                    store.read_shared_tables())
+        one_task = coalesce_small and nbytes <= ONE_TASK_BYTES
+        decoded = decode_row_groups(unit_frame(spark, files, one_task),
+                                    schema, store.read_shared_tables())
     elif keep_parts is not None:
         # a predicate can legitimately prune everything: an empty frame of
         # the output shape, read in the JVM, so no task starts
@@ -1235,45 +1235,32 @@ def decode_from_store(store: ChunkStore, spark: SparkSession,
     return decoded
 
 
-def decode_tasks(nbytes: int, units: int, parallelism: int,
-                 max_partition_bytes: int, open_cost: int) -> int:
-    """Tasks for a decode of `nbytes` blob bytes in `units` row groups.
-
-    The split size is a Spark file scan's: min(maxPartitionBytes,
-    max(openCostInBytes, nbytes / parallelism)). No open cost is added
-    per file: a task opens each of its files once, and what fewer tasks
-    save is Spark's fixed cost per task, not file opens. The count is
-    capped at one task per unit and per core, and is at least one."""
-    split = max(1, min(max_partition_bytes,
-                       max(open_cost, nbytes / parallelism)))
-    return max(1, min(parallelism, units, math.ceil(nbytes / split)))
-
-
 UNIT_DDL = "file string, row_group int, part_id bigint"
+
+# A store decode of at most this many blob bytes (the decoded columns'
+# enc_bytes) runs in one task. A full decode plus checksum aggregate in
+# one task against four, on a 4-vCPU host (driver + JVM + Python CPU-s,
+# and wall s): 1 MB (perfbench's token store) -23% CPU, +17% wall;
+# 1.9 MB -22%, +27%; 3.7 MB -9%, +71%.
+ONE_TASK_BYTES = 2 << 20
 
 
 def unit_frame(spark: SparkSession,
                files: dict[str, list[tuple[int, int]]],
-               nbytes: int) -> DataFrame:
+               one_task: bool) -> DataFrame:
     """One row per (file, row group, part id) decode unit of `files`
-    (`ChunkStore.decode_units`), in file order, in `decode_tasks`
-    partitions for the `nbytes` blob bytes the units decode, sized from
-    the session's `spark.sql.files.maxPartitionBytes` and
-    `openCostInBytes`. Built from an Arrow table, so Spark reads it in
-    the JVM (LocalTableScan, sliced into min(units, defaultParallelism)
-    partitions) and coalesces it without a shuffle. A coalesce to one
-    partition is planned as a single partition, so a global aggregate
-    over the decoded rows runs in the decode's own stage. Paths are made
-    absolute so that a relative store root means the same file in every
-    Python worker."""
+    (`ChunkStore.decode_units`), in file order. Built from an Arrow table,
+    so Spark reads it in the JVM (LocalTableScan) and slices its rows into
+    min(units, defaultParallelism) tasks, as compaction's plan frame is.
+    With `one_task` it is coalesced to one partition, which Spark plans
+    as a single partition: a global aggregate over the decoded rows then
+    runs in the decode's own stage, with no Exchange and no second job.
+    Paths are made absolute so that a relative store root means the same
+    file in every Python worker."""
     units = [(os.path.abspath(f), rg, p)
              for f, file_units in files.items() for rg, p in file_units]
-    tasks = decode_tasks(
-        nbytes, len(units), spark.sparkContext.defaultParallelism,
-        parse_size(spark.conf.get("spark.sql.files.maxPartitionBytes")),
-        parse_size(spark.conf.get("spark.sql.files.openCostInBytes")))
-    return spark.createDataFrame(pa.table({
+    frame = spark.createDataFrame(pa.table({
         "file": pa.array([u[0] for u in units], pa.string()),
         "row_group": pa.array([u[1] for u in units], pa.int32()),
-        "part_id": pa.array([u[2] for u in units], pa.int64())}),
-        UNIT_DDL).coalesce(tasks)
+        "part_id": pa.array([u[2] for u in units], pa.int64())}), UNIT_DDL)
+    return frame.coalesce(1) if one_task else frame

@@ -41,7 +41,7 @@ PARTS = 8
 def _blobs(store: ChunkStore) -> dict[tuple[int, str], bytes]:
     tbl = pa.concat_tables(pq.read_table(f, columns=["part_id", "column",
                                                      "blob"])
-                           for f in store.data_files())
+                           for f in store.decode_units()[0])
     return {(p, c): b for p, c, b in zip(tbl.column("part_id").to_pylist(),
                                          tbl.column("column").to_pylist(),
                                          tbl.column("blob").to_pylist())}

@@ -79,7 +79,7 @@ def test_moved_store_resolves_wave_files(spark, tmp_path):
     moved = str(tmp_path / "relocated")
     shutil.move(store.root, moved)
     store2 = ChunkStore(moved)
-    for f in store2.data_files():
+    for f in store2.decode_units()[0]:
         assert os.path.exists(f)
     assert decode_from_store(store2, spark).count() == 800
 

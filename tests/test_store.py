@@ -9,7 +9,8 @@ import pyspark.sql.functions as F
 import pytest
 
 from tbl_spark.datagen import SPARK_SCHEMA_DDL, generate_df
-from tbl_spark.store import ChunkStore, decode_from_store, encode_to_store
+from tbl_spark.store import (ONE_TASK_BYTES, ChunkStore, decode_from_store,
+                             encode_to_store)
 
 N_DOCS = 4000
 N_CHUNKS = 8
@@ -87,7 +88,7 @@ def test_orphan_chunk_file_is_not_decoded(spark, tmp_path):
     rows = store_stats(store)["rows"]
     assert 0 < rows < 1000
     assert decode_from_store(store, spark).count() == rows
-    assert victim not in {p for units in store.data_files().values()
+    assert victim not in {p for units in store.decode_units()[0].values()
                           for _, p in units}
     encode_to_store(df, store, 4)
     assert decode_from_store(store, spark).count() == 1000
@@ -149,11 +150,11 @@ def test_compaction_wave_files(spark, tmp_path):
     store = ChunkStore(str(tmp_path / "store"))
     df = generate_df(spark, 3000, 4)
     encode_to_store(df, store, 10)
-    assert len(store.data_files()) == 10
+    assert len(store.decode_units()[0]) == 10
 
     written = store.compact(wave_size=4)
     assert written == 2  # 10 parts -> 2 waves of 4 + 2 loose
-    files = store.data_files()
+    files = store.decode_units()[0]
     assert len(files) == 4  # 2 wave files + 2 loose part files
     wave = [f for f in files if "wave-" in f][0]
     assert pq.read_metadata(wave).num_row_groups == 4  # one per part
@@ -216,10 +217,11 @@ def test_wave_row_groups_carry_only_part_id_stats(spark, tmp_path):
 
 def _job_counts(spark, action):
     """(result, jobs, stages, tasks) of `action()` run under its own job
-    group, read from the status tracker."""
+    group, counted as perfbench counts them."""
     import uuid
+
+    from perfbench.run import spark_counts
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
     group = f"job-counts-{uuid.uuid4().hex[:8]}"
     sc.setJobGroup(group, group)
     try:
@@ -228,10 +230,9 @@ def _job_counts(spark, action):
         for key in ("spark.jobGroup.id", "spark.job.description",
                     "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
-    jobs = tracker.getJobIdsForGroup(group)
-    stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
-    return (out, len(jobs), len(stages),
-            sum(tracker.getStageInfo(s).numTasks for s in stages))
+    stages, tasks, _ = spark_counts(spark, [group])
+    return (out, len(sc.statusTracker().getJobIdsForGroup(group)), stages,
+            tasks)
 
 
 def test_distributed_compaction_runs_one_stage_of_one_wave_per_task(
@@ -249,7 +250,7 @@ def test_distributed_compaction_runs_one_stage_of_one_wave_per_task(
     assert sorted(len(w["parts"]) for w in waves) == [2, 2, 2, 2]
     assert sorted(p for w in waves for p in w["parts"]) == \
         sorted(store.committed_parts())
-    assert len(store.data_files()) == 4
+    assert len(store.decode_units()[0]) == 4
     decoded = decode_from_store(store, spark, SPARK_SCHEMA_DDL)
     assert decoded.count() == 2000
     n = decoded.alias("b").join(df.alias("a"), "doc_id").filter(
@@ -278,7 +279,7 @@ def test_mixed_waves_and_loose_parts_decode_bit_exactly(spark, tmp_path):
                                 wave["file"])
     with open(path, "w") as f:
         json.dump(wave, f)
-    files = store.data_files()
+    files = store.decode_units()[0]
     assert sum("chunks" in f for f in files) == 1
     assert sorted(p for units in files.values() for _, p in units) == \
         list(range(10))
@@ -311,7 +312,7 @@ def test_row_group_of_another_part_raises(spark, tmp_path):
 
 
 def test_small_store_decodes_in_one_task_with_no_shuffle(spark, tmp_path):
-    """A perfbench-shaped store (8 parts in 4 waves, well under one split)
+    """A perfbench-shaped store (8 parts in 4 waves, under ONE_TASK_BYTES)
     decodes in one task, and the checksum aggregate over it runs in that
     task's stage: full, projected and selective decodes are each one job
     of one stage of one task, and their checksums equal the source's."""
@@ -320,6 +321,7 @@ def test_small_store_decodes_in_one_task_with_no_shuffle(spark, tmp_path):
     encode_to_store(df, store, 8)
     assert store.compact(2, spark=spark) == 4
     full = ["doc_id", "tokens", "n_tok", "source"]
+    assert 0 < store.decode_units(None, full)[1] <= ONE_TASK_BYTES
     cond = F.col("n_tok") >= 500
     for kw, cols, src in (({}, full, df),
                           ({"columns": ["n_tok", "source"]},
@@ -336,56 +338,49 @@ def test_small_store_decodes_in_one_task_with_no_shuffle(spark, tmp_path):
         assert "Exchange" not in plan and "Coalesce 1" in plan, kw
 
 
-def test_decode_tasks_follow_bytes_under_a_small_split(spark, tmp_path):
-    """With maxPartitionBytes below the store's blob bytes, a store of
-    waves plus loose parts decodes in min(defaultParallelism,
-    ceil(bytes / split)) tasks, counted from the decoded columns' enc_bytes
-    in the manifests, and still matches the source."""
-    import math
+def test_decode_units_sum_the_decoded_columns_enc_bytes(tmp_path, spark):
+    """`decode_units` adds up the decoded columns' enc_bytes from the wave
+    manifests and the loose part manifests, over the listed parts only."""
+    store = ChunkStore(str(tmp_path / "store"))
+    encode_to_store(generate_df(spark, 2000, 4), store, 10)
+    assert store.compact(wave_size=3) == 3     # 3 waves + 1 loose part
+    stats = store.stats_table().to_pylist()
+    files, nbytes = store.decode_units(
+        None, ["doc_id", "tokens", "n_tok", "source"])
+    assert len(files) == 4
+    assert nbytes == sum(r["enc_bytes"] for r in stats)
+    some, n_tok_bytes = store.decode_units({0, 9}, ["n_tok"])  # wave + loose
+    assert sorted(p for units in some.values() for _, p in units) == [0, 9]
+    assert n_tok_bytes == sum(r["enc_bytes"] for r in stats if r["part_id"]
+                              in (0, 9) and r["column"] == "n_tok")
+    assert store.decode_units()[1] == 0
+
+
+def test_decode_above_one_task_bytes_keeps_a_task_per_unit(
+        spark, tmp_path, monkeypatch):
+    """A decode of more than ONE_TASK_BYTES, or one asked for with
+    `coalesce_small=False`, keeps the unit frame's min(units,
+    defaultParallelism) tasks, so an aggregate over it shuffles; a decode
+    of exactly ONE_TASK_BYTES runs in one task. Each matches the source."""
+    import tbl_spark.store as store_mod
     store = ChunkStore(str(tmp_path / "store"))
     df = generate_df(spark, 2000, 4)
     encode_to_store(df, store, 10)
     assert store.compact(wave_size=3) == 3     # 3 waves + 1 loose part
-    full = ["doc_id", "tokens", "n_tok", "source"]
-    files, nbytes = store.decode_units(None, full)
-    assert files == store.data_files()
-    stats = store.stats_table().to_pylist()
-    assert nbytes == sum(r["enc_bytes"] for r in stats)
-    _, n_tok_bytes = store.decode_units({0, 9}, ["n_tok"])  # wave + loose
-    assert n_tok_bytes == sum(r["enc_bytes"] for r in stats
-                              if r["part_id"] in (0, 9)
-                              and r["column"] == "n_tok")
-    split = nbytes // 3 + 1
-    want = min(spark.sparkContext.defaultParallelism,
-               math.ceil(nbytes / split))
-    assert want == 3
-    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
-    try:
-        decoded = decode_from_store(store, spark)
-        assert decoded.rdd.getNumPartitions() == want
-        assert decoded.select(F.spark_partition_id()).distinct() \
-            .count() == want
-        assert _checksum(decoded) == _checksum(df)
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
-
-
-@pytest.mark.parametrize("nbytes,units,parallelism,max_split,open_cost,want", [
-    (0, 8, 4, 2 << 20, 4 << 20, 1),              # empty parts
-    (0, 8, 4, 2 << 20, 0, 1),                    # no open cost either
-    (1 << 20, 8, 4, 2 << 20, 4 << 20, 1),        # perfbench's store
-    (10 << 30, 500, 1, 128 << 20, 4 << 20, 1),   # defaultParallelism=1
-    (10 << 20, 8, 4, 128 << 20, 4 << 20, 3),     # split = openCostInBytes
-    (40 << 20, 8, 4, 128 << 20, 4 << 20, 4),     # split = bytes / cores
-    (80 << 20, 64, 4, 2 << 20, 4 << 20, 4),      # > cores × split: capped
-    (80 << 20, 2, 4, 2 << 20, 4 << 20, 2),       # one task per unit at most
-])
-def test_decode_tasks_sizing(nbytes, units, parallelism, max_split,
-                             open_cost, want):
-    from tbl_spark.store import decode_tasks
-    assert decode_tasks(nbytes, units, parallelism, max_split,
-                        open_cost) == want
+    nbytes = store.decode_units(
+        None, ["doc_id", "tokens", "n_tok", "source"])[1]
+    sliced = min(10, spark.sparkContext.defaultParallelism)
+    assert sliced > 1
+    want = _checksum(df)
+    for limit, kw, tasks in ((nbytes, {}, 1),
+                             (nbytes - 1, {}, sliced),
+                             (nbytes, {"coalesce_small": False}, sliced)):
+        monkeypatch.setattr(store_mod, "ONE_TASK_BYTES", limit)
+        decoded = decode_from_store(store, spark, **kw)
+        assert decoded.rdd.getNumPartitions() == tasks, (limit, kw)
+        got, _, stages, _ = _job_counts(spark, lambda: _checksum(decoded))
+        assert got == want, (limit, kw)
+        assert (stages == 1) == (tasks == 1), (limit, kw)
 
 
 @pytest.mark.parametrize("kw", [
@@ -398,7 +393,8 @@ def test_decode_tasks_sizing(nbytes, units, parallelism, max_split,
 def test_unknown_or_no_columns_raise(spark, tmp_path, kw):
     """A projection or predicate naming a column the store lacks, or an
     empty projection, raises ValueError naming the unknown column and the
-    store's columns instead of returning an empty or narrowed frame."""
+    output schema's columns instead of returning an empty or narrowed
+    frame."""
     store = ChunkStore(str(tmp_path / "store"))
     encode_to_store(generate_df(spark, 200, 2), store, 2)
     with pytest.raises(ValueError) as err:

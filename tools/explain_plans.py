@@ -81,9 +81,9 @@ def main() -> None:
                 checked,
                 "ZERO Exchanges and no file scan: the driver lists each "
                 "part's (file, row group) in a LocalTableScan, coalesced "
-                "to as many tasks as the decoded blob bytes need at the "
-                "session's file-scan split size (one for this store), and "
-                "one mapInArrow opens its row groups and decodes them. A "
+                "to one task because the decoded columns' blob bytes fit "
+                "store.ONE_TASK_BYTES, and one mapInArrow opens its row "
+                "groups and decodes them. A "
                 "coalesce to one partition is a single partition, so the "
                 "global aggregate above the decode needs no Exchange.")
 

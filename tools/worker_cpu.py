@@ -5,12 +5,13 @@
 Builds a small seeded token store (the perfbench ``tokens_scan`` shape: 8
 salted parts, compacted in waves of 2, from ``DOCS`` documents of seed
 ``SEED``), then runs a ``mapInArrow`` that yields nothing over a full
-decode's unit frame, coalesced to the tasks that decode plans (the
-per-task Spark and Python-worker floor that a store decode pays before
-it opens a file), a full
-decode, a projected decode (``n_tok, source``), a selective decode
+decode's unit frame, in the tasks that decode plans (one task when its
+blob bytes fit ``ONE_TASK_BYTES``; the per-task Spark and Python-worker
+floor that a store decode pays before it opens a file), a full decode,
+a projected decode (``n_tok, source``), a selective decode
 (perfbench's predicate shape: ``n_tok>=`` the ``SELECTIVE_Q`` quantile,
-inside perfbench's 0.990-0.998 draw), a salted encode, a colocated encode (perfbench's ``ingest_colocated`` op: chunks of
+inside perfbench's 0.990-0.998 draw), a salted encode, a colocated
+encode (perfbench's ``ingest_colocated`` op: chunks of
 ``TOKENS_PER_CHUNK`` tokens, no plan passed, so each fresh store
 auditions its own), the driver-side audition of the encode plan, a
 compaction of a fresh copy of the uncompacted store, and a resume of a
@@ -132,9 +133,9 @@ def main() -> int:
     from tbl_spark.datagen import write_token_table
     from tbl_spark.encode import audition_codec_hints
     from tbl_spark.session import get_spark
-    from tbl_spark.store import (ChunkStore, decode_from_store,
-                                 encode_to_store, encode_to_store_colocated,
-                                 unit_frame)
+    from tbl_spark.store import (ONE_TASK_BYTES, ChunkStore,
+                                 decode_from_store, encode_to_store,
+                                 encode_to_store_colocated, unit_frame)
 
     cores = len(os.sched_getaffinity(0))
     spark = get_spark(cores=cores, shuffle_partitions=4 * cores)
@@ -178,6 +179,8 @@ def main() -> int:
             n_enc += 1
             return ChunkStore(os.path.join(work, f"enc-{n_enc}"))
 
+        units, nbytes = store.decode_units(None, COLUMNS)
+
         def noop(batches):
             for _ in batches:
                 pass
@@ -188,7 +191,7 @@ def main() -> int:
             # every (file, row group) unit to a Python worker in the tasks
             # a full decode plans, read nothing, return nothing
             "noop_map": lambda: unit_frame(
-                spark, *store.decode_units(None, COLUMNS)).mapInArrow(
+                spark, units, nbytes <= ONE_TASK_BYTES).mapInArrow(
                     noop, "part_id int").collect(),
             "full_decode": lambda: checksum(COLUMNS),
             "projected_decode": lambda: checksum(
