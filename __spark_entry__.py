@@ -698,8 +698,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # video frame-sampling plan (pure JVM sequence+explode, no
         # decode) over the synthesized media table — the sampled
         # (media_id, frame_idx) set is fully SQL-derivable, giving the
-        # video tier's planning half a value-level driver signal (the
-        # decode half is pixel-exact pytested in test_video.py).
+        # video tier's planning a value-level driver signal.
         docs = _read(spark, sf, "documents").orderBy("doc_id").limit(200)
         media = multimodal.attach_media(docs)
         return (multimodal.frame_sample(media, every_n=4)

@@ -336,10 +336,10 @@ def build_parser() -> argparse.ArgumentParser:
     md.add_argument("--every-n", type=int, default=5,
                     help="frame-sample: keep every Nth frame")
     md.add_argument("--real-decode", action="store_true",
-                    help="decode payloads for real (PPM/PNG/JPEG/GIF/"
-                         "BMP images, WAV/AIFF/AU audio, "
-                         "MJPEG-in-AVI/MP4/MKV, y4m and GIF video) "
-                         "instead of the deterministic fake decoders")
+                    help="decode payloads for real (PPM/PNG/JPEG/BMP "
+                         "images, WAV/AIFF/AU audio; video has no real "
+                         "decoder) instead of the deterministic fake "
+                         "decoders")
     _add_pipe_output(md)
 
     dc = sub.add_parser("decontaminate",

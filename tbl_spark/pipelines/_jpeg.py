@@ -167,76 +167,6 @@ def _ycbcr_to_rgb(y: np.ndarray, cb: np.ndarray, cr: np.ndarray
     return rgb.astype(np.uint8)
 
 
-# ITU-T T.81 Annex K.3 "typical" Huffman tables. The MJPEG convention
-# (Microsoft/OpenDML AVI) omits DHT segments from every frame and
-# implies exactly these, so `decode_jpeg(..., default_huffman=True)`
-# falls back to them when a scan references a table no DHT defined.
-_STD_HUFF_SPECS = {
-    # (tc, th): (counts per code length 1..16, symbols)
-    (0, 0): (bytes([0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]),
-             bytes(range(12))),
-    (0, 1): (bytes([0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0]),
-             bytes(range(12))),
-    (1, 0): (bytes([0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D]),
-             bytes([
-                 0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12,
-                 0x21, 0x31, 0x41, 0x06, 0x13, 0x51, 0x61, 0x07,
-                 0x22, 0x71, 0x14, 0x32, 0x81, 0x91, 0xA1, 0x08,
-                 0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0,
-                 0x24, 0x33, 0x62, 0x72, 0x82, 0x09, 0x0A, 0x16,
-                 0x17, 0x18, 0x19, 0x1A, 0x25, 0x26, 0x27, 0x28,
-                 0x29, 0x2A, 0x34, 0x35, 0x36, 0x37, 0x38, 0x39,
-                 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49,
-                 0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58, 0x59,
-                 0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69,
-                 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78, 0x79,
-                 0x7A, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89,
-                 0x8A, 0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98,
-                 0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5, 0xA6, 0xA7,
-                 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6,
-                 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5,
-                 0xC6, 0xC7, 0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4,
-                 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1, 0xE2,
-                 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA,
-                 0xF1, 0xF2, 0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8,
-                 0xF9, 0xFA])),
-    (1, 1): (bytes([0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77]),
-             bytes([
-                 0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21,
-                 0x31, 0x06, 0x12, 0x41, 0x51, 0x07, 0x61, 0x71,
-                 0x13, 0x22, 0x32, 0x81, 0x08, 0x14, 0x42, 0x91,
-                 0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0,
-                 0x15, 0x62, 0x72, 0xD1, 0x0A, 0x16, 0x24, 0x34,
-                 0xE1, 0x25, 0xF1, 0x17, 0x18, 0x19, 0x1A, 0x26,
-                 0x27, 0x28, 0x29, 0x2A, 0x35, 0x36, 0x37, 0x38,
-                 0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48,
-                 0x49, 0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58,
-                 0x59, 0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68,
-                 0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78,
-                 0x79, 0x7A, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87,
-                 0x88, 0x89, 0x8A, 0x92, 0x93, 0x94, 0x95, 0x96,
-                 0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5,
-                 0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4,
-                 0xB5, 0xB6, 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3,
-                 0xC4, 0xC5, 0xC6, 0xC7, 0xC8, 0xC9, 0xCA, 0xD2,
-                 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA,
-                 0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9,
-                 0xEA, 0xF2, 0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8,
-                 0xF9, 0xFA])),
-}
-_std_huff_cache: dict[tuple[int, int], _Huff] = {}
-
-
-def _std_huff(tc: int, th: int) -> _Huff:
-    tab = _std_huff_cache.get((tc, th))
-    if tab is None:
-        counts, syms = _STD_HUFF_SPECS[(tc, th)]
-        tab = _std_huff_cache[(tc, th)] = _Huff(counts, syms)
-    return tab
-
-
-
-
 _SOF_UNSUPPORTED = {
     0xC5: "differential sequential", 0xC6: "differential progressive",
     0xC7: "differential lossless", 0xC9: "arithmetic sequential",
@@ -559,16 +489,13 @@ def _decode_scan(segs, comps, n_units, units_per_seg, Ss, Se, Ah, Al,
         raise ValueError("corrupt JPEG: scan ended before the last unit")
 
 
-def decode_jpeg(payload: bytes,
-                default_huffman: bool = False) -> np.ndarray | None:
+def decode_jpeg(payload: bytes) -> np.ndarray | None:
     """JPEG payload → (H, W, 3) uint8 RGB, or None when the payload is
     not JPEG at all (no SOI magic — other formats fall through to their
     own decoders). Covers baseline and extended sequential (SOF0/1,
     interleaved or per-component multi-scan) and full progressive
     (SOF2: spectral selection + successive approximation, T.81 Annex
-    G). `default_huffman=True` supplies the T.81 Annex K typical
-    tables for any table slot 0/1 no DHT defined — the MJPEG-in-AVI
-    convention (_video.py). 12-bit frames scale to 8-bit output;
+    G). 12-bit frames scale to 8-bit output;
     4-component frames follow the Adobe APP14 CMYK/YCCK convention.
     Arithmetic entropy coding and the hierarchical modes stay behind
     the explicit NotImplementedError gate."""
@@ -738,9 +665,6 @@ def decode_jpeg(payload: bytes,
                         "components not supported; install PIL")
                 scan_list = []
                 for ci, (td, _ta) in zip(scan_cis, scan_tabs):
-                    if default_huffman and td not in huff_dc \
-                            and td in (0, 1):
-                        huff_dc[td] = _std_huff(0, td)
                     if td not in huff_dc:
                         raise ValueError(
                             "corrupt JPEG: missing Huffman table")
@@ -775,11 +699,6 @@ def decode_jpeg(payload: bytes,
             need_ac = mode in ("seq", "ac_first", "ac_refine")
             scan_comps = []
             for ci, (td, ta) in zip(scan_cis, scan_tabs):
-                if default_huffman:
-                    if need_dc and td not in huff_dc and td in (0, 1):
-                        huff_dc[td] = _std_huff(0, td)
-                    if need_ac and ta not in huff_ac and ta in (0, 1):
-                        huff_ac[ta] = _std_huff(1, ta)
                 if (need_dc and td not in huff_dc) \
                         or (need_ac and ta not in huff_ac):
                     raise ValueError("corrupt JPEG: missing "

@@ -5,22 +5,14 @@ The Spark-side plumbing (schema, partitioning, Arrow batch shape, UDF
 signatures) is real and tested. Image decode is REAL for PPM P6, every
 legal PNG IHDR shape (depths 1-16, all color types, Adam7), and JPEG —
 baseline, multi-scan sequential, AND full progressive (pure numpy +
-stdlib — no imaging library needed), plus GIF87a/89a (LZW, interlace,
-animation compositing — see _gif.py) and BMP/DIB (palette/16/24/32-bit,
-bitfields, RLE8/RLE4); other formats (TIFF, arithmetic-coded and
+stdlib — no imaging library needed), plus BMP/DIB (palette/16/24/32-bit,
+bitfields, RLE8/RLE4); other formats (GIF, TIFF, arithmetic-coded and
 hierarchical JPEG, …) fall back to PIL and raise NotImplementedError
 when it is absent.
 Audio decode is REAL for RIFF/PCM and IEEE-float WAV, AIFF/AIFF-C PCM
 and Sun .au incl. G.711 µ-law (pure numpy + stdlib struct); other
-audio (FLAC, mp3/ogg/aac) raises the explicit stub error. Video
-decode is REAL for MJPEG in AVI, MP4 and MKV containers (container
-walk + the JPEG decoder, Annex K default tables for DHT-less MJPEG
-frames), uncompressed YUV4MPEG2, and animated GIF — see _video.py /
-_mp4.py / _gif.py; AVI/MP4/MKV/y4m frame seeking is index-driven so
-sampling k of N frames decodes exactly k (GIF frames are canvas
-deltas, so a seek composites from frame 0). MP4/MKV carrying a modern
-inter-frame codec (H.264/VP9/AV1 …) still probe and frame-index
-metadata-only; only their frame *decode* raises the stub error.
+audio (FLAC, mp3/ogg/aac) raises the explicit stub error. Real video
+decode raises the stub error for every payload.
 `fake_decode=True` swaps in deterministic fake decoders so the batch
 plumbing can be exercised independently of any format.
 """
@@ -622,7 +614,7 @@ def decode_image(payload: bytes, width: int, height: int,
     legal PNG (depths 1-16, all color types, Adam7 interlace),
     full Huffman JPEG — baseline, multi-scan sequential, progressive
     (grayscale/YCbCr, any sampling, restart markers — see _jpeg.py) —
-    GIF and BMP — all with pure numpy/stdlib (no PIL);
+    and BMP, all with pure numpy/stdlib (no PIL);
     anything else decodes with PIL, and without PIL in the environment
     the stub error is explicit (the deterministic fake keeps the
     Spark-side plumbing testable either way). The image is resized to
@@ -636,11 +628,6 @@ def decode_image(payload: bytes, width: int, height: int,
         from ._jpeg import decode_jpeg
         px = decode_jpeg(payload)
     if px is None:
-        from ._gif import decode_gif_frames
-        got = decode_gif_frames(payload, [0])   # poster frame
-        if got is not None:
-            px = got[1][0]
-    if px is None:
         px = _decode_bmp(payload)
     if px is not None:
         if width and height and px.shape[:2] != (height, width):
@@ -651,10 +638,10 @@ def decode_image(payload: bytes, width: int, height: int,
         return px if px.flags.writeable else px.copy()
     if not HAVE_PIL:
         raise NotImplementedError(
-            "real decode of non-PPM/PNG/JPEG/GIF/BMP images "
+            "real decode of non-PPM/PNG/JPEG/BMP images "
             "requires PIL, which is not installed in this container; "
             "pass fake_decode=True for the deterministic fake decoder "
-            "(PPM, PNG, Huffman JPEG, GIF and BMP payloads decode "
+            "(PPM, PNG, Huffman JPEG and BMP payloads decode "
             "without PIL)")
     from io import BytesIO
     img = Image.open(BytesIO(payload)).convert("RGB")
@@ -828,31 +815,25 @@ def _fake_decode_video(payload: bytes, width: int, height: int,
                   for i in idxs]
 
 
+_VIDEO_STUB = (
+    "real decode of video payloads requires a video library, which is "
+    "not installed in this container; pass fake_decode=True for the "
+    "deterministic fake decoder")
+
+
 def decode_video(payload: bytes, frame_indices: list[int] | None = None,
                  fake_decode: bool = False, width: int = 0,
                  height: int = 0, n_frames: int = 0
                  ) -> tuple[list[int], list[np.ndarray]]:
     """Selected video frames → (frame indices, [(H, W, 3) uint8, ...]).
 
-    Real path: MJPEG in AVI/MP4/MKV, YUV4MPEG2 and animated GIF decode
-    with pure numpy/stdlib (_video.py, _mp4.py, _gif.py); only the
-    REQUESTED frames are decoded — the container index makes the seek
-    metadata-only, which is the scale contract at corpus size (sampling
-    k of N frames costs k decodes, not N). Other payloads raise the
-    explicit stub error unless fake_decode swaps in the deterministic
-    fake (width/height/n_frames feed the fake's geometry)."""
+    Real decode raises the explicit stub error for every payload;
+    fake_decode swaps in the deterministic fake (width/height/n_frames
+    feed the fake's geometry)."""
     if fake_decode:
         return _fake_decode_video(payload, width, height,
                                   n_frames, frame_indices)
-    from ._video import decode_video_frames
-    got = decode_video_frames(payload, frame_indices)
-    if got is not None:
-        return got
-    raise NotImplementedError(
-        "real decode of this video payload requires a video library, "
-        "which is not installed in this container; pass "
-        "fake_decode=True for the deterministic fake decoder (MJPEG in "
-        "AVI/MP4/MKV, YUV4MPEG2 and animated GIF decode without one)")
+    raise NotImplementedError(_VIDEO_STUB)
 
 
 def _image_features(stack: np.ndarray, dim: int) -> np.ndarray:
@@ -875,8 +856,9 @@ def extract_features(df: DataFrame, dim: int = 16,
     per partition, decode happens per payload (inherently per-item), and
     ALL post-decode feature math runs stacked per same-shape group
     (VERDICT r6 #5 — the Python loop is decode-only). kind='audio' rows
-    go through the waveform path (real for RIFF/PCM WAV); image/video
-    rows through the pixel path."""
+    go through the waveform path (real for RIFF/PCM WAV); image rows and
+    fake-decoded video rows through the pixel path, and real video
+    decode raises the stub error."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -896,19 +878,9 @@ def extract_features(df: DataFrame, dim: int = 16,
                     feats[i] = _audio_feature(wave, rate, dim)
                     continue
                 if kinds[i] == "video" and not fake_decode:
-                    # poster frame: container-indexed seek decodes
-                    # exactly one frame regardless of n_frames
-                    _fidx, fr = decode_video(payloads[i], [0])
-                    if not fr:
-                        continue         # zero-frame container
-                    px = fr[0]
-                    w, h = int(widths[i]), int(heights[i])
-                    if w and h and px.shape[:2] != (h, w):
-                        px = _resize_nearest(px, w, h)
-                else:
-                    px = decode_image(payloads[i], int(widths[i]),
-                                      int(heights[i]),
-                                      fake_decode=fake_decode)
+                    decode_video(payloads[i], [0])   # raises the stub error
+                px = decode_image(payloads[i], int(widths[i]),
+                                  int(heights[i]), fake_decode=fake_decode)
                 idxs, arrs = groups.setdefault(px.shape, ([], []))
                 idxs.append(i)
                 arrs.append(px)
@@ -974,17 +946,17 @@ def frame_sample_decoded(df: DataFrame, every_n: int = 5, dim: int = 16,
     """Sample every_n-th frame of each video row and emit per-frame
     feature vectors — one output row per (media_id, frame_idx).
 
-    mapInArrow over the media batches; per row, the container is probed
-    (metadata-only — AVI idx1 / y4m fixed-size frames) to learn the
-    real frame count, then ONLY the sampled frames decode. The feature
-    math is the shared batched `_image_features` over all sampled
-    frames of the Arrow batch at once. At corpus scale the cost is
-    O(frames-sampled) decodes + O(rows) index parses; decode
-    parallelism comes from the upstream partitioning of the media
-    table, which mapInArrow preserves (no shuffle)."""
+    mapInArrow over the media batches; per row, ONLY the sampled frames
+    of the row's `n_frames` decode, with the deterministic fake decoder.
+    The feature math is the shared batched `_image_features` over all
+    sampled frames of the Arrow batch at once; decode parallelism comes
+    from the upstream partitioning of the media table, which mapInArrow
+    preserves (no shuffle). Real decode raises the stub error on the
+    driver, before any job."""
+    if not fake_decode:
+        raise NotImplementedError(_VIDEO_STUB)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ._video import probe_video
         for batch in batches:
             ids = batch.column("media_id").to_numpy(zero_copy_only=False)
             kinds = batch.column("kind").to_pylist()
@@ -999,18 +971,10 @@ def frame_sample_decoded(df: DataFrame, every_n: int = 5, dim: int = 16,
             for i in range(len(ids)):
                 if kinds[i] != "video" or payloads[i] is None:
                     continue
-                if fake_decode:
-                    n = int(nfr[i])
-                else:
-                    meta = probe_video(payloads[i])
-                    if meta is None:
-                        raise NotImplementedError(
-                            "real frame sampling needs an AVI/y4m "
-                            "payload (or fake_decode=True)")
-                    n = meta["n_frames"]
+                n = int(nfr[i])
                 sel = list(range(0, n, max(1, every_n)))
                 idxs, px = decode_video(
-                    payloads[i], sel, fake_decode=fake_decode,
+                    payloads[i], sel, fake_decode=True,
                     width=int(widths[i]), height=int(heights[i]),
                     n_frames=int(nfr[i]))
                 out_ids.extend(int(ids[i]) for _ in idxs)

@@ -67,9 +67,3 @@ def get_spark(cores: int | str | None = None,
     if daemon is not None:
         builder = builder.config("spark.python.daemon.module", daemon)
     return builder.getOrCreate()
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from .codecs.core import Plan, plan_from_json, plan_to_json
 from .encode import audition_codec_hints, encode_table
 from .partitioning import PART_COL, with_part_id
+from .transforms import _FILTER_RE
 
 log = logging.getLogger("tbl_spark")
 
@@ -342,13 +343,18 @@ class ChunkStore:
     # -- snapshot log (run-level lineage, Iceberg-snapshot analog) ----------
 
     def append_snapshot(self, summary: dict) -> None:
-        seq = len(self.snapshots())
-        token = uuid.uuid4().hex[:8]
-        tmp = os.path.join(self.staging_dir, f"snap-{seq:06d}.{token}.json")
+        """Write `summary` as the next `snap-NNNNNN.json`. The sequence
+        number is taken and the file renamed into place under one lock,
+        so concurrent writers never take the same number."""
+        tmp = os.path.join(self.staging_dir,
+                           f"snap.{uuid.uuid4().hex[:8]}.json")
         with open(tmp, "w") as f:
             json.dump(summary, f)
-        os.replace(tmp, os.path.join(self.snapshots_dir,
-                                     f"snap-{seq:06d}.json"))
+        with _exclusive(self.snapshots_dir + ".lock"):
+            seq = sum(1 for name in os.listdir(self.snapshots_dir)
+                      if name.startswith("snap-") and name.endswith(".json"))
+            os.replace(tmp, os.path.join(self.snapshots_dir,
+                                         f"snap-{seq:06d}.json"))
 
     def snapshots(self) -> list[dict]:
         if not os.path.isdir(self.snapshots_dir):
@@ -522,11 +528,7 @@ class ChunkStore:
 
     def manifest_rows(self) -> list[dict]:
         """Per-part manifests — loose part files plus wave-embedded ones."""
-        out = []
-        for f in sorted(os.listdir(self.manifest_dir)):
-            if f.startswith("part-") and f.endswith(".json"):
-                with open(os.path.join(self.manifest_dir, f)) as fh:
-                    out.append(json.load(fh))
+        out = self.loose_manifest_rows()
         for w in self.waves():
             out.extend(w["manifests"])
         return sorted(out, key=lambda m: m["part_id"])
@@ -691,14 +693,10 @@ def _column_stats(tbl: pa.Table) -> dict[str, dict]:
     return out
 
 
-_ZONE_OPS = ("!=", ">=", "<=", "=", ">", "<")
-
-
 def parse_zone_predicate(predicate: str) -> tuple[str, str, str]:
-    """'col>=value' → (col, op, raw_value) — same mini-language as the
-    CLI filters (transforms._FILTER_RE)."""
-    import re
-    m = re.match(r"^(.*?)(!=|>=|<=|=|>|<)(.*)$", predicate)
+    """'col>=value' → (col, op, raw_value) in the CLI filters'
+    mini-language."""
+    m = _FILTER_RE.match(predicate)
     if not m:
         raise ValueError(f"cannot parse predicate {predicate!r}")
     return m.group(1).strip(), m.group(2), m.group(3).strip()

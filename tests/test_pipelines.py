@@ -151,6 +151,54 @@ def test_multimodal_real_decode_is_stubbed():
         multimodal.decode_image(b"x", 4, 4, fake_decode=False)
 
 
+# a 1x1 GIF89a and a one-frame 2x2 YUV4MPEG2 stream: well-formed payloads
+# of formats that have no real decoder here
+_GIF_1X1 = (b"GIF89a\x01\x00\x01\x00\x80\x00\x00\x00\x00\x00\xff\xff\xff"
+            b"!\xf9\x04\x01\x00\x00\x00\x00,\x00\x00\x00\x00\x01\x00\x01"
+            b"\x00\x00\x02\x02D\x01\x00;")
+_Y4M_2X2 = b"YUV4MPEG2 W2 H2 F25:1 C444\nFRAME\n" + bytes(range(12))
+
+
+def test_gif_and_real_video_decode_raise_the_stub_error(spark, monkeypatch):
+    monkeypatch.setattr(multimodal, "HAVE_PIL", False)
+    with pytest.raises(NotImplementedError, match="PIL"):
+        multimodal.decode_image(_GIF_1X1, 1, 1, fake_decode=False)
+    with pytest.raises(NotImplementedError, match="video library"):
+        multimodal.decode_video(_Y4M_2X2, [0])
+    media = spark.createDataFrame([(1, "video", 2, 2, 1, bytearray(_Y4M_2X2))],
+                                  multimodal.MEDIA_SCHEMA_DDL)
+    # raised by the call itself, on the driver: no action, so no job
+    with pytest.raises(NotImplementedError, match="video library"):
+        multimodal.frame_sample_decoded(media, fake_decode=False)
+    feats = multimodal.extract_features(media, dim=4, fake_decode=False)
+    with pytest.raises(Exception, match="video library"):
+        feats.collect()
+
+
+def test_decode_video_fake_and_stub_gate():
+    a1 = multimodal.decode_video(b"xyz", fake_decode=True, width=4,
+                                 height=3, n_frames=5)
+    a2 = multimodal.decode_video(b"xyz", fake_decode=True, width=4,
+                                 height=3, n_frames=5)
+    assert a1[0] == list(range(5))
+    assert all(np.array_equal(x, y) for x, y in zip(a1[1], a2[1]))
+    assert a1[1][0].shape == (3, 4, 3)
+    # frames differ across indices (per-frame seeding)
+    assert not np.array_equal(a1[1][0], a1[1][1])
+    with pytest.raises(NotImplementedError, match="video library"):
+        multimodal.decode_video(b"no container signature here")
+
+
+def test_frame_sample_decoded_fake_path(spark, docs):
+    media = multimodal.attach_media(docs.limit(60))
+    out = multimodal.frame_sample_decoded(media, every_n=5, dim=4).collect()
+    n_expected = (media.filter("kind = 'video'")
+                  .selectExpr("sum(cast((n_frames + 4) / 5 as int)) s")
+                  .collect()[0].s)
+    assert len(out) == n_expected
+    assert all(len(r.feature) == 4 for r in out)
+
+
 def test_frame_sample(spark, docs):
     media = multimodal.attach_media(docs.limit(90))
     frames = multimodal.frame_sample(media, every_n=5)

@@ -116,8 +116,8 @@ def test_png_decode_resize_and_gates():
     px = rng.integers(0, 256, (10, 10, 3), dtype=np.uint8)
     got = decode_image(_encode_png(px, [4]), 20, 30)
     assert got.shape == (30, 20, 3)
-    # unknown magic still hits the explicit PIL gate (JPEG/GIF magic
-    # now routes to the real decoders — test_jpeg.py / test_gif.py)
+    # unknown magic still hits the explicit PIL gate (JPEG magic routes
+    # to the real decoder — test_jpeg.py)
     with pytest.raises(NotImplementedError, match="PIL"):
         decode_image(b"BM-bmp-ish-payload", 4, 4)
     # 16-bit RGB decodes for real now (test_png_exotic.py covers values)

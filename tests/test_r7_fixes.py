@@ -430,28 +430,6 @@ def test_cli_media_features_fake(spark, sf_dir, tmp_path, capsys):
     assert res.count() == 30 and "feature" in res.columns
 
 
-def test_cli_media_frame_sample_real(spark, tmp_path, capsys):
-    import sys as _sys, os as _os
-    _sys.path.insert(0, _os.path.dirname(__file__))
-    from test_video import mux_avi, _gray_jpeg_frames
-    import numpy as np
-    from tbl_spark.cli import main
-    rng = np.random.default_rng(13)
-    frames, _refs = _gray_jpeg_frames(rng, 8, 8, 6)
-    avi = mux_avi(frames, 8, 8)
-    src = str(tmp_path / "vid_src")
-    spark.createDataFrame(
-        [(1, "video", 8, 8, 6, bytearray(avi))],
-        "media_id long, kind string, width int, height int, "
-        "n_frames int, payload binary").write.parquet(src)
-    rc = main(["media", src, "--op", "frame-sample", "--every-n", "2",
-               "--real-decode", "--dim", "4", "--csv", "-n", "all"])
-    assert rc == 0
-    lines = capsys.readouterr().out.strip().splitlines()
-    assert lines[0].split(",")[:2] == ["media_id", "frame_idx"]
-    assert len(lines) == 4          # frames 0, 2, 4
-
-
 # --------------------------------------------------------------------------
 # r7 second pass: gather-hoisted rANS loop, lane policy, slot cache
 # --------------------------------------------------------------------------

@@ -95,6 +95,7 @@ def test_orphan_chunk_file_is_not_decoded(spark, tmp_path):
 
 
 def test_manifest_lineage_content(spark, tmp_path):
+    assert ChunkStore(str(tmp_path / "empty")).manifest_rows() == []
     store = ChunkStore(str(tmp_path / "store"))
     encode_to_store(generate_df(spark, 1000, 2), store, 4)
     rows = store.manifest_rows()
@@ -106,6 +107,31 @@ def test_manifest_lineage_content(spark, tmp_path):
         for c in cols.values():
             assert c["enc_bytes"] > 0 and c["codec"]
         assert r["enc_bytes"] == sum(c["enc_bytes"] for c in cols.values())
+
+
+def test_concurrent_snapshot_appends_keep_every_snapshot(tmp_path,
+                                                         monkeypatch):
+    """Writers that overlap each other's append each keep a snapshot:
+    none takes a sequence number another is about to rename onto."""
+    import threading
+    import time
+
+    store = ChunkStore(str(tmp_path / "store"))
+    store.init_dirs()
+    dump = json.dump
+
+    def slow_dump(obj, fh):
+        time.sleep(0.2)
+        dump(obj, fh)
+
+    monkeypatch.setattr(json, "dump", slow_dump)
+    writers = [threading.Thread(target=store.append_snapshot,
+                                args=({"writer": i},)) for i in range(4)]
+    for t in writers:
+        t.start()
+    for t in writers:
+        t.join()
+    assert sorted(s["writer"] for s in store.snapshots()) == [0, 1, 2, 3]
 
 
 def test_colocated_decode_no_shuffle(spark, tmp_path):
