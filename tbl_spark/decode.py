@@ -121,7 +121,8 @@ def decode_row_groups(unit_df: DataFrame, schema,
     reads its row groups, each holding one part's chunk rows. Only the
     chunk rows of `schema`'s columns are decoded. A row group that holds
     rows of another part than the one planned raises: the wave manifest
-    and its file disagree."""
+    and its file disagree. Store files hold no shared-table sentinel rows
+    (the tables live in shared_tables.json), so a stray one raises too."""
     import pyarrow.compute as pc
     column_order = [f.name for f in schema.fields]
     wanted = pa.array(column_order, pa.string())
@@ -133,8 +134,8 @@ def decode_row_groups(unit_df: DataFrame, schema,
                                                   key=lambda u: u["file"]):
             with pq.ParquetFile(path) as f:
                 for u in file_units:
-                    tbl = _drop_sentinel_rows(f.read_row_group(
-                        u["row_group"], columns=_READ_COLUMNS))
+                    tbl = f.read_row_group(u["row_group"],
+                                           columns=_READ_COLUMNS)
                     pids = tbl.column("part_id").to_numpy()
                     if (pids != u["part_id"]).any():
                         raise ValueError(

@@ -479,6 +479,17 @@ def cut_colocated_chunks(batches, tokens_per_chunk: int, has_tok: bool,
         yield out
 
 
+def cluster_sort_keys(df: DataFrame, salt_cols: tuple[str, ...]
+                      ) -> list[tuple[str, str]] | None:
+    """Arrow sort keys of a clustered salted encode: the resolved salt
+    columns, ascending. Only scalar columns are Arrow-sortable, and the
+    full-row-hash fallback key can include list columns, so those are
+    left out; None when no salt column is left."""
+    sortable = {f.name for f in df.schema.fields
+                if f.dataType.typeName() not in ("array", "map", "struct")}
+    return [(c, "ascending") for c in salt_cols if c in sortable] or None
+
+
 def encode_chunks(df: DataFrame, num_parts: int,
                   columns: list[str] | None = None,
                   salt_cols: tuple[str, ...] | None = None,
@@ -507,16 +518,8 @@ def encode_chunks(df: DataFrame, num_parts: int,
     if columns is not None:
         df = df.select(*columns)
     plan = audition_codec_hints(df) if codec_hints is None else codec_hints
-    sort_keys = None
-    if cluster:
-        # only scalar key columns are arrow-sortable; the full-row-hash
-        # fallback key can include list columns — skip those
-        sortable = {f.name for f in df.schema.fields
-                    if f.dataType.typeName() not in
-                    ("array", "map", "struct")}
-        sort_keys = [(c, "ascending")
-                     for c in resolve_salt_cols(df, salt_cols)
-                     if c in sortable] or None
+    sort_keys = cluster_sort_keys(df, resolve_salt_cols(df, salt_cols)) \
+        if cluster else None
     df = with_part_id(df, num_parts, salt_cols)
     spark_types = {f.name: f.dataType.simpleString()
                    for f in df.schema.fields if f.name != PART_COL}

@@ -40,7 +40,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from .codecs.core import Plan, plan_from_json, plan_to_json
-from .encode import audition_codec_hints, encode_table
+from .encode import (audition_codec_hints, cluster_sort_keys,
+                     encode_table)
 from .partitioning import PART_COL, with_part_id
 from .transforms import _FILTER_RE
 
@@ -998,13 +999,7 @@ def encode_to_store(df: DataFrame, store: ChunkStore, num_parts: int,
     # compressible. Committed chunk bytes become deterministic when the
     # salt key is unique per row (the default (source, doc_id) is) —
     # rows TYING on the key keep their nondeterministic arrival order.
-    sort_keys = None
-    if cluster:
-        sortable = {f.name for f in df.schema.fields
-                    if f.dataType.typeName() not in
-                    ("array", "map", "struct")}
-        sort_keys = [(c, "ascending") for c in salt_cols
-                     if c in sortable] or None
+    sort_keys = cluster_sort_keys(df, salt_cols) if cluster else None
 
     def encode_commit(key: tuple, tbl: pa.Table) -> pa.Table:
         part_id = key[0].as_py()
@@ -1168,7 +1163,8 @@ def decode_from_store(store: ChunkStore, spark: SparkSession,
     keep the decode's min(units, defaultParallelism) tasks. One
     mapInArrow over the unit frame then decodes the units
     (`decode.decode_row_groups`): `columns` keeps only the requested
-    columns' chunk rows, so the other blobs are never decoded. The exact
+    columns' chunk rows, so the other blobs are never decoded, and orders
+    the output as listed, each column once. The exact
     filters run on the decoded rows. An unknown column in `columns` or
     in a predicate, or an empty `columns`, raises ValueError. Nothing
     here runs a Spark job: the first one is the caller's action.
@@ -1190,7 +1186,7 @@ def decode_from_store(store: ChunkStore, spark: SparkSession,
     filter_cols = [parse_zone_predicate(p)[0] for p in predicates]
     names = [f.name for f in schema.fields]
     if columns is not None:
-        columns = list(columns)
+        columns = list(dict.fromkeys(columns))
     unknown = [c for c in [*(columns or []), *filter_cols] if c not in names]
     if unknown or columns == []:
         what = f"unknown column(s) {list(dict.fromkeys(unknown))}" \
@@ -1207,7 +1203,8 @@ def decode_from_store(store: ChunkStore, spark: SparkSession,
             if name not in columns:
                 columns.append(name)  # needed for the exact filter
                 drop_after.append(name)
-        schema = StructType([f for f in schema.fields if f.name in columns])
+        by_name = {f.name: f for f in schema.fields}
+        schema = StructType([by_name[c] for c in columns])
     files, nbytes = store.decode_units(keep_parts,
                                        [f.name for f in schema.fields])
     if files:

@@ -142,6 +142,20 @@ def test_multimodal_plumbing(spark, docs):
         digest = hashlib.sha256(str(r.media_id).encode()).hexdigest()
         assert r.feature == [digest.encode()[j] / 255 for j in range(dim)]
     assert 0 < n_null < len(rows)
+    # extract_features' audio rows carry the waveform descriptor of the
+    # fake decode; a NULL payload gives a zero vector
+    payloads = {r.media_id: r.payload for r in
+                media.filter("kind = 'audio'").collect()}
+    feats = multimodal.extract_features(media.filter("kind = 'audio'"),
+                                        dim=dim, fake_decode=True)
+    got = {r.media_id: np.asarray(r.feature, np.float32)
+           for r in feats.collect()}
+    assert got.keys() == payloads.keys()
+    for mid, payload in payloads.items():
+        want = np.zeros(dim, np.float32) if payload is None else \
+            multimodal._audio_feature(
+                *multimodal.decode_audio(payload, fake_decode=True), dim)
+        assert np.array_equal(got[mid], want), mid
 
 
 def test_multimodal_real_decode_is_stubbed():
@@ -157,14 +171,37 @@ _GIF_1X1 = (b"GIF89a\x01\x00\x01\x00\x80\x00\x00\x00\x00\x00\xff\xff\xff"
             b"!\xf9\x04\x01\x00\x00\x00\x00,\x00\x00\x00\x00\x01\x00\x01"
             b"\x00\x00\x02\x02D\x01\x00;")
 _Y4M_2X2 = b"YUV4MPEG2 W2 H2 F25:1 C444\nFRAME\n" + bytes(range(12))
+# an 8x8 gray baseline JPEG (one DC-only block), a 1x1 24-bit BMP and a
+# two-sample 16-bit mono PCM WAV: as above, no real decoder here
+_JPEG_8X8 = (b"\xff\xd8"
+             b"\xff\xdb\x00\x43\x00" + b"\x01" * 64        # DQT
+             + b"\xff\xc0\x00\x0b\x08\x00\x08\x00\x08\x01\x01\x11\x00"
+             + b"\xff\xc4\x00\x14\x00\x01" + bytes(16)     # DHT DC
+             + b"\xff\xc4\x00\x14\x10\x01" + bytes(16)     # DHT AC
+             + b"\xff\xda\x00\x08\x01\x01\x00\x00\x3f\x00"  # SOS
+             + b"\x3f\xff\xd9")
+_BMP_1X1 = (b"BM\x3a\x00\x00\x00\x00\x00\x00\x00\x36\x00\x00\x00"
+            b"\x28\x00\x00\x00\x01\x00\x00\x00\x01\x00\x00\x00\x01\x00"
+            b"\x18\x00\x00\x00\x00\x00\x04\x00\x00\x00\x13\x0b\x00\x00"
+            b"\x13\x0b\x00\x00\x00\x00\x00\x00\x00\x00\x00\x00"
+            b"\x10\x20\x30\x00")
+_WAV_2 = (b"RIFF\x28\x00\x00\x00WAVEfmt \x10\x00\x00\x00\x01\x00\x01\x00"
+          b"\x40\x1f\x00\x00\x80\x3e\x00\x00\x02\x00\x10\x00"
+          b"data\x04\x00\x00\x00\x00\x00\xff\x7f")
 
 
 def test_gif_and_real_video_decode_raise_the_stub_error(spark, monkeypatch):
+    # executors import multimodal afresh, without this monkeypatch
+    pil_on_executors = multimodal.HAVE_PIL
     monkeypatch.setattr(multimodal, "HAVE_PIL", False)
-    with pytest.raises(NotImplementedError, match="PIL"):
-        multimodal.decode_image(_GIF_1X1, 1, 1, fake_decode=False)
+    for img in (_GIF_1X1, _JPEG_8X8, _BMP_1X1):
+        with pytest.raises(NotImplementedError, match="PIL"):
+            multimodal.decode_image(img, 1, 1, fake_decode=False)
     with pytest.raises(NotImplementedError, match="video library"):
         multimodal.decode_video(_Y4M_2X2, [0])
+    for audio in (_WAV_2, b"\xff\xfbmp3-frame-sync"):
+        with pytest.raises(NotImplementedError, match="audio library"):
+            multimodal.decode_audio(audio)
     media = spark.createDataFrame([(1, "video", 2, 2, 1, bytearray(_Y4M_2X2))],
                                   multimodal.MEDIA_SCHEMA_DDL)
     # raised by the call itself, on the driver: no action, so no job
@@ -173,6 +210,15 @@ def test_gif_and_real_video_decode_raise_the_stub_error(spark, monkeypatch):
     feats = multimodal.extract_features(media, dim=4, fake_decode=False)
     with pytest.raises(Exception, match="video library"):
         feats.collect()
+    cases = [("audio", _WAV_2, "audio library")]
+    if not pil_on_executors:
+        cases += [("image", _JPEG_8X8, "PIL"), ("image", _BMP_1X1, "PIL")]
+    for kind, payload, match in cases:
+        media = spark.createDataFrame([(1, kind, 1, 1, 1, bytearray(payload))],
+                                      multimodal.MEDIA_SCHEMA_DDL)
+        feats = multimodal.extract_features(media, dim=4, fake_decode=False)
+        with pytest.raises(Exception, match=match):
+            feats.collect()
 
 
 def test_decode_video_fake_and_stub_gate():
@@ -187,6 +233,14 @@ def test_decode_video_fake_and_stub_gate():
     assert not np.array_equal(a1[1][0], a1[1][1])
     with pytest.raises(NotImplementedError, match="video library"):
         multimodal.decode_video(b"no container signature here")
+    # the fake audio decode is deterministic too, and its int16 samples
+    # normalize to [-1, 1)
+    a, ra = multimodal.decode_audio(b"xyz", fake_decode=True)
+    b, rb = multimodal.decode_audio(b"xyz", fake_decode=True)
+    assert a.dtype == np.int16 and np.array_equal(a, b) and ra == rb
+    norm = multimodal._audio_normalize(np.array([[-32768], [16384]],
+                                                np.int16))
+    assert np.allclose(norm, [-1.0, 0.5])
 
 
 def test_frame_sample_decoded_fake_path(spark, docs):

@@ -14,14 +14,11 @@
    length-mismatched part streams instead of IndexError / misrender.
 """
 
-import struct
-import zlib
-
 import numpy as np
 import pyarrow as pa
 import pytest
 
-from test_r6_fixes import _chunk, _encode_png
+from test_r6_fixes import _encode_png
 
 
 # -- 1. _session_dead classification ------------------------------------------
@@ -269,114 +266,6 @@ def test_png_bad_filter_type_still_names_line():
                    for y, f in enumerate((0, 7, 0)))
     with pytest.raises(ValueError, match="filter type 7 on line 1"):
         _png_unfilter(raw, 3, 6, 3)
-
-
-# -- 7. RIFF/PCM WAV decode (VERDICT r6 #3) ------------------------------------
-
-def _make_wav(samples, rate, bits, audio_fmt=1, extensible=False):
-    """Minimal test-only WAV writer: RIFF/WAVE with fmt + data chunks
-    (and a junk LIST chunk to exercise the chunk walk)."""
-    samples = np.asarray(samples)
-    n_ch = samples.shape[1]
-    if audio_fmt == 1 and bits == 24:
-        x = samples.astype(np.int32).reshape(-1)
-        raw = np.empty((len(x), 3), dtype=np.uint8)
-        raw[:, 0] = x & 0xFF
-        raw[:, 1] = (x >> 8) & 0xFF
-        raw[:, 2] = (x >> 16) & 0xFF
-        data = raw.tobytes()
-        block = 3 * n_ch
-    else:
-        data = samples.tobytes()
-        block = samples.dtype.itemsize * n_ch
-    if extensible:
-        fmt = struct.pack("<HHIIHHHHI", 0xFFFE, n_ch, rate, rate * block,
-                          block, bits, 22, bits, 0)
-        fmt += struct.pack("<H", audio_fmt) + b"\x00" * 14
-    else:
-        fmt = struct.pack("<HHIIHH", audio_fmt, n_ch, rate, rate * block,
-                          block, bits)
-    chunks = (b"fmt " + struct.pack("<I", len(fmt)) + fmt
-              + b"LIST" + struct.pack("<I", 5) + b"INFOx" + b"\x00"
-              + b"data" + struct.pack("<I", len(data)) + data)
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-
-def test_wav_decode_sample_exact_all_widths():
-    from tbl_spark.pipelines.multimodal import _decode_wav
-    rng = np.random.default_rng(31)
-    cases = [
-        (rng.integers(0, 256, (300, 1)).astype(np.uint8), 8000, 8, 1),
-        (rng.integers(-2**15, 2**15, (257, 2)).astype("<i2"), 44100, 16, 1),
-        (rng.integers(-2**23, 2**23, (64, 2)).astype(np.int32), 48000, 24, 1),
-        (rng.integers(-2**31, 2**31, (100, 1)).astype("<i4"), 96000, 32, 1),
-        (rng.standard_normal((128, 2)).astype("<f4"), 22050, 32, 3),
-        (rng.standard_normal((50, 1)).astype("<f8"), 16000, 64, 3),
-    ]
-    for want, rate, bits, afmt in cases:
-        got, got_rate = _decode_wav(_make_wav(want, rate, bits, afmt))
-        assert got_rate == rate
-        assert got.shape == want.shape, (bits, afmt)
-        assert np.array_equal(got, want), (bits, afmt)
-    # WAVE_FORMAT_EXTENSIBLE wrapping PCM-16
-    want = cases[1][0]
-    got, _ = _decode_wav(_make_wav(want, 44100, 16, 1, extensible=True))
-    assert np.array_equal(got, want)
-
-
-def test_wav_decode_error_contract():
-    from tbl_spark.pipelines.multimodal import _decode_wav, decode_audio
-    # not RIFF at all -> None (falls through to other decoders)
-    assert _decode_wav(b"OggS\x00\x00junk") is None
-    assert _decode_wav(b"") is None
-    # truncated data chunk -> ValueError
-    good = _make_wav(np.zeros((10, 1), dtype="<i2"), 8000, 16)
-    with pytest.raises(ValueError, match="truncated"):
-        _decode_wav(good[:-5])
-    # missing data chunk
-    with pytest.raises(ValueError, match="missing fmt or data"):
-        _decode_wav(b"RIFF" + struct.pack("<I", 4) + b"WAVE")
-    # compressed codec tag -> explicit stub
-    with pytest.raises(NotImplementedError, match="codec tag"):
-        _decode_wav(_make_wav(np.zeros((4, 1), dtype="<i2"), 8000, 16,
-                              audio_fmt=85))   # MP3 in WAV
-    # non-WAV audio without fake -> explicit stub naming the gate
-    with pytest.raises(NotImplementedError, match="audio library"):
-        decode_audio(b"\xff\xfbmp3-frame-sync")
-    # fake path stays deterministic
-    a, ra = decode_audio(b"xyz", fake_decode=True)
-    b, rb = decode_audio(b"xyz", fake_decode=True)
-    assert np.array_equal(a, b) and ra == rb
-
-
-def test_wav_real_path_in_map_in_arrow(spark):
-    """Real WAV payloads decode end-to-end inside the executor batch
-    path (fake_decode=False), mixed with real PNG image rows."""
-    from tbl_spark.pipelines.multimodal import (
-        _audio_feature,
-        extract_features,
-    )
-    rng = np.random.default_rng(41)
-    rows, ref = [], {}
-    for mid in range(6):
-        wave = rng.integers(-2**15, 2**15,
-                            (200 + mid, 1 + mid % 2)).astype("<i2")
-        rows.append((mid, "audio", 0, 0, 1,
-                     bytearray(_make_wav(wave, 16000, 16))))
-        ref[mid] = _audio_feature(wave, 16000, 16)
-    px = rng.integers(0, 256, (9, 7, 3), dtype=np.uint8)
-    rows.append((99, "image", 7, 9, 1, bytearray(_encode_png(px, [4]))))
-    df = spark.createDataFrame(
-        rows, "media_id bigint, kind string, width int, height int, "
-              "n_frames int, payload binary")
-    feats = {r["media_id"]: np.asarray(r["feature"], dtype=np.float32)
-             for r in extract_features(df, dim=16,
-                                       fake_decode=False).collect()}
-    assert len(feats) == 7
-    for mid, want in ref.items():
-        np.testing.assert_allclose(feats[mid], want, rtol=1e-6)
-    np.testing.assert_allclose(
-        feats[99][:3], px.reshape(-1, 3).mean(axis=0), rtol=1e-5)
 
 
 # -- 8. batched post-decode feature math (VERDICT r6 #5) -----------------------

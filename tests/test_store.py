@@ -166,6 +166,15 @@ def test_metrics_df_and_column_pruned_decode(spark, tmp_path):
                                columns=["doc_id", "n_tok"])
     assert pruned.columns == ["doc_id", "n_tok"]
     assert pruned.count() == 1500
+    # the output keeps the requested order, each column once; a
+    # predicate-only column is still dropped after the filter
+    assert decode_from_store(store, spark, columns=["n_tok", "doc_id",
+                                                    "n_tok"]).columns == \
+        ["n_tok", "doc_id"]
+    selected = decode_from_store(store, spark, columns=["source", "doc_id"],
+                                 predicate="n_tok>=300")
+    assert selected.columns == ["source", "doc_id"]
+    assert selected.count() == df.filter(F.col("n_tok") >= 300).count()
 
 
 def test_compaction_wave_files(spark, tmp_path):
@@ -322,8 +331,8 @@ def test_mixed_waves_and_loose_parts_decode_bit_exactly(spark, tmp_path):
 
 def test_row_group_of_another_part_raises(spark, tmp_path):
     """A wave manifest whose part order disagrees with its file's row
-    groups fails the decode instead of returning rows under the wrong
-    part."""
+    groups, or a store file holding a stray sentinel row, fails the decode
+    instead of returning rows under the wrong part or skipping one."""
     store = ChunkStore(str(tmp_path / "store"))
     encode_to_store(generate_df(spark, 400, 2), store, 2)
     assert store.compact(wave_size=2) == 1
@@ -335,6 +344,24 @@ def test_row_group_of_another_part_raises(spark, tmp_path):
         json.dump(wave, f)
     with pytest.raises(Exception, match="planned part"):
         decode_from_store(store, spark).count()
+    # a shared-table sentinel row belongs in encode_chunks frames only:
+    # one in a store file fails the same check instead of being skipped
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tbl_spark.encode import RANS_TABLE_CODEC
+    loose = ChunkStore(str(tmp_path / "loose"))
+    encode_to_store(generate_df(spark, 400, 2), loose, 2)
+    path = os.path.join(loose.chunks_dir, "part-00000.parquet")
+    tbl = pq.read_table(path)
+    stray = tbl.slice(0, 1)
+    for name, value in (("part_id", -1), ("codec", RANS_TABLE_CODEC)):
+        i = stray.schema.get_field_index(name)
+        stray = stray.set_column(i, stray.schema.field(i),
+                                 pa.array([value], stray.schema.field(i).type))
+    pq.write_table(pa.concat_tables([tbl, stray]), path)
+    with pytest.raises(Exception, match="planned part"):
+        decode_from_store(loose, spark).count()
 
 
 def test_small_store_decodes_in_one_task_with_no_shuffle(spark, tmp_path):
