@@ -175,7 +175,7 @@ _Y4M_2X2 = b"YUV4MPEG2 W2 H2 F25:1 C444\nFRAME\n" + bytes(range(12))
 # two-sample 16-bit mono PCM WAV: as above, no real decoder here
 _JPEG_8X8 = (b"\xff\xd8"
              b"\xff\xdb\x00\x43\x00" + b"\x01" * 64        # DQT
-             + b"\xff\xc0\x00\x0b\x08\x00\x08\x00\x08\x01\x01\x11\x00"
+             + b"\xff\xc0\x00\x0b\x08\x00\x08\x00\x08\x01\x01\x11\x00"  # SOF0
              + b"\xff\xc4\x00\x14\x00\x01" + bytes(16)     # DHT DC
              + b"\xff\xc4\x00\x14\x10\x01" + bytes(16)     # DHT AC
              + b"\xff\xda\x00\x08\x01\x01\x00\x00\x3f\x00"  # SOS
