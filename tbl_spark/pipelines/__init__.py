@@ -1,3 +1,3 @@
 """Training-data pipeline operators over the documents/embeddings tables:
 deduplication, similarity search, text analysis, packing, sampling, and
-multimodal plumbing (media payloads, pure-numpy PPM/PNG decode)."""
+multimodal plumbing (media payloads, pure-numpy PPM/PNG/BMP decode)."""

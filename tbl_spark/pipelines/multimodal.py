@@ -3,10 +3,10 @@ with typed metadata.
 
 The Spark-side plumbing (schema, partitioning, Arrow batch shape, UDF
 signatures) is real and tested. Image decode is REAL for PPM P6 and
-every legal PNG IHDR shape (depths 1-16, all color types, Adam7; pure
-numpy + stdlib — no imaging library needed); other formats (JPEG, BMP,
-GIF, TIFF, …) fall back to PIL and raise NotImplementedError when it is
-absent. Real audio and video decode raise the stub error for every
+every legal PNG IHDR shape (depths 1-16, all color types, Adam7) and
+BMP (pure numpy + stdlib — no imaging library needed); other formats
+(JPEG, GIF, TIFF, …) fall back to PIL and raise NotImplementedError
+when it is absent. Real audio and video decode raise the stub error for every
 payload.
 `fake_decode=True` swaps in deterministic fake decoders so the batch
 plumbing can be exercised independently of any format.
@@ -378,9 +378,9 @@ def _resize_nearest(px: np.ndarray, width: int, height: int) -> np.ndarray:
 
 def decode_image(payload: bytes, width: int, height: int,
                  fake_decode: bool = False) -> np.ndarray:
-    """(H, W, 3) uint8 pixels. Real path: uncompressed PPM P6 and any
-    legal PNG (depths 1-16, all color types, Adam7 interlace), with pure
-    numpy/stdlib (no PIL); anything else decodes with PIL, and without
+    """(H, W, 3) uint8 pixels. Real path: uncompressed PPM P6, any
+    legal PNG (depths 1-16, all color types, Adam7 interlace) and BMP,
+    with pure numpy/stdlib (no PIL); anything else decodes with PIL, and without
     PIL in the environment the stub error is explicit (the deterministic
     fake keeps the Spark-side plumbing testable either way). The image
     is resized to the metadata dimensions when they differ."""
@@ -389,6 +389,8 @@ def decode_image(payload: bytes, width: int, height: int,
     px = _decode_ppm(payload)
     if px is None:
         px = _decode_png(payload)
+    if px is None:
+        px = _decode_bmp(payload)
     if px is not None:
         if width and height and px.shape[:2] != (height, width):
             return _resize_nearest(px, width, height)
@@ -398,14 +400,165 @@ def decode_image(payload: bytes, width: int, height: int,
         return px if px.flags.writeable else px.copy()
     if not HAVE_PIL:
         raise NotImplementedError(
-            "real decode of non-PPM/PNG images requires PIL, which is "
-            "not installed; pass fake_decode=True for the deterministic "
-            "fake decoder (PPM and PNG payloads decode without PIL)")
+            "real decode of non-PPM/PNG/BMP images requires PIL, which "
+            "is not installed; pass fake_decode=True for the deterministic "
+            "fake decoder (PPM, PNG and BMP payloads decode without PIL)")
     from io import BytesIO
     img = Image.open(BytesIO(payload)).convert("RGB")
     if width and height and img.size != (width, height):
         img = img.resize((width, height))
     return np.asarray(img, dtype=np.uint8)
+
+
+def _decode_bmp(payload: bytes) -> np.ndarray | None:
+    """Pure-numpy decoder for Windows BMP/DIB (public Microsoft
+    format): BITMAPCOREHEADER and BITMAPINFOHEADER-family headers,
+    1/4/8-bit palette, 16-bit (555/565 and arbitrary BI_BITFIELDS
+    masks), 24/32-bit BGR(A), RLE8/RLE4 run-length rows, bottom-up and
+    top-down row order. Returns (H, W, 3) uint8 or None when the
+    payload is not BMP; ValueError on corrupt structure;
+    NotImplementedError for the embedded-JPEG/PNG compression modes."""
+    if len(payload) < 26 or payload[:2] != b"BM":
+        return None
+    import struct
+    (data_off,) = struct.unpack("<I", payload[10:14])
+    (hdr_size,) = struct.unpack("<I", payload[14:18])
+    if hdr_size == 12:                       # BITMAPCOREHEADER
+        w, h, _planes, bpp = struct.unpack("<HHHH", payload[18:26])
+        comp, colors, pal_off, pal_stride = 0, 0, 26, 3
+        topdown = False
+    elif hdr_size >= 40:
+        w, h, _planes, bpp, comp, _isz, _xp, _yp, colors, _imp = \
+            struct.unpack("<iiHHIIiiII", payload[18:54])
+        topdown = h < 0
+        h = abs(h)
+        pal_off = 14 + hdr_size
+        pal_stride = 4
+        if comp == 3 and hdr_size == 40:     # masks follow the header
+            pal_off += 12
+    else:
+        raise ValueError(f"corrupt BMP: header size {hdr_size}")
+    if w <= 0 or h <= 0 or w > 1 << 20 or h > 1 << 20:
+        raise ValueError(f"corrupt BMP: dimensions {w}x{h}")
+    if comp in (4, 5):
+        raise NotImplementedError(
+            "BMP with embedded JPEG/PNG payload is not supported by "
+            "the pure-numpy decoder; install PIL")
+    if comp not in (0, 1, 2, 3):
+        raise ValueError(f"corrupt BMP: compression {comp}")
+
+    def _palette() -> np.ndarray:
+        n = colors or (1 << bpp)
+        if pal_off + n * pal_stride > len(payload):
+            raise ValueError("corrupt BMP: palette truncated")
+        raw = np.frombuffer(payload, np.uint8, n * pal_stride, pal_off)
+        return raw.reshape(n, pal_stride)[:, 2::-1].copy()   # BGR→RGB
+
+    if comp in (1, 2):                       # RLE8 / RLE4
+        if (comp == 1 and bpp != 8) or (comp == 2 and bpp != 4):
+            raise ValueError("corrupt BMP: RLE bpp mismatch")
+        pal = _palette()
+        idx = np.zeros((h, w), np.uint8)
+        x = y = 0
+        pos = data_off
+        while pos + 1 < len(payload):
+            cnt, val = payload[pos], payload[pos + 1]
+            pos += 2
+            if cnt:                          # encoded run
+                if comp == 1:
+                    px = [val] * cnt
+                else:
+                    px = [val >> 4, val & 0x0F] * ((cnt + 1) // 2)
+                for p in px[:cnt]:
+                    if x < w and y < h:
+                        idx[y, x] = p
+                    x += 1
+            elif val == 0:                   # end of line
+                x, y = 0, y + 1
+            elif val == 1:                   # end of bitmap
+                break
+            elif val == 2:                   # delta
+                if pos + 2 > len(payload):
+                    raise ValueError("corrupt BMP: truncated RLE delta")
+                x += payload[pos]
+                y += payload[pos + 1]
+                pos += 2
+            else:                            # absolute mode: val pixels
+                if comp == 1:
+                    need = (val + 1) & ~1    # word-aligned
+                    if pos + val > len(payload):
+                        raise ValueError("corrupt BMP: truncated RLE")
+                    for p in payload[pos:pos + val]:
+                        if x < w and y < h:
+                            idx[y, x] = p
+                        x += 1
+                    pos += need
+                else:
+                    nbytes = (val + 1) // 2
+                    need = (nbytes + 1) & ~1
+                    if pos + nbytes > len(payload):
+                        raise ValueError("corrupt BMP: truncated RLE")
+                    k = 0
+                    for b in payload[pos:pos + nbytes]:
+                        for p in (b >> 4, b & 0x0F):
+                            if k >= val:
+                                break
+                            if x < w and y < h:
+                                idx[y, x] = p
+                            x += 1
+                            k += 1
+                    pos += need
+        rgb = pal[np.minimum(idx, len(pal) - 1)]
+        return rgb if topdown else rgb[::-1].copy()
+
+    stride = (w * bpp + 31) // 32 * 4
+    need = stride * h
+    if data_off + need > len(payload):
+        raise ValueError("corrupt BMP: pixel data truncated")
+    rows = np.frombuffer(payload, np.uint8, need,
+                         data_off).reshape(h, stride)
+    if not topdown:
+        rows = rows[::-1]
+    if bpp in (1, 4, 8):
+        pal = _palette()
+        if bpp == 8:
+            idx = rows[:, :w]
+        else:
+            bits = np.unpackbits(rows, axis=1)[:, :w * bpp]
+            weights = (1 << np.arange(bpp - 1, -1, -1)).astype(np.uint8)
+            idx = (bits.reshape(h, w, bpp) @ weights)
+        if int(idx.max(initial=0)) >= len(pal):
+            raise ValueError("corrupt BMP: palette index out of range")
+        return pal[idx]
+    if bpp == 24:
+        px = rows[:, :w * 3].reshape(h, w, 3)
+        return np.ascontiguousarray(px[:, :, ::-1])
+    if bpp in (16, 32):
+        dt = "<u2" if bpp == 16 else "<u4"
+        v = rows[:, :w * bpp // 8].copy().view(dt)[:, :w].astype(
+            np.uint32)
+        if comp == 3:
+            # masks live right after the 40-byte header, or at the same
+            # offset inside V4/V5 headers
+            masks = struct.unpack("<III", payload[54:66])
+        else:
+            masks = (0x7C00, 0x03E0, 0x001F) if bpp == 16 else \
+                (0xFF0000, 0x00FF00, 0x0000FF)
+        out = np.empty((h, w, 3), np.uint8)
+        for c, m in enumerate(masks):
+            if m == 0:
+                raise ValueError("corrupt BMP: zero channel mask")
+            shift = (m & -m).bit_length() - 1
+            width_bits = int(m >> shift).bit_length()
+            ch = (v & m) >> shift
+            if width_bits < 8:               # expand to full 8-bit range
+                ch = ch * 255 // ((1 << width_bits) - 1)
+            elif width_bits > 8:
+                ch = ch >> (width_bits - 8)
+            out[:, :, c] = ch.astype(np.uint8)
+        return out
+    raise NotImplementedError(
+        f"BMP bit depth {bpp} not supported by the pure-numpy decoder")
 
 
 def _fake_decode_video(payload: bytes, width: int, height: int,

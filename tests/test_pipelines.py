@@ -171,8 +171,8 @@ _GIF_1X1 = (b"GIF89a\x01\x00\x01\x00\x80\x00\x00\x00\x00\x00\xff\xff\xff"
             b"!\xf9\x04\x01\x00\x00\x00\x00,\x00\x00\x00\x00\x01\x00\x01"
             b"\x00\x00\x02\x02D\x01\x00;")
 _Y4M_2X2 = b"YUV4MPEG2 W2 H2 F25:1 C444\nFRAME\n" + bytes(range(12))
-# an 8x8 gray baseline JPEG (one DC-only block), a 1x1 24-bit BMP and a
-# two-sample 16-bit mono PCM WAV: as above, no real decoder here
+# an 8x8 gray baseline JPEG (one DC-only block) and a two-sample 16-bit
+# mono PCM WAV: as above, no real decoder here
 _JPEG_8X8 = (b"\xff\xd8"
              b"\xff\xdb\x00\x43\x00" + b"\x01" * 64        # DQT
              + b"\xff\xc0\x00\x0b\x08\x00\x08\x00\x08\x01\x01\x11\x00"  # SOF0
@@ -180,11 +180,6 @@ _JPEG_8X8 = (b"\xff\xd8"
              + b"\xff\xc4\x00\x14\x10\x01" + bytes(16)     # DHT AC
              + b"\xff\xda\x00\x08\x01\x01\x00\x00\x3f\x00"  # SOS
              + b"\x3f\xff\xd9")
-_BMP_1X1 = (b"BM\x3a\x00\x00\x00\x00\x00\x00\x00\x36\x00\x00\x00"
-            b"\x28\x00\x00\x00\x01\x00\x00\x00\x01\x00\x00\x00\x01\x00"
-            b"\x18\x00\x00\x00\x00\x00\x04\x00\x00\x00\x13\x0b\x00\x00"
-            b"\x13\x0b\x00\x00\x00\x00\x00\x00\x00\x00\x00\x00"
-            b"\x10\x20\x30\x00")
 _WAV_2 = (b"RIFF\x28\x00\x00\x00WAVEfmt \x10\x00\x00\x00\x01\x00\x01\x00"
           b"\x40\x1f\x00\x00\x80\x3e\x00\x00\x02\x00\x10\x00"
           b"data\x04\x00\x00\x00\x00\x00\xff\x7f")
@@ -194,7 +189,7 @@ def test_gif_and_real_video_decode_raise_the_stub_error(spark, monkeypatch):
     # executors import multimodal afresh, without this monkeypatch
     pil_on_executors = multimodal.HAVE_PIL
     monkeypatch.setattr(multimodal, "HAVE_PIL", False)
-    for img in (_GIF_1X1, _JPEG_8X8, _BMP_1X1):
+    for img in (_GIF_1X1, _JPEG_8X8):
         with pytest.raises(NotImplementedError, match="PIL"):
             multimodal.decode_image(img, 1, 1, fake_decode=False)
     with pytest.raises(NotImplementedError, match="video library"):
@@ -212,7 +207,7 @@ def test_gif_and_real_video_decode_raise_the_stub_error(spark, monkeypatch):
         feats.collect()
     cases = [("audio", _WAV_2, "audio library")]
     if not pil_on_executors:
-        cases += [("image", _JPEG_8X8, "PIL"), ("image", _BMP_1X1, "PIL")]
+        cases.append(("image", _JPEG_8X8, "PIL"))
     for kind, payload, match in cases:
         media = spark.createDataFrame([(1, kind, 1, 1, 1, bytearray(payload))],
                                       multimodal.MEDIA_SCHEMA_DDL)

@@ -116,7 +116,8 @@ def test_png_decode_resize_and_gates():
     px = rng.integers(0, 256, (10, 10, 3), dtype=np.uint8)
     got = decode_image(_encode_png(px, [4]), 20, 30)
     assert got.shape == (30, 20, 3)
-    # a payload that is neither PPM nor PNG hits the explicit PIL gate
+    # a payload no pure-numpy decoder takes (BM magic, but too short for
+    # a BMP header) hits the explicit PIL gate
     with pytest.raises(NotImplementedError, match="PIL"):
         decode_image(b"BM-bmp-ish-payload", 4, 4)
     # 16-bit RGB decodes for real now (test_png_exotic.py covers values)
