@@ -134,9 +134,10 @@ def store_stats(store: ChunkStore) -> dict:
     tokens/sec — the inspect/stats metrics table of the north rule.
 
     Scale shape (VERDICT r3 #1): the rollup is a columnar aggregation
-    over the store's per-wave stats parquets (pyarrow group_by — no
-    json.load per manifest); only loose / pre-r4 parts flow in via JSON
-    (bounded once compaction runs). `plan` lists the encode plan pinned
+    over the store's per-wave stats parquets (pyarrow group_by); only
+    loose / pre-r4 parts flow in via JSON (bounded once compaction
+    runs). `encode_cpu_sec` sums the part manifests' `encode_ms`: one
+    json.load per wave and per loose part. `plan` lists the encode plan pinned
     in store.json per column key — codec name, ``shared table <fp>`` or
     ``fsst <n> merges`` — i.e. the codecs new chunks will use."""
     t = store.stats_table()
@@ -151,11 +152,10 @@ def store_stats(store: ChunkStore) -> dict:
               .group_by(["column", "codec"]).aggregate([]).to_pylist()):
         per_col[r["column"]]["codecs"].add(r["codec"])
     per_part = (t.group_by("part_id")
-                .aggregate([("encode_ms", "max"), ("n_rows", "max"),
-                            ("n_values", "max")]))
+                .aggregate([("n_rows", "max"), ("n_values", "max")]))
     import pyarrow.compute as pc
-    total_ms = float(pc.sum(per_part.column("encode_ms_max"),
-                            min_count=0).as_py() or 0.0)
+    # encode timing lives in the part manifests, not in the stats rows
+    total_ms = sum(m.get("encode_ms") or 0.0 for m in store.manifest_rows())
     n_rows = int(pc.sum(per_part.column("n_rows_max"),
                         min_count=0).as_py() or 0)
     total_values = int(pc.sum(per_part.column("n_values_max"),

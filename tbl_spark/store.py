@@ -1,17 +1,37 @@
-"""Checkpointed chunk store: per-partition atomic commit + resume.
+"""Checkpointed chunk store: per-part atomic commit, resume, compaction.
 
 Layout (root/):
-    chunks/part-NNNNN.parquet   committed chunk rows (CHUNK_SCHEMA) per part
-    manifest/part-NNNNN.json    commit marker + per-column lineage/metrics
+    store.json, shared_tables.json  pinned contract, schema and encode
+                                plan; the plan's shared rANS tables
+    chunks/part-NNNNN.parquet   a loose part's chunk rows, one row group
+    manifest/part-NNNNN.json    its commit marker: per-column codec, sizes,
+                                zone stats, encode timing, unit record
+    waves/wave-NNNNNN.parquet   a compacted wave, one row group per part
+    stats/wave-NNNNNN.parquet   the wave's STATS_SCHEMA rows
+    manifest/wave-NNNNNN.json   its commit marker: parts, their manifests,
+                                unit records
+    snapshots/snap-NNNNNN.json  one summary per encode run
     _staging/                   in-flight files (ignored by readers)
 
-Write protocol per partition, executed ON THE EXECUTOR inside the encode
-UDF — the Spark version of the reference's tmp+rename crash-safe outputs
-(crates/tbl-cli/src/output.rs:141-176, parquet_drop.rs:14-28):
+A unit is one row group of a data file, holding one part's chunk rows;
+a decode task reads units. `write_data_file` writes every data file and
+returns one record per unit, which the manifest committing the file
+carries and `ChunkStore.decode_units` plans from alone:
 
-    1. write chunk parquet  → _staging/part-N.<token>.parquet
+    {"file": "waves/wave-000000.parquet", "row_group": 1, "part_id": 3,
+     "rows": 250, "columns": {"tokens": 198671, ...}}   # enc_bytes
+
+Data files hold no timing, so their bytes depend only on the input and
+the plan; timings live in the JSON records (manifest/, snapshots/).
+
+Write protocol per part, executed ON THE EXECUTOR inside the encode
+UDF (`encode_part`) — the Spark version of the reference's tmp+rename
+crash-safe outputs (crates/tbl-cli/src/output.rs:141-176,
+parquet_drop.rs:14-28):
+
+    1. write chunk parquet  → _staging/part-N.parquet.<token>
     2. os.replace           → chunks/part-N.parquet        (atomic)
-    3. write manifest json  → _staging/part-N.<token>.json
+    3. write manifest json  → _staging/part-N.json.<token>
     4. os.replace           → manifest/part-N.json         (atomic commit)
 
 The manifest file is the commit marker: a crash between 2 and 4 leaves an
@@ -33,7 +53,7 @@ import logging
 import os
 import time
 import uuid
-from typing import Callable
+from typing import Callable, Iterable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -47,12 +67,28 @@ from .transforms import _FILTER_RE
 
 log = logging.getLogger("tbl_spark")
 
-_SPARK_TYPE = {"int64": "bigint", "string": "string", "double": "double",
-               "bool": "boolean"}
+
+def _load_json(path: str):
+    with open(path) as f:
+        return json.load(f)
 
 
-def _ddl(schema: pa.Schema) -> str:
-    return ", ".join(f"{f.name} {_SPARK_TYPE[str(f.type)]}" for f in schema)
+def _publish(root: str, path: str, write: Callable[[str], object]):
+    """Write `path` through the store's staging directory: `write(tmp)`
+    writes the staged file, which is then renamed onto `path` in one
+    atomic step. Returns what `write` returns."""
+    tmp = os.path.join(root, "_staging",
+                       f"{os.path.basename(path)}.{uuid.uuid4().hex[:8]}")
+    out = write(tmp)
+    os.replace(tmp, path)
+    return out
+
+
+def _write_json(root: str, path: str, obj) -> None:
+    def write(tmp):
+        with open(tmp, "w") as f:
+            json.dump(obj, f)
+    _publish(root, path, write)
 
 
 @contextlib.contextmanager
@@ -76,12 +112,11 @@ def _exclusive(lock_path: str):
             lock.close()  # releases the flock
 
 
-MANIFEST_SCHEMA = pa.schema([
-    ("part_id", pa.int64()), ("n_rows", pa.int64()),
-    ("n_values", pa.int64()), ("raw_bytes", pa.int64()),
-    ("enc_bytes", pa.int64()), ("encode_ms", pa.float64()),
-    ("committed_at", pa.float64()), ("columns", pa.string())])
-MANIFEST_SCHEMA_DDL = _ddl(MANIFEST_SCHEMA)
+# What an encode task returns per part it commits; a run's summary sums
+# these columns.
+PART_ROW_SCHEMA = pa.schema([(name, pa.int64()) for name in (
+    "part_id", "n_rows", "n_values", "raw_bytes", "enc_bytes")])
+PART_ROW_DDL = ", ".join(f"{name} bigint" for name in PART_ROW_SCHEMA.names)
 
 # Columnar zone/stats sidecar written per wave at compaction time
 # (VERDICT r3 #1): one row per (part_id, column), so pruning (a pyarrow
@@ -95,8 +130,7 @@ STATS_SCHEMA = pa.schema([
     ("part_id", pa.int64()), ("column", pa.string()),
     ("codec", pa.string()), ("n_rows", pa.int64()),
     ("n_values", pa.int64()), ("raw_bytes", pa.int64()),
-    ("enc_bytes", pa.int64()), ("encode_ms", pa.float64()),
-    ("committed_at", pa.float64()), ("kind", pa.string()),
+    ("enc_bytes", pa.int64()), ("kind", pa.string()),
     ("nulls", pa.int64()), ("has_nan", pa.bool_()),
     ("lo_num", pa.float64()), ("hi_num", pa.float64()),
     ("lo_str", pa.string()), ("hi_str", pa.string()),
@@ -166,14 +200,62 @@ def _manifest_stats_rows(manifest: dict) -> list[dict]:
             "codec": c.get("codec"), "n_rows": manifest["n_rows"],
             "n_values": c.get("n_values"),
             "raw_bytes": c.get("raw_bytes"), "enc_bytes": c.get("enc_bytes"),
-            "encode_ms": manifest.get("encode_ms"),
-            "committed_at": manifest.get("committed_at"),
             "kind": kind, "nulls": st.get("nulls"),
             "has_nan": has_nan,
             "lo_num": lo_num, "hi_num": hi_num,
             "lo_str": lo_str, "hi_str": hi_str,
         })
     return rows
+
+
+def write_data_file(root: str, file: str,
+                    parts: Iterable[tuple[int, pa.Table]]) -> list[dict]:
+    """Write the data file `file` (relative to the store `root`) through
+    staging, one row group per (part id, chunk rows) pair in order, and
+    return its unit records (see the module docstring). Chunk rows lose
+    their `encode_ms` column here, so the file's bytes depend only on
+    its parts' rows and the encode plan."""
+    def write(tmp: str) -> list[dict]:
+        units, writer = [], None
+        try:
+            for row_group, (part_id, tbl) in enumerate(parts):
+                if "encode_ms" in tbl.column_names:
+                    tbl = tbl.drop_columns(["encode_ms"])
+                if writer is None:
+                    writer = pq.ParquetWriter(tmp, tbl.schema,
+                                              **CHUNK_PARQUET)
+                writer.write_table(tbl)
+                units.append({
+                    "file": file, "row_group": row_group, "part_id": part_id,
+                    "rows": tbl["n_rows"][0].as_py() if len(tbl) else 0,
+                    "columns": dict(zip(tbl["column"].to_pylist(),
+                                        tbl["enc_bytes"].to_pylist()))})
+        finally:
+            if writer is not None:
+                writer.close()
+        return units
+    return _publish(root, os.path.join(root, file), write)
+
+
+def _unit_records(manifest: dict) -> list[dict]:
+    """The unit records of a committed part or wave manifest. A manifest
+    written before manifests carried them gets records built from the
+    layout of that time: row group i of a wave file holds the wave's
+    i-th part (a pre-r2 wave names its file by absolute path, which the
+    join keeps), and a loose part file is one row group."""
+    if "units" in manifest:
+        return manifest["units"]
+    if "wave" in manifest:
+        file, parts = os.path.join("waves", manifest["file"]), \
+            manifest["manifests"]
+    else:
+        file = f"chunks/part-{manifest['part_id']:05d}.parquet"
+        parts = [manifest]
+    return [{"file": file, "row_group": row_group, "part_id": m["part_id"],
+             "rows": m["n_rows"],
+             "columns": {name: c.get("enc_bytes") or 0
+                         for name, c in _manifest_columns(m).items()}}
+            for row_group, m in enumerate(parts)]
 
 
 class ChunkStore:
@@ -201,17 +283,11 @@ class ChunkStore:
         return os.path.join(self.root, "store.json")
 
     def read_meta(self) -> dict | None:
-        if not os.path.exists(self.meta_path):
-            return None
-        with open(self.meta_path) as f:
-            return json.load(f)
+        return _load_json(self.meta_path) \
+            if os.path.exists(self.meta_path) else None
 
     def write_meta(self, meta: dict) -> None:
-        token = uuid.uuid4().hex[:8]
-        tmp = os.path.join(self.staging_dir, f"store.{token}.json")
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, self.meta_path)
+        _write_json(self.root, self.meta_path, meta)
 
     # -- shared rANS tables sidecar (r7) ------------------------------------
     # Kept OUT of store.json: the pinned plan there names each table by
@@ -244,18 +320,11 @@ class ChunkStore:
                 b = bytes(b)
                 cur[f"{shared_table_fp(b):016x}"] = \
                     base64.b64encode(b).decode("ascii")
-            token = uuid.uuid4().hex[:8]
-            tmp = os.path.join(self.staging_dir,
-                               f"shared_tables.{token}.json")
-            with open(tmp, "w") as f:
-                json.dump(cur, f)
-            os.replace(tmp, self.shared_tables_path)
+            _write_json(self.root, self.shared_tables_path, cur)
 
     def _read_shared_tables_raw(self) -> dict:
-        if not os.path.exists(self.shared_tables_path):
-            return {}
-        with open(self.shared_tables_path) as f:
-            return json.load(f)
+        return _load_json(self.shared_tables_path) \
+            if os.path.exists(self.shared_tables_path) else {}
 
     def read_shared_tables(self) -> dict[int, bytes]:
         import base64
@@ -345,53 +414,50 @@ class ChunkStore:
 
     def append_snapshot(self, summary: dict) -> None:
         """Write `summary` as the next `snap-NNNNNN.json`. The sequence
-        number is taken and the file renamed into place under one lock,
+        number is taken and the file written into place under one lock,
         so concurrent writers never take the same number."""
-        tmp = os.path.join(self.staging_dir,
-                           f"snap.{uuid.uuid4().hex[:8]}.json")
-        with open(tmp, "w") as f:
-            json.dump(summary, f)
         with _exclusive(self.snapshots_dir + ".lock"):
             seq = sum(1 for name in os.listdir(self.snapshots_dir)
                       if name.startswith("snap-") and name.endswith(".json"))
-            os.replace(tmp, os.path.join(self.snapshots_dir,
-                                         f"snap-{seq:06d}.json"))
+            _write_json(self.root, os.path.join(
+                self.snapshots_dir, f"snap-{seq:06d}.json"), summary)
 
     def snapshots(self) -> list[dict]:
         if not os.path.isdir(self.snapshots_dir):
             return []
-        out = []
-        for name in sorted(os.listdir(self.snapshots_dir)):
-            if name.endswith(".json"):
-                with open(os.path.join(self.snapshots_dir, name)) as f:
-                    out.append(json.load(f))
-        return out
+        return [_load_json(os.path.join(self.snapshots_dir, name))
+                for name in sorted(os.listdir(self.snapshots_dir))
+                if name.endswith(".json")]
 
     # -- commit state -------------------------------------------------------
 
-    def _loose_parts(self) -> set[int]:
-        """Part ids with a loose commit marker, from file names alone."""
-        if not os.path.isdir(self.manifest_dir):
-            return set()
-        return {int(f[5:-5]) for f in os.listdir(self.manifest_dir)
-                if f.startswith("part-") and f.endswith(".json")}
+    def _manifest_paths(self) -> tuple[dict[int, str], dict[int, str]]:
+        """({wave seq: path}, {part id: path}) of the commit markers in
+        manifest/, from one listing of file names (no json.load)."""
+        waves: dict[int, str] = {}
+        parts: dict[int, str] = {}
+        if os.path.isdir(self.manifest_dir):
+            for name in os.listdir(self.manifest_dir):
+                kind, _, num = name.partition("-")
+                if kind in ("wave", "part") and name.endswith(".json"):
+                    (waves if kind == "wave" else parts)[int(num[:-5])] = \
+                        os.path.join(self.manifest_dir, name)
+        return waves, parts
 
     def committed_parts(self) -> set[int]:
-        return self._loose_parts().union(
-            *(w["parts"] for w in self.waves()))
+        waves, parts = self._manifest_paths()
+        return set(parts).union(*(_load_json(p)["parts"]
+                                  for p in waves.values()))
 
     def commit_chunk(self, part_id: int, chunk_tbl: pa.Table,
                      manifest: dict) -> None:
-        """Executor-side atomic commit (steps 1-4 above)."""
-        token = uuid.uuid4().hex[:8]
+        """Executor-side atomic commit (steps 1-4 above); the manifest
+        gains the part file's unit record."""
         name = f"part-{part_id:05d}"
-        tmp_parquet = os.path.join(self.staging_dir, f"{name}.{token}.parquet")
-        pq.write_table(chunk_tbl, tmp_parquet, **CHUNK_PARQUET)
-        os.replace(tmp_parquet, os.path.join(self.chunks_dir, f"{name}.parquet"))
-        tmp_json = os.path.join(self.staging_dir, f"{name}.{token}.json")
-        with open(tmp_json, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp_json, os.path.join(self.manifest_dir, f"{name}.json"))
+        units = write_data_file(self.root, f"chunks/{name}.parquet",
+                                [(part_id, chunk_tbl)])
+        _write_json(self.root, os.path.join(self.manifest_dir, f"{name}.json"),
+                    {**manifest, "units": units})
 
     # -- compaction (wave files) ---------------------------------------------
     # At 10¹²-sequence scale one file per chunk is ~62M files; compaction
@@ -405,23 +471,18 @@ class ChunkStore:
     # consistent (at worst duplicated-on-disk) store.
 
     def waves(self) -> list[dict]:
-        if not os.path.isdir(self.manifest_dir):
-            return []
-        out = []
-        for name in sorted(os.listdir(self.manifest_dir)):
-            if name.startswith("wave-") and name.endswith(".json"):
-                with open(os.path.join(self.manifest_dir, name)) as f:
-                    out.append(json.load(f))
-        return out
+        paths, _ = self._manifest_paths()
+        return [_load_json(paths[seq]) for seq in sorted(paths)]
 
     def plan_waves(self, wave_size: int = 64) -> list[tuple[int, list[int]]]:
         """(wave_seq, part_ids) groups for committed, not-yet-waved chunk
         files — the driver-side planning half of compaction (tiny: one
         dir listing, no data reads). Partial tail groups are left
         uncompacted."""
-        waves = self.waves()  # each embeds its part manifests: load once
-        covered = {p for w in waves for p in w["parts"]}
-        loose = sorted(self._loose_parts() - covered)
+        waves, parts = self._manifest_paths()
+        covered = {p for path in waves.values()
+                   for p in _load_json(path)["parts"]}
+        loose = sorted(parts.keys() - covered)
         n_waves = len(waves)
         return [(n_waves + j, loose[i:i + wave_size])
                 for j, i in enumerate(
@@ -447,7 +508,6 @@ class ChunkStore:
             plans = self.plan_waves(wave_size)
         if not plans:
             return 0
-        os.makedirs(os.path.join(self.root, "waves"), exist_ok=True)
         if spark is None or len(plans) == 1:
             for seq, parts in plans:
                 _write_wave(self.root, seq, parts)
@@ -468,14 +528,11 @@ class ChunkStore:
         def run(batches):
             for batch in batches:
                 for row in batch.to_pylist():
-                    _write_wave(root, row["seq"], row["parts"])
-                    yield pa.RecordBatch.from_pydict(
-                        {"seq": [row["seq"]],
-                         "n_parts": [len(row["parts"])]},
-                        schema=pa.schema([("seq", pa.int32()),
-                                          ("n_parts", pa.int32())]))
+                    yield pa.RecordBatch.from_pylist(
+                        [_write_wave(root, row["seq"], row["parts"])])
 
-        done = plan_df.mapInArrow(run, "seq int, n_parts int").collect()
+        done = plan_df.mapInArrow(run, "wave bigint, n_parts bigint") \
+            .collect()
         assert len(done) == len(plans)
         return len(plans)
 
@@ -486,53 +543,39 @@ class ChunkStore:
                      ) -> tuple[dict[str, list[tuple[int, int]]], int]:
         """Committed data files, each with its (row group, part id) decode
         units, and the `enc_bytes` of `columns` summed over those units:
-        the blob bytes a decode of those columns decodes. The files are
-        wave files plus the part files of loose commit markers not covered
-        by a wave. A part file without its marker (a crash between the two
-        renames) is not committed and is not listed; covered part files
-        may transiently exist mid-cleanup and are not listed either.
-
-        A wave manifest lists its parts in row-group order and embeds
-        their manifests, and a loose part file is one row group (pyarrow
-        writes a row group even for an empty part), so the units come from
-        metadata alone; loose part manifests are read only when `columns`
-        is given. With `parts` (zone pruning) only the listed parts' units
-        are kept, and a file none of whose parts survive is left out."""
+        the blob bytes a decode of those columns decodes. Both come from
+        the unit records of the committed manifests alone
+        (`_commit_records`). With `parts` (zone pruning) only the listed
+        parts' units are kept, and a file none of whose parts survive is
+        left out."""
         wanted = set(columns)
-
-        def nbytes(manifest: dict) -> int:
-            return sum(c.get("enc_bytes") or 0 for name, c in
-                       _manifest_columns(manifest).items() if name in wanted)
-        waves = self.waves()
-        covered = {p for w in waves for p in w["parts"]}
         files: dict[str, list[tuple[int, int]]] = {}
         total = 0
-        for w in waves:
-            units = [(rg, p) for rg, p in enumerate(w["parts"])
-                     if parts is None or p in parts]
-            if units:  # pre-r2 manifests hold an absolute path
-                files[w["file"] if os.path.isabs(w["file"])
-                      else os.path.join(self.root, "waves", w["file"])] = units
-                if wanted:
-                    total += sum(nbytes(m) for m in w["manifests"]
-                                 if parts is None or m["part_id"] in parts)
-        for pid in sorted(self._loose_parts() - covered):
-            if parts is None or pid in parts:
-                name = f"part-{pid:05d}"
-                files[os.path.join(self.chunks_dir, f"{name}.parquet")] = \
-                    [(0, pid)]
-                if wanted:
-                    with open(os.path.join(self.manifest_dir,
-                                           f"{name}.json")) as f:
-                        total += nbytes(json.load(f))
+        for manifest in self._commit_records():
+            for u in _unit_records(manifest):
+                if parts is None or u["part_id"] in parts:
+                    files.setdefault(os.path.join(self.root, u["file"]),
+                                     []).append((u["row_group"], u["part_id"]))
+                    total += sum(n for name, n in u["columns"].items()
+                                 if name in wanted)
         return files, total
 
+    def _commit_records(self) -> list[dict]:
+        """The committed manifests: every wave's, then each loose part's
+        that no wave covers. A part file without its marker (a crash
+        between the two renames) is not committed; a covered part's
+        files may linger mid-cleanup and are left out."""
+        waves, parts = self._manifest_paths()
+        records = [_load_json(waves[seq]) for seq in sorted(waves)]
+        covered = {p for w in records for p in w["parts"]}
+        return records + [_load_json(parts[p])
+                          for p in sorted(parts.keys() - covered)]
+
     def manifest_rows(self) -> list[dict]:
-        """Per-part manifests — loose part files plus wave-embedded ones."""
-        out = self.loose_manifest_rows()
-        for w in self.waves():
-            out.extend(w["manifests"])
-        return sorted(out, key=lambda m: m["part_id"])
+        """Per-part manifests of the committed parts, loose or in a wave."""
+        return sorted((m for r in self._commit_records()
+                       for m in (r["manifests"] if "wave" in r else [r])),
+                      key=lambda m: m["part_id"])
 
     # -- columnar zone/stats metadata (VERDICT r3 #1) -------------------------
     # Per-wave stats parquets replace the driver-side json.load of every
@@ -544,63 +587,44 @@ class ChunkStore:
     def loose_manifest_rows(self) -> list[dict]:
         """Manifests of loose (un-waved) parts only — bounded after
         compaction; never opens wave manifests."""
-        out = []
-        if os.path.isdir(self.manifest_dir):
-            for f in sorted(os.listdir(self.manifest_dir)):
-                if f.startswith("part-") and f.endswith(".json"):
-                    with open(os.path.join(self.manifest_dir, f)) as fh:
-                        out.append(json.load(fh))
-        return out
-
-    def _wave_manifest_paths(self) -> dict[int, str]:
-        """{wave_seq: manifest path} of committed waves, from file names
-        alone (no json.load)."""
-        if not os.path.isdir(self.manifest_dir):
-            return {}
-        return {int(name[5:-5]): os.path.join(self.manifest_dir, name)
-                for name in os.listdir(self.manifest_dir)
-                if name.startswith("wave-") and name.endswith(".json")}
+        _, parts = self._manifest_paths()
+        return [_load_json(parts[p]) for p in sorted(parts)]
 
     def stats_files(self) -> dict[int, str]:
         """{wave_seq: stats parquet path} for COMMITTED waves that have
         one. The stats sidecar is renamed into place before the wave
         manifest (the commit point), so a crash in between leaves an
         orphan stats parquet while the wave's parts are still loose —
-        reading it would double-count those parts. Filtering on the
-        manifest's existence (a name check, no json.load) makes the
+        reading it would double-count those parts. Looking up only the
+        stats of waves with a manifest (names, no json.load) makes the
         orphan invisible until the rebuilt wave commits over it."""
-        if not os.path.isdir(self.stats_dir):
-            return {}
-        committed = self._wave_manifest_paths()
-        out = {}
-        for name in sorted(os.listdir(self.stats_dir)):
-            if name.startswith("wave-") and name.endswith(".parquet"):
-                seq = int(name[5:-8])
-                if seq in committed:
-                    out[seq] = os.path.join(self.stats_dir, name)
-        return out
+        waves, _ = self._manifest_paths()
+        paths = {seq: os.path.join(self.stats_dir, f"wave-{seq:06d}.parquet")
+                 for seq in sorted(waves)}
+        return {seq: p for seq, p in paths.items() if os.path.exists(p)}
 
     def _json_stats_table(self, have: dict[int, str]) -> pa.Table:
         """STATS_SCHEMA rows of the parts no stats parquet in `have`
         covers: legacy waves (committed wave manifests minus `have`, found
         by name, so waves with a stats parquet are never opened) and
         loose parts."""
-        rows: list[dict] = []
-        paths = self._wave_manifest_paths()
-        for seq in sorted(paths.keys() - have.keys()):
-            with open(paths[seq]) as f:
-                for m in json.load(f)["manifests"]:
-                    rows.extend(_manifest_stats_rows(m))
-        for m in self.loose_manifest_rows():
-            rows.extend(_manifest_stats_rows(m))
-        return pa.Table.from_pylist(rows, schema=STATS_SCHEMA)
+        waves, parts = self._manifest_paths()
+        manifests = [m for seq in sorted(waves.keys() - have.keys())
+                     for m in _load_json(waves[seq])["manifests"]]
+        manifests += [_load_json(parts[p]) for p in sorted(parts)]
+        return pa.Table.from_pylist(
+            [r for m in manifests for r in _manifest_stats_rows(m)],
+            schema=STATS_SCHEMA)
 
     def stats_table(self) -> pa.Table:
         """All STATS_SCHEMA rows — wave parquets scanned columnar, loose
         (+legacy-wave) manifests flattened from JSON. The driver-side cost
-        is O(waves) file opens + O(loose) JSON parses, never O(parts)."""
+        is O(waves) file opens + O(loose) JSON parses, never O(parts).
+        Stats parquets written before STATS_SCHEMA lost its timing
+        columns are read through its names."""
         have = self.stats_files()
-        tables = [pq.read_table(p) for p in have.values()]
+        tables = [pq.read_table(p, columns=STATS_SCHEMA.names)
+                  for p in have.values()]
         tables.append(self._json_stats_table(have))
         return pa.concat_tables(tables)
 
@@ -852,59 +876,43 @@ def _write_wave(store_root: str, seq: int, parts: list[int]) -> dict:
     """Build + atomically commit ONE wave file (executor-safe: plain
     module function, touches only the shared store filesystem).
 
-    Protocol (mirrors Iceberg compaction): stage wave parquet → rename →
-    stage wave manifest → rename (COMMIT) → delete covered part files.
-    Idempotent: if the wave manifest already exists (task retry, resumed
-    run) the build is skipped and only the cleanup re-runs; a crash
-    before the manifest rename leaves staging garbage and intact part
-    files, so a re-plan simply rebuilds the wave."""
+    Protocol (mirrors Iceberg compaction): write the wave parquet and
+    then its stats parquet through staging → stage wave manifest →
+    rename (COMMIT) → delete covered part files. Idempotent: if the wave
+    manifest already exists (task retry, resumed run) the build is
+    skipped and only the cleanup re-runs; a crash before the manifest
+    rename leaves staging garbage and intact part files, so a re-plan
+    simply rebuilds the wave."""
     store = ChunkStore(store_root)
-    wave_name = f"wave-{seq:06d}.parquet"
-    manifest_path = os.path.join(store.manifest_dir, f"wave-{seq:06d}.json")
+    name = f"wave-{seq:06d}"
+    manifest_path = os.path.join(store.manifest_dir, f"{name}.json")
     if not os.path.exists(manifest_path):
-        token = uuid.uuid4().hex[:8]
-        tmp = os.path.join(store.staging_dir, f"{wave_name}.{token}")
-        manifests = []
-        writer = None
-        try:
-            for p in parts:
-                tbl = pq.read_table(os.path.join(
-                    store.chunks_dir, f"part-{p:05d}.parquet"))
-                if writer is None:
-                    writer = pq.ParquetWriter(tmp, tbl.schema,
-                                              **CHUNK_PARQUET)
-                writer.write_table(tbl)  # one row group per part
-                with open(os.path.join(store.manifest_dir,
-                                       f"part-{p:05d}.json")) as f:
-                    manifests.append(json.load(f))
-        finally:
-            if writer is not None:
-                writer.close()
+        manifests = [_load_json(os.path.join(store.manifest_dir,
+                                             f"part-{p:05d}.json"))
+                     for p in parts]
+        for m in manifests:
+            m.pop("units", None)  # the wave's own records replace them
         os.makedirs(os.path.join(store_root, "waves"), exist_ok=True)
-        os.replace(tmp, os.path.join(store_root, "waves", wave_name))
+        # paths relative to the root: a store moved/renamed (or opened
+        # from a different cwd with a relative root) must still resolve
+        # its wave files (ADVICE r1). Parts are read one at a time.
+        units = write_data_file(store_root, f"waves/{name}.parquet", (
+            (p, pq.read_table(os.path.join(store.chunks_dir,
+                                           f"part-{p:05d}.parquet")))
+            for p in parts))
         # columnar zone/stats sidecar BEFORE the commit point, so a
         # committed wave always has one (a crash in between leaves an
         # orphan stats file the rebuilt wave simply overwrites)
         os.makedirs(store.stats_dir, exist_ok=True)
-        stats_rows = [r for m in manifests for r in _manifest_stats_rows(m)]
-        stats_tbl = pa.Table.from_pydict(
-            {f.name: [r[f.name] for r in stats_rows] for f in STATS_SCHEMA},
+        stats = pa.Table.from_pylist(
+            [r for m in manifests for r in _manifest_stats_rows(m)],
             schema=STATS_SCHEMA)
-        tmp_stats = os.path.join(store.staging_dir,
-                                 f"wave-{seq:06d}.{token}.stats.parquet")
-        pq.write_table(stats_tbl, tmp_stats, **STATS_PARQUET)
-        os.replace(tmp_stats, os.path.join(store.stats_dir,
-                                           f"wave-{seq:06d}.parquet"))
-        # store only the basename: a store moved/renamed (or opened from
-        # a different cwd with a relative root) must still resolve its
-        # wave files — decode_units() re-joins with self.root (ADVICE r1).
-        wave_manifest = {"wave": seq, "parts": list(parts),
-                         "file": wave_name, "manifests": manifests}
-        tmp_json = os.path.join(store.staging_dir,
-                                f"wave-{seq:06d}.{token}.json")
-        with open(tmp_json, "w") as f:
-            json.dump(wave_manifest, f)
-        os.replace(tmp_json, manifest_path)  # commit point
+        _publish(store_root, os.path.join(store.stats_dir, f"{name}.parquet"),
+                 lambda tmp: pq.write_table(stats, tmp, **STATS_PARQUET))
+        _write_json(store_root, manifest_path,  # commit point
+                    {"wave": seq, "parts": list(parts),
+                     "file": f"{name}.parquet", "units": units,
+                     "manifests": manifests})
     for p in parts:  # cleanup, idempotent
         for path in (
                 os.path.join(store.chunks_dir, f"part-{p:05d}.parquet"),
@@ -944,6 +952,54 @@ def _part_manifest(part_id: int, tbl: pa.Table, chunk_tbl: pa.Table,
     }
 
 
+def encode_part(root: str, part_id: int, tbl: pa.Table,
+                spark_types: dict[str, str], plan: Plan,
+                sort_keys: list | None = None) -> dict:
+    """Encode one part's rows under `plan` and commit it to the store at
+    `root`; returns the part's PART_ROW_SCHEMA row. `sort_keys` sorts the
+    rows first (a clustered encode). Each task of both encoders runs
+    this per part; it touches only the store's filesystem."""
+    t0 = time.perf_counter()
+    if sort_keys:
+        tbl = tbl.sort_by(sort_keys)
+    chunk_tbl = encode_table(part_id, tbl, spark_types, plan)
+    manifest = _part_manifest(part_id, tbl, chunk_tbl,
+                              (time.perf_counter() - t0) * 1000.0)
+    store = ChunkStore(root)
+    store.init_dirs()
+    store.commit_chunk(part_id, chunk_tbl, manifest)
+    return {name: manifest[name] for name in PART_ROW_SCHEMA.names}
+
+
+def _begin_run(df: DataFrame, store: ChunkStore, meta: dict,
+               codec_hints: Plan | None) -> tuple[Plan, dict[str, str]]:
+    """The encoders' shared prologue: pin `meta` and `df`'s schema in
+    store.json (`check_or_init_meta`, which auditions the caller's
+    frame when no plan is given or pinned; a bare parquet relation takes
+    the local pyarrow sample). Returns the run's plan and each column's
+    Spark type."""
+    store.init_dirs()
+    spark_types = {f.name: f.dataType.simpleString()
+                   for f in df.schema.fields}
+    ddl = ", ".join(f"{name} {t}" for name, t in spark_types.items())
+    plan = store.check_or_init_meta({**meta, "schema_ddl": ddl}, codec_hints,
+                                    lambda: audition_codec_hints(df))
+    return plan, spark_types
+
+
+def _end_run(store: ChunkStore, rows: list, skipped: int, t_run: float,
+             **extra) -> dict:
+    """The encoders' shared epilogue: the run summary, from the parts'
+    PART_ROW_SCHEMA rows, appended to the store's snapshot log."""
+    summary = {"encoded_parts": len(rows), "skipped_parts": skipped,
+               **{name: sum(r[name] for r in rows)
+                  for name in PART_ROW_SCHEMA.names[1:]},
+               "wall_sec": round(time.perf_counter() - t_run, 3),
+               "committed_at": time.time(), **extra}
+    store.append_snapshot(summary)  # run-level lineage log
+    return summary
+
+
 def encode_to_store(df: DataFrame, store: ChunkStore, num_parts: int,
                     resume: bool = True,
                     salt_cols: tuple[str, ...] | None = None,
@@ -952,7 +1008,7 @@ def encode_to_store(df: DataFrame, store: ChunkStore, num_parts: int,
     """Run the resumable encode job; returns run summary.
 
     The encode UDF writes + commits each chunk on the executor, then emits
-    one manifest row; the driver only collects the (tiny) manifest rows.
+    one PART_ROW_SCHEMA row; the driver only collects those (tiny) rows.
     The store pins (num_parts, salt_cols, schema) and the encode plan on
     first encode, and every later run fails fast on mismatch — resuming
     with different partitioning parameters would silently drop rows that
@@ -967,16 +1023,10 @@ def encode_to_store(df: DataFrame, store: ChunkStore, num_parts: int,
     the audition.
     """
     from .partitioning import resolve_salt_cols
-    store.init_dirs()
     salt_cols = resolve_salt_cols(df, salt_cols)
-    schema_ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                           for f in df.schema.fields)
-    # audition the caller's frame: a bare parquet relation takes the
-    # local pyarrow sample, which the part-id projection would refuse
-    plan = store.check_or_init_meta(
-        {"mode": "salted", "num_parts": num_parts,
-         "salt_cols": list(salt_cols), "schema_ddl": schema_ddl},
-        codec_hints, lambda: audition_codec_hints(df))
+    plan, spark_types = _begin_run(
+        df, store, {"mode": "salted", "num_parts": num_parts,
+                    "salt_cols": list(salt_cols)}, codec_hints)
     df = with_part_id(df, num_parts, salt_cols)
     committed = store.committed_parts() if resume else set()
     pending_df = df
@@ -989,10 +1039,6 @@ def encode_to_store(df: DataFrame, store: ChunkStore, num_parts: int,
         from pyspark.sql.functions import broadcast
         pending_df = df.join(broadcast(done), PART_COL, "left_anti")
 
-    spark_types = {f.name: f.dataType.simpleString()
-                   for f in df.schema.fields if f.name != PART_COL}
-    store_root = store.root
-
     # clustered encode (r6, mirrors encode_chunks' cluster=True): chunk-
     # internal row order is shuffle residue, so sorting by the salt key
     # is free correctness-wise and makes id/source columns run/delta-
@@ -1000,36 +1046,18 @@ def encode_to_store(df: DataFrame, store: ChunkStore, num_parts: int,
     # salt key is unique per row (the default (source, doc_id) is) —
     # rows TYING on the key keep their nondeterministic arrival order.
     sort_keys = cluster_sort_keys(df, salt_cols) if cluster else None
+    root = store.root
 
     def encode_commit(key: tuple, tbl: pa.Table) -> pa.Table:
-        part_id = key[0].as_py()
-        t0 = time.perf_counter()
-        if sort_keys:
-            tbl = tbl.sort_by(sort_keys)
-        chunk_tbl = encode_table(part_id, tbl, spark_types, plan)
-        manifest = _part_manifest(part_id, tbl, chunk_tbl,
-                                  (time.perf_counter() - t0) * 1000.0)
-        local_store = ChunkStore(store_root)
-        local_store.init_dirs()
-        local_store.commit_chunk(part_id, chunk_tbl, manifest)
-        return pa.Table.from_pylist([manifest], schema=MANIFEST_SCHEMA)
+        row = encode_part(root, key[0].as_py(), tbl, spark_types, plan,
+                          sort_keys)
+        return pa.Table.from_pylist([row], schema=PART_ROW_SCHEMA)
 
     t_run = time.perf_counter()
     rows = (pending_df.groupBy(PART_COL)
-            .applyInArrow(encode_commit, MANIFEST_SCHEMA_DDL)
+            .applyInArrow(encode_commit, PART_ROW_DDL)
             .collect())
-    summary = {
-        "encoded_parts": len(rows),
-        "skipped_parts": len(committed),
-        "n_rows": sum(r["n_rows"] for r in rows),
-        "n_values": sum(r["n_values"] for r in rows),
-        "raw_bytes": sum(r["raw_bytes"] for r in rows),
-        "enc_bytes": sum(r["enc_bytes"] for r in rows),
-        "wall_sec": round(time.perf_counter() - t_run, 3),
-        "committed_at": time.time(),
-    }
-    store.append_snapshot(summary)  # run-level lineage log
-    return summary
+    return _end_run(store, rows, len(committed), t_run)
 
 
 def encode_to_store_colocated(df: DataFrame, store: ChunkStore,
@@ -1057,23 +1085,18 @@ def encode_to_store_colocated(df: DataFrame, store: ChunkStore,
     import hashlib
 
     import pyspark.sql.functions as F
-    from .encode import (BLOCK_HELPER, FILE_HELPER, cut_colocated_chunks,
-                         encode_table)
+    from .encode import BLOCK_HELPER, FILE_HELPER, cut_colocated_chunks
 
     if tokens_per_chunk is None:
         from .partitioning import DEFAULT_TOKENS_PER_CHUNK
         tokens_per_chunk = DEFAULT_TOKENS_PER_CHUNK
-    store.init_dirs()
-    schema_ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                           for f in df.schema.fields)
     spark = df.sparkSession
     files_digest = hashlib.blake2b(
         "\n".join(sorted(df.inputFiles())).encode(),
         digest_size=8).hexdigest()
-    plan = store.check_or_init_meta({
+    plan, spark_types = _begin_run(df, store, {
         "mode": "colocated",
         "tokens_per_chunk": tokens_per_chunk,
-        "schema_ddl": schema_ddl,
         "input_files_digest": files_digest,
         "max_partition_bytes":
             spark.conf.get("spark.sql.files.maxPartitionBytes"),
@@ -1082,60 +1105,29 @@ def encode_to_store_colocated(df: DataFrame, store: ChunkStore,
         "arrow_batch_rows":
             spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"),
         "default_parallelism": spark.sparkContext.defaultParallelism,
-    }, codec_hints, lambda: audition_codec_hints(df))
-    spark_types = {f.name: f.dataType.simpleString()
-                   for f in df.schema.fields}
-    has_tok = any(f.name == token_col and
-                  f.dataType.simpleString().startswith("array")
-                  for f in df.schema.fields)
+    }, codec_hints)
+    has_tok = spark_types.get(token_col, "").startswith("array")
     src = df.select("*", F.input_file_name().alias(FILE_HELPER),
                     F.input_file_block_start().alias(BLOCK_HELPER))
-    store_root = store.root
+    root = store.root
     # the committed set INCLUDES wave-compacted parts (whose loose
     # markers were deleted by compact()) — resume must not re-encode them
     committed = frozenset(store.committed_parts()) if resume else frozenset()
 
     def run(batches):
-        local_store = ChunkStore(store_root)
-        local_store.init_dirs()
         for pid, tbl in cut_colocated_chunks(batches, tokens_per_chunk,
                                              has_tok, token_col):
-            marker = os.path.join(local_store.manifest_dir,
-                                  f"part-{pid:05d}.json")
+            marker = os.path.join(root, "manifest", f"part-{pid:05d}.json")
             # marker re-check covers chunks committed by a task retry
             # within THIS run; `committed` covers prior runs + waves
             if resume and (pid in committed or os.path.exists(marker)):
                 continue  # committed by a previous run — skip re-encode
-            t0 = time.perf_counter()
-            chunk_tbl = encode_table(pid, tbl, spark_types, plan)
-            manifest = _part_manifest(pid, tbl, chunk_tbl,
-                                      (time.perf_counter() - t0) * 1000.0)
-            local_store.commit_chunk(pid, chunk_tbl, manifest)
-            yield pa.RecordBatch.from_pydict(
-                {"part_id": [pid], "n_rows": [manifest["n_rows"]],
-                 "n_values": [manifest["n_values"]],
-                 "enc_bytes": [manifest["enc_bytes"]]},
-                schema=pa.schema([("part_id", pa.int64()),
-                                  ("n_rows", pa.int64()),
-                                  ("n_values", pa.int64()),
-                                  ("enc_bytes", pa.int64())]))
+            row = encode_part(root, pid, tbl, spark_types, plan)
+            yield pa.RecordBatch.from_pylist([row], schema=PART_ROW_SCHEMA)
 
     t_run = time.perf_counter()
-    rows = src.mapInArrow(
-        run, "part_id bigint, n_rows bigint, n_values bigint, "
-             "enc_bytes bigint").collect()
-    summary = {
-        "encoded_parts": len(rows),
-        "skipped_parts": len(committed),
-        "n_rows": sum(r["n_rows"] for r in rows),
-        "n_values": sum(r["n_values"] for r in rows),
-        "enc_bytes": sum(r["enc_bytes"] for r in rows),
-        "wall_sec": round(time.perf_counter() - t_run, 3),
-        "committed_at": time.time(),
-        "mode": "colocated",
-    }
-    store.append_snapshot(summary)
-    return summary
+    rows = src.mapInArrow(run, PART_ROW_DDL).collect()
+    return _end_run(store, rows, len(committed), t_run, mode="colocated")
 
 
 _UTC_NAMES = frozenset(["UTC", "Etc/UTC", "GMT", "Z", "+00:00", "UTC+00:00"])

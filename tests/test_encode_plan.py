@@ -11,8 +11,11 @@
    pin (no audition), a different explicit plan raises, a store pinned
    before plans were auditions once and adds the pin, and a restarted
    stream keeps its first run's plan.
-5. A crash at any driver-side rename of the write protocol leaves a store
-   that a rerun completes to the same bytes under the same pinned plan.
+5. A crash at any rename of the write protocol, driver- or worker-side,
+   leaves a store that a rerun completes to the same bytes under the same
+   pinned plan.
+6. Two runs of one input under one plan write byte-identical data files:
+   every file outside the JSON commit records (manifest/, snapshots/).
 """
 
 import contextlib
@@ -45,6 +48,19 @@ def _blobs(store: ChunkStore) -> dict[tuple[int, str], bytes]:
     return {(p, c): b for p, c, b in zip(tbl.column("part_id").to_pylist(),
                                          tbl.column("column").to_pylist(),
                                          tbl.column("blob").to_pylist())}
+
+
+def _data_files(store: ChunkStore) -> dict[str, bytes]:
+    """Every file of the store but its JSON commit records (manifest/,
+    snapshots/) and staging leftovers, by path relative to the root."""
+    out = {}
+    for d, _, names in os.walk(store.root):
+        rel = os.path.relpath(d, store.root)
+        if rel.split(os.sep)[0] not in ("manifest", "snapshots", "_staging"):
+            for name in names:
+                with open(os.path.join(d, name), "rb") as f:
+                    out[os.path.normpath(os.path.join(rel, name))] = f.read()
+    return out
 
 
 @pytest.fixture(scope="module")
@@ -96,6 +112,23 @@ def test_store_bytes_independent_of_layout_and_worker_history(
     assert len(want) == 4 * PARTS
     assert _blobs(second) == want
     assert second.read_shared_tables() == first_store.read_shared_tables()
+
+
+def test_two_runs_write_byte_identical_data_files(token_df, plan, tmp_path):
+    """Two encode + compaction passes of one input under one plan, into
+    two fresh stores, write the same bytes to every file outside the JSON
+    commit records: loose parts, waves, stats, store.json and the shared
+    tables. Data files hold no timing."""
+    stores = [ChunkStore(str(tmp_path / name)) for name in ("a", "b")]
+    for store in stores:
+        encode_to_store(token_df, store, PARTS, codec_hints=plan)
+        assert store.compact(3) == 2           # 2 waves + 2 loose parts
+        assert os.listdir(store.staging_dir) == []
+    first, second = map(_data_files, stores)
+    assert {os.path.dirname(f) for f in first} == \
+        {"", "chunks", "waves", "stats"}
+    assert "shared_tables.json" in first and "store.json" in first
+    assert first == second
 
 
 def test_resume_reencodes_identical_bytes(token_df, plan, first_store):
@@ -398,8 +431,8 @@ def test_crash_at_each_driver_side_rename_recovers(spark, parquet_src,
     """Fail each os.replace the driver (or in-process compaction) makes
     in turn: shared tables, store.json with the plan, the snapshot, and
     each wave's parquet, stats and manifest. Rerunning the encode and the
-    compaction must leave a store with the clean run's pinned plan and
-    blobs, decoding to the source."""
+    compaction must leave a store with the clean run's pinned plan, blobs
+    and data-file bytes, decoding to the source."""
     df = spark.read.parquet(parquet_src)
     want_sum = _checksum(df)
 
@@ -410,6 +443,7 @@ def test_crash_at_each_driver_side_rename_recovers(spark, parquet_src,
     clean = ChunkStore(str(tmp_path / "clean"))
     run(clean)
     want_plan, want_blobs = clean.read_meta()["plan"], _blobs(clean)
+    want_files = _data_files(clean)
     real = os.replace
     crashed_at = []
     for k in range(1, 20):
@@ -435,6 +469,7 @@ def test_crash_at_each_driver_side_rename_recovers(spark, parquet_src,
         run(store)
         assert store.read_meta()["plan"] == want_plan, crashed_at[-1]
         assert _blobs(store) == want_blobs, crashed_at[-1]
+        assert _data_files(store) == want_files, crashed_at[-1]
         assert _checksum(decode_from_store(store, spark)) == want_sum
     else:
         pytest.fail("every run crashed")
@@ -443,3 +478,89 @@ def test_crash_at_each_driver_side_rename_recovers(spark, parquet_src,
             "wave-000000.parquet", "wave-000000.json",
             "wave-000001.json"} <= names
     assert os.path.join("stats", "wave-000000.parquet") in crashed_at
+
+
+def test_crash_at_each_worker_side_rename_recovers(spark, parquet_src,
+                                                   tmp_path, monkeypatch):
+    """Fail each os.replace a worker makes, running the worker's module
+    function in-process: the chunk parquet and part manifest of
+    `encode_part` (the per-part commit of both encoders) and the wave
+    parquet, stats and manifest of `_write_wave` (a distributed
+    compaction's task). Rerunning the encode and a distributed compaction
+    must write the clean run's data files byte for byte."""
+    import shutil
+
+    from tbl_spark.codecs.core import plan_from_json
+    from tbl_spark.encode import cluster_sort_keys
+    from tbl_spark.partitioning import PART_COL, with_part_id
+    df = spark.read.parquet(parquet_src)
+
+    def finish(store):
+        encode_to_store(df, store, 4)
+        store.compact(2, spark=spark)
+
+    base = ChunkStore(str(tmp_path / "base"))
+    encode_to_store(df, base, 4)                # committed, not compacted
+    clean = ChunkStore(str(tmp_path / "clean"))
+    shutil.copytree(base.root, clean.root)
+    finish(clean)
+    want = _data_files(clean)
+    assert _checksum(decode_from_store(clean, spark)) == _checksum(df)
+
+    # part 0's rows and encode inputs, as encode_to_store's task gets them
+    meta = base.read_meta()
+    salt = tuple(meta["salt_cols"])
+    keyed = with_part_id(df, 4, salt)
+    rows = keyed.filter(F.col(PART_COL) == 0).toArrow()
+    spark_types = {f.name: f.dataType.simpleString()
+                   for f in df.schema.fields}
+    plan = plan_from_json(meta["plan"], base.read_shared_tables())
+    sort_keys = cluster_sort_keys(keyed, salt)
+
+    def reencode_part_0(store):
+        _drop_parts(store, [0])
+        store_mod.encode_part(store.root, 0, rows, spark_types, plan,
+                              sort_keys)
+
+    def compact_in_process(store):
+        for seq, parts in store.plan_waves(2):
+            store_mod._write_wave(store.root, seq, parts)
+
+    real = os.replace
+    crashed_at = []
+    for step, clean_run in ((reencode_part_0, base),
+                            (compact_in_process, clean)):
+        for k in range(1, 10):
+            store = ChunkStore(str(tmp_path / f"{step.__name__}-{k}"))
+            shutil.copytree(base.root, store.root)
+            seen = []
+
+            def replace(src, dst, *args, **kwargs):
+                if str(dst).startswith(store.root):
+                    seen.append(dst)
+                    if len(seen) == k:
+                        raise _Crash(dst)
+                return real(src, dst, *args, **kwargs)
+
+            monkeypatch.setattr(store_mod.os, "replace", replace)
+            try:
+                step(store)
+            except _Crash as e:
+                crashed_at.append(os.path.relpath(str(e), store.root))
+            else:
+                # uncrashed, the in-process step writes what the workers do
+                assert _data_files(store) == _data_files(clean_run)
+                break
+            finally:
+                monkeypatch.setattr(store_mod.os, "replace", real)
+            finish(store)
+            assert _data_files(store) == want, crashed_at[-1]
+        else:
+            pytest.fail(f"every {step.__name__} run crashed")
+    waves = [os.path.join(d, f"wave-{seq:06d}.{ext}")
+             for seq in (0, 1) for d, ext in (("waves", "parquet"),
+                                              ("stats", "parquet"),
+                                              ("manifest", "json"))]
+    assert crashed_at == [os.path.join("chunks", "part-00000.parquet"),
+                          os.path.join("manifest", "part-00000.json"),
+                          *waves]

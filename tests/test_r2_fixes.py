@@ -308,6 +308,12 @@ def test_colocated_store_encode_resume(spark, tmp_path):
     store = ChunkStore(str(tmp_path / "store"))
     s1 = encode_to_store_colocated(df, store, tokens_per_chunk=50_000)
     assert s1["encoded_parts"] > 1 and s1["n_rows"] == 2000
+    # both encoders sum the same per-part rows into their summaries
+    salted = encode_to_store(df, ChunkStore(str(tmp_path / "salted")), 4)
+    assert set(s1) == set(salted) | {"mode"}
+    assert (s1["n_rows"], s1["n_values"]) == \
+        (salted["n_rows"], salted["n_values"])
+    assert s1["raw_bytes"] > s1["enc_bytes"] > 0
     # rerun: every chunk already committed → zero re-encodes
     s2 = encode_to_store_colocated(df, store, tokens_per_chunk=50_000)
     assert s2["encoded_parts"] == 0
