@@ -30,6 +30,7 @@ import pyarrow.compute as pc
 
 from . import numeric, rans, strings
 from .format import (
+    _ZSTD,
     Codec,
     DType,
     DTYPE_OF_NUMPY,
@@ -243,7 +244,10 @@ def _encode_table_sorted(t: np.ndarray) -> bytes:
 # - the range is quantile-anchored, then extended to the farthest sample
 #   value within _SHARED_GAP — a plain [min, max] range hangs on a single
 #   int32-max outlier row (a 17 GB bincount), while a plain quantile cut
-#   chops the dense vocab tail and makes EVERY chunk out-of-range;
+#   chops the dense vocab tail and makes EVERY chunk out-of-range. The
+#   quantiles, the range and the distinct count all come from the
+#   sample's value counts (value_counts: a range-capped histogram that
+#   counts such an outlier apart), never from sorting the sample;
 # - chunk values outside [lo, hi] become per-chunk exceptions (position +
 #   value side lists, symbol 0 placeholder in the stream), so one outlier
 #   row does not force a whole chunk back to per-chunk tables;
@@ -258,6 +262,12 @@ def _encode_table_sorted(t: np.ndarray) -> bytes:
 _SHARED_MAGIC = b"TSST"
 _SHARED_GAP = 65536           # dense-tail extension window past quantiles
 _SHARED_MIN_N = 1 << 16       # below this a per-chunk table is fine anyway
+# side streams carry one value per ROW (not per token), so a whole
+# dataset may offer fewer than _SHARED_MIN_N samples; a 32k sample over
+# the (dense, <= _SHARED_MAX_K) alphabets shared_table_hint accepts is
+# statistically ample, and its pricing still has to beat the analytic
+# estimate before the table ships
+_SIDE_MIN_N = 1 << 15
 # shared tables pay off only when rANS would win AND the alphabet is dense:
 # K bounded by slot-floor tax (each of K symbols keeps >= 1 of M slots)
 _SHARED_MAX_K = rans.M // 8
@@ -288,17 +298,27 @@ def build_shared_table(values: np.ndarray,
         b"TSST" | u8 version | i64 lo | i64 hi | framed freq_blob
     """
     values = np.asarray(values)
-    if not np.issubdtype(values.dtype, np.integer):
+    if not np.issubdtype(values.dtype, np.integer) \
+            or len(values) < (_SHARED_MIN_N if min_n is None else min_n):
         return None
-    n = len(values)
+    table = _shared_table(*value_counts(values), len(values), min_n)
+    return None if table is None else table[0]
+
+
+def _shared_table(u: np.ndarray, c: np.ndarray, n: int,
+                  min_n: int | None = None
+                  ) -> tuple[bytes, np.ndarray] | None:
+    """build_shared_table from a sample's value counts (`value_counts`):
+    the blob and the table's dense in-range counts (before smoothing),
+    or None. Every bound comes from the counts, no sort of the sample:
+    the quantiles from cumulative counts, bit-identical to np.quantile
+    of the sample, and the distinct count from the non-zero counts."""
     if n < (_SHARED_MIN_N if min_n is None else min_n):
         return None
-    v = values
-    if v.dtype == np.uint64 and int(v.max()) > numeric._I64_MAX:
+    if u.dtype == np.uint64 and int(u[-1]) > numeric._I64_MAX:
         return None
-    v = v.astype(np.int64, copy=False)
-    q_lo, q_hi = np.quantile(v, [0.0001, 0.9999])
-    u = np.unique(v)
+    u = u.astype(np.int64, copy=False)
+    q_lo, q_hi = _quantiles(c, u, n, (0.0001, 0.9999))
     in_hi = u[u <= q_hi + _SHARED_GAP]
     in_lo = u[u >= q_lo - _SHARED_GAP]
     if len(in_hi) == 0 or len(in_lo) == 0:
@@ -307,17 +327,18 @@ def build_shared_table(values: np.ndarray,
     K = hi - lo + 1
     if not (2 <= K <= _SHARED_MAX_K):
         return None
-    inr = (v >= lo) & (v <= hi)
-    if inr.mean() < 0.999:          # table misses real mass -> useless
+    inr = (u >= lo) & (u <= hi)
+    if int(c[inr].sum()) / n < 0.999:   # table misses real mass -> useless
         return None
-    distinct = len(u[(u >= lo) & (u <= hi)])
+    distinct = int(inr.sum())
     if distinct * 16 < K:           # sparse alphabet: dict/per-chunk wins
         return None
-    counts = np.bincount(v[inr] - lo, minlength=K) + 1  # Laplace floor
-    freqs = rans.quantize_freqs(counts)
+    counts = np.zeros(K, dtype=np.int64)
+    counts[u[inr] - lo] = c[inr]
+    freqs = rans.quantize_freqs(counts + 1)     # Laplace floor
     import struct as _struct
-    return (_SHARED_MAGIC + b"\x01"
-            + _struct.pack("<qq", lo, hi) + _encode_table_int(freqs))
+    return (_SHARED_MAGIC + b"\x01" + _struct.pack("<qq", lo, hi)
+            + _encode_table_int(freqs), counts)
 
 
 def shared_table_hint(values: np.ndarray) -> bytes | None:
@@ -327,36 +348,35 @@ def shared_table_hint(values: np.ndarray) -> bytes | None:
     None.
 
     Why this exists next to pick_int_codec: that audition compares
-    per-SAMPLE encoded sizes, where a per-chunk rANS table amortizes
-    over the whole 128k-value sample and looks cheap even though real
-    chunks hold ~1k of these values and would each repay the table —
-    so it correctly rejects per-chunk RANS, but the profitable SHARED
-    path never enters the comparison at all. This helper prices it
+    per-SAMPLE sizes, where a per-chunk rANS table amortizes over the
+    whole 128k-value sample and looks cheap even though real chunks
+    hold ~1k of these values and would each repay the table — so it
+    correctly rejects per-chunk RANS, but the profitable SHARED path
+    never enters the comparison at all. This helper prices it
     directly: sample cross-entropy under the quantized shared table
     plus a conservative allowance for the 8-lane state block and
     exception framing on a ~1k-value chunk, against the analytic
-    per-chunk minimum (bitpack/delta/RLE/dict)."""
+    per-chunk minimum (bitpack/delta/RLE/dict). The table and its
+    price come from the same value counts."""
     values = np.asarray(values)
-    if not np.issubdtype(values.dtype, np.integer) or len(values) == 0:
+    if not np.issubdtype(values.dtype, np.integer) \
+            or len(values) < _SIDE_MIN_N:
         return None
-    # side streams carry one value per ROW (not per token), so a whole
-    # dataset may offer fewer than _SHARED_MIN_N samples; a 32k sample
-    # over the (dense, <= _SHARED_MAX_K) alphabets this path accepts
-    # is statistically ample, and the pricing below still has to beat
-    # the analytic estimate before the table ships
-    blob = build_shared_table(values, min_n=1 << 15)
-    if blob is None:
+    return _shared_table_hint(values, *value_counts(values))
+
+
+def _shared_table_hint(values: np.ndarray, u: np.ndarray,
+                       c: np.ndarray) -> bytes | None:
+    table = _shared_table(u, c, len(values), min_n=_SIDE_MIN_N)
+    if table is None:
         return None
-    import struct as _struct
-    lo, hi = _struct.unpack_from("<qq", blob, len(_SHARED_MAGIC) + 1)
-    v = values.astype(np.int64, copy=False)
-    inr = (v >= lo) & (v <= hi)
-    counts = np.bincount(v[inr] - lo, minlength=hi - lo + 1)
+    blob, counts = table
     freqs = rans.quantize_freqs(counts + 1).astype(np.float64)
     nz = counts > 0
     p = counts[nz] / counts[nz].sum()
     bits = float(-(p * np.log2(freqs[nz] / freqs.sum())).sum())
     bits += 0.7     # 8-lane states + exception slack on a ~1k chunk
+    v = values.astype(np.int64, copy=False)
     est = _estimate_int_sizes(v)
     best_bits = min(est.values()) * 8.0 / len(v)
     return blob if bits < best_bits else None
@@ -462,6 +482,169 @@ def _decode_rans_shared(payload: bytes, n: int,
         exc_val = _decode_int_blob(bval).astype(np.int64, copy=False)
         out[exc_pos] = exc_val
     return out.astype(work_dtype, copy=False)
+
+
+# --------------------------------------------------------------------------
+# value counts: the one histogram a large-array audition reads
+# --------------------------------------------------------------------------
+
+# Bins of value_counts' dense window: 2 MB of int64 counts, as wide as a
+# shared table's largest range plus its _SHARED_GAP on either side.
+_COUNT_BINS = 1 << 18
+
+
+def value_counts(v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(sorted distinct values, their counts) of integer array `v`.
+
+    One np.bincount over a window of _COUNT_BINS values, placed at the
+    minimum of a strided subsample when the subsample's range fits it and
+    centred on the subsample's median otherwise. Values outside the
+    window are counted apart with np.unique, as RANS_SHARED chunks code
+    out-of-range values as exceptions, so one int32-max outlier never
+    sizes the histogram and a dense column is never sorted. The counts
+    are exact wherever the window falls; only the cost depends on it.
+    Values come back as int64, or uint64 for unsigned input."""
+    wide = np.dtype(np.uint64 if v.dtype.kind == "u" else np.int64)
+    sub = np.sort(v[::max(1, len(v) // 4096)].astype(wide))
+    lo = int(sub[0])
+    if int(sub[-1]) - lo >= _COUNT_BINS:
+        lo = max(int(sub[len(sub) // 2]) - _COUNT_BINS // 2,
+                 int(np.iinfo(v.dtype).min))
+    base = np.uint64(lo % (1 << 64))
+    # offsets from lo modulo 2^64: below lo wraps past the window
+    d = np.subtract(v, base, dtype=np.uint64, casting="unsafe")
+    outside = d >= _COUNT_BINS
+    if outside.any():
+        ou, oc = np.unique(v[outside].astype(wide), return_counts=True)
+        d[outside] = _COUNT_BINS        # one spill bin, dropped below
+    else:
+        ou = oc = np.zeros(0, dtype=wide)
+    bins = np.bincount(d.view(np.int64))[:_COUNT_BINS]
+    nz = np.flatnonzero(bins)
+    u = (nz.astype(np.uint64) + base).view(wide)
+    below = ou < wide.type(lo)
+    return (np.concatenate([ou[below], u, ou[~below]]),
+            np.concatenate([oc[below], bins[nz], oc[~below]]))
+
+
+def _quantiles(c: np.ndarray, u: np.ndarray, n: int,
+               qs: tuple[float, ...]) -> np.ndarray:
+    """np.quantile(v, qs) (method "linear") of the n-value int64 sample
+    whose value counts are (u, c), bit for bit: the same two order
+    statistics per quantile, read off cumulative counts, through the
+    same interpolation steps as numpy's _lerp."""
+    vi = (n - 1) * np.asarray(qs, dtype=np.float64)
+    prev = np.floor(vi)
+    nxt = prev + 1
+    prev[vi >= n - 1] = nxt[vi >= n - 1] = n - 1
+    prev[vi < 0] = nxt[vi < 0] = 0
+    prev, nxt = prev.astype(np.intp), nxt.astype(np.intp)
+    gamma = vi - prev
+    cum = np.cumsum(c)
+    a = u[np.searchsorted(cum, prev, side="right")]
+    b = u[np.searchsorted(cum, nxt, side="right")]
+    diff = np.subtract(b, a)
+    out = np.asanyarray(np.add(a, diff * gamma))
+    np.subtract(b, diff * (1 - gamma), out=out, where=gamma >= 0.5,
+                casting="unsafe", dtype=type(out.dtype))
+    return out
+
+
+def _entropy_bits(c: np.ndarray) -> float:
+    """Order-0 entropy, bits per value, of a distribution given by counts."""
+    c = c[c > 0]
+    p = c / c.sum()
+    return float(-(p * np.log2(p)).sum())
+
+
+def _table_bytes(x: np.ndarray) -> float:
+    """Size model of an entropy-coded side table holding `x`: its order-0
+    entropy plus its own alphabet at full width."""
+    xu, xc = value_counts(x)
+    return (len(x) * _entropy_bits(xc)
+            + len(xu) * int(xu[-1]).bit_length()) / 8
+
+
+def _plane_bits(h: float) -> float:
+    """zstd's bits per byte over a byte plane of order-0 entropy `h`
+    (bits per byte), fitted on the planes of tools/audition_corpus.py:
+    zstd level 3 spends about 0.75 bit over the entropy of a plane of 1-5
+    bits (its match coding outbids its Huffman literals there), up to h
+    itself below 1 bit (Huffman's one-bit floor) and nothing on a plane
+    near 8 bits, which it stores raw."""
+    return h + (min(h, 0.75) if h <= 5 else max(0.0, 0.3 * (7.5 - h)))
+
+
+# A large-array audition picks by estimate when the smallest estimate
+# beats the next by more than this share; otherwise it trial-encodes the
+# candidates on a window (_trial_order). Measured with
+# tools/audition_corpus.py over 51 columns (datagen token samples, n_tok
+# and list lengths, perfbench's lineitem integer and date columns, 22
+# synthetic streams). On the columns whose values carry no order, the
+# rANS estimate came within -2%..+6% of the trial's size (+52% on 40-bit
+# uniform values, a table-bound case that ties with bit-packing) and the
+# byte-plane estimate within -6%..+17% (x2.4 on lineitem's line numbers,
+# whose short ascending runs the probe misses; they tie with bit-packing
+# too). Every column picked by estimate
+# picks the trial's codec: token samples (estimates 11-12% apart: rANS
+# about 9.0 bits per token against byte planes' 10.3), Zipf, float
+# prices and sparse ids. n_tok and lineitem's dates, 3-6% apart, and
+# every tie go to the trial.
+_ESTIMATE_MARGIN = 0.10
+_PROBE_N = 1 << 14  # values of the structure probe
+
+
+def _int_estimates(work: np.ndarray, counts: tuple[np.ndarray, np.ndarray]
+                   ) -> tuple[dict[Codec, float], list[Codec], bool]:
+    """(size estimates, the two best analytic codecs, structured) of a
+    large integer array from its value counts.
+
+    - rANS: the order-0 entropy, plus its two side tables (_table_bytes
+      of the counts and of the alphabet's gaps) and lane states;
+    - byte planes: each plane's entropy under zstd (_plane_bits);
+    - the two best analytic codecs (_estimate_int_sizes) go through the
+      zstd cascade, which at under a byte per value packs several values
+      per byte and can reach the order-0 entropy, and at a byte or more
+      reaches at best what byte planes do.
+    The order-0 models hold only for values that carry no order, so a
+    zstd pass over a _PROBE_N-value slice that beats the order-0 entropy
+    (runs, steps, repeats) marks the array structured."""
+    u, c = counts
+    n = len(work)
+    h0 = _entropy_bits(c)
+    analytic = _estimate_int_sizes(work)
+    analytic.pop(Codec.RAW, None)
+    top2 = [Codec(k) for _, k in sorted((v, int(k))
+                                        for k, v in analytic.items())][:2]
+    probe = np.ascontiguousarray(work[max(0, n - _PROBE_N) // 2:][:_PROBE_N])
+    if len(_ZSTD.compress(probe.tobytes())) * 8 < h0 * len(probe):
+        return {}, top2, True
+    est: dict[Codec, float] = {}
+    span = int(u[-1]) - int(u[0])
+    if span <= numeric._RANGE_CAP:
+        size = numeric._narrow_bytes(span.bit_length())
+        d = u.astype(np.uint64) - np.uint64(int(u[0]) % (1 << 64))
+        bits = sum(_plane_bits(_entropy_bits(np.bincount(
+            (d >> np.uint64(8 * i) & np.uint64(255)).astype(np.intp),
+            weights=c, minlength=256))) for i in range(size))
+        est[Codec.BYTE_PLANES] = n * bits / 8 + 9 + 5 * size
+    for codec in top2:
+        size = analytic[codec]
+        if size < n:
+            size = min(size, n * h0 / 8)
+        elif Codec.BYTE_PLANES in est:
+            size = min(size, est[Codec.BYTE_PLANES])
+        est[codec] = size
+    if 2 <= len(u) <= rans.MAX_ALPHABET:
+        # the two side tables with ~32 B of headers each, the payload's
+        # 12 B of frames, the coded values, then 8 B per lane state and
+        # the core's 16 B header per window, scaled as _trial_order does
+        wn = min(n, _WINDOW_N)
+        gaps = np.diff(u).astype(np.uint64)
+        est[Codec.RANS] = (_table_bytes(c) + _table_bytes(gaps) + 76
+                           + n * h0 / 8
+                           + (8 * rans.lane_count(wn) + 16) * n / wn)
+    return est, top2, False
 
 
 def _estimate_int_sizes(v: np.ndarray,
@@ -1000,44 +1183,61 @@ def encode_array(values, valid: np.ndarray | None = None,
     return min(picked, raw_guard, key=len)
 
 
-def _audition_large(work: np.ndarray,
-                    dtype_code: DType) -> list[Codec]:
-    """Window audition: candidate codecs for a large integer array,
-    cheapest estimated full size first."""
+def _audition_large(work: np.ndarray, dtype_code: DType,
+                    counts: tuple[np.ndarray, np.ndarray]) -> list[Codec]:
+    """Candidate codecs for a large integer array, cheapest first: by
+    estimate from its value counts (_int_estimates), or by trial
+    (_trial_order) when the array is structured or its two best
+    estimates are within _ESTIMATE_MARGIN of each other."""
+    est, top2, structured = _int_estimates(work, counts)
+    order = [Codec(k) for _, k in sorted((v, int(k)) for k, v in est.items())]
+    if structured or (len(order) > 1 and est[order[1]]
+                      < est[order[0]] * (1 + _ESTIMATE_MARGIN)):
+        return _trial_order(work, dtype_code, top2)
+    return order
+
+
+def _trial_order(work: np.ndarray, dtype_code: DType,
+                 analytic: list[Codec]) -> list[Codec]:
+    """Window audition: the two best analytic codecs, byte planes and
+    rANS, cheapest trial size first."""
+    sizes = _trial_sizes(work, dtype_code,
+                         analytic + [Codec.BYTE_PLANES, Codec.RANS])
+    return sorted(sizes, key=sizes.get)
+
+
+def _trial_sizes(work: np.ndarray, dtype_code: DType,
+                 codecs: list[Codec]) -> dict[Codec, float]:
+    """Estimated full-size bytes of each codec that accepts a contiguous
+    window of `work`, from encoding that window."""
     n = len(work)
     window = work[(n - _WINDOW_N) // 2:][:_WINDOW_N] if n > _WINDOW_N \
         else work
     wn = len(window)
     scale = n / wn
-    est = _estimate_int_sizes(work)
-    est.pop(Codec.RAW, None)
-    analytic = [c for _, c in sorted((v, int(c)) for c, v in est.items())][:2]
-    auditions: list[tuple[float, Codec]] = []
-    for codec in [Codec(c) for c in analytic] + [Codec.BYTE_PLANES,
-                                                 Codec.RANS]:
+    sizes: dict[Codec, float] = {}
+    for codec in codecs:
         wp = _encode_int_payload(window, codec)
         if wp is None:
             continue
         if codec == Codec.RANS:
             bf, bu, core = unframe(wp, 3)
             # tables don't scale with n — scale only the coded stream
-            size = len(bf) + len(bu) + 12 + len(core) * scale
+            sizes[codec] = len(bf) + len(bu) + 12 + len(core) * scale
         elif codec == Codec.BYTE_PLANES:
-            size = len(wp) * scale
+            sizes[codec] = len(wp) * scale
         else:
             # analytic codecs go through the zstd cascade at full size —
             # audition the cascade on the window for a fair estimate
-            size = len(assemble(codec, dtype_code, wn, wp,
-                                try_zstd=True)) * scale
-        auditions.append((size, codec))
-    auditions.sort(key=lambda t: t[0])
-    return [codec for _, codec in auditions]
+            sizes[codec] = len(assemble(codec, dtype_code, wn, wp,
+                                        try_zstd=True)) * scale
+    return sizes
 
 
 def _encode_auto_large(work: np.ndarray, dtype_code: DType,
                        valid: np.ndarray | None) -> bytes:
     n = len(work)
-    for codec in _audition_large(work, dtype_code):
+    for codec in _audition_large(work, dtype_code, value_counts(work)):
         payload = _encode_int_payload(work, codec)
         if payload is not None:
             self_compressed = codec in (Codec.BYTE_PLANES, Codec.RANS)
@@ -1057,10 +1257,47 @@ def pick_int_codec(values: np.ndarray) -> int | None:
     values = np.asarray(values)
     if values.dtype == np.dtype(object) or len(values) < (1 << 16):
         return None
+    work = _work(values)
+    return _pick_int(values, work, value_counts(work))
+
+
+def _work(values: np.ndarray) -> np.ndarray:
     work_dtype = _WORK_VIEW.get(values.dtype)
-    work = values.view(work_dtype) if work_dtype is not None else values
-    order = _audition_large(work, DTYPE_OF_NUMPY[values.dtype])
+    return values.view(work_dtype) if work_dtype is not None else values
+
+
+def _pick_int(values: np.ndarray, work: np.ndarray,
+              counts: tuple[np.ndarray, np.ndarray]) -> int | None:
+    order = _audition_large(work, DTYPE_OF_NUMPY[values.dtype], counts)
     return int(order[0]) if order else None
+
+
+def int_plan_entry(values: np.ndarray,
+                   side_stream: bool = False) -> int | bytes | None:
+    """The plan entry of one integer or float stream from a sample of its
+    values, or None: the pick_int_codec winner, the shared table
+    (build_shared_table) in its place when rANS wins, and for a
+    `side_stream` (list lengths, per-row scalars) shared_table_hint's
+    table when nothing else became a table. All of it comes from one
+    value count of the sample."""
+    values = np.asarray(values)
+    integer = np.issubdtype(values.dtype, np.integer)
+    n = len(values)
+    if values.dtype == np.dtype(object) \
+            or n < (_SIDE_MIN_N if side_stream and integer else 1 << 16):
+        return None
+    work = _work(values)
+    counts = value_counts(work)
+    entry: int | bytes | None = None
+    if n >= (1 << 16):
+        entry = _pick_int(values, work, counts)
+        if entry == Codec.RANS and integer:
+            table = _shared_table(*counts, n)
+            if table is not None:
+                entry = table[0]
+    if side_stream and integer and not isinstance(entry, bytes):
+        entry = _shared_table_hint(values, *counts) or entry
+    return entry
 
 
 def pick_string_codec(arr: pa.Array) -> int | tuple | None:

@@ -56,6 +56,12 @@ def quantize_freqs(counts: np.ndarray) -> np.ndarray:
     return f
 
 
+def lane_count(n: int, n_lanes: int = 4096) -> int:
+    """The lanes `encode` gives `n` values (see the comment there)."""
+    return max(8, min(n_lanes, 1 << max(3, (n // 384).bit_length() - 1),
+                      1024))
+
+
 def encode(codes: np.ndarray, K: int, n_lanes: int = 4096,
            freqs: np.ndarray | None = None
            ) -> tuple[bytes, np.ndarray] | None:
@@ -79,8 +85,7 @@ def encode(codes: np.ndarray, K: int, n_lanes: int = 4096,
     # streams (list lengths, n_tok: 1-2k values) from paying a large
     # state block. The lane count is in the core header, so any count
     # decodes under any lane rule.
-    L = min(n_lanes, 1 << max(3, (n // 384).bit_length() - 1))
-    L = max(8, min(L, 1024))
+    L = lane_count(n, n_lanes)
     if freqs is None:
         counts = np.bincount(codes, minlength=K)
         f = quantize_freqs(counts)

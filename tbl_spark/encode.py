@@ -155,8 +155,11 @@ def _local_parquet_sample(df: DataFrame, columns: list[str],
             pf = pq.ParquetFile(p)
             if not set(columns) <= set(pf.schema_arrow.names):
                 return None
+            # one thread: the pool's hand-offs cost more driver CPU than
+            # they save on a sample of a few MB
             for batch in pf.iter_batches(columns=list(columns),
-                                         batch_size=min(n_rows, 1 << 16)):
+                                         batch_size=min(n_rows, 1 << 16),
+                                         use_threads=False):
                 batches.append(batch)
                 got += batch.num_rows
                 if got >= n_rows:
@@ -178,38 +181,45 @@ def audition_codec_hints(df: DataFrame, sample_rows: int = 1024) -> Plan:
     codecs.core.Plan) for the encode entry points' `codec_hints`.
 
     Why: without a plan EVERY chunk pays its own audition (for token
-    columns a full rANS + byte-planes encode of a 256k-value window,
-    ~0.3 s; for a free-text column an FSST merge-table build, ~3x the
-    cost of encoding with a given table). The driver pays it once here
-    and every chunk of the run encodes under the same entry, so chunk
-    bytes do not depend on which worker or in which order they are
-    encoded. A chunk the planned codec declines on gets its own
-    audition, and the RAW(+zstd) guard still bounds the worst case.
+    columns a value count and size estimates, or a trial encode of a
+    256k-value window when two estimates are close; for a free-text
+    column an FSST merge-table build, ~3x the cost of encoding with a
+    given table). The driver pays it once here and every chunk of the
+    run encodes under the same entry, so chunk bytes do not depend on
+    which worker or in which order they are encoded. A chunk the
+    planned codec declines on gets its own audition, and the RAW(+zstd)
+    guard still bounds the worst case.
 
-    Two-phase sampling: `sample_rows` rows cover list columns (each row
-    carries hundreds of values) and string columns (the winning string
-    codec, and for FSST the merge table built on the sample), then
-    SCALAR numeric columns — which need >= 2^16 values before the
-    audition fires — get their own wider sample of just those columns
-    (a few MB, column-pruned scan).
+    One sample: a bare local parquet frame is read once, every audited
+    column at the most rows any of them needs, and each column's rows
+    are sliced from it; other frames sample each kind of column with a
+    Spark job. String columns use the first `sample_rows` rows (the
+    winning string codec, and for FSST the merge table built on them).
+    List columns use 16x that many rows for their values and
+    _SCALAR_SAMPLE_ROWS for their lengths, and scalar numeric columns
+    _SCALAR_SAMPLE_ROWS, since the integer audition needs >= 2^16
+    values before it fires.
 
-    When rANS wins a column, the audition additionally builds a SHARED
-    frequency table from a wider sample of that column (r7, the
+    Each integer (or float) stream is auditioned by
+    codecs.core.int_plan_entry from ONE value count of its sample: the
+    codec by size estimates (order-0 entropy for rANS, plane entropies
+    for byte planes, analytic sizes for the rest), trial-encoded only
+    when two estimates are within core._ESTIMATE_MARGIN. When rANS wins,
+    the same counts build a SHARED frequency table (r7, the
     dictionary-page analog — see codecs/core.py build_shared_table) and
     the plan entry becomes the table BLOB instead of the codec enum:
     chunks encode RANS_SHARED cores against it, eliminating the
     per-chunk side-table cost (0.0535 B/token at bench-size 400k-token
     chunks). Table quality scales with sample size (measured 1.1308 ->
-    1.1167 B/token going 250k -> 1.6M sample values), so the table
-    sample is wider than the choice sample."""
-    from .codecs.core import (Codec, build_shared_table, pick_int_codec,
+    1.1167 B/token going 250k -> 1.6M sample values), which is why the
+    list values' sample is the widest; its cross-entropy gap over the
+    corpus order-0 floor measured 0.0035 B/token at 1.6M sample values,
+    0.0016 at 6.4M and 0.0010 asymptotically."""
+    from .codecs.core import (_primitive_np, int_plan_entry,
                               pick_string_codec, shared_table_hint)
     # r8: column categories come from the SCHEMA, not a collected sample
     # — each toArrow here is a whole driver job whose single-task scan
-    # decodes the input's full row group regardless of the limit, so on
-    # an 11-column scalar table the old 1024-row type-probe job cost as
-    # much as the real sample job. Lists still get a small probe (their
-    # null check is data, not schema), scalar-only tables collect ONCE.
+    # decodes the input's full row group regardless of the limit.
     plan: Plan = {}
     scalar_num = [f.name for f in df.schema.fields
                   if f.name != PART_COL
@@ -220,119 +230,73 @@ def audition_codec_hints(df: DataFrame, sample_rows: int = 1024) -> Plan:
     str_cols = [f.name for f in df.schema.fields
                 if f.name != PART_COL
                 and f.dataType.simpleString() in ("string", "binary")]
-    use_local = True
-
-    def local_sample(columns: list[str], n_rows: int) -> pa.Table | None:
-        # after one miss every later read of this frame would miss too:
-        # go straight to Spark (and log a reader error once, not per read)
-        nonlocal use_local
-        tbl = _local_parquet_sample(df, columns, n_rows) if use_local \
-            else None
-        use_local = tbl is not None
-        return tbl
+    rows = {**{c: sample_rows for c in str_cols},
+            **{c: max(16 * sample_rows, _SCALAR_SAMPLE_ROWS)
+               for c in list_cols},
+            **{c: _SCALAR_SAMPLE_ROWS for c in scalar_num}}
+    local = _local_parquet_sample(df, list(rows), max(rows.values())) \
+        if rows else None
 
     def sample_of(columns: list[str], n_rows: int) -> pa.Table:
-        tbl = local_sample(columns, n_rows)
-        if tbl is None:
-            tbl = df.select(*columns).limit(n_rows).toArrow()
-        return tbl
+        if local is not None:
+            return local.select(columns).slice(0, n_rows)
+        return df.select(*columns).limit(n_rows).toArrow()
 
-    sample = None
-    if list_cols or str_cols:
-        sample = sample_of(list_cols + str_cols, sample_rows)
-    for name in str_cols:
-        entry = pick_string_codec(sample.column(name))
-        if entry is not None:
-            plan[name] = entry
+    if str_cols:
+        sample = sample_of(str_cols, sample_rows)
+        for name in str_cols:
+            entry = pick_string_codec(sample.column(name))
+            if entry is not None:
+                plan[name] = entry
     for name in list_cols:
-        arr = sample.column(name).combine_chunks()
-        arr = to_codec_input(arr)
-        t = arr.type
-        if pa.types.is_list(t) or pa.types.is_large_list(t):
-            values = arr.flatten()
-            if values.null_count:
-                continue
-            # side stream: the list LENGTHS. A wide sample is cheap —
-            # F.size is a metadata projection, no token payloads move —
-            # and the shared-table audition prices RANS_SHARED against
-            # the analytic per-chunk pick (bitpack would spend a full
-            # value-range width per length; the shared table spends
-            # the lengths' entropy, amortizing its table across every
-            # chunk of the dataset)
-            lw = None
-            ltbl = local_sample([name], _SCALAR_SAMPLE_ROWS)
-            if ltbl is not None:
-                larr = ltbl.column(name).combine_chunks()
-                if larr.null_count == 0:
-                    lw = (larr.value_lengths().cast(pa.int64())
-                          .to_numpy(zero_copy_only=False))
-            if lw is None:
-                import pyspark.sql.functions as F
-                lw = (df.select(F.size(F.col(name)).cast("long")
-                                .alias("l"))
-                      .limit(_SCALAR_SAMPLE_ROWS).toArrow().column("l")
-                      .to_numpy())
-            lblob = shared_table_hint(lw)
-            if lblob is not None:
-                plan[f"{name}.lengths"] = lblob
-            key = f"{name}.values"
-            values = to_codec_input(values)
-            t = values.type
+        arr = to_codec_input(
+            sample_of([name], 16 * sample_rows).column(name)
+            .combine_chunks())
+        if not (pa.types.is_list(arr.type)
+                or pa.types.is_large_list(arr.type)):
+            continue
+        values = to_codec_input(arr.flatten())
+        if values.null_count:
+            continue
+        # side stream: the list LENGTHS. A wide sample is cheap — a local
+        # read slices it, F.size is a metadata projection — and the
+        # shared-table audition prices RANS_SHARED against the analytic
+        # per-chunk pick (bitpack would spend a full value-range width
+        # per length; the shared table spends the lengths' entropy,
+        # amortizing its table across every chunk of the dataset)
+        lw = None
+        if local is not None:
+            larr = local.column(name).slice(0, _SCALAR_SAMPLE_ROWS)
+            larr = larr.combine_chunks()
+            if larr.null_count == 0:
+                lw = (larr.value_lengths().cast(pa.int64())
+                      .to_numpy(zero_copy_only=False))
         else:
-            continue
-        if not (pa.types.is_integer(t) or pa.types.is_floating(t)):
-            continue
-        codec = pick_int_codec(values.to_numpy(zero_copy_only=False))
-        if codec is not None:
-            plan[key] = codec
-            if codec == Codec.RANS:
-                # wider column-pruned sample just for the shared table.
-                # 16x the choice sample (~6.5M values at bench doc
-                # lengths): the table's cross-entropy gap over the
-                # corpus order-0 floor is estimator noise that shrinks
-                # with sample size — measured 0.0035 B/token at 1.6M
-                # sample values, 0.0016 at 6.4M, 0.0010 asymptote —
-                # while the driver-side cost stays a one-off sub-second
-                # column-pruned scan per dataset.
-                from .codecs.core import _primitive_np
-                wide = sample_of([name], 16 * sample_rows).column(name)
-                wide = wide.combine_chunks()
-                wv = to_codec_input(wide).flatten()
-                if not wv.null_count:
-                    blob = build_shared_table(
-                        _primitive_np(to_codec_input(wv)))
-                    if blob is not None:
-                        plan[key] = blob
+            import pyspark.sql.functions as F
+            lw = (df.select(F.size(F.col(name)).cast("long").alias("l"))
+                  .limit(_SCALAR_SAMPLE_ROWS).toArrow().column("l")
+                  .to_numpy())
+        lblob = None if lw is None else shared_table_hint(lw)
+        if lblob is not None:
+            plan[f"{name}.lengths"] = lblob
+        if pa.types.is_integer(values.type) \
+                or pa.types.is_floating(values.type):
+            entry = int_plan_entry(_primitive_np(values))
+            if entry is not None:
+                plan[f"{name}.values"] = entry
     if scalar_num:
         wide = sample_of(scalar_num, _SCALAR_SAMPLE_ROWS)
 
         def _audit_scalar(name: str):
-            """Trial-encode one column; returns its hint value or None.
-            Pure numpy over column-local arrays (pick_int_codec,
-            build_shared_table and shared_table_hint write no module
-            state), so columns audit concurrently — the heavy kernels
-            release the GIL."""
+            """One column's plan entry, or None. Pure numpy over
+            column-local arrays (int_plan_entry writes no module state),
+            so columns audit concurrently — the heavy kernels release
+            the GIL."""
             arr = to_codec_input(wide.column(name).combine_chunks())
             if arr.null_count:
                 arr = arr.drop_null()
-            values_np = arr.to_numpy(zero_copy_only=False)
-            hint: int | bytes | None = None
-            codec = pick_int_codec(values_np)
-            if codec is not None:
-                hint = codec
-                if codec == Codec.RANS:
-                    blob = build_shared_table(values_np)
-                    if blob is not None:
-                        hint = blob
-            if not isinstance(hint, (bytes, bytearray)) \
-                    and np.issubdtype(values_np.dtype, np.integer):
-                # scalar side stream (e.g. n_tok): shared-table
-                # audition even when the sample audition picked a
-                # non-RANS codec — see shared_table_hint's rationale
-                blob = shared_table_hint(values_np)
-                if blob is not None:
-                    hint = blob
-            return hint
+            return int_plan_entry(arr.to_numpy(zero_copy_only=False),
+                                  side_stream=True)
 
         # r8: audit columns in a small thread pool — the per-column
         # trials were serial driver work (0.4 s on an 11-column table)

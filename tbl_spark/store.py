@@ -606,12 +606,20 @@ class ChunkStore:
     def _json_stats_table(self, have: dict[int, str]) -> pa.Table:
         """STATS_SCHEMA rows of the parts no stats parquet in `have`
         covers: legacy waves (committed wave manifests minus `have`, found
-        by name, so waves with a stats parquet are never opened) and
-        loose parts."""
+        by name) and the loose parts no committed wave covers. Waves with
+        a stats parquet are opened only while loose parts remain, to
+        leave out the parts they cover."""
         waves, parts = self._manifest_paths()
-        manifests = [m for seq in sorted(waves.keys() - have.keys())
-                     for m in _load_json(waves[seq])["manifests"]]
-        manifests += [_load_json(parts[p]) for p in sorted(parts)]
+        legacy = [_load_json(waves[seq])
+                  for seq in sorted(waves.keys() - have.keys())]
+        manifests = [m for w in legacy for m in w["manifests"]]
+        if parts:
+            # a committed wave covers its parts even while their loose
+            # files await cleanup; counting them again double-counts
+            covered = {p for w in legacy for p in w["parts"]}.union(
+                *(_load_json(waves[seq])["parts"] for seq in have))
+            manifests += [_load_json(parts[p])
+                          for p in sorted(parts.keys() - covered)]
         return pa.Table.from_pylist(
             [r for m in manifests for r in _manifest_stats_rows(m)],
             schema=STATS_SCHEMA)
@@ -1031,13 +1039,10 @@ def encode_to_store(df: DataFrame, store: ChunkStore, num_parts: int,
     committed = store.committed_parts() if resume else set()
     pending_df = df
     if committed:
-        spark = df.sparkSession
-        done = spark.createDataFrame(
-            pa.table({PART_COL: pa.array(sorted(committed), pa.int32())}),
-            f"{PART_COL} int")
-        # broadcast anti-join: never re-encode committed partitions
-        from pyspark.sql.functions import broadcast
-        pending_df = df.join(broadcast(done), PART_COL, "left_anti")
+        # never re-encode committed partitions: a literal IN filter on
+        # the computed part id, no broadcast job and no join
+        import pyspark.sql.functions as F
+        pending_df = df.filter(~F.col(PART_COL).isin(sorted(committed)))
 
     # clustered encode (r6, mirrors encode_chunks' cluster=True): chunk-
     # internal row order is shuffle residue, so sorting by the salt key

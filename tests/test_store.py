@@ -479,3 +479,84 @@ def test_unknown_or_no_columns_raise(spark, tmp_path, kw):
     msg = str(err.value)
     assert ("'nope'" in msg) == (kw.get("columns") != [])
     assert "['doc_id', 'tokens', 'n_tok', 'source']" in msg
+
+
+def _data_file_bytes(store: ChunkStore) -> dict[str, bytes]:
+    """Every file under the store's root but its JSON commit records."""
+    out = {}
+    for d, _, names in os.walk(store.root):
+        rel = os.path.relpath(d, store.root)
+        if rel.split(os.sep)[0] not in ("manifest", "snapshots", "_staging"):
+            for name in names:
+                with open(os.path.join(d, name), "rb") as f:
+                    out[os.path.normpath(os.path.join(rel, name))] = f.read()
+    return out
+
+
+def test_resume_filters_committed_parts_without_a_broadcast(
+        spark, tmp_path, monkeypatch):
+    """A resume drops the committed part ids with a literal IN filter:
+    two jobs (the shuffle's map stage and the encode), no broadcast job
+    and no BroadcastExchange in the executed plan, and the lost parts
+    come back as the clean run's bytes."""
+    import shutil
+
+    df = generate_df(spark, N_DOCS, 4)
+    clean = ChunkStore(str(tmp_path / "clean"))
+    encode_to_store(df, clean, N_CHUNKS)
+    store = ChunkStore(str(tmp_path / "resumed"))
+    shutil.copytree(clean.root, store.root)
+    lost = sorted(store.committed_parts())[::2]
+    for p in lost:
+        os.remove(os.path.join(store.chunks_dir, f"part-{p:05d}.parquet"))
+        os.remove(os.path.join(store.manifest_dir, f"part-{p:05d}.json"))
+
+    plans = []
+    cls = type(df)
+    collect = cls.collect
+
+    def recording_collect(self):
+        rows = collect(self)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return rows
+
+    monkeypatch.setattr(cls, "collect", recording_collect)
+    summary, jobs, _, _ = _job_counts(
+        spark, lambda: encode_to_store(df, store, N_CHUNKS))
+    assert summary["encoded_parts"] == len(lost)
+    assert summary["skipped_parts"] == N_CHUNKS - len(lost)
+    assert jobs == 2
+    assert len(plans) == 1 and "BroadcastExchange" not in plans[0]
+    assert _data_file_bytes(store) == _data_file_bytes(clean)
+
+
+def test_stats_count_a_covered_part_once(tmp_path):
+    """A crash between a wave's commit and the deletion of its parts'
+    files leaves a covered part's files behind; store_stats counts that
+    part once, as decode_units and manifest_rows do."""
+    import shutil
+
+    from tbl_spark.datagen import generate_part
+    from tbl_spark.inspect import store_stats
+    from tbl_spark.store import encode_part
+
+    store = ChunkStore(str(tmp_path / "store"))
+    tbl = generate_part(0, 200, seed=3)
+    types = {"doc_id": "string", "tokens": "array<int>", "n_tok": "int",
+             "source": "string"}
+    for p in range(4):
+        encode_part(store.root, p, tbl.slice(50 * p, 50), types, {})
+    kept = tmp_path / "part-0"
+    kept.mkdir()
+    files = [os.path.join(store.chunks_dir, "part-00000.parquet"),
+             os.path.join(store.manifest_dir, "part-00000.json")]
+    for f in files:
+        shutil.copy(f, kept)
+    assert store.compact(2) == 2
+    want = store_stats(store)
+    assert want["parts"] == 4 and want["rows"] == 200
+
+    for f in files:                 # wave 0 committed, cleanup pending
+        shutil.copy(kept / os.path.basename(f), f)
+    assert store_stats(store) == want
+    assert store.stats_table().num_rows == 4 * 4

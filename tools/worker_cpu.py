@@ -1,13 +1,14 @@
 """CPU seconds per process class for one decode/encode call.
 
-    python tools/worker_cpu.py
+    python tools/worker_cpu.py [--seed N]
 
 Builds a small seeded token store (the perfbench ``tokens_scan`` shape: 8
 salted parts, compacted in waves of 2, from ``DOCS`` documents of seed
-``SEED``), then runs a ``mapInArrow`` that yields nothing over a full
-decode's unit frame, in the tasks that decode plans (one task when its
-blob bytes fit ``ONE_TASK_BYTES``; the per-task Spark and Python-worker
-floor that a store decode pays before it opens a file), a full decode,
+``--seed``, 1 by default), then runs a ``mapInArrow`` that yields nothing
+over a full decode's unit frame, in the tasks that decode plans (one task
+when its blob bytes fit ``ONE_TASK_BYTES``; the per-task Spark and
+Python-worker floor that a store decode pays before it opens a file), a
+full decode,
 a projected decode (``n_tok, source``), a selective decode
 (perfbench's predicate shape: ``n_tok>=`` the ``SELECTIVE_Q`` quantile,
 inside perfbench's 0.990-0.998 draw), a salted encode, a colocated
@@ -28,7 +29,9 @@ The JVM runs with perfbench's ``JVM_OPTS``, so its column matches the
 JVM share of ``cycle_cpu_s``. The worker PIDs that used CPU in a call are
 listed, so worker reuse shows as the same PIDs from one rep to the next.
 The first rep includes each worker's first task; the summary line is the
-median of the later reps.
+median of the later reps. It also carries ``plan_sha256``, a digest of the
+audition's plan (its ``plan_to_json`` record and every shared-table blob),
+so two checkouts' plans can be compared seed by seed.
 
 Workers import ``tbl_spark`` from this checkout, so running the script from
 two checkouts compares their worker cost.
@@ -36,6 +39,8 @@ two checkouts compares their worker cost.
 
 from __future__ import annotations
 
+import argparse
+import hashlib
 import json
 import os
 import shutil
@@ -53,7 +58,6 @@ from perfbench.run import (JVM_OPTS, cpu_s, descendants,  # noqa: E402
 CLK = os.sysconf("SC_CLK_TCK")
 PARTS = 8       # salted parts, as in perfbench's token stores
 DOCS = 2000     # perfbench's token input size
-SEED = 1
 REPS = 4
 SELECTIVE_Q = 0.994
 TOKENS_PER_CHUNK = 200_000  # perfbench's colocated chunk size
@@ -115,7 +119,22 @@ def measure(spark, jvm: int, group: str, fn, prepare=None) -> dict:
             "worker_pids": busy}
 
 
+def plan_sha256(plan) -> str:
+    """sha256 over a plan's JSON record and its shared-table blobs."""
+    from tbl_spark.codecs.core import plan_to_json
+    h = hashlib.sha256(json.dumps(plan_to_json(plan),
+                                  sort_keys=True).encode())
+    for key in sorted(plan):
+        if isinstance(plan[key], (bytes, bytearray)):
+            h.update(bytes(plan[key]))
+    return h.hexdigest()
+
+
 def main() -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--seed", type=int, default=1,
+                    help="seed of the token input (default 1)")
+    seed = ap.parse_args().seed
     work = tempfile.mkdtemp(prefix="worker_cpu-")
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
     os.environ.setdefault("SPARK_LOCAL_DIRS", os.path.join(work, "local"))
@@ -144,7 +163,7 @@ def main() -> int:
     try:
         jvm = next(p for p in descendants(os.getpid()) if _comm(p) == "java")
         src = os.path.join(work, "input")
-        write_token_table(src, DOCS, n_parts=8, seed=SEED)
+        write_token_table(src, DOCS, n_parts=8, seed=seed)
         df = spark.read.parquet(src)
         hints = audition_codec_hints(df)
         loose = ChunkStore(os.path.join(work, "loose"))
@@ -230,7 +249,8 @@ def main() -> int:
             summary[name] = {k: round(statistics.median(r[k] for r in warm), 3)
                              for k in ("jobs", "stages", "tasks", "wall_s",
                                        "driver", "jvm", "python")}
-        print(json.dumps({"seed": SEED, "docs": DOCS,
+        print(json.dumps({"seed": seed, "docs": DOCS,
+                          "plan_sha256": plan_sha256(hints),
                           "selective_predicate": predicate,
                           "cores": cores, "python": sys.version.split()[0],
                           "median_warm": summary}))
