@@ -148,16 +148,7 @@ def build_parser() -> argparse.ArgumentParser:
                           "acceptable)")
 
     dec = sub.add_parser("decode", help="decode a chunk store")
-    dec.add_argument("--store", default=None)
-    dec.add_argument("--stream-root", default=None,
-                     help="decode a streaming store root (batch=* dirs) "
-                          "instead of a single chunk store")
-    dec.add_argument("--as-of-batch", type=int, default=None,
-                     help="time travel: union only batches <= N "
-                          "(stream roots only)")
-    dec.add_argument("--as-of-ts", type=float, default=None,
-                     help="time travel: batches committed at or before "
-                          "this unix timestamp (stream roots only)")
+    dec.add_argument("--store", required=True)
     dec.add_argument("--schema", default=None,
                      help="output schema DDL (default: the schema pinned "
                           "in the store's store.json at first encode)")
@@ -1010,32 +1001,11 @@ def main(argv: list[str] | None = None) -> int:
         from .store import ChunkStore, decode_from_store
         cols = [c.strip() for c in args.columns.split(",")] \
             if args.columns else None
-        if args.stream_root:
-            from .streaming import decode_stream_store
-            if not args.schema:
-                print("--stream-root requires --schema DDL",
-                      file=sys.stderr)
-                return 1
-            out = decode_stream_store(spark, args.stream_root,
-                                      args.schema,
-                                      as_of_batch=args.as_of_batch,
-                                      as_of_ts=args.as_of_ts,
-                                      columns=cols, predicate=args.where)
-        elif not args.store:
-            print("decode needs --store or --stream-root",
-                  file=sys.stderr)
-            return 1
-        elif args.as_of_batch is not None or args.as_of_ts is not None:
-            print("--as-of-batch/--as-of-ts require --stream-root "
-                  "(single chunk stores are immutable datasets)",
-                  file=sys.stderr)
-            return 1
-        else:
-            # --output writes a file per task: keep a task per row
-            # group, up to one per core
-            out = decode_from_store(
-                ChunkStore(args.store), spark, args.schema,
-                columns=cols, predicate=args.where, coalesce_small=False)
+        # --output writes a file per task: keep a task per row group,
+        # up to one per core
+        out = decode_from_store(
+            ChunkStore(args.store), spark, args.schema,
+            columns=cols, predicate=args.where, coalesce_small=False)
         if args.output:
             out.write.mode("overwrite").parquet(args.output)
         else:

@@ -21,13 +21,6 @@ DEFAULT_SALT_COLS = ("source", "doc_id")
 DEFAULT_TOKENS_PER_CHUNK = 4_000_000  # ≈16 MB of int32 tokens per chunk
 
 
-def probe_skew(df: DataFrame, key: str = "source") -> dict[str, int]:
-    """value_counts-style skew probe (transform.rs:609-623 analog):
-    rows per key value, descending."""
-    rows = df.groupBy(key).count().orderBy(F.desc("count")).collect()
-    return {r[key]: r["count"] for r in rows}
-
-
 def plan_num_parts(total_tokens: int,
                    tokens_per_chunk: int = DEFAULT_TOKENS_PER_CHUNK,
                    min_parts: int = 4) -> int:

@@ -369,20 +369,6 @@ def simhash_values(df: DataFrame, text_col: str = "text",
     return sums.select(F.col(id_col), sim.cast("bigint").alias("simhash"))
 
 
-def with_simhash(df: DataFrame, text_col: str = "text",
-                 nbits: int = 64, hash_fn: str = "xxhash64",
-                 id_col: str = "doc_id") -> DataFrame:
-    """df + simhash column (computed via simhash_values, joined by id).
-
-    Pure column-adding contract: every input row survives (left join;
-    rows whose text explodes to nothing — NULL/empty — get simhash 0,
-    matching the r1 inline-expression behavior). Requires unique ids."""
-    vals = simhash_values(df, text_col, id_col, nbits, hash_fn)
-    return (df.join(vals, id_col, "left")
-            .withColumn("simhash", F.coalesce(F.col("simhash"),
-                                              F.lit(0).cast("bigint"))))
-
-
 def simhash_dedup(df: DataFrame, text_col: str = "text",
                   id_col: str = "doc_id", hd_max: int | None = None,
                   hash_fn: str = "xxhash64",

@@ -584,12 +584,6 @@ class ChunkStore:
     # JSON manifests; waves written before this layer existed fall back
     # to the manifests embedded in their wave JSON.
 
-    def loose_manifest_rows(self) -> list[dict]:
-        """Manifests of loose (un-waved) parts only — bounded after
-        compaction; never opens wave manifests."""
-        _, parts = self._manifest_paths()
-        return [_load_json(parts[p]) for p in sorted(parts)]
-
     def stats_files(self) -> dict[int, str]:
         """{wave_seq: stats parquet path} for COMMITTED waves that have
         one. The stats sidecar is renamed into place before the wave
@@ -955,7 +949,6 @@ def _part_manifest(part_id: int, tbl: pa.Table, chunk_tbl: pa.Table,
         "raw_bytes": sum(c["raw_bytes"] for c in cols.values()),
         "enc_bytes": sum(c["enc_bytes"] for c in cols.values()),
         "encode_ms": encode_ms,
-        "committed_at": time.time(),
         "columns": json.dumps(cols),
     }
 

@@ -1,165 +1,18 @@
-"""Structured Streaming ingestion: continuously encode arriving token
-files into a chunk store.
+"""Structured Streaming queries over token tables.
 
-The reference is batch-only (SURVEY.md §2.9); this is the training-data
-pipeline extension for continuous ingestion. Each micro-batch runs the
-SAME salted-partition encode job via foreachBatch into a batch-scoped
-chunk store (`root/batch=<id>/`), so:
+The reference is batch-only (SURVEY.md §2.9); these are the two
+streaming queries `__spark_entry__.py` runs, each next to a batch-SQL
+twin:
 
-- a replayed micro-batch (after a crash before the streaming checkpoint
-  commits) re-encodes into the same batch directory — the per-partition
-  atomic rename makes the replay idempotent;
-- decode/stats union all batch stores, so readers see every committed
-  chunk regardless of which micro-batch produced it;
-- late/new files only ever ADD batches — committed chunks are immutable.
+- `windowed_token_stats`: watermarked tumbling-window token and doc
+  counts per source;
+- `stream_dedup_exact`: cross-batch exact dedup that keeps the first
+  row seen for each text in the streaming state store.
 """
 
 from __future__ import annotations
 
-import glob
-import os
-
-from pyspark.sql import DataFrame, SparkSession
-
-from .codecs.core import plan_from_json
-from .store import ChunkStore, encode_to_store
-
-
-def stream_encode(spark: SparkSession, input_dir: str, store_root: str,
-                  num_parts: int, schema_ddl: str,
-                  checkpoint_dir: str | None = None,
-                  available_now: bool = True,
-                  colocated: bool = False):
-    """Start (and with available_now=True, run to completion) a streaming
-    encode of parquet files arriving under input_dir. Returns the query.
-
-    colocated=True uses the ZERO-shuffle encode per micro-batch (chunks
-    cut inside each scan task; ids from file/block/seq are deterministic
-    per file, so a replayed micro-batch recommits the same chunk ids and
-    the per-chunk markers make the replay a no-op)."""
-    checkpoint_dir = checkpoint_dir or os.path.join(store_root, "_checkpoint")
-    stream = (spark.readStream.schema(schema_ddl)
-              .option("maxFilesPerTrigger", "64")
-              .parquet(input_dir))
-
-    # audition the encode plan on the FIRST non-empty micro-batch only,
-    # then encode every later batch under it — without this each batch
-    # pays two driver-side sample jobs (ADVICE r4), and the same column
-    # could get different codecs in different batches of one stream. A
-    # restarted stream takes the plan its newest batch store pinned, so
-    # it keeps the first run's plan (and a replayed batch matches its pin);
-    # an empty micro-batch written before any audition pins {}, so skip it
-    plan_of_stream: dict = {}
-    for store in sorted(batch_stores(store_root), key=_batch_id,
-                        reverse=True):
-        meta = store.read_meta()
-        if meta is not None and meta.get("plan"):
-            plan_of_stream["plan"] = plan_from_json(
-                meta["plan"], store.read_shared_tables())
-            break
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        store = ChunkStore(os.path.join(store_root, f"batch={batch_id}"))
-        if "plan" not in plan_of_stream and not batch_df.isEmpty():
-            from .encode import audition_codec_hints
-            plan_of_stream["plan"] = audition_codec_hints(batch_df)
-        plan = plan_of_stream.get("plan", {})
-        if colocated:
-            from .store import encode_to_store_colocated
-            encode_to_store_colocated(batch_df, store, resume=True,
-                                      codec_hints=plan)
-        else:
-            encode_to_store(batch_df, store, num_parts, resume=True,
-                            codec_hints=plan)
-
-    writer = (stream.writeStream.foreachBatch(process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    if available_now:
-        query.awaitTermination()
-    return query
-
-
-def batch_stores(store_root: str) -> list[ChunkStore]:
-    return [ChunkStore(p) for p in
-            sorted(glob.glob(os.path.join(store_root, "batch=*")))]
-
-
-def _batch_id(store: ChunkStore) -> int:
-    return int(os.path.basename(store.root.rstrip("/")).split("=", 1)[1])
-
-
-def decode_stream_store(spark: SparkSession, store_root: str,
-                        output_ddl: str,
-                        as_of_batch: int | None = None,
-                        as_of_ts: float | None = None,
-                        columns: list[str] | None = None,
-                        predicate: str | list[str] | None = None
-                        ) -> DataFrame:
-    """Union the zero-shuffle decodes of every batch store.
-
-    Time travel (Iceberg-snapshot analog): batch stores are append-only —
-    a micro-batch only ever ADDS a `batch=<id>` directory — so the table
-    as of an earlier point is exactly the union of a batch prefix.
-    `as_of_batch` keeps batches with id <= N; `as_of_ts` keeps batches
-    whose last snapshot committed at or before the (driver-clock) unix
-    timestamp. Both are metadata-only decisions — excluded batches'
-    files are never opened.
-
-    `columns` / `predicate` thread straight through to each batch
-    store's decode (VERDICT r5 #4): projection prunes unrequested
-    columns' blobs at every batch's chunk scan, and each predicate
-    zone-prunes that batch's chunks via its own zone-map stats before
-    any file is opened — a batch whose every chunk falls outside the
-    predicate range contributes a metadata-only empty scan."""
-    from functools import reduce
-
-    from .store import decode_from_store
-    stores = batch_stores(store_root)
-    if as_of_batch is not None:
-        stores = [s for s in stores if _batch_id(s) <= as_of_batch]
-    if as_of_ts is not None:
-        # a batch existed at time t iff its FIRST successful run committed
-        # by t — a later snapshot is a checkpoint-replay (resume skips all
-        # parts; it adds no data) and must not move the batch's birth time
-        # past t. A batch whose snapshot write crashed falls back to its
-        # earliest per-part manifest commit time (bounded driver read).
-        kept = []
-        for s in stores:
-            times = [sn["committed_at"] for sn in s.snapshots()
-                     if sn.get("committed_at") is not None]
-            if not times:
-                times = [m["committed_at"] for m in s.loose_manifest_rows()
-                         if m.get("committed_at") is not None]
-            if times and min(times) <= as_of_ts:
-                kept.append(s)
-        stores = kept
-    if not stores:
-        raise ValueError(
-            f"no committed batches under {store_root}"
-            + (" at the requested as-of point"
-               if as_of_batch is not None or as_of_ts is not None else ""))
-    return reduce(DataFrame.unionByName,
-                  (decode_from_store(s, spark, output_ddl,
-                                     columns=columns, predicate=predicate)
-                   for s in stores))
-
-
-def stream_store_stats(store_root: str) -> dict:
-    """Aggregated stats across all batch stores (inspect.store_stats
-    summed per batch)."""
-    from .inspect import store_stats
-    batches = [store_stats(s) for s in batch_stores(store_root)]
-    return {
-        "batches": len(batches),
-        "parts": sum(b["parts"] for b in batches),
-        "rows": sum(b["rows"] for b in batches),
-        "tokens": sum(b["tokens"] for b in batches),
-        "enc_bytes": sum(b["enc_bytes"] for b in batches),
-        "raw_bytes": sum(b["raw_bytes"] for b in batches),
-    }
+from pyspark.sql import DataFrame
 
 
 def windowed_token_stats(stream_df: DataFrame,

@@ -8,9 +8,9 @@
 3. A failed local parquet sample is logged and falls back to a Spark
    sample job that yields the same plan.
 4. A store pins its plan in store.json: a run without a plan reuses the
-   pin (no audition), a different explicit plan raises, a store pinned
-   before plans were auditions once and adds the pin, and a restarted
-   stream keeps its first run's plan.
+   pin (no audition), a different explicit plan raises, an explicit
+   empty plan is pinned as given, and a store pinned before plans were
+   auditions once and adds the pin.
 5. A crash at any rename of the write protocol, driver- or worker-side,
    leaves a store that a rerun completes to the same bytes under the same
    pinned plan.
@@ -32,7 +32,7 @@ import pytest
 
 import tbl_spark.encode as encode_mod
 import tbl_spark.store as store_mod
-from tbl_spark.datagen import SPARK_SCHEMA_DDL, generate_df, write_token_table
+from tbl_spark.datagen import generate_df, write_token_table
 from tbl_spark.encode import audition_codec_hints
 from tbl_spark.inspect import store_stats
 from tbl_spark.store import (ChunkStore, decode_from_store, encode_to_store,
@@ -253,6 +253,10 @@ def test_explicit_plan_must_match_pin(token_df, plan, tmp_path):
     assert all(repr(k) in str(err.value) for k in plan)
     summary = encode_to_store(token_df, store, PARTS, codec_hints=plan)
     assert summary["encoded_parts"] == 0
+    # an explicit empty plan is pinned as given, even on an empty frame
+    empty = ChunkStore(str(tmp_path / "empty"))
+    encode_to_store(token_df.limit(0), empty, PARTS, codec_hints={})
+    assert empty.read_meta()["plan"] == {}
 
 
 def test_racing_first_encodes_share_one_pin(tmp_path):
@@ -395,29 +399,6 @@ def test_projected_frame_logs_leaving_local_sample(spark, parquet_src,
                 if "not a bare local parquet relation" in r.getMessage()]
     assert len(declined) == 1
     assert declined[0].levelno == logging.INFO
-
-
-def test_restarted_stream_keeps_first_plan(spark, tmp_path, monkeypatch):
-    from tbl_spark.datagen import generate_part
-    from tbl_spark.streaming import batch_stores, stream_encode
-    inbox = str(tmp_path / "inbox")
-    root = str(tmp_path / "stream")
-    write_token_table(inbox, 800, n_parts=2)
-    stream_encode(spark, inbox, root, num_parts=4,
-                  schema_ddl=SPARK_SCHEMA_DDL)
-    (first,) = batch_stores(root)
-    pinned = first.read_meta()["plan"]
-    assert pinned
-    for part in (2, 3):
-        pq.write_table(generate_part(part, 400, rows_per_part=400),
-                       os.path.join(inbox, f"late-{part}.parquet"))
-    _forbid_audition(monkeypatch)
-    stream_encode(spark, inbox, root, num_parts=4,
-                  schema_ddl=SPARK_SCHEMA_DDL)
-    stores = batch_stores(root)
-    assert len(stores) == 2
-    assert all(s.read_meta()["plan"] == pinned for s in stores)
-    assert stores[1].committed_parts()
 
 
 # -- crash points ----------------------------------------------------------

@@ -598,17 +598,6 @@ def test_with_columns_value_containing_colon(spark, sf_dir):
     assert row["ref"] == "a:b:c"
 
 
-def test_with_simhash_keeps_null_text_rows(spark):
-    from tbl_spark.pipelines import dedup
-    df = spark.createDataFrame(
-        [(1, "hello world"), (2, None), (3, "")],
-        "doc_id long, text string")
-    out = dedup.with_simhash(df)
-    assert out.count() == 3
-    rows = {r["doc_id"]: r["simhash"] for r in out.collect()}
-    assert rows[2] is not None                  # coalesced, not dropped
-
-
 def test_cli_single_file_jsonl_sink(small_parquet, tmp_path):
     from tbl_spark.cli import main
     out = str(tmp_path / "export.jsonl")

@@ -180,9 +180,11 @@ def test_cli_decode_where_repeatable(spark, tmp_path, capsys):
     assert main(["encode", src, "--store", store, "--num-parts", "4"]) == 0
     capsys.readouterr()
     out = str(tmp_path / "out")
-    assert main(["decode", "--store", store, "--where", "n_tok>=100",
-                 "--where", "n_tok<1000", "--output", out]) == 0
+    assert main(["decode", "--store", store, "--columns", "doc_id,n_tok",
+                 "--where", "n_tok>=100", "--where", "n_tok<1000",
+                 "--output", out]) == 0
     got = spark.read.parquet(out)
+    assert got.columns == ["doc_id", "n_tok"]
     expected = (spark.read.parquet(src)
                 .filter((F.col("n_tok") >= 100) & (F.col("n_tok") < 1000)))
     assert got.count() == expected.count() > 0
@@ -214,7 +216,8 @@ def test_prune_path_reads_no_per_manifest_json(spark, tmp_path, monkeypatch):
     store.compact(wave_size=4, spark=spark)   # all parts waved
     n_waves = len(store.waves())
     assert store.stats_files() and len(store.stats_files()) == n_waves
-    assert not store.loose_manifest_rows()
+    assert {p for w in store.waves() for p in w["parts"]} \
+        == store.committed_parts()
     pred = "val>=5000"
     counter = _CountingJson(json)
     monkeypatch.setattr(store_mod, "json", counter)
@@ -440,7 +443,6 @@ def _zone_mask_keep(chunk_tbl, col, op, raw, expect_any_match):
                                  _zone_cannot_match_mask)
     stats = _column_stats(chunk_tbl)
     manifest = {"part_id": 7, "n_rows": len(chunk_tbl), "encode_ms": 0.0,
-                "committed_at": 0.0,
                 "columns": {n: {"codec": "raw", "n_values": len(chunk_tbl),
                                 "raw_bytes": 1, "enc_bytes": 1,
                                 "stats": stats.get(n)}

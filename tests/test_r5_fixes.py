@@ -11,7 +11,7 @@
    mode on the corpus.
 6. decontaminate broadcasts a small eval side deterministically.
 7. encode_to_store/encode_to_store_colocated accept a precomputed plan
-   as codec_hints, or {} for none (streaming reuse path).
+   as codec_hints, or {} for none.
 8. CLI: dedup / curate / pack / sample / decontaminate end-to-end.
 """
 
@@ -304,49 +304,6 @@ def test_temperature_sample_weighted_no_shuffle_of_corpus(spark):
     assert 0 < kept.count() <= 2_000
 
 
-# -- 11. streaming time travel (r5) -------------------------------------------
-
-def test_stream_store_as_of_batch(spark, tmp_path):
-    import os
-    import time
-    from tbl_spark.datagen import SPARK_SCHEMA_DDL, write_token_table, \
-        generate_part
-    from tbl_spark.streaming import (batch_stores, decode_stream_store,
-                                     stream_encode)
-    import pyarrow.parquet as pq
-
-    inbox = str(tmp_path / "tt_inbox")
-    store = str(tmp_path / "tt_store")
-    write_token_table(inbox, 600, n_parts=2)
-    stream_encode(spark, inbox, store, num_parts=2,
-                  schema_ddl=SPARK_SCHEMA_DDL)
-    t_between = time.time()
-    tbl = generate_part(2, 300, rows_per_part=300)
-    pq.write_table(tbl, os.path.join(inbox, "late-2.parquet"),
-                   compression="zstd")
-    stream_encode(spark, inbox, store, num_parts=2,
-                  schema_ddl=SPARK_SCHEMA_DDL)
-    batches = sorted(int(os.path.basename(s.root).split("=")[1])
-                     for s in batch_stores(store))
-    assert len(batches) >= 2
-    # latest view = everything
-    assert decode_stream_store(spark, store,
-                               SPARK_SCHEMA_DDL).count() == 900
-    # as of the first batch: only wave-1 rows, later files never opened
-    old = decode_stream_store(spark, store, SPARK_SCHEMA_DDL,
-                              as_of_batch=batches[0])
-    assert old.count() == 600
-    # timestamp cut between the runs gives the same historical view
-    old_ts = decode_stream_store(spark, store, SPARK_SCHEMA_DDL,
-                                 as_of_ts=t_between)
-    assert old_ts.count() == 600
-    # an as-of point before any batch is an explicit error
-    import pytest as _pt
-    with _pt.raises(ValueError):
-        decode_stream_store(spark, store, SPARK_SCHEMA_DDL,
-                            as_of_ts=t_between - 3600)
-
-
 # -- 12. code-review fixes (r5) -----------------------------------------------
 
 def test_cache_ring_bounds_persisted_frames(spark, sf_dir):
@@ -384,35 +341,12 @@ def test_cli_dedup_exact_honors_id_col(spark, tmp_path, capsys):
     assert ids == [1, 3]
 
 
-def test_cli_decode_flag_combinations_rejected(tmp_path, capsys):
-    # r6: --columns/--where with --stream-root are now SUPPORTED
-    # (projection + zone-prune per batch store) — only the genuinely
-    # invalid combinations still refuse
+def test_cli_decode_flag_combinations_rejected(capsys):
     from tbl_spark.cli import main
-    assert main(["decode", "--stream-root", str(tmp_path)]) == 1  # no DDL
-    assert main(["decode", "--store", str(tmp_path),
-                 "--as-of-batch", "0"]) == 1
-
-
-def test_stream_as_of_ts_survives_replay(spark, tmp_path):
-    """A checkpoint-replay snapshot written AFTER the cutoff must not
-    hide a batch whose data was committed before it."""
-    import time
-    from tbl_spark.datagen import SPARK_SCHEMA_DDL, write_token_table
-    from tbl_spark.streaming import (batch_stores, decode_stream_store,
-                                     stream_encode)
-    inbox = str(tmp_path / "rp_inbox")
-    store = str(tmp_path / "rp_store")
-    write_token_table(inbox, 300, n_parts=1)
-    stream_encode(spark, inbox, store, num_parts=1,
-                  schema_ddl=SPARK_SCHEMA_DDL)
-    cut = time.time()
-    # simulate a replay: a second snapshot lands after the cutoff
-    b0 = batch_stores(store)[0]
-    b0.append_snapshot({"encoded_parts": 0, "committed_at": cut + 100})
-    out = decode_stream_store(spark, store, SPARK_SCHEMA_DDL,
-                              as_of_ts=cut)
-    assert out.count() == 300
+    with pytest.raises(SystemExit) as err:
+        main(["decode"])                    # --store is required
+    assert err.value.code == 2
+    assert "--store" in capsys.readouterr().err
 
 
 # -- 13. paragraph dedup (r5 new op) ------------------------------------------

@@ -10,8 +10,6 @@
 5. curate --gopher preserves input columns that collide with the gate's
    signal names.
 6. sample --rate with a non-numeric rate exits cleanly.
-7. decode_stream_store threads columns/predicate: per-batch projection
-   + zone pruning, CLI --stream-root --where accepted.
 """
 
 import struct
@@ -323,66 +321,6 @@ def test_cli_sample_bad_rate_value_clean_error(sf_dir, capsys):
     assert rc == 1
     err = capsys.readouterr().err
     assert "bad --rate" in err and "Traceback" not in err
-
-
-# -- 7. stream decode projection + predicates --------------------------------
-
-def _stream_wave(spark, inbox, store, lo, n, wave):
-    rows = [(f"d{wave}_{i}", list(range(lo + i, lo + i + 5)), lo + i,
-             f"s{wave}") for i in range(n)]
-    df = spark.createDataFrame(
-        rows, "doc_id string, tokens array<int>, n_tok int, source string")
-    df.coalesce(1).write.mode("append").parquet(inbox)
-    from tbl_spark.streaming import stream_encode
-    stream_encode(spark, inbox, store, num_parts=1,
-                  schema_ddl="doc_id string, tokens array<int>, "
-                             "n_tok int, source string")
-
-
-def test_stream_decode_projection_and_zone_prune(spark, tmp_path):
-    from tbl_spark.store import zone_prune_parts
-    from tbl_spark.streaming import batch_stores, decode_stream_store
-    inbox = str(tmp_path / "sw_inbox")
-    store = str(tmp_path / "sw_store")
-    ddl = "doc_id string, tokens array<int>, n_tok int, source string"
-    # three micro-batches with disjoint n_tok ranges
-    _stream_wave(spark, inbox, store, 10, 6, 0)
-    _stream_wave(spark, inbox, store, 500, 6, 1)
-    _stream_wave(spark, inbox, store, 9000, 6, 2)
-    stores = batch_stores(store)
-    assert len(stores) == 3
-    # predicate prunes whole BATCHES via each store's zone maps: the two
-    # out-of-range batches keep zero parts -> their files are never read
-    pred = "n_tok>=9000"
-    kept = [zone_prune_parts(s, pred, spark=spark) for s in stores]
-    assert kept[0] == set() and kept[1] == set() and kept[2]
-    out = decode_stream_store(spark, store, ddl, predicate=pred)
-    rows = out.collect()
-    assert {r["doc_id"] for r in rows} == {f"d2_{i}" for i in range(6)}
-    # projection narrows the unioned schema (unrequested blobs unread)
-    proj = decode_stream_store(spark, store, ddl,
-                               columns=["doc_id", "n_tok"])
-    assert proj.columns == ["doc_id", "n_tok"]
-    assert proj.count() == 18
-
-
-def test_cli_stream_decode_where(spark, tmp_path, capsys):
-    from tbl_spark.cli import main
-    inbox = str(tmp_path / "sc_inbox")
-    store = str(tmp_path / "sc_store")
-    _stream_wave(spark, inbox, store, 10, 4, 0)
-    _stream_wave(spark, inbox, store, 800, 4, 1)
-    out = str(tmp_path / "sc_out")
-    rc = main(["decode", "--stream-root", store,
-               "--schema", "doc_id string, tokens array<int>, "
-                           "n_tok int, source string",
-               "--columns", "doc_id,n_tok", "--where", "n_tok>=800",
-               "--output", out])
-    assert rc == 0
-    res = spark.read.parquet(out)
-    assert res.columns == ["doc_id", "n_tok"]
-    assert res.count() == 4
-    assert res.agg(F.min("n_tok")).collect()[0][0] >= 800
 
 
 # -- 8. str_template codec + clustered encode + design-size gate -------------

@@ -1,76 +1,5 @@
-"""Streaming-ingestion tests: files arrive in waves; every wave is encoded
-into batch-scoped chunk stores; the union decode is complete and exact."""
-
-import pyspark.sql.functions as F
-
-from tbl_spark.datagen import SPARK_SCHEMA_DDL, generate_df, write_token_table
-from tbl_spark.streaming import (decode_stream_store, stream_encode,
-                                 stream_store_stats)
-
-
-def test_stream_encode_two_waves(spark, tmp_path):
-    inbox = str(tmp_path / "inbox")
-    store = str(tmp_path / "store")
-
-    # wave 1: first half of the table arrives
-    write_token_table(inbox, 1200, n_parts=4)  # parts 0..3 = docs 0..1199
-    stream_encode(spark, inbox, store, num_parts=4,
-                  schema_ddl=SPARK_SCHEMA_DDL)
-    decoded = decode_stream_store(spark, store, SPARK_SCHEMA_DDL)
-    assert decoded.count() == 1200
-
-    # wave 2: more files land in the same inbox; restart picks up ONLY them
-    import os
-    from tbl_spark.datagen import generate_part
-    import pyarrow.parquet as pq
-    for part in (4, 5):
-        tbl = generate_part(part, 300, rows_per_part=300)
-        pq.write_table(tbl, os.path.join(inbox, f"late-{part}.parquet"),
-                       compression="zstd")
-    stream_encode(spark, inbox, store, num_parts=4,
-                  schema_ddl=SPARK_SCHEMA_DDL)
-
-    decoded = decode_stream_store(spark, store, SPARK_SCHEMA_DDL)
-    assert decoded.count() == 1800
-    # exactness: every decoded row bit-equals its source row
-    src = spark.read.parquet(inbox)
-    n = src.alias("a").join(decoded.alias("b"), "doc_id").filter(
-        F.col("a.tokens") == F.col("b.tokens")).count()
-    assert n == 1800
-
-    stats = stream_store_stats(store)
-    assert stats["rows"] == 1800 and stats["batches"] >= 2
-    assert stats["enc_bytes"] < stats["raw_bytes"]
-
-
-def test_stream_encode_colocated_zero_shuffle(spark, tmp_path):
-    """Streaming ingestion over the zero-shuffle path: same completeness
-    and bit-exactness contract, no Exchange in any micro-batch job."""
-    inbox = str(tmp_path / "inbox")
-    store = str(tmp_path / "store")
-    write_token_table(inbox, 1000, n_parts=4)
-    stream_encode(spark, inbox, store, num_parts=4,
-                  schema_ddl=SPARK_SCHEMA_DDL, colocated=True)
-    decoded = decode_stream_store(spark, store, SPARK_SCHEMA_DDL)
-    src = spark.read.parquet(inbox)
-    n = src.alias("a").join(decoded.alias("b"), "doc_id").filter(
-        F.col("a.tokens") == F.col("b.tokens")).count()
-    assert n == 1000
-    # replay idempotence: wipe the streaming checkpoint so the SAME
-    # micro-batch replays into the same batch dir — nothing re-commits
-    # (a batch-API read would be rejected by the input-files pin, which
-    # is the store's fail-fast doing its job)
-    import glob
-    import shutil as _sh
-    from tbl_spark.store import ChunkStore
-    _sh.rmtree(f"{store}/_checkpoint")
-    stream_encode(spark, inbox, store, num_parts=4,
-                  schema_ddl=SPARK_SCHEMA_DDL, colocated=True)
-    batch_dir = sorted(glob.glob(f"{store}/batch=*"))[0]
-    replayed = ChunkStore(batch_dir).snapshots()[-1]
-    assert replayed["encoded_parts"] == 0
-    assert decode_stream_store(spark, store, SPARK_SCHEMA_DDL).count() \
-        == 1000
+"""Structured Streaming query tests: the watermarked window stats and
+the cross-batch exact dedup with its state timeout."""
 
 
 def test_windowed_token_stats_watermark(spark, tmp_path):
@@ -239,26 +168,3 @@ def test_stream_dedup_timeout_expires_and_readmits(spark, tmp_path):
                         if r["text"] == "alpha"]) == 2
     finally:
         q.stop()
-
-
-def test_restart_skips_empty_pinned_plan(spark, tmp_path):
-    """A batch store written for an empty micro-batch pins `{}`; a
-    restarted stream must look past it for a real pin (or audition)
-    instead of encoding every later batch with no plan."""
-    import os
-    from tbl_spark.codecs.core import plan_to_json
-    from tbl_spark.encode import audition_codec_hints
-    from tbl_spark.store import ChunkStore, encode_to_store
-    inbox = str(tmp_path / "inbox")
-    root = str(tmp_path / "stream")
-    write_token_table(inbox, 800, n_parts=2)
-    empty = ChunkStore(os.path.join(root, "batch=5"))
-    encode_to_store(spark.createDataFrame([], SPARK_SCHEMA_DDL), empty, 4,
-                    codec_hints={})
-    assert empty.read_meta()["plan"] == {}
-    stream_encode(spark, inbox, root, num_parts=4,
-                  schema_ddl=SPARK_SCHEMA_DDL)
-    pinned = ChunkStore(os.path.join(root, "batch=0")).read_meta()["plan"]
-    assert pinned
-    assert pinned == plan_to_json(
-        audition_codec_hints(spark.read.parquet(inbox)))
