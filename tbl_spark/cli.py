@@ -327,7 +327,7 @@ def build_parser() -> argparse.ArgumentParser:
     md.add_argument("--every-n", type=int, default=5,
                     help="frame-sample: keep every Nth frame")
     md.add_argument("--real-decode", action="store_true",
-                    help="decode payloads for real (PPM/PNG/BMP images; "
+                    help="decode payloads for real (PPM/BMP images; "
                          "audio and video have no real decoder) instead "
                          "of the deterministic fake decoders")
     _add_pipe_output(md)

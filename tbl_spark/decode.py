@@ -24,17 +24,14 @@ from .arrowtypes import arrow_type_of_ddl, from_codec_output
 from .codecs import decode_array
 
 
-def _resolve_shared_tables(chunk_df: DataFrame,
-                           shared_tables: dict | None) -> dict[int, bytes]:
-    """Shared rANS tables for a decode, in priority order: the explicit
-    param (store metadata path), the `tbl_shared_tables` attribute the
-    encode functions attach to their result DataFrame (the in-flight
-    roundtrip path — free), else a collect of the sentinel chunk rows
-    (cross-session readers of persisted chunk parquet; a tiny pushed-
-    filter scan there, but on an UN-materialized in-flight chunk DF it
-    recomputes the encode — pass the tables explicitly in that case)."""
-    if shared_tables is not None:
-        return dict(shared_tables)
+def _resolve_shared_tables(chunk_df: DataFrame) -> dict[int, bytes]:
+    """Shared rANS tables for a chunk-frame decode: the
+    `tbl_shared_tables` attribute the encode functions attach to their
+    result DataFrame (the in-flight roundtrip path — free), else a
+    collect of the sentinel chunk rows (cross-session readers of
+    persisted chunk parquet; a tiny pushed-filter scan there, but on an
+    UN-materialized in-flight chunk DF without the attribute it
+    recomputes the encode — cache the frame first)."""
     attr = getattr(chunk_df, "tbl_shared_tables", None)
     if attr is not None:
         return dict(attr)
@@ -151,9 +148,7 @@ def decode_row_groups(unit_df: DataFrame, schema,
     return unit_df.mapInArrow(run, schema)
 
 
-def decode_chunks_colocated(chunk_df: DataFrame, output_ddl: str,
-                            shared_tables: dict[int, bytes] | None = None
-                            ) -> DataFrame:
+def decode_chunks_colocated(chunk_df: DataFrame, output_ddl: str) -> DataFrame:
     """Zero-shuffle decode of a chunk DataFrame whose parts are each
     contiguous within one partition: an in-flight `encode_chunks` frame
     (applyInArrow emits a part's chunk rows together), a filter of one,
@@ -167,7 +162,7 @@ def decode_chunks_colocated(chunk_df: DataFrame, output_ddl: str,
     contiguous. An in-flight frame is left as it is, since coalescing it
     would also narrow the encode stage that computes it."""
     from pyspark.sql.types import StructType
-    tables = _resolve_shared_tables(chunk_df, shared_tables)
+    tables = _resolve_shared_tables(chunk_df)
     if chunk_df.is_cached:
         # r8 auto-coalesce: a CACHED chunk frame often carries the
         # encode's full shuffle-partition count (hundreds of partitions

@@ -3,11 +3,10 @@ with typed metadata.
 
 The Spark-side plumbing (schema, partitioning, Arrow batch shape, UDF
 signatures) is real and tested. Image decode is REAL for PPM P6 and
-every legal PNG IHDR shape (depths 1-16, all color types, Adam7) and
 BMP (pure numpy + stdlib — no imaging library needed); other formats
-(JPEG, GIF, TIFF, …) fall back to PIL and raise NotImplementedError
-when it is absent. Real audio and video decode raise the stub error for every
-payload.
+(PNG, JPEG, GIF, TIFF, …) fall back to PIL and raise
+NotImplementedError when it is absent. Real audio and video decode
+raise the stub error for every payload.
 `fake_decode=True` swaps in deterministic fake decoders so the batch
 plumbing can be exercised independently of any format.
 """
@@ -95,230 +94,6 @@ def _decode_ppm(payload: bytes) -> np.ndarray | None:
                          count=need, offset=pos).reshape(h, w, 3)
 
 
-_PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
-# PNG color types (RFC 2083 §4.1.1) → samples per pixel, legal depths
-_PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
-_PNG_DEPTHS = {0: (1, 2, 4, 8, 16), 2: (8, 16), 3: (1, 2, 4, 8),
-               4: (8, 16), 6: (8, 16)}
-# Adam7 interlace pass grid (RFC 2083 §2.6): (x0, y0, dx, dy)
-_ADAM7 = ((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-          (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
-
-
-def _png_unfilter(raw: bytes, h: int, stride: int, bpp: int) -> np.ndarray:
-    """Reverse the per-scanline PNG filters (RFC 2083 §6): each of the h
-    scanlines is 1 filter-type byte + `stride` filtered bytes. Returns
-    (h, stride) reconstructed bytes.
-
-    Vectorization: when no line uses Average/Paeth the image decodes
-    row-at-a-time with whole-line numpy ops (Sub is a per-lane cumsum
-    mod 256 — the recurrence x[i] += x[i-bpp] decomposes into bpp
-    independent prefix sums). Average/Paeth mix the previous ROW and the
-    previous PIXEL, so a single row is a genuine sequential recurrence —
-    but every filter's dependencies (left, up, up-left) sit one pixel
-    back and/or one row up, which makes the image's anti-diagonals
-    independent: `_png_unfilter_wavefront` advances ALL rows one pixel
-    per numpy step (VERDICT r6 #2 — this replaced the repo's one
-    per-byte Python loop; ~19x on an all-Paeth 1024x1024 RGB)."""
-    arr = np.frombuffer(raw, dtype=np.uint8,
-                        count=h * (1 + stride)).reshape(h, 1 + stride)
-    filters, data = arr[:, 0], arr[:, 1:]
-    if filters.max(initial=0) > 4:
-        y = int(np.argmax(filters > 4))
-        raise ValueError(f"bad PNG filter type {filters[y]} on line {y}")
-    if np.isin(filters, (3, 4)).any():
-        return _png_unfilter_wavefront(filters, data, h, stride, bpp)
-    out = np.empty((h, stride), dtype=np.uint8)
-    zeros = np.zeros(stride, dtype=np.uint16)
-    for y in range(h):
-        f = int(filters[y])
-        line = data[y].astype(np.uint16)
-        prev = out[y - 1].astype(np.uint16) if y else zeros
-        if f == 0:                               # None
-            out[y] = line
-        elif f == 1:                             # Sub
-            lanes = line.reshape(-1, bpp)
-            out[y] = np.cumsum(lanes, axis=0, dtype=np.uint64) \
-                       .astype(np.uint8).reshape(-1)
-        else:                                    # Up
-            out[y] = (line + prev).astype(np.uint8)
-    return out
-
-
-def _png_unfilter_wavefront(filters: np.ndarray, data: np.ndarray,
-                            h: int, stride: int, bpp: int) -> np.ndarray:
-    """All-filter unfilter as an anti-diagonal wavefront, no per-byte
-    Python: every PNG predictor reads only left (x-1), up (y-1) and
-    up-left (x-1, y-1), so after skewing row y right by y pixels the
-    three dependencies of any cell live in the previous two BLOCK
-    COLUMNS of the skewed buffer. Sweeping block columns left to right
-    then computes one pixel of EVERY row per numpy step — h*w cells in
-    h+w-1 vector steps — with per-step branch specialization when the
-    rows in flight share one filter type (real encoders pick filters in
-    runs, so most steps specialize).
-
-    Scratch: two int16 buffers of (h+1) x (w+h+1)*bpp — ~12 MB for a
-    1 MP RGB image, linear in pixels for the aspect ratios cameras
-    produce. Paeth per vector step uses the d1/d2 decomposition:
-    p-a = U-UL, p-b = L-UL, p-c = (U-UL)+(L-UL)."""
-    nblk = stride // bpp                  # pixels per row
-    pad = 2                               # two zero blocks: left margins
-    width = (pad + nblk + h - 1) * bpp
-    sk = np.zeros((h + 1, width), dtype=np.int16)   # row 0 stays zero
-    dsk = np.zeros((h + 1, width), dtype=np.int16)
-    for y in range(h):                    # skew filtered bytes (cheap:
-        c0 = (pad + y) * bpp              # h slice-copies)
-        dsk[y + 1, c0:c0 + stride] = data[y]
-    f = filters.astype(np.int16)
-    for k in range(pad, pad + nblk + h - 1):
-        ylo = max(0, k - pad - nblk + 1)  # image rows whose pixel range
-        yhi = min(h - 1, k - pad)         # covers block column k
-        r0, r1 = ylo + 1, yhi + 2         # rows in the skewed buffers
-        c0 = k * bpp
-        blk = dsk[r0:r1, c0:c0 + bpp]
-        L = sk[r0:r1, c0 - bpp:c0]
-        U = sk[r0 - 1:r1 - 1, c0 - bpp:c0]
-        fs = f[ylo:yhi + 1]
-        fk = int(fs[0]) if int(fs.min()) == int(fs.max()) else -1
-        if fk == 4 or fk == -1:
-            UL = sk[r0 - 1:r1 - 1, c0 - 2 * bpp:c0 - bpp]
-            d1 = U - UL
-            d2 = L - UL
-            pa, pb = np.abs(d1), np.abs(d2)
-            pc = np.abs(d1 + d2)
-            paeth = np.where((pa <= pb) & (pa <= pc), L,
-                             np.where(pb <= pc, U, UL))
-        if fk == 4:
-            pred = paeth
-        elif fk == 3:
-            pred = (L + U) >> 1
-        elif fk == 2:
-            pred = U
-        elif fk == 1:
-            pred = L
-        elif fk == 0:
-            pred = 0
-        else:                             # mixed filters in this step
-            fcol = fs[:, None]
-            pred = np.where(fcol == 4, paeth,
-                            np.where(fcol == 3, (L + U) >> 1,
-                                     np.where(fcol == 2, U,
-                                              np.where(fcol == 1, L, 0))))
-        sk[r0:r1, c0:c0 + bpp] = (blk + pred) & 0xFF
-    out = np.empty((h, stride), dtype=np.uint8)
-    for y in range(h):                    # unskew
-        c0 = (pad + y) * bpp
-        out[y] = sk[y + 1, c0:c0 + stride]
-    return out
-
-
-def _png_samples(rows: np.ndarray, w_p: int, ch: int,
-                 depth: int) -> np.ndarray:
-    """(h_p, stride) unfiltered scanline bytes → (h_p, w_p, ch) uint8
-    samples. 16-bit samples scale to 8 with exact round-to-nearest
-    (v/257); sub-byte depths (gray/palette) unpack to their raw 0..2^d-1
-    values — the gray range expansion happens at channel-mapping time."""
-    h_p = rows.shape[0]
-    if depth == 8:
-        return rows.reshape(h_p, w_p, ch)
-    if depth == 16:
-        pair = rows.reshape(h_p, w_p, ch, 2).astype(np.uint32)
-        v = (pair[..., 0] << 8) | pair[..., 1]       # big-endian
-        return ((v * 255 + 32767) // 65535).astype(np.uint8)
-    bits = np.unpackbits(rows, axis=1)[:, :w_p * depth]
-    weights = (1 << np.arange(depth - 1, -1, -1)).astype(np.uint8)
-    return (bits.reshape(h_p, w_p, depth) @ weights).reshape(
-        h_p, w_p, 1).astype(np.uint8)
-
-
-def _decode_png(payload: bytes) -> np.ndarray | None:
-    """Pure-Python/numpy PNG decode (RFC 2083, public format): chunk
-    walk → zlib-inflate the IDAT stream → per-scanline unfilter →
-    channel mapping. Covers every legal IHDR shape — grayscale (0),
-    RGB (2), palette (3), gray+alpha (4), RGBA (6) at depths
-    1/2/4/8/16 where the spec allows them, interlace 0 and Adam7 (each
-    of the 7 passes unfilters as its own sub-image, then scatters into
-    the frame via strided assignment). Alpha is dropped (the pipeline's
-    feature contract is (H, W, 3) RGB). Returns None when the payload
-    is not PNG at all (so other formats fall through to their own
-    decoders); corrupt structure raises ValueError."""
-    if not payload.startswith(_PNG_MAGIC):
-        return None
-    import struct
-    import zlib
-    pos, idat, meta, palette = len(_PNG_MAGIC), [], None, None
-    try:
-        while pos + 8 <= len(payload):
-            (length,) = struct.unpack(">I", payload[pos:pos + 4])
-            tag = payload[pos + 4:pos + 8]
-            data = payload[pos + 8:pos + 8 + length]
-            if tag == b"IHDR":
-                meta = struct.unpack(">IIBBBBB", data)
-            elif tag == b"PLTE":
-                palette = np.frombuffer(data, np.uint8).reshape(-1, 3)
-            elif tag == b"IDAT":
-                idat.append(data)
-            elif tag == b"IEND":
-                break
-            pos += 12 + length  # len + tag + data + crc
-    except (struct.error, ValueError) as e:  # truncated / garbled chunks
-        raise ValueError(f"corrupt PNG chunk stream: {e}") from e
-    if meta is None or not idat:
-        raise ValueError("corrupt PNG: missing IHDR or IDAT")
-    w, h, depth, ctype, comp, filt, interlace = meta
-    if comp != 0 or filt != 0 or ctype not in _PNG_CHANNELS \
-            or interlace not in (0, 1):
-        raise ValueError(f"corrupt PNG header (comp={comp} filt={filt} "
-                         f"color={ctype} interlace={interlace})")
-    if depth not in _PNG_DEPTHS[ctype]:
-        raise ValueError(f"corrupt PNG header: bit depth {depth} is not "
-                         f"legal for color type {ctype}")
-    ch = _PNG_CHANNELS[ctype]
-    try:
-        raw = zlib.decompress(b"".join(idat))
-    except zlib.error as e:    # intact framing, garbled deflate stream
-        raise ValueError(f"corrupt PNG IDAT stream: {e}") from e
-    bpp = max(1, (ch * depth) // 8)
-
-    def _consume(pos: int, w_p: int, h_p: int) -> tuple[np.ndarray, int]:
-        stride = (w_p * ch * depth + 7) // 8
-        need = h_p * (1 + stride)
-        if len(raw) - pos < need:
-            raise ValueError("corrupt PNG: IDAT shorter than the "
-                             "scanline layout requires")
-        rows = _png_unfilter(raw[pos:pos + need], h_p, stride, bpp)
-        return _png_samples(rows, w_p, ch, depth), pos + need
-
-    if interlace == 0:
-        px, _ = _consume(0, w, h)
-    else:
-        px = np.zeros((h, w, ch), dtype=np.uint8)
-        pos = 0
-        for x0, y0, dx, dy in _ADAM7:
-            w_p = (w - x0 + dx - 1) // dx
-            h_p = (h - y0 + dy - 1) // dy
-            if w_p <= 0 or h_p <= 0:
-                continue          # pass absent for this geometry
-            sub, pos = _consume(pos, w_p, h_p)
-            px[y0::dy, x0::dx] = sub
-    if ctype == 0 and depth < 8:
-        px = px * np.uint8(255 // ((1 << depth) - 1))   # range expand
-    if ctype == 3:
-        if palette is None:
-            raise ValueError("corrupt PNG: palette image without PLTE")
-        idx = px[:, :, 0]
-        # a truncated PLTE with indices past its end must surface as the
-        # documented corrupt-input ValueError, not a numpy IndexError
-        if idx.size and int(idx.max()) >= len(palette):
-            raise ValueError("corrupt PNG: palette index out of range")
-        return palette[idx]
-    if ctype in (4, 6):          # drop alpha
-        px = px[:, :, :-1]
-    if px.shape[2] == 1:         # grayscale → replicate to RGB
-        px = np.repeat(px, 3, axis=2)
-    return np.ascontiguousarray(px)
-
-
 def _fake_decode_audio(payload: bytes) -> tuple[np.ndarray, int]:
     """Deterministic fake waveform seeded from the payload digest —
     keeps the audio batch plumbing testable without an audio library."""
@@ -378,17 +153,15 @@ def _resize_nearest(px: np.ndarray, width: int, height: int) -> np.ndarray:
 
 def decode_image(payload: bytes, width: int, height: int,
                  fake_decode: bool = False) -> np.ndarray:
-    """(H, W, 3) uint8 pixels. Real path: uncompressed PPM P6, any
-    legal PNG (depths 1-16, all color types, Adam7 interlace) and BMP,
-    with pure numpy/stdlib (no PIL); anything else decodes with PIL, and without
-    PIL in the environment the stub error is explicit (the deterministic
-    fake keeps the Spark-side plumbing testable either way). The image
-    is resized to the metadata dimensions when they differ."""
+    """(H, W, 3) uint8 pixels. Real path: uncompressed PPM P6 and BMP,
+    with pure numpy/stdlib (no PIL); anything else decodes with PIL, and
+    without PIL in the environment the stub error is explicit (the
+    deterministic fake keeps the Spark-side plumbing testable either
+    way). The image is resized to the metadata dimensions when they
+    differ."""
     if fake_decode:
         return _fake_decode(payload, width, height)
     px = _decode_ppm(payload)
-    if px is None:
-        px = _decode_png(payload)
     if px is None:
         px = _decode_bmp(payload)
     if px is not None:
@@ -400,9 +173,9 @@ def decode_image(payload: bytes, width: int, height: int,
         return px if px.flags.writeable else px.copy()
     if not HAVE_PIL:
         raise NotImplementedError(
-            "real decode of non-PPM/PNG/BMP images requires PIL, which "
+            "real decode of non-PPM/BMP images requires PIL, which "
             "is not installed; pass fake_decode=True for the deterministic "
-            "fake decoder (PPM, PNG and BMP payloads decode without PIL)")
+            "fake decoder (PPM and BMP payloads decode without PIL)")
     from io import BytesIO
     img = Image.open(BytesIO(payload)).convert("RGB")
     if width and height and img.size != (width, height):

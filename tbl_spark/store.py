@@ -35,9 +35,10 @@ parquet_drop.rs:14-28):
     4. os.replace           → manifest/part-N.json         (atomic commit)
 
 The manifest file is the commit marker: a crash between 2 and 4 leaves an
-orphan chunk file that the retry simply overwrites. Resume = left-anti join
-of the work list against committed part ids, so interrupted runs never
-re-encode committed partitions (north rule resumability).
+orphan chunk file that the retry simply overwrites. Resume filters the
+computed part id against the committed part ids with a literal `isin`, so
+interrupted runs never re-encode committed partitions (north rule
+resumability).
 
 On a real cluster this store sits on a shared filesystem where rename is
 atomic (HDFS/NFS); on S3-style object stores the same protocol maps onto
@@ -478,13 +479,15 @@ class ChunkStore:
         """(wave_seq, part_ids) groups for committed, not-yet-waved chunk
         files — the driver-side planning half of compaction (tiny: one
         dir listing, no data reads). Partial tail groups are left
-        uncompacted."""
+        uncompacted. New waves are numbered after the highest committed
+        one, so a run whose waves committed out of order never reuses a
+        committed wave's number."""
         waves, parts = self._manifest_paths()
         covered = {p for path in waves.values()
                    for p in _load_json(path)["parts"]}
         loose = sorted(parts.keys() - covered)
-        n_waves = len(waves)
-        return [(n_waves + j, loose[i:i + wave_size])
+        first = max(waves, default=-1) + 1
+        return [(first + j, loose[i:i + wave_size])
                 for j, i in enumerate(
                     range(0, len(loose) - wave_size + 1, wave_size))]
 
@@ -884,11 +887,17 @@ def _write_wave(store_root: str, seq: int, parts: list[int]) -> dict:
     manifest already exists (task retry, resumed run) the build is
     skipped and only the cleanup re-runs; a crash before the manifest
     rename leaves staging garbage and intact part files, so a re-plan
-    simply rebuilds the wave."""
+    simply rebuilds the wave. A committed wave that lists other parts
+    raises ValueError before anything is deleted."""
     store = ChunkStore(store_root)
     name = f"wave-{seq:06d}"
     manifest_path = os.path.join(store.manifest_dir, f"{name}.json")
-    if not os.path.exists(manifest_path):
+    if os.path.exists(manifest_path):
+        committed = _load_json(manifest_path)["parts"]
+        if committed != [int(p) for p in parts]:
+            raise ValueError(f"{name} is committed over parts {committed}, "
+                             f"not {list(parts)}")
+    else:
         manifests = [_load_json(os.path.join(store.manifest_dir,
                                              f"part-{p:05d}.json"))
                      for p in parts]

@@ -180,6 +180,13 @@ _JPEG_8X8 = (b"\xff\xd8"
              + b"\xff\xc4\x00\x14\x10\x01" + bytes(16)     # DHT AC
              + b"\xff\xda\x00\x08\x01\x01\x00\x00\x3f\x00"  # SOS
              + b"\x3f\xff\xd9")
+# a 1x1 8-bit grayscale PNG (IHDR, one zlib IDAT scanline, IEND): only
+# PIL decodes PNG
+_PNG_1X1 = (b"\x89PNG\r\n\x1a\n"
+            b"\x00\x00\x00\rIHDR\x00\x00\x00\x01\x00\x00\x00\x01"
+            b"\x08\x00\x00\x00\x00:~\x9bU"
+            b"\x00\x00\x00\nIDATx\x9cch\x00\x00\x00\x82\x00\x81w\xcdr\xb6"
+            b"\x00\x00\x00\x00IEND\xaeB`\x82")
 _WAV_2 = (b"RIFF\x28\x00\x00\x00WAVEfmt \x10\x00\x00\x00\x01\x00\x01\x00"
           b"\x40\x1f\x00\x00\x80\x3e\x00\x00\x02\x00\x10\x00"
           b"data\x04\x00\x00\x00\x00\x00\xff\x7f")
@@ -189,7 +196,7 @@ def test_gif_and_real_video_decode_raise_the_stub_error(spark, monkeypatch):
     # executors import multimodal afresh, without this monkeypatch
     pil_on_executors = multimodal.HAVE_PIL
     monkeypatch.setattr(multimodal, "HAVE_PIL", False)
-    for img in (_GIF_1X1, _JPEG_8X8):
+    for img in (_GIF_1X1, _JPEG_8X8, _PNG_1X1):
         with pytest.raises(NotImplementedError, match="PIL"):
             multimodal.decode_image(img, 1, 1, fake_decode=False)
     with pytest.raises(NotImplementedError, match="video library"):
@@ -207,7 +214,7 @@ def test_gif_and_real_video_decode_raise_the_stub_error(spark, monkeypatch):
         feats.collect()
     cases = [("audio", _WAV_2, "audio library")]
     if not pil_on_executors:
-        cases.append(("image", _JPEG_8X8, "PIL"))
+        cases += [("image", _JPEG_8X8, "PIL"), ("image", _PNG_1X1, "PIL")]
     for kind, payload, match in cases:
         media = spark.createDataFrame([(1, kind, 1, 1, 1, bytearray(payload))],
                                       multimodal.MEDIA_SCHEMA_DDL)

@@ -149,6 +149,25 @@ def test_distributed_compact_resumes_after_interruption(spark, tmp_path):
     n = (decoded.alias("b").join(df.alias("a"), "doc_id")
          .filter(F.col("a.tokens") == F.col("b.tokens")).count())
     assert n == 3000
+    # out of order: wave 1 committed, wave 0's task died before its
+    # manifest rename. The rerun must number the loose parts' wave 2;
+    # reusing wave 1's number would delete those parts as "covered".
+    store, df = _make_store(spark, tmp_path / "out_of_order",
+                            n_docs=1000, n_parts=8)
+    plans = store.plan_waves(wave_size=4)
+    assert plans == [(0, [0, 1, 2, 3]), (1, [4, 5, 6, 7])]
+    _write_wave(store.root, *plans[1])
+    with pytest.raises(ValueError, match="wave-000001"):
+        _write_wave(store.root, 1, [0, 1, 2, 3])
+    assert store.committed_parts() == set(range(8))  # nothing deleted
+    assert store.plan_waves(wave_size=4) == [(2, [0, 1, 2, 3])]
+    assert store.compact(wave_size=4, spark=spark) == 1
+    assert store.committed_parts() == set(range(8))
+    assert not os.listdir(store.chunks_dir)
+    decoded = decode_from_store(store, spark, SPARK_SCHEMA_DDL)
+    n = (decoded.alias("b").join(df.alias("a"), "doc_id")
+         .filter(F.col("a.tokens") == F.col("b.tokens")).count())
+    assert n == 1000
 
 
 def test_write_wave_idempotent_on_retry(spark, tmp_path):

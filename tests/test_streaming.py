@@ -106,11 +106,13 @@ def test_stream_dedup_timeout_expires_and_readmits(spark, tmp_path):
     NOTE: with ProcessingTimeTimeout Spark keeps running no-data
     state-cleanup batches, so processAllAvailable never goes idle —
     the test polls the memory sink under a fixed trigger instead."""
+    import datetime as dt
     import os
     import time
 
     from tbl_spark.streaming import stream_dedup_exact
 
+    timeout_s = 5
     inbox = str(tmp_path / "to_inbox")
     os.makedirs(inbox)
     ddl = "doc_id string, text string"
@@ -119,46 +121,69 @@ def test_stream_dedup_timeout_expires_and_readmits(spark, tmp_path):
         spark.createDataFrame(rows, ddl).coalesce(1) \
             .write.mode("overwrite").parquet(f"{inbox}/{name}")
 
-    def wait_count(n, timeout_s=90):
-        for _ in range(timeout_s * 2):
-            if spark.sql("SELECT count(*) FROM to_stream") \
-                    .collect()[0][0] >= n:
+    def wait_until(done, what, limit_s=90):
+        for _ in range(limit_s * 2):
+            if done():
                 return
             time.sleep(0.5)
-        raise AssertionError(f"sink never reached {n} rows")
+        raise AssertionError(f"{what} never happened")
 
-    write_wave("w1", [("a", "alpha")])
+    def wait_count(n):
+        wait_until(lambda: spark.sql("SELECT count(*) FROM to_stream")
+                   .collect()[0][0] >= n, f"sink reaching {n} rows")
+
+    def started(progress):
+        """Wall-clock start of a progress record's trigger."""
+        return dt.datetime.fromisoformat(progress["timestamp"]).timestamp()
+
+    # a warm-up row starts the query, so worker start-up in the first
+    # batch does not use up the alpha state's window
+    write_wave("w0", [("w", "warm-up")])
     stream = (spark.readStream.schema(ddl)
               .option("pathGlobFilter", "*.parquet")
               .option("recursiveFileLookup", "true").parquet(inbox))
-    out = stream_dedup_exact(stream, timeout_minutes=20 / 60)  # 20 s
-    q = (out.writeStream.format("memory").queryName("to_stream")
-         .outputMode("append")
-         .trigger(processingTime="500 milliseconds")
-         .option("checkpointLocation", str(tmp_path / "ckpt_t")).start())
+    out = stream_dedup_exact(stream, timeout_minutes=timeout_s / 60)
+    # one state partition: a batch of the session's 16 runs ~2 s, and
+    # no-data batches run back to back, so new data waits about that
+    # long before its own batch; the query keeps the value it starts with
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        q = (out.writeStream.format("memory").queryName("to_stream")
+             .outputMode("append")
+             .trigger(processingTime="500 milliseconds")
+             .option("checkpointLocation", str(tmp_path / "ckpt_t"))
+             .start())
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
     try:
         wait_count(1)
-        t1 = time.monotonic()
+        t0 = time.monotonic()
+        write_wave("w1", [("a", "alpha")])
+        wait_count(2)
         # in-window duplicate suppressed; the marker row proves the
         # batch was processed
         write_wave("w2", [("b", "alpha"), ("m1", "marker one")])
-        wait_count(2)
-        in_window = time.monotonic() - t1 < 15   # 20 s timeout - slack
+        wait_count(3)
+        w2_seen = time.time()
+        # alpha's state clock started after t0, and every batch up to
+        # w2's started before now, so within timeout_s of t0 none of them
+        # can have expired it. On a heavily loaded host w2's batch can
+        # land after the expiry, and re-admission is then the CORRECT
+        # behavior, so suppression is asserted only inside the window.
+        in_window = time.monotonic() - t0 < timeout_s
         ids = {r["doc_id"] for r in
                spark.sql("SELECT * FROM to_stream").collect()}
         assert "m1" in ids
-        # only assert suppression when the duplicate provably arrived
-        # inside the state window — on a heavily loaded host the w2
-        # batch can land after the 20 s expiry, and re-admission is
-        # then the CORRECT behavior, not a bug (the r7 full-suite
-        # flake)
         if in_window:
             assert "b" not in ids
-        # let the alpha state expire (cleanup batches keep running
-        # under the fixed trigger), then re-admit
-        time.sleep(25)
+        # w2's batch reset alpha's timeout and started before w2_seen, so
+        # the first batch to start timeout_s after w2_seen expires it
+        wait_until(lambda: q.lastProgress is not None
+                   and started(q.lastProgress) > w2_seen + timeout_s,
+                   "a batch after the alpha state's expiry")
         write_wave("w3", [("e", "alpha"), ("m2", "marker two")])
-        wait_count(4)
+        wait_count(5)
         rows = spark.sql("SELECT * FROM to_stream").collect()
         ids = {r["doc_id"] for r in rows}
         assert "e" in ids and "m2" in ids
