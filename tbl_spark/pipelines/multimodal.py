@@ -201,6 +201,8 @@ def _decode_bmp(payload: bytes) -> np.ndarray | None:
         comp, colors, pal_off, pal_stride = 0, 0, 26, 3
         topdown = False
     elif hdr_size >= 40:
+        if len(payload) < 54:
+            raise ValueError("corrupt BMP: info header truncated")
         w, h, _planes, bpp, comp, _isz, _xp, _yp, colors, _imp = \
             struct.unpack("<iiHHIIiiII", payload[18:54])
         topdown = h < 0
@@ -219,6 +221,8 @@ def _decode_bmp(payload: bytes) -> np.ndarray | None:
             "the pure-numpy decoder; install PIL")
     if comp not in (0, 1, 2, 3):
         raise ValueError(f"corrupt BMP: compression {comp}")
+    if comp == 3 and len(payload) < 66:
+        raise ValueError("corrupt BMP: bitfield masks truncated")
 
     def _palette() -> np.ndarray:
         n = colors or (1 << bpp)
