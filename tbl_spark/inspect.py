@@ -135,11 +135,13 @@ def store_stats(store: ChunkStore) -> dict:
 
     Scale shape (VERDICT r3 #1): the rollup is a columnar aggregation
     over the store's per-wave stats parquets (pyarrow group_by); only
-    loose / pre-r4 parts flow in via JSON (bounded once compaction
-    runs). `encode_cpu_sec` sums the part manifests' `encode_ms`: one
-    json.load per wave and per loose part. `plan` lists the encode plan pinned
-    in store.json per column key — codec name, ``shared table <fp>`` or
+    loose parts flow in via JSON (bounded once compaction runs). A
+    store.json of another store format raises ValueError (read_meta)
+    before any of them is read. `encode_cpu_sec` sums the part
+    manifests' `encode_ms`: one json.load per wave and per loose part.
+    `plan` lists the encode plan pinned in store.json per column key — codec name, ``shared table <fp>`` or
     ``fsst <n> merges`` — i.e. the codecs new chunks will use."""
+    meta = store.read_meta() or {}
     t = store.stats_table()
     per_col: dict[str, dict] = {}
     for r in (t.group_by("column")
@@ -155,7 +157,7 @@ def store_stats(store: ChunkStore) -> dict:
                 .aggregate([("n_rows", "max"), ("n_values", "max")]))
     import pyarrow.compute as pc
     # encode timing lives in the part manifests, not in the stats rows
-    total_ms = sum(m.get("encode_ms") or 0.0 for m in store.manifest_rows())
+    total_ms = sum(m["encode_ms"] for m in store.manifest_rows())
     n_rows = int(pc.sum(per_part.column("n_rows_max"),
                         min_count=0).as_py() or 0)
     total_values = int(pc.sum(per_part.column("n_values_max"),
@@ -177,5 +179,5 @@ def store_stats(store: ChunkStore) -> dict:
         "encode_cpu_sec": total_ms / 1000.0,
         "tokens_per_cpu_sec": total_values / max(1e-9, total_ms / 1000.0),
         "columns": columns,
-        "plan": describe_plan((store.read_meta() or {}).get("plan", {})),
+        "plan": describe_plan(meta.get("plan", {})),
     }

@@ -1,8 +1,9 @@
 """Checkpointed chunk store: per-part atomic commit, resume, compaction.
 
 Layout (root/):
-    store.json, shared_tables.json  pinned contract, schema and encode
-                                plan; the plan's shared rANS tables
+    store.json, shared_tables.json  pinned store `format`, contract,
+                                schema and encode plan; the plan's
+                                shared rANS tables
     chunks/part-NNNNN.parquet   a loose part's chunk rows, one row group
     manifest/part-NNNNN.json    its commit marker: per-column codec, sizes,
                                 zone stats, encode timing, unit record
@@ -23,6 +24,11 @@ carries and `ChunkStore.decode_units` plans from alone:
 
 Data files hold no timing, so their bytes depend only on the input and
 the plan; timings live in the JSON records (manifest/, snapshots/).
+
+store.json's `format` is STORE_FORMAT, pinned by the first encode, like
+Iceberg's `format-version`. Every reader knows this one layout only: a
+store whose store.json has another format, or none, is refused by
+`ChunkStore.read_meta` and must be re-encoded.
 
 Write protocol per part, executed ON THE EXECUTOR inside the encode
 UDF (`encode_part`) — the Spark version of the reference's tmp+rename
@@ -50,7 +56,6 @@ from __future__ import annotations
 
 import contextlib
 import json
-import logging
 import os
 import time
 import uuid
@@ -66,7 +71,8 @@ from .encode import (audition_codec_hints, cluster_sort_keys,
 from .partitioning import PART_COL, with_part_id
 from .transforms import _FILTER_RE
 
-log = logging.getLogger("tbl_spark")
+# The layout this module writes and reads (see the module docstring).
+STORE_FORMAT = 1
 
 
 def _load_json(path: str):
@@ -147,11 +153,9 @@ STATS_PARQUET = {"compression": "zstd", "write_statistics": False,
                  "use_dictionary": False, "store_schema": False}
 
 
-def _widen_num(v, up: bool) -> float | None:
+def _widen_num(v: int | float, up: bool) -> float:
     """Nearest double NOT tighter than v (down for lo, up for hi) — keeps
     double-typed zone bounds sound for int values beyond 2^53."""
-    if v is None or isinstance(v, bool):
-        return None
     d = float(v)
     if d == v:
         return d
@@ -160,49 +164,28 @@ def _widen_num(v, up: bool) -> float | None:
         if (d < v) == up else d
 
 
-def _manifest_columns(manifest: dict) -> dict[str, dict]:
-    """A part manifest's per-column entries (held as a JSON string)."""
-    cols = manifest["columns"]
-    return json.loads(cols) if isinstance(cols, str) else cols
-
-
 def _manifest_stats_rows(manifest: dict) -> list[dict]:
-    """Flatten one part manifest into STATS_SCHEMA rows."""
+    """Flatten one part manifest (its `columns` held as a JSON string)
+    into STATS_SCHEMA rows. `_column_stats` records `nan` for every float
+    column, so a column without the flag is NaN-free."""
     rows = []
-    for name, c in _manifest_columns(manifest).items():
+    for name, c in json.loads(manifest["columns"]).items():
         st = c.get("stats") or {}
         kind = st.get("kind")
         lo, hi = st.get("min"), st.get("max")
-        if kind is None and isinstance(lo, (int, float)) \
-                and not isinstance(lo, bool):
-            kind = "num"                 # legacy manifest without kinds
         lo_num = hi_num = lo_str = hi_str = None
-        has_nan = st.get("nan")
         if kind in ("num", "ts") and lo is not None:
-            if kind == "ts":
-                lo, hi = _ts_micros(lo), _ts_micros(hi)
-                if lo is None or hi is None:
-                    # unparseable legacy bounds: no zone (keep), not an
-                    # all-null chunk (prune)
-                    kind = None
+            # ts bounds are int epoch micros
             lo_num, hi_num = _widen_num(lo, up=False), _widen_num(hi, up=True)
-            if has_nan is None and kind == "num" \
-                    and isinstance(lo, int) and isinstance(hi, int):
-                # integer bounds ⇒ integer/decimal column ⇒ NaN-free;
-                # float bounds without a flag (pre-r4 manifests) stay
-                # None = unknown, which the readers treat as "keep"
-                has_nan = False
         elif kind in ("str", "date") and lo is not None:
             lo_str, hi_str = str(lo), str(hi)
-        if kind == "ts":
-            has_nan = False
         rows.append({
             "part_id": manifest["part_id"], "column": name,
             "codec": c.get("codec"), "n_rows": manifest["n_rows"],
             "n_values": c.get("n_values"),
             "raw_bytes": c.get("raw_bytes"), "enc_bytes": c.get("enc_bytes"),
             "kind": kind, "nulls": st.get("nulls"),
-            "has_nan": has_nan,
+            "has_nan": st.get("nan", False),
             "lo_num": lo_num, "hi_num": hi_num,
             "lo_str": lo_str, "hi_str": hi_str,
         })
@@ -238,27 +221,6 @@ def write_data_file(root: str, file: str,
     return _publish(root, os.path.join(root, file), write)
 
 
-def _unit_records(manifest: dict) -> list[dict]:
-    """The unit records of a committed part or wave manifest. A manifest
-    written before manifests carried them gets records built from the
-    layout of that time: row group i of a wave file holds the wave's
-    i-th part (a pre-r2 wave names its file by absolute path, which the
-    join keeps), and a loose part file is one row group."""
-    if "units" in manifest:
-        return manifest["units"]
-    if "wave" in manifest:
-        file, parts = os.path.join("waves", manifest["file"]), \
-            manifest["manifests"]
-    else:
-        file = f"chunks/part-{manifest['part_id']:05d}.parquet"
-        parts = [manifest]
-    return [{"file": file, "row_group": row_group, "part_id": m["part_id"],
-             "rows": m["n_rows"],
-             "columns": {name: c.get("enc_bytes") or 0
-                         for name, c in _manifest_columns(m).items()}}
-            for row_group, m in enumerate(parts)]
-
-
 class ChunkStore:
     def __init__(self, root: str):
         self.root = root
@@ -284,8 +246,20 @@ class ChunkStore:
         return os.path.join(self.root, "store.json")
 
     def read_meta(self) -> dict | None:
-        return _load_json(self.meta_path) \
-            if os.path.exists(self.meta_path) else None
+        """store.json, or None while no encode has pinned one. Every entry
+        point reads it before any data file, so a store.json whose
+        `format` is not STORE_FORMAT raises ValueError here."""
+        if not os.path.exists(self.meta_path):
+            return None
+        meta = _load_json(self.meta_path)
+        if meta.get("format") != STORE_FORMAT:
+            found = f"format {meta['format']!r}" if "format" in meta \
+                else "no format"
+            raise ValueError(
+                f"store {self.root} has {found} in store.json; this "
+                f"version reads store format {STORE_FORMAT} only. "
+                f"Re-encode the store.")
+        return meta
 
     def write_meta(self, meta: dict) -> None:
         _write_json(self.root, self.meta_path, meta)
@@ -293,10 +267,8 @@ class ChunkStore:
     # -- shared rANS tables sidecar (r7) ------------------------------------
     # Kept OUT of store.json: the pinned plan there names each table by
     # content fingerprint, and the blobs live here once. A store's runs
-    # share its pinned plan, so tables accumulate only in stores written
-    # before plans were pinned: a run on such a store auditioned afresh,
-    # could build a slightly different table, and chunks from both runs
-    # coexist, each blob naming its own table.
+    # share its pinned plan, so the sidecar holds the tables of that one
+    # plan; each blob names its table by fingerprint all the same.
 
     @property
     def shared_tables_path(self) -> str:
@@ -334,19 +306,18 @@ class ChunkStore:
 
     def check_or_init_meta(self, meta: dict, codec_hints: Plan | None,
                            audition: Callable[[], Plan]) -> Plan:
-        """Pin the store's chunk-assignment contract and encode plan on
-        first encode; fail fast if ANY pinned key differs on a later run
-        (each key is something that changes chunk membership — resuming
-        with it altered would silently drop or duplicate rows). Returns
-        the run's plan.
+        """Pin the store's format, chunk-assignment contract and encode
+        plan on first encode; fail fast if ANY pinned key differs on a
+        later run (each key is something that changes chunk membership —
+        resuming with it altered would silently drop or duplicate rows).
+        Returns the run's plan.
 
         The plan is pinned as store.json's ``plan`` key, like a table's
         write properties in its metadata, so a chunk's bytes depend on
         (input, pinned plan) across runs. `codec_hints` None loads the
-        pinned plan; on a new store, or a store pinned before plans were,
-        `audition()` runs once and its result is pinned. An explicit plan
-        must equal the pin. Shared tables are written to their sidecar
-        before the pin that names them.
+        pinned plan; on a new store `audition()` runs once and its result
+        is pinned. An explicit plan must equal the pin. Shared tables are
+        written to their sidecar before the pin that names them.
 
         The whole read-audition-pin runs under an exclusive lock on
         ``store.json.lock``, so of two first encodes racing on one new
@@ -356,26 +327,23 @@ class ChunkStore:
             if existing is None:
                 if self.committed_parts():
                     # a store with committed chunks but no store.json
-                    # (legacy or torn) must NOT silently adopt this run's
+                    # (torn) must NOT silently adopt this run's
                     # parameters — that is exactly the row-misassignment
-                    # the pin prevents (ADVICE r2). Write store.json by
-                    # hand after verifying the original parameters to
-                    # migrate.
+                    # the pin prevents (ADVICE r2).
                     raise ValueError(
                         f"store {self.root} has committed chunks but no "
                         f"store.json — cannot verify this run uses the same "
                         f"partitioning parameters. Recreate the store or "
                         f"restore its store.json before resuming.")
             else:
-                if "mode" not in existing:  # pre-r2 store.json: salted
-                    existing = {"mode": "salted", **existing}
-                if existing.get("mode") != meta.get("mode"):
+                if existing["mode"] != meta["mode"]:
                     raise ValueError(
                         f"store {self.root} was created by a "
-                        f"{existing.get('mode')!r}-mode encode; this run uses "
-                        f"{meta.get('mode')!r} — the two assign chunks "
+                        f"{existing['mode']!r}-mode encode; this run uses "
+                        f"{meta['mode']!r} — the two assign chunks "
                         f"differently. Use a new store.")
-                for key in sorted((set(meta) | set(existing)) - {"plan"}):
+                for key in sorted((set(meta) | set(existing))
+                                  - {"format", "plan"}):
                     if existing.get(key) != meta.get(key):
                         raise ValueError(
                             f"store {self.root} was created with "
@@ -383,32 +351,28 @@ class ChunkStore:
                             f"{meta.get(key)!r} — resuming would silently "
                             f"misassign rows. Use a new store or rerun with "
                             f"the original parameters/configuration.")
-                pinned = existing.get("plan")
-                if pinned is not None:
-                    if codec_hints is None:
-                        return plan_from_json(pinned,
-                                              self.read_shared_tables())
-                    wanted = plan_to_json(codec_hints)
-                    differ = sorted(k for k in set(pinned) | set(wanted)
-                                    if pinned.get(k) != wanted.get(k))
-                    if differ:
-                        raise ValueError(
-                            f"store {self.root} pins an encode plan that "
-                            f"differs from this run's in {differ} — resumed "
-                            f"parts would not match the committed ones. Pass "
-                            f"codec_hints=None to reuse the pinned plan, or "
-                            f"use a new store.")
-                    return codec_hints
+                pinned = existing["plan"]
+                if codec_hints is None:
+                    return plan_from_json(pinned, self.read_shared_tables())
+                wanted = plan_to_json(codec_hints)
+                differ = sorted(k for k in set(pinned) | set(wanted)
+                                if pinned.get(k) != wanted.get(k))
+                if differ:
+                    raise ValueError(
+                        f"store {self.root} pins an encode plan that "
+                        f"differs from this run's in {differ} — resumed "
+                        f"parts would not match the committed ones. Pass "
+                        f"codec_hints=None to reuse the pinned plan, or "
+                        f"use a new store.")
+                return codec_hints
             if codec_hints is None:
-                if existing is not None:
-                    log.info("store %s has no pinned encode plan; auditioning "
-                             "one and pinning it", self.root)
                 codec_hints = audition()
             blobs = [v for v in codec_hints.values()
                      if isinstance(v, (bytes, bytearray))]
             if blobs:  # persist shared tables BEFORE anything references them
                 self.write_shared_tables(blobs)
-            self.write_meta({**meta, "plan": plan_to_json(codec_hints)})
+            self.write_meta({"format": STORE_FORMAT, **meta,
+                             "plan": plan_to_json(codec_hints)})
             return codec_hints
 
     # -- snapshot log (run-level lineage, Iceberg-snapshot analog) ----------
@@ -507,6 +471,7 @@ class ChunkStore:
         manifest rename remains the commit point, and _write_wave skips
         waves whose manifest already exists, so task retries and
         interrupted runs are idempotent."""
+        self.read_meta()  # refuses a store of another format
         if plans is None:
             plans = self.plan_waves(wave_size)
         if not plans:
@@ -555,7 +520,7 @@ class ChunkStore:
         files: dict[str, list[tuple[int, int]]] = {}
         total = 0
         for manifest in self._commit_records():
-            for u in _unit_records(manifest):
+            for u in manifest["units"]:
                 if parts is None or u["part_id"] in parts:
                     files.setdefault(os.path.join(self.root, u["file"]),
                                      []).append((u["row_group"], u["part_id"]))
@@ -584,53 +549,54 @@ class ChunkStore:
     # Per-wave stats parquets replace the driver-side json.load of every
     # manifest on the prune/stats/metrics paths. Loose (not-yet-compacted)
     # parts — a bounded set once compaction runs — still come from their
-    # JSON manifests; waves written before this layer existed fall back
-    # to the manifests embedded in their wave JSON.
+    # JSON manifests.
 
     def stats_files(self) -> dict[int, str]:
-        """{wave_seq: stats parquet path} for COMMITTED waves that have
-        one. The stats sidecar is renamed into place before the wave
-        manifest (the commit point), so a crash in between leaves an
-        orphan stats parquet while the wave's parts are still loose —
-        reading it would double-count those parts. Looking up only the
-        stats of waves with a manifest (names, no json.load) makes the
-        orphan invisible until the rebuilt wave commits over it."""
+        """{wave_seq: stats parquet path} of the COMMITTED waves. The
+        stats sidecar is renamed into place before the wave manifest (the
+        commit point), so a crash in between leaves an orphan stats
+        parquet while the wave's parts are still loose — reading it would
+        double-count those parts. Naming only the stats of waves with a
+        manifest (names, no json.load) makes the orphan invisible until
+        the rebuilt wave commits over it."""
         waves, _ = self._manifest_paths()
-        paths = {seq: os.path.join(self.stats_dir, f"wave-{seq:06d}.parquet")
-                 for seq in sorted(waves)}
-        return {seq: p for seq, p in paths.items() if os.path.exists(p)}
+        return {seq: os.path.join(self.stats_dir, f"wave-{seq:06d}.parquet")
+                for seq in sorted(waves)}
 
-    def _json_stats_table(self, have: dict[int, str]) -> pa.Table:
-        """STATS_SCHEMA rows of the parts no stats parquet in `have`
-        covers: legacy waves (committed wave manifests minus `have`, found
-        by name) and the loose parts no committed wave covers. Waves with
-        a stats parquet are opened only while loose parts remain, to
-        leave out the parts they cover."""
+    def _loose_stats_table(self) -> pa.Table:
+        """STATS_SCHEMA rows of the loose parts no committed wave covers,
+        flattened from their JSON manifests. The wave manifests are opened
+        only while loose parts remain, to leave out the parts they
+        cover."""
         waves, parts = self._manifest_paths()
-        legacy = [_load_json(waves[seq])
-                  for seq in sorted(waves.keys() - have.keys())]
-        manifests = [m for w in legacy for m in w["manifests"]]
+        manifests = []
         if parts:
             # a committed wave covers its parts even while their loose
             # files await cleanup; counting them again double-counts
-            covered = {p for w in legacy for p in w["parts"]}.union(
-                *(_load_json(waves[seq])["parts"] for seq in have))
-            manifests += [_load_json(parts[p])
-                          for p in sorted(parts.keys() - covered)]
+            covered = set().union(*(_load_json(path)["parts"]
+                                    for path in waves.values()))
+            manifests = [_load_json(parts[p])
+                         for p in sorted(parts.keys() - covered)]
         return pa.Table.from_pylist(
             [r for m in manifests for r in _manifest_stats_rows(m)],
             schema=STATS_SCHEMA)
 
     def stats_table(self) -> pa.Table:
-        """All STATS_SCHEMA rows — wave parquets scanned columnar, loose
-        (+legacy-wave) manifests flattened from JSON. The driver-side cost
-        is O(waves) file opens + O(loose) JSON parses, never O(parts).
-        Stats parquets written before STATS_SCHEMA lost its timing
-        columns are read through its names."""
-        have = self.stats_files()
-        tables = [pq.read_table(p, columns=STATS_SCHEMA.names)
-                  for p in have.values()]
-        tables.append(self._json_stats_table(have))
+        """All STATS_SCHEMA rows — every committed wave's stats parquet
+        scanned columnar, loose manifests flattened from JSON. The
+        driver-side cost is O(waves) file opens + O(loose) JSON parses,
+        never O(parts). A committed wave without its stats parquet raises
+        ValueError: leaving its parts out would prune them from every
+        predicate decode. Reads no store.json."""
+        tables = []
+        for seq, path in self.stats_files().items():
+            try:
+                tables.append(pq.read_table(path))
+            except FileNotFoundError:
+                raise ValueError(
+                    f"committed wave {seq} of store {self.root} has no "
+                    f"stats parquet {path}") from None
+        tables.append(self._loose_stats_table())
         return pa.concat_tables(tables)
 
 
@@ -678,13 +644,10 @@ def _column_stats(tbl: pa.Table) -> dict[str, dict]:
         if is_float:
             has_nan = bool(pc.any(pc.is_nan(arr), min_count=0).as_py())
         if nulls == len(arr):
-            # all-null num chunks record nan=False explicitly: readers
-            # treat an ABSENT flag on a boundless chunk as "may be
-            # all-NaN" (legacy float stats) and keep — the flag lets
-            # fresh stores still prune genuinely all-null chunks
+            # boundless, but no NaN: readers prune it for every op
             out[name] = {"kind": kind, "min": None, "max": None,
                          "nulls": nulls,
-                         **({"nan": False} if kind == "num" else {})}
+                         **({"nan": False} if is_float else {})}
             continue
         mm = pc.min_max(arr)
         lo, hi = mm["min"].as_py(), mm["max"].as_py()
@@ -732,20 +695,14 @@ def parse_zone_predicate(predicate: str) -> tuple[str, str, str]:
     return m.group(1).strip(), m.group(2), m.group(3).strip()
 
 
-def _ts_micros(value) -> int | None:
-    """Epoch microseconds of a timestamp stat or predicate value.
+def _ts_micros(value: str) -> int | None:
+    """Epoch microseconds of a timestamp predicate value (ts stats are
+    already int micros), or None when it is not an ISO timestamp.
 
-    int → already micros (current manifests). str → ISO parse; tz-aware
-    values convert to UTC, NAIVE values are interpreted as UTC — exactly
-    what Spark's exact post-decode filter does in a UTC session (which
-    tbl_spark.session pins); decode_from_store skips ts pruning entirely
-    for non-UTC sessions so the two sides can never disagree."""
-    if isinstance(value, bool):
-        return None
-    if isinstance(value, int):
-        return value
-    if not isinstance(value, str):
-        return None
+    tz-aware values convert to UTC, NAIVE values are interpreted as UTC —
+    exactly what Spark's exact post-decode filter does in a UTC session
+    (which tbl_spark.session pins); decode_from_store skips ts pruning
+    entirely for non-UTC sessions so the two sides can never disagree."""
     import datetime as _dt
     try:
         d = _dt.datetime.fromisoformat(value.strip())
@@ -855,16 +812,17 @@ def zone_prune_parts(store: ChunkStore,
     — a metadata-only pass on the driver, the chunk-store analog of
     parquet row-group pruning / Iceberg file skipping.
 
-    One vectorized pyarrow pass over `store.stats_table()`: the per-wave
-    stats parquets plus the flattened manifests of loose parts and of
-    legacy waves without a stats parquet. A part survives unless, for
-    some predicate, the mask proves its zone cannot match; parts with no
-    stats row for a predicate's column are kept. The stats table holds
-    one row per (part, column), so it fits the driver at 10^5 parts and
-    the pass starts no Spark job. `spark` is accepted for compatibility
-    and ignored. `utc_session=False` disables timestamp pruning: naive
-    predicate values are interpreted as UTC, so a non-UTC session's exact
-    filter could disagree with the zone decision."""
+    One vectorized pyarrow pass over `store.stats_table()`: the stats
+    parquets of the committed waves plus the flattened manifests of
+    loose parts. A part survives unless, for some predicate, the mask
+    proves its zone cannot match; parts with no stats row for a
+    predicate's column are kept. The stats table holds one row per
+    (part, column), so it fits the driver at 10^5 parts and the pass
+    starts no Spark job and reads no store.json (its callers check the
+    format). `spark` is accepted for compatibility and ignored.
+    `utc_session=False` disables timestamp pruning: naive predicate
+    values are interpreted as UTC, so a non-UTC session's exact filter
+    could disagree with the zone decision."""
     import pyarrow.compute as pc
     preds = [predicates] if isinstance(predicates, str) else list(predicates)
     parsed = [parse_zone_predicate(p) for p in preds]
@@ -902,7 +860,7 @@ def _write_wave(store_root: str, seq: int, parts: list[int]) -> dict:
                                              f"part-{p:05d}.json"))
                      for p in parts]
         for m in manifests:
-            m.pop("units", None)  # the wave's own records replace them
+            del m["units"]  # the wave's own records replace them
         os.makedirs(os.path.join(store_root, "waves"), exist_ok=True)
         # paths relative to the root: a store moved/renamed (or opened
         # from a different cwd with a relative root) must still resolve
@@ -1025,9 +983,10 @@ def encode_to_store(df: DataFrame, store: ChunkStore, num_parts: int,
     hash into committed part ids.
 
     `codec_hints` is the encode plan. None reuses the plan pinned in the
-    store's store.json; a new store (or one pinned before plans were)
-    auditions one on `df` and pins it. An explicit plan is pinned on
-    first encode and must equal the pin on later runs. Committed chunk
+    store's store.json; a new store auditions one on `df` and pins it,
+    with STORE_FORMAT. An explicit plan is pinned on first encode and
+    must equal the pin on later runs. A store.json of another format
+    raises ValueError before any data is read. Committed chunk
     bytes depend only on the input rows of each part and the plan, so a
     resume re-encodes a lost part to the same bytes, and no resume pays
     the audition.
@@ -1088,7 +1047,9 @@ def encode_to_store_colocated(df: DataFrame, store: ChunkStore,
 
     `codec_hints` is the encode plan, pinned like encode_to_store's: None
     reuses the store's pinned plan, or auditions one on `df` and pins it
-    on a new store; an explicit plan must equal the pin."""
+    with STORE_FORMAT on a new store; an explicit plan must equal the
+    pin. A store.json of another format raises ValueError before any
+    data is read."""
     import hashlib
 
     import pyspark.sql.functions as F
@@ -1165,18 +1126,19 @@ def decode_from_store(store: ChunkStore, spark: SparkSession,
     columns' chunk rows, so the other blobs are never decoded, and orders
     the output as listed, each column once. The exact
     filters run on the decoded rows. An unknown column in `columns` or
-    in a predicate, or an empty `columns`, raises ValueError. Nothing
-    here runs a Spark job: the first one is the caller's action.
+    in a predicate, or an empty `columns`, raises ValueError, as does a
+    store without a store.json of STORE_FORMAT, before any data file is
+    read. Nothing here runs a Spark job: the first one is the caller's
+    action.
     Executors must see the store's filesystem, as the write protocol
     already assumes."""
     from pyspark.sql.types import StructType
 
     from .decode import arrow_schema_of, decode_row_groups
+    meta = store.read_meta()
+    if meta is None:
+        raise ValueError(f"{store.root} has no store.json")
     if output_ddl is None:  # schema was pinned at first encode
-        meta = store.read_meta()
-        if meta is None or "schema_ddl" not in meta:
-            raise ValueError(
-                f"{store.root} has no store.json schema; pass output_ddl")
         output_ddl = meta["schema_ddl"]
     schema = StructType.fromDDL(output_ddl) if isinstance(output_ddl, str) \
         else output_ddl

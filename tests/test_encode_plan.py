@@ -8,9 +8,8 @@
 3. A failed local parquet sample is logged and falls back to a Spark
    sample job that yields the same plan.
 4. A store pins its plan in store.json: a run without a plan reuses the
-   pin (no audition), a different explicit plan raises, an explicit
-   empty plan is pinned as given, and a store pinned before plans were
-   auditions once and adds the pin.
+   pin (no audition), a different explicit plan raises, and an explicit
+   empty plan is pinned as given.
 5. A crash at any rename of the write protocol, driver- or worker-side,
    leaves a store that a rerun completes to the same bytes under the same
    pinned plan.
@@ -315,33 +314,6 @@ def test_racing_first_encodes_share_one_pin(tmp_path):
     assert not any(t.is_alive() for t in racers)
     pinned = plan_from_json(store.read_meta()["plan"], {})
     assert plans == {i: pinned for i in range(len(codecs))}
-
-
-def test_store_without_pin_auditions_once(spark, parquet_src, tmp_path,
-                                          monkeypatch, caplog):
-    df = spark.read.parquet(parquet_src)
-    store = ChunkStore(str(tmp_path / "store"))
-    encode_to_store(df, store, PARTS)
-    meta = store.read_meta()
-    pinned = meta.pop("plan")
-    store.write_meta(meta)                  # as written before plans were
-    _drop_parts(store, [0])
-    calls = []
-
-    def audition(frame, *args, **kwargs):
-        calls.append(frame)
-        return audition_codec_hints(frame, *args, **kwargs)
-
-    monkeypatch.setattr(store_mod, "audition_codec_hints", audition)
-    with caplog.at_level(logging.INFO, logger="tbl_spark"):
-        assert encode_to_store(df, store, PARTS)["encoded_parts"] == 1
-    assert len(calls) == 1
-    assert any("no pinned encode plan" in r.getMessage()
-               for r in caplog.records)
-    assert store.read_meta() == {**meta, "plan": pinned}
-    _drop_parts(store, [1])
-    assert encode_to_store(df, store, PARTS)["encoded_parts"] == 1
-    assert len(calls) == 1
 
 
 def test_colocated_rerun_loads_pin(spark, parquet_src, tmp_path,

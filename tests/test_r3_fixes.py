@@ -261,7 +261,7 @@ def test_meta_guard_rejects_committed_store_without_meta(spark, tmp_path):
     from tbl_spark.store import ChunkStore, encode_to_store
     from tbl_spark.datagen import generate_df
     store, _ = _make_store(spark, tmp_path, n_docs=500, n_parts=2)
-    os.remove(store.meta_path)       # legacy / torn store.json
+    os.remove(store.meta_path)       # torn store.json
     with pytest.raises(ValueError, match="no store.json"):
         encode_to_store(generate_df(spark, 500, 2), store, 2)
 
@@ -476,8 +476,6 @@ def test_zone_stats_and_match_are_type_sound(zone_keeps):
     assert zone_keeps(st["s"], ">=", "b")
     # unparseable numeric predicate keeps the chunk
     assert zone_keeps(st["big"], ">=", "not-a-number")
-    # legacy manifests without 'kind' stay prunable for plain numbers
-    assert not zone_keeps({"min": 1, "max": 2}, ">", "5")
 
 
 def test_kmeans_small_corpus_does_not_crash(spark):

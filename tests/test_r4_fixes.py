@@ -226,13 +226,15 @@ def test_prune_path_reads_no_per_manifest_json(spark, tmp_path, monkeypatch):
     # manifest at all, per-part or per-wave
     assert counter.loads_seen == 0
     monkeypatch.undo()
-    # parity: stats-parquet pass == legacy JSON walk
-    stats_bak = str(tmp_path / "stats_bak")
-    import os
-    os.rename(store.stats_dir, stats_bak)
-    kept_json = zone_prune_parts(store, pred)
-    os.rename(stats_bak, store.stats_dir)
-    assert kept_arrow == kept_json
+    # parity: the stats parquets hold the rows the part manifests embedded
+    # in the wave JSON flatten to
+    from tbl_spark.store import _manifest_stats_rows
+
+    def key(r):
+        return r["part_id"], r["column"]
+    assert sorted(store.stats_table().to_pylist(), key=key) == sorted(
+        (r for m in store.manifest_rows() for r in _manifest_stats_rows(m)),
+        key=key)
     assert 0 < len(kept_arrow) < n_parts
 
 
@@ -443,10 +445,11 @@ def _zone_mask_keep(chunk_tbl, col, op, raw, expect_any_match):
                                  _zone_cannot_match_mask)
     stats = _column_stats(chunk_tbl)
     manifest = {"part_id": 7, "n_rows": len(chunk_tbl), "encode_ms": 0.0,
-                "columns": {n: {"codec": "raw", "n_values": len(chunk_tbl),
-                                "raw_bytes": 1, "enc_bytes": 1,
-                                "stats": stats.get(n)}
-                            for n in chunk_tbl.column_names}}
+                "columns": json.dumps({
+                    n: {"codec": "raw", "n_values": len(chunk_tbl),
+                        "raw_bytes": 1, "enc_bytes": 1,
+                        "stats": stats.get(n)}
+                    for n in chunk_tbl.column_names})}
     rows = [r for r in _manifest_stats_rows(manifest) if r["column"] == col]
     t = pa.Table.from_pydict(
         {f.name: [r[f.name] for r in rows] for f in STATS_SCHEMA},

@@ -36,46 +36,44 @@ class _CountingJson:
         return getattr(self._real, name)
 
 
-def _synthetic_store(root: str, lo: np.ndarray, hi: np.ndarray,
-                     legacy_wave: int) -> ChunkStore:
+def _synthetic_store(root: str, lo: np.ndarray, hi: np.ndarray
+                     ) -> ChunkStore:
     """A store holding only metadata: N_WAVES committed waves of
-    WAVE_PARTS parts, part p's n_tok bounds [lo[p], hi[p]]. Every wave has
-    a stats parquet except `legacy_wave`, whose parts' stats live in the
-    manifests embedded in its wave JSON (a store written before the stats
-    layer existed)."""
+    WAVE_PARTS parts, part p's n_tok bounds [lo[p], hi[p]], each wave
+    with its stats parquet and a wave manifest of the current shape
+    (unit records, part manifests with JSON-string `columns`)."""
     store = ChunkStore(root)
     store.init_dirs()
     os.makedirs(store.stats_dir, exist_ok=True)
     for w in range(N_WAVES):
         ids = np.arange(w * WAVE_PARTS, (w + 1) * WAVE_PARTS)
-        manifests = []
-        if w == legacy_wave:
-            manifests = [{"part_id": int(p), "n_rows": 10,
-                          "columns": {"n_tok": {"codec": "raw", "stats": {
+        n = len(ids)
+        cols = {f.name: pa.nulls(n, f.type) for f in STATS_SCHEMA}
+        cols.update({
+            "part_id": pa.array(ids, pa.int64()),
+            "column": pa.array(["n_tok"] * n),
+            "n_rows": pa.array(np.full(n, 10), pa.int64()),
+            "kind": pa.array(["num"] * n),
+            "nulls": pa.array(np.zeros(n, np.int64)),
+            "has_nan": pa.array(np.zeros(n, bool)),
+            "lo_num": pa.array(lo[ids].astype(np.float64)),
+            "hi_num": pa.array(hi[ids].astype(np.float64)),
+        })
+        pq.write_table(pa.table(cols, schema=STATS_SCHEMA),
+                       os.path.join(store.stats_dir, f"wave-{w:06d}.parquet"))
+        file = f"wave-{w:06d}.parquet"
+        manifests = [{"part_id": int(p), "n_rows": 10, "columns": json.dumps(
+                          {"n_tok": {"codec": "raw", "stats": {
                               "kind": "num", "min": int(lo[p]),
-                              "max": int(hi[p]), "nulls": 0}}}}
-                         for p in ids]
-        else:
-            n = len(ids)
-            cols = {f.name: pa.nulls(n, f.type) for f in STATS_SCHEMA}
-            cols.update({
-                "part_id": pa.array(ids, pa.int64()),
-                "column": pa.array(["n_tok"] * n),
-                "n_rows": pa.array(np.full(n, 10), pa.int64()),
-                "kind": pa.array(["num"] * n),
-                "nulls": pa.array(np.zeros(n, np.int64)),
-                "has_nan": pa.array(np.zeros(n, bool)),
-                "lo_num": pa.array(lo[ids].astype(np.float64)),
-                "hi_num": pa.array(hi[ids].astype(np.float64)),
-            })
-            pq.write_table(pa.table(cols, schema=STATS_SCHEMA),
-                           os.path.join(store.stats_dir,
-                                        f"wave-{w:06d}.parquet"))
+                              "max": int(hi[p]), "nulls": 0}}})}
+                     for p in ids]
+        units = [{"file": f"waves/{file}", "row_group": i,
+                  "part_id": int(p), "rows": 10, "columns": {"n_tok": 0}}
+                 for i, p in enumerate(ids)]
         with open(os.path.join(store.manifest_dir,
                                f"wave-{w:06d}.json"), "w") as f:
-            json.dump({"wave": w, "parts": ids.tolist(),
-                       "file": f"wave-{w:06d}.parquet",
-                       "manifests": manifests}, f)
+            json.dump({"wave": w, "parts": ids.tolist(), "file": file,
+                       "units": units, "manifests": manifests}, f)
     return store
 
 
@@ -89,22 +87,13 @@ def test_prune_1e5_parts_matches_bounds_without_wave_json(tmp_path,
     expected = set(np.flatnonzero(hi >= threshold).tolist())
     assert 0 < len(expected) < n
 
-    store = _synthetic_store(str(tmp_path / "store"), lo, hi, legacy_wave=-1)
+    store = _synthetic_store(str(tmp_path / "store"), lo, hi)
     counter = _CountingJson(json)
     monkeypatch.setattr(store_mod, "json", counter)
     kept = zone_prune_parts(store, f"n_tok>={threshold}")
     assert kept == expected
     assert counter.loads_seen == 0      # no wave manifest opened
-
-    # a legacy wave (no stats parquet) is found by name: its manifest
-    # is the only JSON loaded, and its parts prune the same way
-    legacy = _synthetic_store(str(tmp_path / "legacy"), lo, hi,
-                              legacy_wave=3)
-    counter = _CountingJson(json)
-    monkeypatch.setattr(store_mod, "json", counter)
-    assert zone_prune_parts(legacy, f"n_tok>={threshold}") == expected
-    assert counter.loads_seen == 1
-    assert len(legacy.stats_table()) == n
+    assert len(store.stats_table()) == n
 
 
 def test_selective_decode_starts_no_job_before_action(spark, tmp_path):
