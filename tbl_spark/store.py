@@ -59,6 +59,7 @@ import json
 import os
 import time
 import uuid
+from decimal import Decimal
 from typing import Callable, Iterable
 
 import pyarrow as pa
@@ -153,9 +154,11 @@ STATS_PARQUET = {"compression": "zstd", "write_statistics": False,
                  "use_dictionary": False, "store_schema": False}
 
 
-def _widen_num(v: int | float, up: bool) -> float:
+def _widen_num(v: int | float | Decimal, up: bool) -> float:
     """Nearest double NOT tighter than v (down for lo, up for hi) — keeps
-    double-typed zone bounds sound for int values beyond 2^53."""
+    double-typed zone bounds sound for int values beyond 2^53 and for
+    decimals that no double holds (Python compares both exactly with a
+    float)."""
     d = float(v)
     if d == v:
         return d
@@ -616,8 +619,6 @@ def _column_stats(tbl: pa.Table) -> dict[str, dict]:
     pyarrow min_max SKIPS NaN while Spark orders NaN above every value
     and NaN = NaN is true, so a finite hi would otherwise falsely prune
     '>', '>=', '=' predicates whose rows are NaN (ADVICE r3)."""
-    import decimal as _dec
-
     import pyarrow.compute as pc
     from .partitioning import PART_COL
     out: dict[str, dict] = {}
@@ -672,11 +673,13 @@ def _column_stats(tbl: pa.Table) -> dict[str, dict]:
                 lo, hi = lo_t // 1000, -(-hi_t // 1000)
             else:
                 lo, hi = lo_t * mult, hi_t * mult
-        elif isinstance(lo, _dec.Decimal):
+        elif isinstance(lo, Decimal):
             # JSON-native AND numerically comparable (str() would make
-            # '30'>='5' lexicographically False — silent false pruning)
-            lo = int(lo) if lo == int(lo) else float(lo)
-            hi = int(hi) if hi == int(hi) else float(hi)
+            # '30'>='5' lexicographically False — silent false pruning).
+            # A fractional bound is widened, not rounded: float() of
+            # 1.000000000000000001 is 1.0, which would prune 'x>1'
+            lo = int(lo) if lo == int(lo) else _widen_num(lo, up=False)
+            hi = int(hi) if hi == int(hi) else _widen_num(hi, up=True)
         elif not isinstance(lo, (int, float, bool)):
             lo, hi = str(lo), str(hi)   # date → ISO str
         st = {"kind": kind, "min": lo, "max": hi, "nulls": nulls}

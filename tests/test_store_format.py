@@ -145,6 +145,17 @@ def test_decimal_and_all_null_string_zones_prune(zone_keeps):
     assert zone_keeps(st["x"], "=", "2.5")
     assert zone_keeps(st["x"], "<", "5")
     assert not zone_keeps(st["s"], "=", "a")
+    # bounds that no double holds round onto the literal under float():
+    # they are widened, so the chunk stays for the ops its rows satisfy
+    for v, typ, lit in ((D("1.000000000000000001"), pa.decimal128(38, 18),
+                         "1"),
+                        (D("4503599627370496.25"), pa.decimal128(18, 2),
+                         "4503599627370496")):
+        st = _column_stats(pa.table({"x": pa.array([v, v], typ)}))["x"]
+        assert st["min"] < v < st["max"], typ
+        for op in (">", ">=", "!="):
+            assert zone_keeps(st, op, lit), (typ, op)
+        assert not zone_keeps(st, "<", lit), typ
 
 
 def test_decimal_store_predicate_decode_matches_spark_filter(spark,

@@ -2,18 +2,17 @@
 
     python tools/store_digest.py [--seed N] [--out DIR]
 
-Writes seed N's perfbench token input (``DOCS`` documents in ``FILES``
-zstd parquet files, as ``perfbench/inputs.py`` stages it; seed 1 by
-default), auditions an encode plan on it and encodes it into a salted
-store of ``PARTS`` parts, as perfbench's ``tokens_scan`` set-up does, then
-compacts the store in waves of ``WAVE_SIZE``. It prints one JSON line: the
-sha256 of every loose part file under ``chunks/`` before compaction, of
-every file under ``waves/`` and ``stats/`` after it, and ``store.json``
-as parsed. Data files hold no timing, so one checkout prints the same
-digests on every run, and two checkouts whose store bytes should agree
-can be compared seed by seed. ``--out`` keeps the compacted store in DIR
-(which must not exist) for a closer look, such as a diff of its stats
-parquets.
+Stages seed N's perfbench token input with ``perfbench/inputs.py`` (seed 1
+by default), auditions an encode plan on it and encodes it into a salted
+store, as perfbench's ``tokens_scan`` set-up does, then compacts the store.
+Input size, part count and wave size are perfbench's ``SIZES["full"]``.
+It prints one JSON line: the sha256 of every loose part file under
+``chunks/`` before compaction, of every file under ``waves/`` and
+``stats/`` after it, and ``store.json`` as parsed. Data files hold no
+timing, so one checkout prints the same digests on every run, and two
+checkouts whose store bytes should agree can be compared seed by seed.
+``--out`` keeps the compacted store in DIR (which must not exist) for a
+closer look, such as a diff of its stats parquets.
 """
 
 from __future__ import annotations
@@ -27,12 +26,7 @@ import sys
 import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-DOCS = 2000     # perfbench's token input size
-FILES = 8       # its staged parquet files
-PARTS = 8       # salted parts, as in perfbench's token stores
-WAVE_SIZE = 2   # its compaction waves
+sys.path[:0] = [REPO, os.path.join(REPO, "perfbench")]
 
 
 def digests(root: str, sub: str) -> dict[str, str]:
@@ -53,21 +47,24 @@ def main() -> int:
     if args.out and os.path.exists(args.out):
         ap.error(f"{args.out} exists")
 
-    from tbl_spark.datagen import write_token_table
+    from inputs import stage_tokens
+    from workloads import SIZES
+
     from tbl_spark.encode import audition_codec_hints
     from tbl_spark.session import get_spark
     from tbl_spark.store import ChunkStore, encode_to_store
 
+    size = SIZES["full"]
     work = tempfile.mkdtemp(prefix="store_digest-")
     try:
-        src = os.path.join(work, "input")
-        write_token_table(src, DOCS, n_parts=FILES, seed=args.seed)
+        src = stage_tokens(work, args.seed, size["n_docs"], size["n_files"])
         spark = get_spark()
-        df = spark.read.parquet(src)
+        df = spark.read.parquet(src["path"])
         store = ChunkStore(args.out or os.path.join(work, "store"))
-        encode_to_store(df, store, PARTS, codec_hints=audition_codec_hints(df))
+        encode_to_store(df, store, size["parts"],
+                        codec_hints=audition_codec_hints(df))
         files = digests(store.root, "chunks")
-        store.compact(WAVE_SIZE, spark=spark)
+        store.compact(size["wave_size"], spark=spark)
         for sub in ("waves", "stats"):
             files.update(digests(store.root, sub))
         with open(store.meta_path) as f:
